@@ -8,9 +8,13 @@ host↔DPU protocol in ``topdocs_sync.c:469-544``):
    the index's stats table — the TermStatistics build of
    ``PimPhraseQuery.java:110-132``.  Queries containing a term absent from
    the whole index short-circuit to empty (``PimPhraseQuery.java:122-124``).
-2. The postings Parquet is scanned with ``term IN (query terms)`` — pushed
-   to the Parquet reader (dictionary + row-group pruning), the analogue of
-   the per-DPU term-dictionary lookup (``term_lookup.c:107-222``).
+2. The postings Parquet is scanned with ``term IN (query terms)``, the
+   analogue of the per-DPU term-dictionary lookup
+   (``term_lookup.c:107-222``).  The filter drops rows; it prunes no
+   reads: each postings file is one row group whose ``term`` min/max
+   spans the whole vocabulary, so a scan decodes whole files.  The
+   serving path (:func:`search_local`) pays that once per pid and keeps
+   the pid resident.
 3. Matching posting rows are evaluated in one Arrow-vectorized
    ``applyInPandas`` kernel per partition; the partition's norms blob
    (1 byte/doc) is read directly from the index's ``norms/pid=N/`` Parquet
@@ -848,17 +852,20 @@ def _iter_pid_results(payload: dict, allp: pd.DataFrame):
 
 def _match_kernel_files(payload: dict):
     """Single-stage kernel: each task reads its ASSIGNED postings files
-    directly with pyarrow ``term IN`` pushdown and runs the per-pid match
-    kernel — no Exchange at all (guide §2.4 / §8.4 "co-locate instead of
-    join": the postings Parquet is already laid out by pid, so the
-    repartition-by-pid shuffle only re-creates a grouping the files
-    already have).  The driver's file plan (:func:`_postings_file_groups`)
-    guarantees every pid's rows live in exactly one task, which is the
-    same co-location contract the hash exchange gave; the kernel itself
-    is identical, so results are identical (differential-tested).
+    directly with a pyarrow ``term IN`` + ``pid IN`` filter and runs the
+    per-pid match kernel — no Exchange at all (guide §2.4 / §8.4
+    "co-locate instead of join": the postings Parquet is already laid
+    out by pid, so the repartition-by-pid shuffle only re-creates a
+    grouping the files already have).  The driver's file plan
+    (:func:`_postings_file_groups`) guarantees every pid's rows live in
+    exactly one task, which is the same co-location contract the hash
+    exchange gave; the kernel itself is identical, so results are
+    identical (differential-tested).
 
-    This is the distributed twin of the serving path's pyarrow read
-    (``_local_rows``) and the reference's DPU model: each task owns its
+    The filter prunes no reads (a postings file is one row group spanning
+    the whole vocabulary), so each task decodes its files whole.  This is
+    the distributed twin of the serving path's per-pid read
+    (``_load_pids``) and the reference's DPU model: each task owns its
     shard and reads it locally.  Needs POSIX-visible index files from
     every executor — exactly the precondition of direct norms access,
     which gates this plan.
@@ -1553,82 +1560,162 @@ def search_term(spark: SparkSession, index: IndexManifest | str, term: str,
     return search(spark, index, [(0, term)], k=k, precision=precision)
 
 
-# serving-path residency: raw postings rows per (index, term) and norms
-# blobs per (index, pid) stay in-process, so a warm query touches no
-# files at all — the full analogue of the reference's loaded index
-_LOCAL_ROWS: OrderedDict = OrderedDict()
-_LOCAL_ROWS_STATE = {"bytes": 0}
+# serving-path residency: each pid's postings rows (Arrow columns sorted
+# by (term, stripe)) and norms blob stay in-process once loaded, so a
+# request whose pids are resident reads no files at all — the analogue
+# of the reference loading each DPU's index once and serving every query
+# from it.  The rows budget is an LRU over whole pids.
+_LOCAL_PIDS: OrderedDict = OrderedDict()   # (ckey, pid) -> _ResidentPid
+_LOCAL_PIDS_STATE = {"bytes": 0}
 _LOCAL_ROWS_MAX = 512 << 20
 _LOCAL_NORMS: dict = {}
+
+_ROW_ARRAYS = ("seg_doc_counts", "seg_doc_bytes", "seg_freq_bytes",
+               "seg_pos_bytes", "seg_max_tf", "doc_blob", "freq_blob",
+               "pos_blob")
+
+
+def _flat_column(col) -> tuple[np.ndarray, np.ndarray]:
+    """``(offsets, values)`` numpy views of a list or binary column
+    (one chunk): row ``i`` is ``values[offsets[i]:offsets[i + 1]]``."""
+    import pyarrow as pa
+    arr = col.chunk(0)
+    if pa.types.is_list(arr.type):  # offsets index the unsliced values
+        return arr.offsets.to_numpy(), arr.values.to_numpy()
+    _, off_buf, data_buf = arr.buffers()
+    off = np.frombuffer(off_buf, dtype=np.int32)[
+        arr.offset:arr.offset + len(arr) + 1]
+    data = (np.frombuffer(data_buf, dtype=np.uint8) if data_buf is not None
+            else np.empty(0, dtype=np.uint8))
+    return off, data
+
+
+class _ResidentRow:
+    """One stripe row of a resident pid.  The kernel reads the
+    ``seg_*`` arrays and ``*_blob`` bytes as attributes; each is a
+    zero-copy numpy slice of the pid's Arrow columns."""
+
+    __slots__ = ("_cols", "_i", "stripe")
+
+    def __init__(self, cols: dict, i: int, stripe: int):
+        self._cols = cols
+        self._i = i
+        self.stripe = stripe
+
+    def __getattr__(self, name):
+        try:
+            off, vals = self._cols[name]
+        except KeyError:
+            raise AttributeError(name) from None
+        return vals[off[self._i]:off[self._i + 1]]
+
+
+class _ResidentPid:
+    """One pid's postings, resident: a term column sorted by (term,
+    stripe) for ``searchsorted`` lookups plus flat views of the kernel
+    columns."""
+
+    __slots__ = ("terms", "stripes", "cols", "nbytes")
+
+    def __init__(self, table=None):
+        import pyarrow.compute as pc
+        if table is None or not table.num_rows:
+            self.terms = np.empty(0, dtype=object)
+            self.stripes = np.empty(0, dtype=np.int32)
+            self.cols, self.nbytes = {}, 0
+            return
+        order = pc.sort_indices(table, sort_keys=[("term", "ascending"),
+                                                  ("stripe", "ascending")])
+        if not np.array_equal(order.to_numpy(), np.arange(table.num_rows)):
+            table = table.take(order)
+        table = table.combine_chunks()
+        self.nbytes = int(table.nbytes)
+        self.terms = table.column("term").to_numpy(zero_copy_only=False)
+        self.stripes = table.column("stripe").to_numpy()
+        self.cols = {c: _flat_column(table.column(c)) for c in _ROW_ARRAYS}
+
+    def by_term(self, terms: np.ndarray) -> dict:
+        """``{term: [stripe-ordered rows]}`` for the ``terms`` (an
+        object array) present in this pid."""
+        los = self.terms.searchsorted(terms, side="left").tolist()
+        his = self.terms.searchsorted(terms, side="right").tolist()
+        return {t: [_ResidentRow(self.cols, i, int(self.stripes[i]))
+                    for i in range(lo, hi)]
+                for t, lo, hi in zip(terms.tolist(), los, his) if hi > lo}
+
+
+def _serving_pid_map(manifest) -> dict:
+    """``_postings_pid_map``, failing loudly where it cannot list the
+    postings files (the serving path never answers from a partial
+    view)."""
+    pid_map = _postings_pid_map(manifest)
+    if pid_map is None:
+        raise FileNotFoundError(
+            "serving path needs readable, POSIX-visible postings files; "
+            f"cannot list them under {manifest.index_dir}")
+    return pid_map
+
+
+def _load_pids(manifest, ckey, pids: list[int]) -> None:
+    """Make ``pids`` resident: open each postings file that holds one of
+    them once, read it whole and single-threaded, and keep each pid's
+    rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    pid_map = _serving_pid_map(manifest)
+    parts: dict[int, list] = {p: [] for p in pids}
+    files = sorted({f for p in pids for f in pid_map.get(p, (0, []))[1]})
+    for f in files:
+        with pq.ParquetFile(f) as pf:
+            t = pf.read(use_threads=False)
+        col = t.column("pid").to_numpy()
+        for p in np.unique(col).tolist():
+            if p in parts:
+                parts[p].append(t.filter(pa.array(col == p)))
+    for p in pids:
+        res = _ResidentPid(pa.concat_tables(parts.pop(p)) if parts[p]
+                           else None)
+        _LOCAL_PIDS[(ckey, p)] = res
+        _LOCAL_PIDS_STATE["bytes"] += res.nbytes
 
 
 def _local_rows(manifest, ckey, terms: list[str],
                 pids: list[int] | None = None) -> dict[int, dict]:
-    """Resident ``{pid: {term: [stripe-ordered rows]}}`` for the serving
-    path — built once per term from a pyarrow pushdown read, then pure
-    dict assembly per call (no pandas iteration on the hot path).
+    """``{pid: {term: [stripe-ordered rows]}}`` for the serving path.
 
-    ``pids`` restricts the read AND the residency to a pid subset (the
-    sharded server gives each worker process its own subset, so a shard
-    never reads or caches another shard's rows — ``pid IN`` joins the
-    pushdown next to ``term IN``).
+    The residency unit is a pid: the first batch that needs a pid loads
+    all of its postings once (:func:`_load_pids`); every later batch
+    finds its terms in the resident columns with no file access.
+    ``pids`` restricts the pids served (the sharded server gives each
+    worker its own subset, so a shard never reads or keeps another
+    shard's rows); ``None`` = every pid with postings.
     """
-    import pyarrow.parquet as pq
-    # pid subset is part of the residency key — a process serving shard A
-    # then shard B (or a fork inheriting the parent's full-range cache)
-    # must not answer B's reads from A's rows
-    ckey = (ckey, tuple(sorted(int(p) for p in pids))
-            if pids is not None else None)
-    missing = [t for t in terms if (ckey, t) not in _LOCAL_ROWS]
+    pids = sorted(_serving_pid_map(manifest)) if pids is None else \
+        [int(p) for p in pids]
+    missing = [p for p in pids if (ckey, p) not in _LOCAL_PIDS]
     if missing:
-        filters = [("term", "in", missing)]
-        if pids is not None:
-            filters.append(("pid", "in", [int(p) for p in pids]))
-        parts = [pq.read_table(manifest.chunk_path(c),
-                               filters=filters).to_pandas()
-                 for c in range(manifest.build_chunks)]
-        pdf = pd.concat(parts, ignore_index=True)
-        size_per = (int(pdf.memory_usage(deep=True).sum()) // max(len(pdf), 1)
-                    if len(pdf) else 0)
-        grouped: dict[str, dict[int, list]] = {t: {} for t in missing}
-        for row in pdf.itertuples(index=False):
-            grouped.setdefault(row.term, {}).setdefault(
-                int(row.pid), []).append(row)
-        for t in missing:
-            by_pid = grouped.get(t, {})
-            n_rows = 0
-            for rows in by_pid.values():
-                rows.sort(key=lambda r: r.stripe)
-                n_rows += len(rows)
-            size = max(n_rows, 1) * max(size_per, 1)
-            _LOCAL_ROWS[(ckey, t)] = (by_pid, size)
-            _LOCAL_ROWS_STATE["bytes"] += size
-    # assemble the result BEFORE any eviction, pinning this batch's keys:
-    # a budget-driven LRU pass must never evict a term the CURRENT batch
-    # needs (just-loaded or previously resident) — the kernel treats a
-    # missing term as "no hits on this partition", which would silently
-    # return partial results
+        _load_pids(manifest, ckey, missing)
+    terms = np.asarray(list(terms), dtype=object)
     out: dict[int, dict] = {}
-    current = set()
-    for t in terms:
-        entry = _LOCAL_ROWS.get((ckey, t))
-        if entry is None:
-            # plan_queries dropped df=0 terms, so every requested term
-            # was either resident or just loaded — anything else is a
-            # bookkeeping bug: fail loudly, never serve partial results
-            raise RuntimeError(
-                f"serving-path residency lost term {t!r} mid-batch")
-        current.add((ckey, t))
-        _LOCAL_ROWS.move_to_end((ckey, t))
-        for pid, rows in entry[0].items():
-            out.setdefault(pid, {})[t] = rows
-    while _LOCAL_ROWS_STATE["bytes"] > _LOCAL_ROWS_MAX:
-        victim = next((key for key in _LOCAL_ROWS if key not in current),
+    for p in pids:
+        _LOCAL_PIDS.move_to_end((ckey, p))
+        by_term = _LOCAL_PIDS[(ckey, p)].by_term(terms)
+        if by_term:
+            out[p] = by_term
+    # evict after assembly, with this batch's pids pinned: the kernel
+    # treats a missing term as "no hits on this partition", so dropping
+    # a pid the batch needs would silently return partial results
+    current = {(ckey, p) for p in pids}
+    while _LOCAL_PIDS_STATE["bytes"] > _LOCAL_ROWS_MAX:
+        victim = next((key for key in _LOCAL_PIDS if key not in current),
                       None)
         if victim is None:
             break  # only the pinned batch remains — over budget is fine
-        _, old = _LOCAL_ROWS.pop(victim)
-        _LOCAL_ROWS_STATE["bytes"] -= old
+        _LOCAL_PIDS_STATE["bytes"] -= _LOCAL_PIDS.pop(victim).nbytes
+        # decoded postings hold views of the pid's buffers: drop them
+        # too, or they would keep the evicted pid in memory
+        for key in [k for k in _POSTINGS_CACHE if k[:2] == victim]:
+            _POSTINGS_CACHE_STATE["bytes"] -= _POSTINGS_CACHE.pop(key)[1]
     return out
 
 
@@ -1668,8 +1755,8 @@ def _local_live(manifest, ckey, pid: int,
 
 
 def clear_local_cache() -> None:
-    _LOCAL_ROWS.clear()
-    _LOCAL_ROWS_STATE["bytes"] = 0
+    _LOCAL_PIDS.clear()
+    _LOCAL_PIDS_STATE["bytes"] = 0
     _LOCAL_NORMS.clear()
     _LOCAL_LIVE.clear()
 
@@ -1685,10 +1772,10 @@ def search_local(index: IndexManifest | str, queries: list[tuple[int, str]],
     The reference's query path never schedules batch work — queries go to
     an index RESIDENT in accelerator memory and results come back in
     milliseconds (``PimSystemManager.java:401-437``).  This is that
-    serving path for a POSIX-visible index: term-stats and postings read
-    via pyarrow with ``term IN`` predicate pushdown (same row-group
-    pruning the distributed scan gets), per-pid norms blobs read directly,
-    the identical ``_match_core`` kernel run in-process per partition,
+    serving path for a POSIX-visible index: each pid's postings and norms
+    are read once and stay resident (:func:`_local_rows`), so a request
+    whose pids are loaded reads no files; the identical ``_match_core``
+    kernel runs in-process per partition,
     and a driver heap-merge — plus the warm postings cache, which in a
     single process hits on every repeated term.  Use for interactive /
     low-latency serving; use :func:`search` for cluster-scale batches.

@@ -9,8 +9,8 @@ two placements:
 
 - ``mode="shard"``: worker ``w`` owns pids ``{p : p % W == w}`` and
   keeps ITS OWN resident caches (postings rows, norms blobs, decoded
-  postings) — the ``pid IN`` + ``term IN`` pyarrow pushdown means a
-  shard never reads another shard's rows, so resident bytes per process
+  postings).  A worker loads only its own pids, each once, so a shard
+  never keeps another shard's rows and resident bytes per process
   shrink ~1/W while the union covers the whole index.  Every batch fans
   to all shards and the per-shard per-query top-k frames merge on the
   host — top-k of a union is the merge of per-shard top-ks, so results
@@ -149,7 +149,15 @@ def _worker_main(conn, index_dir: str, pids: list[int] | None,
 
 
 class ShardedServer:
-    """Multi-process resident search server (see module docstring)."""
+    """Multi-process resident search server (see module docstring).
+
+    Residency is per pid: the first batch a worker serves reads each of
+    its pids' postings files once (whole, single-threaded) and keeps the
+    pid's rows as Arrow columns sorted by (term, stripe); every later
+    batch finds its terms by ``searchsorted`` and reads no files.  A
+    worker's rows budget (``operators.search._LOCAL_ROWS_MAX``) is an LRU
+    over whole pids; :meth:`_check_residency` warns when a worker's pids
+    cannot all fit it."""
 
     def __init__(self, index: IndexManifest | str, num_workers: int = 0,
                  mode: str = "shard", precision: str = "float32",

@@ -132,8 +132,11 @@ def local_result(spark: SparkSession, pdf: pd.DataFrame,
             if ok:
                 return df
         except Exception:
-            if verified is not None:
-                verified[key] = False
+            # a failed conversion says nothing about the schema: fall
+            # back for this call only (caching False here would turn
+            # the fast path off for the whole session on one transient
+            # error); only a failed schema check above is cached
+            pass
     return spark.createDataFrame(pdf, schema)
 
 

@@ -36,21 +36,17 @@ def test_k_none_equals_huge_k_rows(spark, small_index):
     pd.testing.assert_frame_equal(a, b)
 
 
-def test_k_none_plan_has_no_rank_window(spark, small_index):
-    import os
+def test_k_none_plan_has_no_rank_window(spark, small_index, monkeypatch):
     # pin the distributed plan (the r7 size gate would otherwise route
     # this tiny index through the in-process path, which has no plan)
-    os.environ["SPARK_GRAFT_LOCAL_ROUTE_POSTINGS"] = "0"
-    try:
-        plan = (search(spark, small_index, [(0, "alpha")], k=None)
-                ._jdf.queryExecution().executedPlan().toString())
-        assert "Window" not in plan, plan
-        # the bounded path keeps its window (sanity that the probe works)
-        plan_k = (search(spark, small_index, [(0, "alpha")], k=10)
-                  ._jdf.queryExecution().executedPlan().toString())
-        assert "Window" in plan_k
-    finally:
-        del os.environ["SPARK_GRAFT_LOCAL_ROUTE_POSTINGS"]
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_ROUTE_POSTINGS", "0")
+    plan = (search(spark, small_index, [(0, "alpha")], k=None)
+            ._jdf.queryExecution().executedPlan().toString())
+    assert "Window" not in plan, plan
+    # the bounded path keeps its window (sanity that the probe works)
+    plan_k = (search(spark, small_index, [(0, "alpha")], k=10)
+              ._jdf.queryExecution().executedPlan().toString())
+    assert "Window" in plan_k
 
 
 def test_no_internal_huge_k_call_sites():

@@ -53,24 +53,145 @@ def test_facade_search_local(spark, local_index):
     assert len(res) > 0
 
 
-def test_local_rows_budget_eviction_never_drops_current_batch(
-        spark, local_index):
-    """Regression: with a tiny residency budget, the LRU pass used to
-    evict terms the CURRENT batch needs (just-loaded or resident), and
-    the kernel silently treated them as no-hit — partial results.  The
-    eviction now runs after assembly with the batch's keys pinned."""
+def _sorted(df):
+    return df.sort_values(["qid", "doc_id"]).reset_index(drop=True)
+
+
+def _assert_rows_equal(got, exp):
+    pd.testing.assert_frame_equal(_sorted(got).astype(exp.dtypes.to_dict()),
+                                  _sorted(exp))
+
+
+def _count_parquet_opens(monkeypatch) -> list:
+    """Record every ``pyarrow.parquet.ParquetFile`` open (the serving
+    reader's entry point)."""
+    import pyarrow.parquet as pq
+    opened = []
+    real = pq.ParquetFile
+
+    def counting(source, *args, **kwargs):
+        opened.append(str(source))
+        return real(source, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    return opened
+
+
+# two batches with no term in common
+FIRST = [(0, "blah blah"), (1, "red"), (2, "Une phrase a trouver")]
+SECOND = [(3, "orange"), (4, "two one"), (5, "green")]
+
+
+def test_pid_residency_reads_each_file_once(spark, local_index,
+                                            monkeypatch):
+    """The first batch loads every pid it needs, opening each postings
+    file at most once; a later batch of unseen terms is served from the
+    resident pids without opening any file."""
     import pim_lucene_spark.operators.search as S
 
-    expected = (search_local(local_index, QUERIES, k=10)
-                .sort_values(["qid", "doc_id"]).reset_index(drop=True))
+    exp_first = search(spark, local_index, FIRST, k=10).toPandas()
+    exp_second = search(spark, local_index, SECOND, k=10).toPandas()
+    S.clear_local_cache()
+    opened = _count_parquet_opens(monkeypatch)
+    first = search_local(local_index, FIRST, k=10)
+    chunks = tuple(local_index.chunk_path(c)
+                   for c in range(local_index.build_chunks))
+    assert opened and len(opened) == len(set(opened))
+    assert all(f.startswith(chunks) for f in opened)
+    n_first = len(opened)
+    second = search_local(local_index, SECOND, k=10)
+    assert len(opened) == n_first
+    _assert_rows_equal(first, exp_first)
+    _assert_rows_equal(second, exp_second)
+
+
+def test_pid_subsets_read_only_their_files(spark, local_index, monkeypatch):
+    """``pids=`` loads only the listed pids' files, and the per-subset
+    top-k frames merge to exactly ``search()``'s rows."""
+    import pim_lucene_spark.operators.search as S
+
+    exp = search(spark, local_index, QUERIES, k=10).toPandas()
+    pid_map = S._postings_pid_map(local_index)
+    S.clear_local_cache()
+    opened = _count_parquet_opens(monkeypatch)
+    parts = []
+    for p in range(local_index.num_partitions):
+        before = len(opened)
+        parts.append(search_local(local_index, QUERIES, k=10, pids=[p]))
+        assert set(opened[before:]) <= set(pid_map[p][1])
+    merged = (pd.concat(parts, ignore_index=True)
+              .sort_values(["qid", "score", "doc_id"],
+                           ascending=[True, False, True])
+              .groupby("qid", sort=True).head(10))
+    _assert_rows_equal(merged, exp)
+
+
+def test_local_rows_budget_eviction_never_drops_current_batch(
+        spark, local_index):
+    """With a 1-byte residency budget every batch is over budget: the
+    LRU evicts whole pids, but never one the current batch needs (the
+    kernel would read a missing pid as "no hits" and return partial
+    results), so repeated batches over alternating pid subsets stay
+    identical."""
+    import pim_lucene_spark.operators.search as S
+
+    expected = _sorted(search_local(local_index, QUERIES, k=10))
+    per_pid = {p: _sorted(search_local(local_index, QUERIES, k=10,
+                                       pids=[p]))
+               for p in range(local_index.num_partitions)}
     old_max = S._LOCAL_ROWS_MAX
     S.clear_local_cache()
+    S.clear_postings_cache()
     try:
         S._LOCAL_ROWS_MAX = 1  # every batch is over budget
         for _ in range(3):  # repeated batches re-load after eviction
-            got = (search_local(local_index, QUERIES, k=10)
-                   .sort_values(["qid", "doc_id"]).reset_index(drop=True))
+            got = _sorted(search_local(local_index, QUERIES, k=10))
             pd.testing.assert_frame_equal(got, expected)
+            for p, want in per_pid.items():
+                got = _sorted(search_local(local_index, QUERIES, k=10,
+                                           pids=[p]))
+                pd.testing.assert_frame_equal(got, want)
+                # only the pinned batch's pid stays resident, and its
+                # decoded postings are the only ones left
+                assert [key[1] for key in S._LOCAL_PIDS] == [p]
+                assert {key[1] for key in S._POSTINGS_CACHE} <= {p}
     finally:
         S._LOCAL_ROWS_MAX = old_max
         S.clear_local_cache()
+        S.clear_postings_cache()
+
+
+def test_residency_follows_delete_gen_and_rebuild(spark, tmp_path):
+    """A process keeps serving after the index changes under it: a new
+    delete generation, then a rebuild in the same directory (new
+    ``build_id``).  Each next call returns the new rows, never the old
+    build's resident pids."""
+    from pim_lucene_spark.operators.deletes import write_deletes
+    from pim_lucene_spark.operators.search import clear_local_cache
+
+    cfg = IndexConfig(num_partitions=3, num_segments=2, build_chunks=2)
+    d = str(tmp_path / "idx")
+    m = build_index(spark, spark.createDataFrame(FIXTURE_DOCS), d, cfg,
+                    content_col="content", id_col="doc_id")
+    clear_local_cache()
+    before = search_local(d, QUERIES, k=10)
+    assert len(before)
+
+    deleted = sorted(set(before.doc_id))[:2]
+    m = write_deletes(spark, m, deleted)
+    after_delete = search_local(d, QUERIES, k=10)
+    assert not set(after_delete.doc_id) & set(deleted)
+    _assert_rows_equal(after_delete,
+                       search(spark, m, QUERIES, k=10).toPandas())
+
+    # same doc count and token total, contents moved to other ids: only
+    # the new build_id tells the two builds apart
+    moved = FIXTURE_DOCS.assign(content=FIXTURE_DOCS.content[::-1].values)
+    m2 = build_index(spark, spark.createDataFrame(moved), d, cfg,
+                     content_col="content", id_col="doc_id")
+    assert (m2.doc_count, m2.sum_total_term_freq) == \
+        (m.doc_count, m.sum_total_term_freq)
+    assert m2.build_id != m.build_id
+    rebuilt = search_local(d, QUERIES, k=10)
+    _assert_rows_equal(rebuilt, search(spark, m2, QUERIES, k=10).toPandas())
+    assert not _sorted(rebuilt).equals(_sorted(before))

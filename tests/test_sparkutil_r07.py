@@ -8,7 +8,6 @@ latency-critical properties (no jobs for empties, fresh listing after a
 rewrite, whole pid groups per task) must hold.
 """
 
-import os
 
 import numpy as np
 import pandas as pd
@@ -57,6 +56,33 @@ def test_local_result_roundtrip(spark):
     assert sorted((r.qid, r.doc_id, r.score) for r in df.collect()) == \
         [(1, 7, 0.5), (2, 8, 0.25)]
     assert local_result(spark, pdf.iloc[:0], SCHEMA).collect() == []
+
+
+def test_local_result_transient_error_keeps_arrow_path(spark, monkeypatch):
+    """One failed Arrow conversion falls back for that call only; the
+    next call takes the Arrow path again (only a failed schema check is
+    remembered for the session)."""
+    import pyarrow as pa
+
+    from pim_lucene_spark.sparkutil import _ARROW_OK_ATTR
+    sch = T.StructType([T.StructField("transient_qid", T.LongType(), False)])
+    pdf = pd.DataFrame({"transient_qid": np.array([3, 4], dtype=np.int64)})
+    real = spark.createDataFrame
+    arrow_calls = []
+
+    def flaky(data, *args, **kwargs):
+        if isinstance(data, pa.Table):
+            arrow_calls.append(len(arrow_calls))
+            if len(arrow_calls) == 1:
+                raise RuntimeError("transient")
+        return real(data, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "createDataFrame", flaky)
+    for _ in range(2):
+        df = local_result(spark, pdf, sch)
+        assert sorted(r.transient_qid for r in df.collect()) == [3, 4]
+    assert len(arrow_calls) == 2
+    assert getattr(spark, _ARROW_OK_ATTR)[sch.json()] is True
 
 
 def test_cached_parquet_reuses_plan_and_detects_rewrite(spark, tmp_path):
@@ -149,7 +175,8 @@ def test_search_map_kernel_matches_cogroup(spark, tmp_index_dir):
     assert a.equals(c)
 
 
-def test_postings_file_groups_partition_pids(spark, tmp_index_dir):
+def test_postings_file_groups_partition_pids(spark, tmp_index_dir,
+                                             monkeypatch):
     """The zero-exchange file plan must own every pid exactly once
     across task groups (the co-location contract the hash exchange
     gave), and the planned task job must return exactly what the
@@ -171,22 +198,16 @@ def test_postings_file_groups_partition_pids(spark, tmp_index_dir):
     assert sorted(seen) == sorted(set(seen))  # each pid exactly once
 
     queries = [(0, "merge"), (1, "the fast"), (2, "batch batch batch")]
-    os.environ["SPARK_GRAFT_LOCAL_ROUTE_POSTINGS"] = "0"
-    try:
-        a = (S.search(spark, m, queries, k=6).toPandas()
-             .sort_values(["qid", "doc_id"]).reset_index(drop=True))
-        os.environ["SPARK_GRAFT_DIRECT_SCAN"] = "0"
-        try:
-            b = (S.search(spark, m, queries, k=6).toPandas()
-                 .sort_values(["qid", "doc_id"]).reset_index(drop=True))
-        finally:
-            del os.environ["SPARK_GRAFT_DIRECT_SCAN"]
-    finally:
-        del os.environ["SPARK_GRAFT_LOCAL_ROUTE_POSTINGS"]
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_ROUTE_POSTINGS", "0")
+    a = (S.search(spark, m, queries, k=6).toPandas()
+         .sort_values(["qid", "doc_id"]).reset_index(drop=True))
+    monkeypatch.setenv("SPARK_GRAFT_DIRECT_SCAN", "0")
+    b = (S.search(spark, m, queries, k=6).toPandas()
+         .sort_values(["qid", "doc_id"]).reset_index(drop=True))
     assert len(a) and a.equals(b)
 
 
-def test_postings_file_plan_single_stage(spark, tmp_index_dir):
+def test_postings_file_plan_single_stage(spark, tmp_index_dir, monkeypatch):
     """The file-plan query job must contain no Exchange and no Parquet
     scan node (tasks read their files directly)."""
     from pim_lucene_spark import IndexConfig
@@ -197,18 +218,15 @@ def test_postings_file_plan_single_stage(spark, tmp_index_dir):
             .withColumnRenamed("text", "content"))
     m = build_index(spark, docs, tmp_index_dir,
                     IndexConfig(8, 4, build_chunks=1), id_col="doc_id")
-    os.environ["SPARK_GRAFT_LOCAL_ROUTE_POSTINGS"] = "0"
-    try:
-        plan = search(spark, m, [(0, "the fast")], k=None) \
-            ._jdf.queryExecution().executedPlan().toString()
-    finally:
-        del os.environ["SPARK_GRAFT_LOCAL_ROUTE_POSTINGS"]
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_ROUTE_POSTINGS", "0")
+    plan = search(spark, m, [(0, "the fast")], k=None) \
+        ._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "FileScan" not in plan and "Scan parquet" not in plan
     assert "MapInPandas" in plan
 
 
-def test_local_route_matches_distributed(spark, tmp_index_dir):
+def test_local_route_matches_distributed(spark, tmp_index_dir, monkeypatch):
     """The size-gated in-process route must return exactly what the
     distributed job returns (bounded AND unbounded), and its collect
     must launch zero Spark jobs."""
@@ -230,15 +248,13 @@ def test_local_route_matches_distributed(spark, tmp_index_dir):
          [["qid", "doc_id", "freq", "norm", "score"]]
          .astype({"norm": "int32"})
          .sort_values(["qid", "doc_id"]).reset_index(drop=True))
-    os.environ["SPARK_GRAFT_LOCAL_ROUTE_POSTINGS"] = "0"
-    try:
+    with monkeypatch.context() as mp:
+        mp.setenv("SPARK_GRAFT_LOCAL_ROUTE_POSTINGS", "0")
         b = (S.search(spark, m, queries, k=6, final_merge="driver")
              .toPandas().sort_values(["qid", "doc_id"])
              .reset_index(drop=True))
         c = (S.search(spark, m, queries, k=None).toPandas()
              .sort_values(["qid", "doc_id"]).reset_index(drop=True))
-    finally:
-        del os.environ["SPARK_GRAFT_LOCAL_ROUTE_POSTINGS"]
     assert len(a) and a.equals(b)
     d = (S.search(spark, m, queries, k=None).toPandas()
          .sort_values(["qid", "doc_id"]).reset_index(drop=True))
