@@ -8,18 +8,22 @@ host↔DPU protocol in ``topdocs_sync.c:469-544``):
    the index's stats table — the TermStatistics build of
    ``PimPhraseQuery.java:110-132``.  Queries containing a term absent from
    the whole index short-circuit to empty (``PimPhraseQuery.java:122-124``).
-2. The postings Parquet is scanned with ``term IN (query terms)``, the
-   analogue of the per-DPU term-dictionary lookup
-   (``term_lookup.c:107-222``).  The filter drops rows; it prunes no
-   reads: each postings file is one row group whose ``term`` min/max
-   spans the whole vocabulary, so a scan decodes whole files.  The
-   serving path (:func:`search_local`) pays that once per pid and keeps
-   the pid resident.
-3. Matching posting rows are evaluated in one Arrow-vectorized
-   ``applyInPandas`` kernel per partition; the partition's norms blob
-   (1 byte/doc) is read directly from the index's ``norms/pid=N/`` Parquet
-   layout — a side-data read, never a Spark shuffle (the way a Lucene
-   segment reads its own norms file).  Kernel: vectorized varint decode →
+2. The driver plans pid→file ownership from the postings layout
+   (:func:`_postings_file_groups`) and each kernel task reads its own
+   files once (:func:`_read_shard`), keeping the rows of its pids and
+   the query terms — the analogue of each DPU reading its own index
+   partition and its per-DPU term-dictionary lookup
+   (``term_lookup.c:107-222``).  The term filter drops rows; it prunes
+   no reads: each postings file is one row group whose ``term`` min/max
+   spans the whole vocabulary, so a task decodes whole files.  Small
+   batches run that one-group plan in-process; the serving path
+   (:func:`search_local`) reads whole pids once and keeps them
+   resident.
+3. Each pid's rows, its norms blob (1 byte/doc, read from the index's
+   ``norms/pid=N/`` Parquet layout by :func:`_pid_norms` — a side-data
+   read, never a Spark shuffle, the way a Lucene segment reads its own
+   norms file) and its live mask feed one Arrow-vectorized kernel
+   (:func:`_match_group`).  Kernel: vectorized varint decode →
    k-way sorted docID intersection (leapfrog semantics, ``matcher.c:
    82-128``) → position alignment counting every overlapping occurrence
    (``matcher.c:133-177``) → BM25 scoring with Lucene's exact float32
@@ -46,9 +50,11 @@ host↔DPU protocol in ``topdocs_sync.c:469-544``):
 4. Global top-k per query: window rank over (score desc, doc_id asc) —
    Lucene ``TopScoreDocCollector`` tie-break order.
 
-Scale notes: only rows for query terms are shuffled (tiny); norms never
-shuffle (direct per-pid read).  The final window runs over at most
-``P * k`` rows per query.
+Scale notes: the default plan is one ``Range → MapInPandas`` stage with
+no shuffle — postings and norms are read where the task runs.  Only the
+``norms_access='cogroup'`` plan (URI layouts) shuffles, and then only
+rows for query terms.  The final window runs over at most ``P * k``
+rows per query.
 """
 
 from __future__ import annotations
@@ -237,8 +243,9 @@ def _phrase_match_counts(postings_by_term: list, cand_idx_by_term: list[np.ndarr
 # reference's one-time index load into DPU memory (B15,
 # DpuSystemExecutor.java:110-219): a long-lived python worker keeps the
 # DECODED postings of hot (build, pid, term) keys across search() calls,
-# so a warm query batch skips the decode entirely (the columnar scan is
-# already IN-pruned JVM-side).  Per-process LRU with a byte budget; keys
+# so a warm query batch skips the decode entirely (the file read is
+# not cached; the serving path keeps whole pids resident for that).
+# Per-process LRU with a byte budget; keys
 # include the immutable build_id, so a rebuilt index can never serve
 # stale postings.  Opt-in via search(postings_cache_mb=...).
 # ---------------------------------------------------------------------------
@@ -279,6 +286,12 @@ def _postings_cache_put(key, lp: "_LazyPostings", budget_bytes: int):
     size = _lp_bytes(lp)
     if size > budget_bytes:
         return
+    # an entry outlives the rows it was decoded from: keep its own
+    # position bytes, not views that would pin every row read with them
+    lp._u_blob = [bytes(b[lo:hi]) for b, lo, hi
+                  in zip(lp._u_blob, lp._u_blo, lp._u_bhi)]
+    lp._u_blo = [0] * len(lp._u_blob)
+    lp._u_bhi = [len(b) for b in lp._u_blob]
     _POSTINGS_CACHE[key] = (lp, size)
     _POSTINGS_CACHE_STATE["bytes"] += size
     while _POSTINGS_CACHE_STATE["bytes"] > budget_bytes and _POSTINGS_CACHE:
@@ -513,9 +526,9 @@ def _match_core(payload: dict, pid: int, postings_pdf: pd.DataFrame | None,
                 norms: np.ndarray,
                 by_term: dict[str, list] | None = None,
                 live: np.ndarray | None = None) -> pd.DataFrame:
-    """Pandas adapter over :func:`_match_core_arrays` (the Spark
-    ``applyInPandas`` kernels need a frame; the serving path skips the
-    per-pid frame construction and concatenates raw arrays)."""
+    """Pandas adapter over :func:`_match_core_arrays` for callers that
+    hold a postings frame (the cogroup kernel); the direct routes pass
+    Arrow-backed rows through :func:`_match_group` instead."""
     arrays = _match_core_arrays(payload, pid, postings_pdf, norms,
                                 by_term=by_term, live=live)
     if arrays is None:
@@ -536,7 +549,7 @@ def _match_core_arrays(payload: dict, pid: int,
     num_segments = payload["num_segments"]
 
     if by_term is None:
-        # (the serving path passes prebuilt, resident structures)
+        # (the direct routes pass rows split by _read_shard)
         by_term = _assemble_by_term(postings_pdf)
     ctx = _DecodeCtx(by_term, payload, pid)
     cache_budget = ctx.budget
@@ -746,6 +759,16 @@ def _empty_result() -> pd.DataFrame:
     return _EMPTY_RESULT
 
 
+def _top_k(pdf: pd.DataFrame, k: int) -> pd.DataFrame:
+    """Driver merge of per-pid top-k rows: each query's first ``k`` in
+    (score desc, doc_id asc) order — Lucene ``TopScoreDocCollector``'s
+    tie-break and the reference's host-side merge
+    (``topdocs_sync.c:369-412``)."""
+    return (pdf.sort_values(["qid", "score", "doc_id"],
+                            ascending=[True, False, True])
+            .groupby("qid", sort=False).head(k).reset_index(drop=True))
+
+
 def _resolve_norms_access(norms_access: str, manifest) -> str:
     """'auto' → 'direct' only for a plain filesystem path the driver can
     stat; scheme-qualified URIs (s3a://, hdfs://) and driver-invisible
@@ -759,36 +782,40 @@ def _resolve_norms_access(norms_access: str, manifest) -> str:
     return "cogroup"
 
 
+def _kernel_payload(manifest: IndexManifest, precision: str,
+                    **extra) -> dict:
+    """The one builder of kernel payloads: an index's scoring and layout
+    inputs (score cache, partition/segment shape, norms and delete
+    paths, decode-cache key) plus the caller's ``extra`` keys (queries,
+    ``k``, ``after``, ...).  Search, the serving path and every
+    compound/BM25F field read their per-index inputs from here."""
+    avgdl = bm25.avg_field_length(manifest.sum_total_term_freq,
+                                  manifest.doc_count, precision)
+    payload = {
+        "precision": precision,
+        "cache": bm25.score_cache(avgdl, manifest.k1, manifest.b, precision),
+        "num_partitions": manifest.num_partitions,
+        "num_segments": manifest.num_segments,
+        "nb_doc_per_segment": manifest.nb_doc_per_segment,
+        "norms_path": manifest.norms_path,
+        "deletes_path": (manifest.deletes_path if manifest.delete_gen
+                         else None),
+        # v1/v2 manifests have no build_id — the key mixes in
+        # content-derived stats so an in-place rebuild of a legacy index
+        # cannot serve stale decoded postings from warm workers
+        "cache_key": manifest_scan_key(manifest),
+    }
+    payload.update(extra)
+    if payload.get("after"):
+        payload["after"] = {int(q): (float(s), int(d))
+                            for q, (s, d) in payload["after"].items()}
+    return payload
+
+
 def _match_kernel(payload: dict):
-    """Per-partition kernel; norms come from a direct per-pid Parquet read
-    (``payload['norms_path']``) or, as a fallback, a cogrouped frame."""
-    norms_path = payload.get("norms_path")
-
-    if norms_path is not None:
-        def fn(key, postings_pdf: pd.DataFrame) -> pd.DataFrame:
-            pid = int(key[0])
-            if len(postings_pdf) == 0:
-                return _empty_result()
-            part_dir = os.path.join(norms_path, f"pid={pid}")
-            if not os.path.isdir(part_dir):
-                # a pid with postings always has docs, hence norms — a
-                # missing dir is a misconfiguration (unmounted index path,
-                # object-store URI): fail loudly, never return empty hits
-                raise FileNotFoundError(
-                    f"norms partition {part_dir} not visible from this "
-                    "executor; direct norms access needs a POSIX-visible "
-                    "shared mount — use search(norms_access='cogroup') "
-                    "for object stores or non-shared layouts")
-            import pyarrow.parquet as pq
-            blob = pq.read_table(part_dir, columns=["norms"]) \
-                .column("norms")[0].as_py()
-            norms = np.frombuffer(blob, dtype=np.uint8)
-            live = live_mask_for(payload.get("deletes_path"), pid,
-                                 payload["num_partitions"], norms.size)
-            return _match_core(payload, pid, postings_pdf, norms,
-                               live=live)
-        return fn
-
+    """Cogroup kernel (``norms_access='cogroup'``): the pid's norms blob
+    arrives as a cogrouped frame instead of a direct read — the plan for
+    object-store URIs and layouts executors cannot list."""
     def fn(key, postings_pdf: pd.DataFrame,
            norms_pdf: pd.DataFrame) -> pd.DataFrame:
         pid = int(key[0])
@@ -801,96 +828,227 @@ def _match_kernel(payload: dict):
     return fn
 
 
-def _match_kernel_map(payload: dict):
-    """``mapInPandas`` form of the direct-norms kernel.
-
-    The default ``groupBy(pid).applyInPandas`` plan works, but AQE
-    coalesces its tiny shuffle to ONE post-shuffle task, serializing
-    every pid's kernel (and norms read) behind a single Python worker —
-    measured 450 ms vs 255 ms per query at sf0.1 (fresh plan per call,
-    quiet machine).  Instead the caller hash-repartitions by ``pid``
-    into an explicitly chosen task count (explicit ``repartition(n,
-    col)`` is user-specified partitioning, which AQE never coalesces),
-    and this kernel re-groups whole pid groups from the task's batches —
-    co-location is guaranteed by the hash exchange, so results are
-    identical to the per-group form (differential-tested).
-    """
-    def fn(it):
-        parts = [pdf for pdf in it if len(pdf)]
-        if not parts:
-            return
-        allp = (pd.concat(parts, ignore_index=True)
-                if len(parts) > 1 else parts[0])
-        yield from _iter_pid_results(payload, allp)
-    return fn
+# ---------------------------------------------------------------------------
+# shard reader: every direct route (in-process, file plan, bound probe,
+# sync rounds, serving) reads postings through _read_shard, norms through
+# _pid_norms, and runs _match_group — the reference's DPU model, where
+# each DPU reads its own self-contained index partition
+# (PimIndexWriter.java).
+# ---------------------------------------------------------------------------
+_ROW_ARRAYS = ("seg_doc_counts", "seg_doc_bytes", "seg_freq_bytes",
+               "seg_pos_bytes", "seg_max_tf", "doc_blob", "freq_blob",
+               "pos_blob")
 
 
-def _iter_pid_results(payload: dict, allp: pd.DataFrame):
-    """Run the direct-norms match kernel over every whole pid group in
-    ``allp`` (shared by the exchange-fed and file-fed kernel forms)."""
+def _pid_norms(norms_path: str, pid: int) -> np.ndarray:
+    """A pid's norms blob (1 byte/doc) — the only reader of it."""
     import pyarrow.parquet as pq
-    norms_path = payload["norms_path"]
-    for pid, grp in allp.groupby("pid", sort=True):
-        pid = int(pid)
-        part_dir = os.path.join(norms_path, f"pid={pid}")
-        if not os.path.isdir(part_dir):
-            # same loud contract as _match_kernel's direct path
-            raise FileNotFoundError(
-                f"norms partition {part_dir} not visible from this "
-                "executor; direct norms access needs a POSIX-visible "
-                "shared mount — use search(norms_access='cogroup') "
-                "for object stores or non-shared layouts")
-        blob = pq.read_table(part_dir, columns=["norms"]) \
-            .column("norms")[0].as_py()
-        norms = np.frombuffer(blob, dtype=np.uint8)
-        live = live_mask_for(payload.get("deletes_path"), pid,
-                             payload["num_partitions"], norms.size)
-        out = _match_core(payload, pid, grp, norms, live=live)
-        if len(out):
-            yield out
+    part_dir = os.path.join(norms_path, f"pid={pid}")
+    if not os.path.isdir(part_dir):
+        # a pid with postings always has docs, hence norms — a missing
+        # dir is a misconfiguration (unmounted index path, object-store
+        # URI): fail loudly, never return empty hits
+        raise FileNotFoundError(
+            f"norms partition {part_dir} not visible from this "
+            "process; direct norms access needs a POSIX-visible shared "
+            "mount — object stores and non-shared layouts take the "
+            "cogroup plan (search(norms_access='cogroup'))")
+    blob = pq.read_table(part_dir, columns=["norms"]) \
+        .column("norms")[0].as_py()
+    return np.frombuffer(blob, dtype=np.uint8)
 
 
-def _match_kernel_files(payload: dict):
-    """Single-stage kernel: each task reads its ASSIGNED postings files
-    directly with a pyarrow ``term IN`` + ``pid IN`` filter and runs the
-    per-pid match kernel — no Exchange at all (guide §2.4 / §8.4
+def _flat_column(col) -> tuple[np.ndarray, np.ndarray]:
+    """``(offsets, values)`` numpy views of a list or binary column
+    (one chunk): row ``i`` is ``values[offsets[i]:offsets[i + 1]]``."""
+    import pyarrow as pa
+    arr = col.chunk(0)
+    if pa.types.is_list(arr.type):  # offsets index the unsliced values
+        return arr.offsets.to_numpy(), arr.values.to_numpy()
+    _, off_buf, data_buf = arr.buffers()
+    off = np.frombuffer(off_buf, dtype=np.int32)[
+        arr.offset:arr.offset + len(arr) + 1]
+    data = (np.frombuffer(data_buf, dtype=np.uint8) if data_buf is not None
+            else np.empty(0, dtype=np.uint8))
+    return off, data
+
+
+class _ResidentRow:
+    """One stripe row of a pid.  The kernel reads the ``seg_*`` arrays
+    and ``*_blob`` bytes as attributes; each is a zero-copy numpy slice
+    of the pid's Arrow columns."""
+
+    __slots__ = ("_cols", "_i", "stripe")
+
+    def __init__(self, cols: dict, i: int, stripe: int):
+        self._cols = cols
+        self._i = i
+        self.stripe = stripe
+
+    def __getattr__(self, name):
+        try:
+            off, vals = self._cols[name]
+        except KeyError:
+            raise AttributeError(name) from None
+        return vals[off[self._i]:off[self._i + 1]]
+
+
+class _ResidentPid:
+    """One pid's postings as Arrow columns: a term column sorted by
+    (term, stripe) for ``searchsorted`` lookups plus flat views of the
+    kernel columns.  Its norms blob and live mask load on first use and
+    live and die with it (the serving cache evicts them together)."""
+
+    __slots__ = ("pid", "terms", "stripes", "cols", "rows_nbytes", "norms",
+                 "live")
+
+    def __init__(self, pid: int, table=None):
+        import pyarrow.compute as pc
+        self.pid = pid
+        self.norms: np.ndarray | None = None
+        self.live: tuple | None = None   # (deletes_path, mask | None)
+        if table is None or not table.num_rows:
+            self.terms = np.empty(0, dtype=object)
+            self.stripes = np.empty(0, dtype=np.int32)
+            self.cols, self.rows_nbytes = {}, 0
+            return
+        order = pc.sort_indices(table, sort_keys=[("term", "ascending"),
+                                                  ("stripe", "ascending")])
+        if not np.array_equal(order.to_numpy(), np.arange(table.num_rows)):
+            table = table.take(order)
+        table = table.combine_chunks()
+        self.rows_nbytes = int(table.nbytes)
+        self.terms = table.column("term").to_numpy(zero_copy_only=False)
+        self.stripes = table.column("stripe").to_numpy()
+        self.cols = {c: _flat_column(table.column(c)) for c in _ROW_ARRAYS}
+
+    @property
+    def nbytes(self) -> int:
+        n = self.rows_nbytes
+        if self.norms is not None:
+            n += self.norms.nbytes
+        if self.live is not None and self.live[1] is not None:
+            n += self.live[1].nbytes
+        return n
+
+    def by_term(self, terms: np.ndarray) -> dict:
+        """``{term: [stripe-ordered rows]}`` for the ``terms`` (an
+        object array) present in this pid."""
+        los = self.terms.searchsorted(terms, side="left").tolist()
+        his = self.terms.searchsorted(terms, side="right").tolist()
+        return {t: [_ResidentRow(self.cols, i, int(self.stripes[i]))
+                    for i in range(lo, hi)]
+                for t, lo, hi in zip(terms.tolist(), los, his) if hi > lo}
+
+    def norms_live(self, norms_path: str, deletes_path: str | None,
+                   num_partitions: int) -> tuple:
+        """``(norms, live mask | None)``; the mask follows the delete
+        generation in ``deletes_path``."""
+        if self.norms is None:
+            self.norms = _pid_norms(norms_path, self.pid)
+        if self.live is None or self.live[0] != deletes_path:
+            self.live = (deletes_path,
+                         live_mask_for(deletes_path, self.pid,
+                                       num_partitions, self.norms.size))
+        return self.norms, self.live[1]
+
+
+def _read_shard(files: list[str], pids, terms=None
+                ) -> dict[int, _ResidentPid]:
+    """``{pid: _ResidentPid}`` for the ``pids`` (restricted to ``terms``
+    when given) that have rows in ``files``.  Opens each file once and
+    reads it whole and single-threaded — a postings file is one row
+    group, so a filtered read would decode the same pages — then splits
+    the rows by pid.  ``terms=None`` keeps whole pids (serving
+    residency)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    parts: dict[int, list] = {int(p): [] for p in pids}
+    value_set = None if terms is None else pa.array(list(terms),
+                                                    pa.string())
+    for f in files:
+        with pq.ParquetFile(f) as pf:
+            t = pf.read(use_threads=False)
+        if value_set is not None:
+            t = t.filter(pc.is_in(t.column("term"), value_set=value_set))
+        col = t.column("pid").to_numpy()
+        for p in np.unique(col).tolist():
+            if p in parts:
+                parts[p].append(t.filter(pa.array(col == p)))
+    return {p: _ResidentPid(p, pa.concat_tables(ts))
+            for p, ts in parts.items() if ts}
+
+
+def _pid_terms(shard: dict, terms) -> dict[int, dict]:
+    """``{pid: {term: [stripe-ordered rows]}}`` over the shard's pids
+    that hold any of ``terms``."""
+    terms = np.asarray(list(terms), dtype=object)
+    out = {}
+    for p, res in shard.items():
+        by_term = res.by_term(terms)
+        if by_term:
+            out[p] = by_term
+    return out
+
+
+def _match_group(payload: dict, shard: dict,
+                 by_pid: dict[int, dict]) -> pd.DataFrame | None:
+    """The per-group runner every direct route shares: for each pid in
+    ``by_pid`` (its rows per query term), its norms and live mask from
+    ``shard`` and the match kernel; one result frame for the group, or
+    ``None`` without hits."""
+    outs = []
+    for pid in sorted(by_pid):
+        norms, live = shard[pid].norms_live(payload["norms_path"],
+                                            payload["deletes_path"],
+                                            payload["num_partitions"])
+        arrays = _match_core_arrays(payload, pid, None, norms,
+                                    by_term=by_pid[pid], live=live)
+        if arrays is not None:
+            outs.append(arrays)
+    if not outs:
+        return None
+    return pd.DataFrame({c: (np.concatenate([o[c] for o in outs])
+                             if len(outs) > 1 else outs[0][c])
+                         for c in RESULT_SCHEMA.fieldNames()})
+
+
+def _match_files(payload: dict, files: list[str],
+                 pids: list[int]) -> pd.DataFrame | None:
+    """One file-plan group: read its files for the batch's terms, keep
+    its pids, run the per-group runner."""
+    terms = payload["needed_terms"]
+    shard = _read_shard(files, pids, terms)
+    return _match_group(payload, shard, _pid_terms(shard, terms))
+
+
+def _file_plan(spark: SparkSession, manifest: IndexManifest,
+               payload: dict, n_tasks: int,
+               pids: list[int] | None = None) -> DataFrame:
+    """The zero-exchange ``Range → MapInPandas`` job: each of ``n_tasks``
+    tasks runs :func:`_match_files` on its ASSIGNED file group (of
+    ``pids`` only, when given) — no Exchange at all (guide §2.4 / §8.4
     "co-locate instead of join": the postings Parquet is already laid
-    out by pid, so the repartition-by-pid shuffle only re-creates a
-    grouping the files already have).  The driver's file plan
-    (:func:`_postings_file_groups`) guarantees every pid's rows live in
-    exactly one task, which is the same co-location contract the hash
-    exchange gave; the kernel itself is identical, so results are
-    identical (differential-tested).
-
-    The filter prunes no reads (a postings file is one row group spanning
-    the whole vocabulary), so each task decodes its files whole.  This is
-    the distributed twin of the serving path's per-pid read
-    (``_load_pids``) and the reference's DPU model: each task owns its
-    shard and reads it locally.  Needs POSIX-visible index files from
-    every executor — exactly the precondition of direct norms access,
-    which gates this plan.
-    """
-    groups = payload["file_groups"]
-    terms = list(payload["needed_terms"])
+    out by pid, so a repartition-by-pid shuffle would only re-create a
+    grouping the files already have).  :func:`_postings_file_groups`
+    guarantees every pid's rows live in exactly one group.  Needs
+    POSIX-visible index files from every executor — exactly the
+    precondition of direct norms access, which gates this plan."""
+    groups = _postings_file_groups(manifest, n_tasks, pids)
 
     def fn(it):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
         for pdf in it:
             for gi in pdf["id"]:
-                files, pids = groups[int(gi)]
-                filters = [("term", "in", terms), ("pid", "in", pids)]
-                tables = []
-                for f in files:
-                    t = pq.read_table(f, filters=filters)
-                    if t.num_rows:
-                        tables.append(t)
-                if not tables:
-                    continue
-                allp = (pa.concat_tables(tables) if len(tables) > 1
-                        else tables[0]).to_pandas()
-                yield from _iter_pid_results(payload, allp)
-    return fn
+                out = _match_files(payload, *groups[int(gi)])
+                if out is not None:
+                    yield out
+    return (spark.range(0, len(groups), 1, max(1, len(groups)))
+            .mapInPandas(fn, RESULT_SCHEMA))
+
+
+# in-process route ceiling (Σ doc_freq of a batch); see _local_route_max
+_LOCAL_ROUTE_POSTINGS = 1 << 16
 
 
 def _local_route_max() -> int:
@@ -900,83 +1058,23 @@ def _local_route_max() -> int:
     terms) does not exceed what ONE kernel task is sized to handle, a
     distributed job cannot run faster than a single task — and that one
     task would still pay the full Python-stage job overhead (~170-250 ms
-    measured on this host for an *identity* mapInPandas job, vs
+    measured on a 4-core host for an *identity* mapInPandas job, vs
     single-digit ms of actual kernel work).  Below the ceiling the
-    driver runs that one task's kernel in-process instead — the exact
+    driver runs the one-group file plan in-process instead — the exact
     job the cluster would have executed, minus the scheduler (and the
     reference engine's own query path is host-resident for the same
-    reason).  The ceiling is volume-derived (the same one-task target
-    the task-count heuristic uses), not core-count-derived; 0 disables
-    the route entirely.  Measured break-evens on this host class
-    (quiet): a single hot-term query still wins inline at Σdf = 500k
-    (284 vs 485 ms) and loses by Σdf = 1M (1466 vs 592 ms), but a
-    20-phrase batch at Σdf = 108k already loses (570-890 ms inline vs
-    ~330 ms distributed — per-posting work grows with query count), so
-    the default stays at the conservative single-task budget rather
-    than the single-query crossover."""
-    v = os.environ.get("SPARK_GRAFT_LOCAL_ROUTE_POSTINGS")
-    if v is not None:
-        return int(v)
-    return int(os.environ.get("SPARK_GRAFT_POSTINGS_PER_TASK",
-                              str(1 << 16)))
-
-
-def _chunks_posix(manifest: IndexManifest) -> bool:
-    """True when every postings chunk dir is a driver-visible plain
-    filesystem path (the same precondition direct norms access has)."""
-    for c in range(manifest.build_chunks):
-        p = manifest.chunk_path(c)
-        if "://" in p or not os.path.isdir(p):
-            return False
-    return True
-
-
-def _search_inline(manifest: IndexManifest, payload: dict,
-                   needed_terms) -> pd.DataFrame:
-    """One-task kernel run in-process: pyarrow ``term IN`` read of the
-    postings chunks (no residency caches — every call re-reads Parquet;
-    the decode cache obeys ``payload['postings_cache_mb']`` exactly as a
-    kernel task would), then the identical per-pid match kernel.  The
-    hit pids' norms blobs come from ONE filtered read of the norms
-    dataset (per-pid directory reads cost a dataset discovery each)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    filters = [("term", "in", list(needed_terms))]
-    tables = [pq.read_table(manifest.chunk_path(c), filters=filters)
-              for c in range(manifest.build_chunks)]
-    tables = [t for t in tables if t.num_rows]
-    if not tables:
-        return _empty_result()
-    allp = (pa.concat_tables(tables) if len(tables) > 1
-            else tables[0]).to_pandas()
-    hit_pids = sorted(int(p) for p in allp["pid"].unique())
-    ntbl = pq.read_table(payload["norms_path"],
-                         filters=[("pid", "in", hit_pids)],
-                         columns=["pid", "norms"])
-    norms_by_pid: dict[int, np.ndarray] = {}
-    for p, b in zip(ntbl.column("pid").to_pylist(),
-                    ntbl.column("norms").to_pylist()):
-        # one blob row per pid; keep the first like the kernels'
-        # ``column("norms")[0]`` read
-        norms_by_pid.setdefault(int(p), np.frombuffer(b, dtype=np.uint8))
-    outs = []
-    for pid, grp in allp.groupby("pid", sort=True):
-        pid = int(pid)
-        norms = norms_by_pid.get(pid)
-        if norms is None:
-            # a pid with postings always has docs, hence norms — same
-            # loud contract as the kernels' direct path
-            raise FileNotFoundError(
-                f"norms partition pid={pid} missing under "
-                f"{payload['norms_path']}")
-        live = live_mask_for(payload.get("deletes_path"), pid,
-                             payload["num_partitions"], norms.size)
-        out = _match_core(payload, pid, grp, norms, live=live)
-        if len(out):
-            outs.append(out)
-    if not outs:
-        return _empty_result()
-    return pd.concat(outs, ignore_index=True) if len(outs) > 1 else outs[0]
+    reason).  The ceiling is its own constant, not the cluster's
+    per-task sizing (``SPARK_GRAFT_POSTINGS_PER_TASK``), so raising task
+    sizes never widens in-process routing;
+    ``SPARK_GRAFT_LOCAL_ROUTE_POSTINGS`` overrides it (0 disables the
+    route).  Measured break-evens (quiet host): a single hot-term query
+    still wins inline at Σdf = 500k (284 vs 485 ms) and loses by Σdf =
+    1M (1466 vs 592 ms), but a 20-phrase batch at Σdf = 108k already
+    loses (570-890 ms inline vs ~330 ms distributed — per-posting work
+    grows with query count), so the default stays at one task's budget
+    rather than the single-query crossover."""
+    return int(os.environ.get("SPARK_GRAFT_LOCAL_ROUTE_POSTINGS",
+                              str(_LOCAL_ROUTE_POSTINGS)))
 
 
 def _kernel_task_count(num_partitions: int, total_postings: int) -> int:
@@ -1001,22 +1099,22 @@ def _kernel_task_count(num_partitions: int, total_postings: int) -> int:
 
 # postings pid→files map per index generation: which Parquet files hold
 # each pid's rows (exact, from the RLE/dictionary-encoded pid column) —
-# lets the kernel job skip the repartition exchange entirely by handing
-# each task a pid subset plus the files that contain it, read with
-# ``pid IN`` + ``term IN`` pyarrow pushdown.  Keyed like the scan cache
-# (identity + dir mtimes); bounded.
-_FILE_PLAN_CACHE: OrderedDict[tuple, dict | None] = OrderedDict()
+# the file plan hands each task a pid subset plus the files that contain
+# it, and the serving path loads a pid from exactly its files.  Keyed
+# like the scan cache (identity + dir mtimes); bounded; only successful
+# scans are cached.
+_FILE_PLAN_CACHE: OrderedDict[tuple, dict] = OrderedDict()
 _FILE_PLAN_CACHE_MAX = 64
 
 
 def _postings_pid_map(manifest: IndexManifest) -> dict | None:
     """``{pid: (est_bytes, [files...])}`` from a one-time scan of each
     chunk file's pid column (tiny: RLE/dictionary pages), or ``None``
-    when the layout can't be inspected (URI paths, unreadable files) —
-    the caller then falls back to the exchange plan.  Cached per
-    (build, mtimes); no postings data is touched, and the weights are
-    driver-side planning estimates only (file bytes split evenly over
-    the file's pids)."""
+    when the driver cannot list the layout (URI paths, missing dirs).
+    Cached per (build, mtimes); a failed read raises and caches nothing.
+    No postings data is touched, and the weights are driver-side
+    planning estimates only (file bytes split evenly over the file's
+    pids)."""
     from pim_lucene_spark.sparkutil import _paths_token
     paths = tuple(manifest.chunk_path(c)
                   for c in range(manifest.build_chunks))
@@ -1028,42 +1126,51 @@ def _postings_pid_map(manifest: IndexManifest) -> dict | None:
         _FILE_PLAN_CACHE.move_to_end(key)
         return _FILE_PLAN_CACHE[key]
     import pyarrow.parquet as pq
-    pid_map: dict[int, tuple[float, list[str]]] | None = {}
-    try:
-        for d in paths:
-            for name in sorted(os.listdir(d)):
-                if not name.endswith(".parquet"):
-                    continue
-                f = os.path.join(d, name)
-                pids = np.unique(pq.read_table(f, columns=["pid"])
-                                 .column("pid").to_numpy())
-                if pids.size == 0:
-                    continue  # empty part file: no pids to own
-                w = os.path.getsize(f) / pids.size
-                for p in pids.tolist():
-                    old_w, old_files = pid_map.get(int(p), (0.0, []))
-                    pid_map[int(p)] = (old_w + w, old_files + [f])
-    except (OSError, KeyError, ValueError):
-        pid_map = None
+    pid_map: dict[int, tuple[float, list[str]]] = {}
+    for d in paths:
+        for name in sorted(os.listdir(d)):
+            if not name.endswith(".parquet"):
+                continue
+            f = os.path.join(d, name)
+            pids = np.unique(pq.read_table(f, columns=["pid"])
+                             .column("pid").to_numpy())
+            if pids.size == 0:
+                continue  # empty part file: no pids to own
+            w = os.path.getsize(f) / pids.size
+            for p in pids.tolist():
+                old_w, old_files = pid_map.get(int(p), (0.0, []))
+                pid_map[int(p)] = (old_w + w, old_files + [f])
     if not pid_map:
-        pid_map = None
+        return None
     _FILE_PLAN_CACHE[key] = pid_map
     while len(_FILE_PLAN_CACHE) > _FILE_PLAN_CACHE_MAX:
         _FILE_PLAN_CACHE.popitem(last=False)
     return pid_map
 
 
-def _postings_file_groups(manifest: IndexManifest, n_tasks: int
-                          ) -> list[tuple[list[str], list[int]]] | None:
-    """Bin-pack pids into ``n_tasks`` task groups (LPT greedy on the
-    per-pid byte estimate — a better balance than the hash exchange's
-    modulo placement).  Each group is ``(files, pids)``: the task reads
-    those files with ``pid IN pids`` (+ ``term IN``) pushdown, so a pid
-    is owned by exactly ONE task no matter how the writer laid out the
-    files.  ``None`` → use the exchange plan."""
+def _pid_map(manifest: IndexManifest) -> dict:
+    """:func:`_postings_pid_map`, failing loudly where it cannot list
+    the postings files — no direct route answers from a partial view."""
     pid_map = _postings_pid_map(manifest)
-    if not pid_map:
-        return None
+    if pid_map is None:
+        raise FileNotFoundError(
+            "direct postings access needs readable, POSIX-visible "
+            f"postings files; cannot list them under {manifest.index_dir}"
+            " — use search(norms_access='cogroup') for object stores")
+    return pid_map
+
+
+def _postings_file_groups(manifest: IndexManifest, n_tasks: int,
+                          pids: list[int] | None = None
+                          ) -> list[tuple[list[str], list[int]]]:
+    """Bin-pack pids (all, or the given ``pids``) into ``n_tasks`` task
+    groups (LPT greedy on the per-pid byte estimate).  Each group is
+    ``(files, pids)``: its task reads those files and keeps those pids'
+    rows, so a pid is owned by exactly ONE task no matter how the writer
+    laid out the files."""
+    pid_map = _pid_map(manifest)
+    if pids is not None:
+        pid_map = {p: pid_map[p] for p in pids if p in pid_map}
     n = max(1, min(int(n_tasks), len(pid_map)))
     bins: list[list] = [[0.0, [], set()] for _ in range(n)]
     for pid, (w, files) in sorted(pid_map.items(),
@@ -1254,7 +1361,8 @@ def term_doc_freqs(spark: SparkSession | None, manifest: IndexManifest,
     return {t: cache[t] for t in all_terms}
 
 
-def _search_sync_rounds(spark, postings, payload: dict, k: int,
+def _search_sync_rounds(spark, manifest: IndexManifest, payload: dict,
+                        k: int, n_tasks: int,
                         budget0: int = 4096) -> DataFrame:
     """Multi-round adaptive bound sync — the reference's iterative
     host/DPU loop (``topdocs_sync.c:469-544``, constants
@@ -1269,7 +1377,8 @@ def _search_sync_rounds(spark, postings, payload: dict, k: int,
     tightens each query's global k-th-best bound, and relaunches ONLY
     the pairs whose remaining upper bound can still beat it (strict <,
     because a tie can win the doc-id-asc tie-break) with the bound
-    broadcast as ``ext_bound``.  Rounds end when no pair remains.
+    broadcast as ``ext_bound``.  Each round is the file plan restricted
+    to the live pids.  Rounds end when no pair remains.
 
     Exact: every emitted doc is exactly scored, the bound is achieved
     (k docs already hold it), and skipped work is provably below it —
@@ -1286,29 +1395,20 @@ def _search_sync_rounds(spark, postings, payload: dict, k: int,
     """
     progress: dict = {}     # qid -> {pid: resume_idx}; round-0 empty
     bounds: dict = {}
-    acc = None
+    acc = _empty_result()
     budget = max(int(budget0), 16)
     rnd = 0
     while True:
         payload_r = dict(payload, bounds=bounds,
                          sync={"budget": budget, "progress": progress,
                                "round": rnd})
-        scan = postings
-        if rnd > 0:
-            live_pids = sorted({p for m in progress.values() for p in m})
-            scan = postings.filter(F.col("pid").isin(live_pids))
-        pdf = (scan.groupBy("pid")
-               .applyInPandas(_match_kernel(payload_r), RESULT_SCHEMA)
-               .toPandas())
+        live_pids = (sorted({p for m in progress.values() for p in m})
+                     if rnd > 0 else None)
+        pdf = _file_plan(spark, manifest, payload_r, n_tasks,
+                         live_pids).toPandas()
         state = pdf[pdf["norm"] < 0]
-        res = pdf[pdf["norm"] >= 0]
-        acc = res if acc is None else pd.concat([acc, res],
-                                                ignore_index=True)
-        if len(acc):
-            acc = (acc.sort_values(["qid", "score", "doc_id"],
-                                   ascending=[True, False, True])
-                   .groupby("qid", sort=False).head(k)
-                   .reset_index(drop=True))
+        acc = _top_k(pd.concat([acc, pdf[pdf["norm"] >= 0]],
+                               ignore_index=True), k)
         bounds = {int(qid): float(grp["score"].min())
                   for qid, grp in acc.groupby("qid")
                   if len(grp) >= k}
@@ -1324,9 +1424,7 @@ def _search_sync_rounds(spark, postings, payload: dict, k: int,
             break
         budget *= 2
         rnd += 1
-    return local_result(
-        spark, acc if acc is not None and len(acc) else _empty_result(),
-        RESULT_SCHEMA)
+    return local_result(spark, acc, RESULT_SCHEMA)
 
 
 def search(spark: SparkSession, index: IndexManifest | str,
@@ -1350,17 +1448,18 @@ def search(spark: SparkSession, index: IndexManifest | str,
     the reference's host-side merge (``topdocs_sync.c:369-412``) — one
     exchange less, lower latency for small k.
 
-    ``norms_access``: ``'direct'`` has each partition task read its norms
-    blob straight from the index's ``norms/pid=N/`` Parquet files —
-    requires a POSIX-visible shared mount (local disk, NFS, Lustre,
-    FUSE-mounted object store); a task that cannot see its norms dir fails
-    loudly.  ``'cogroup'`` shuffles norms through a Spark cogroup instead
-    (raw object-store URIs, v2 indexes, exotic deployments).  ``'auto'``
-    (default) picks ``direct`` only when the norms path is a plain
-    filesystem path the driver can stat (a scheme-qualified URI like
-    ``s3a://…`` or a dir the driver can't see falls back to ``cogroup``
-    instead of failing at query time; executors that still can't see a
-    driver-visible path get the loud error as the backstop).
+    ``norms_access``: ``'direct'`` has each kernel task read its pids'
+    postings files and norms blobs itself (the zero-exchange file plan,
+    or in-process for a batch whose Σdf fits one task) — requires a
+    POSIX-visible shared mount (local disk, NFS, Lustre, FUSE-mounted
+    object store); a layout the driver cannot list, or a task that
+    cannot see its norms dir, fails loudly.  ``'cogroup'`` shuffles
+    postings and norms through a Spark cogroup instead (raw object-store
+    URIs, v2 indexes, exotic deployments).  ``'auto'`` (default) picks
+    ``direct`` only when the norms path is a plain filesystem path the
+    driver can stat (a scheme-qualified URI like ``s3a://…`` or a dir
+    the driver can't see falls back to ``cogroup`` instead of failing
+    at query time).
 
     ``bound_probe``: the reference's adaptive bound broadcast
     (``topdocs_sync.c:469-544``: the host pushes the running global k-th
@@ -1373,9 +1472,9 @@ def search(spark: SparkSession, index: IndexManifest | str,
     budgets (``sync_budget0 * 2**round``), per-round driver k-heap
     merge, tightened-bound rebroadcast, and relaunch of only the
     (query, partition) pairs that can still contribute — disabled at
-    k >= 1000 exactly like the reference.  Both are admissible (k docs
-    already achieve every broadcast bound) and return identical results
-    (differential-tested).
+    k >= 1000 exactly like the reference.  Both run the file plan
+    (direct access only), are admissible (k docs already achieve every
+    broadcast bound) and return identical results (differential-tested).
 
     ``postings_cache_mb`` > 0 enables the per-worker warm postings cache
     (the B15 index-load-to-PIM analogue): decoded postings of hot
@@ -1389,7 +1488,7 @@ def search(spark: SparkSession, index: IndexManifest | str,
     tie-break comparison is float-exact).  Each query returns its next
     ``k`` hits strictly after that mark in (score desc, doc asc) order.
     The mark is filtered INSIDE the kernel before the per-partition
-    top-k cut (deep paging never widens the exchange: page N ships the
+    top-k cut (deep paging never widens the merge: page N ships the
     same ≤ P·k rows as page 1), and both pruning paths count only
     qualifying hits toward their cut, so block-max skipping stays
     exact.  Queries absent from the dict start at page 1.
@@ -1413,115 +1512,63 @@ def search(spark: SparkSession, index: IndexManifest | str,
                                          collect_offsets=gap_offsets)
     if not planned:
         return local_empty(spark, RESULT_SCHEMA)
+    payload = _kernel_payload(
+        manifest, precision, queries=planned, k=int(k),
+        postings_cache_mb=int(postings_cache_mb), after=after,
+        offsets=gap_offsets, needed_terms=list(needed_terms))
 
-    avgdl = bm25.avg_field_length(manifest.sum_total_term_freq,
-                                  manifest.doc_count, precision)
-    norms_access = _resolve_norms_access(norms_access, manifest)
-    use_direct = norms_access == "direct" and manifest.version >= 3
-    payload = {
-        "queries": planned,
-        "k": int(k),
-        "precision": precision,
-        "cache": bm25.score_cache(avgdl, manifest.k1, manifest.b, precision),
-        "num_partitions": manifest.num_partitions,
-        "num_segments": manifest.num_segments,
-        "norms_path": manifest.norms_path if use_direct else None,
-        # v1/v2 manifests have no build_id — mix in content-derived stats
-        # (as _stats_cache_key does) so an in-place rebuild of a legacy
-        # index cannot serve stale decoded postings from warm workers
-        "cache_key": (manifest.build_id or manifest.index_dir,
-                      manifest.doc_count, manifest.sum_total_term_freq),
-        "postings_cache_mb": int(postings_cache_mb),
-        "deletes_path": (manifest.deletes_path if manifest.delete_gen
-                         else None),
-    }
-    if after:
-        payload["after"] = {int(q): (float(s), int(d))
-                            for q, (s, d) in after.items()}
-    if gap_offsets:
-        payload["offsets"] = gap_offsets
-
-    if use_direct and not bound_probe:
-        total_df = sum(term_doc_freqs(spark, manifest,
-                                      list(needed_terms)).values())
-        if 0 < total_df <= _local_route_max() and _chunks_posix(manifest):
-            # one-task-sized query: run the kernel in-process (the job
-            # the cluster would run, minus the scheduler — see
-            # _local_route_max); identical results, differential-tested
-            pdf = _search_inline(manifest, payload, needed_terms)
-            if not unbounded and len(pdf):
-                pdf = (pdf.sort_values(["qid", "score", "doc_id"],
-                                       ascending=[True, False, True])
-                       .groupby("qid", sort=True).head(k))
-            return local_result(spark, pdf, RESULT_SCHEMA)
-
-    postings = (cached_parquet(spark, manifest_scan_key(manifest),
-                               *[manifest.chunk_path(c) for c in
-                                 range(manifest.build_chunks)])
-                .filter(F.col("term").isin(list(needed_terms))))
-
-    if bound_probe == "sync" and use_direct and k < 1000:
-        # the reference's full iterative loop (topdocs_sync.c:469-544):
-        # per-round doc budgets (doubling), per-partition best scores →
-        # driver k-heaps → tightened bound broadcast → relaunch of only
-        # the (query, partition) pairs whose remaining upper bound can
-        # still beat the global k-th best; off at k >= 1000 exactly like
-        # the reference.  A Spark round costs ~0.1 s vs a DPU round's
-        # microseconds, so the initial budget is scaled up
-        # (sync_budget0) — the protocol, not the constant, is the
-        # faithful part.
-        return _search_sync_rounds(spark, postings, payload, k,
-                                   budget0=int(sync_budget0))
-
-    if bound_probe and use_direct and manifest.num_partitions > 1:
-        probe = (postings.filter(F.col("pid") == 0).groupBy("pid")
-                 .applyInPandas(_match_kernel(payload), RESULT_SCHEMA)
-                 .toPandas())
-        bounds = {}
-        for qid, grp in probe.groupby("qid"):
-            sc = grp["score"].to_numpy()
-            if sc.size >= k:  # bound valid only when k docs achieve it
-                bounds[int(qid)] = float(np.sort(sc)[-k])
-        if bounds:
-            payload = dict(payload, bounds=bounds)
-
-    if use_direct:
-        dfs = term_doc_freqs(spark, manifest, list(needed_terms))
-        n_tasks = _kernel_task_count(manifest.num_partitions,
-                                     sum(dfs.values()))
-        groups = (None if os.environ.get("SPARK_GRAFT_DIRECT_SCAN") == "0"
-                  else _postings_file_groups(manifest, n_tasks))
-        if groups is not None:
-            # zero-Exchange single-stage job: tasks read their assigned
-            # pid-complete postings files directly (guide §2.4; the
-            # repartition below only re-creates the grouping the file
-            # layout already has)
-            payload = dict(payload, file_groups=groups,
-                           needed_terms=list(needed_terms))
-            per_part = (spark.range(0, len(groups), 1, len(groups))
-                        .mapInPandas(_match_kernel_files(payload),
-                                     RESULT_SCHEMA))
-        else:
-            per_part = (postings.repartition(n_tasks, "pid")
-                        .mapInPandas(_match_kernel_map(payload),
-                                     RESULT_SCHEMA))
-    else:
+    direct = (_resolve_norms_access(norms_access, manifest) == "direct"
+              and manifest.version >= 3)
+    if not direct:
+        postings = (cached_parquet(spark, manifest_scan_key(manifest),
+                                   *[manifest.chunk_path(c) for c in
+                                     range(manifest.build_chunks)])
+                    .filter(F.col("term").isin(list(needed_terms))))
         norms = cached_parquet(spark, manifest_scan_key(manifest),
                                manifest.norms_path)
         per_part = (postings.groupBy("pid")
                     .cogroup(norms.groupBy("pid"))
                     .applyInPandas(_match_kernel(payload), RESULT_SCHEMA))
+    else:
+        total_df = sum(term_doc_freqs(spark, manifest,
+                                      list(needed_terms)).values())
+        n_tasks = _kernel_task_count(manifest.num_partitions, total_df)
+        if not bound_probe and 0 < total_df <= _local_route_max():
+            # one-task-sized batch: the one-group file plan in-process
+            # (the job the cluster would run, minus the scheduler — see
+            # _local_route_max); identical results, differential-tested
+            (files, pids), = _postings_file_groups(manifest, 1)
+            pdf = _match_files(payload, files, pids)
+            if pdf is None:
+                return local_empty(spark, RESULT_SCHEMA)
+            return local_result(spark, pdf if unbounded else _top_k(pdf, k),
+                                RESULT_SCHEMA)
+        if bound_probe == "sync" and k < 1000:
+            # the reference's full iterative loop (topdocs_sync.c:
+            # 469-544); off at k >= 1000 exactly like the reference.  A
+            # Spark round costs ~0.1 s vs a DPU round's microseconds, so
+            # the initial budget is scaled up (sync_budget0) — the
+            # protocol, not the constant, is the faithful part.
+            return _search_sync_rounds(spark, manifest, payload, k, n_tasks,
+                                       budget0=int(sync_budget0))
+        if bound_probe and manifest.num_partitions > 1:
+            probe = _file_plan(spark, manifest, payload, 1,
+                               pids=[0]).toPandas()
+            bounds = {}
+            for qid, grp in probe.groupby("qid"):
+                sc = grp["score"].to_numpy()
+                if sc.size >= k:  # bound valid only when k docs achieve it
+                    bounds[int(qid)] = float(np.sort(sc)[-k])
+            if bounds:
+                payload = dict(payload, bounds=bounds)
+        per_part = _file_plan(spark, manifest, payload, n_tasks)
 
     if unbounded:
         return per_part
 
     if final_merge == "driver":
-        pdf = per_part.toPandas()
-        if len(pdf):
-            pdf = (pdf.sort_values(["qid", "score", "doc_id"],
-                                   ascending=[True, False, True])
-                   .groupby("qid", sort=True).head(k))
-        return local_result(spark, pdf, RESULT_SCHEMA)
+        return local_result(spark, _top_k(per_part.toPandas(), k),
+                            RESULT_SCHEMA)
 
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
     return (per_part
@@ -1560,123 +1607,45 @@ def search_term(spark: SparkSession, index: IndexManifest | str, term: str,
     return search(spark, index, [(0, term)], k=k, precision=precision)
 
 
-# serving-path residency: each pid's postings rows (Arrow columns sorted
-# by (term, stripe)) and norms blob stay in-process once loaded, so a
-# request whose pids are resident reads no files at all — the analogue
+# serving-path residency: each pid's postings rows (a _ResidentPid) stay
+# in-process once loaded, together with its norms blob and live mask, so
+# a request whose pids are resident reads no files at all — the analogue
 # of the reference loading each DPU's index once and serving every query
-# from it.  The rows budget is an LRU over whole pids.
-_LOCAL_PIDS: OrderedDict = OrderedDict()   # (ckey, pid) -> _ResidentPid
-_LOCAL_PIDS_STATE = {"bytes": 0}
+# from it.  The budget is an LRU over whole pids (rows, norms and mask
+# bytes); keys are (cache key, pid, index dir).
+_LOCAL_PIDS: OrderedDict = OrderedDict()
 _LOCAL_ROWS_MAX = 512 << 20
-_LOCAL_NORMS: dict = {}
-
-_ROW_ARRAYS = ("seg_doc_counts", "seg_doc_bytes", "seg_freq_bytes",
-               "seg_pos_bytes", "seg_max_tf", "doc_blob", "freq_blob",
-               "pos_blob")
 
 
-def _flat_column(col) -> tuple[np.ndarray, np.ndarray]:
-    """``(offsets, values)`` numpy views of a list or binary column
-    (one chunk): row ``i`` is ``values[offsets[i]:offsets[i + 1]]``."""
-    import pyarrow as pa
-    arr = col.chunk(0)
-    if pa.types.is_list(arr.type):  # offsets index the unsliced values
-        return arr.offsets.to_numpy(), arr.values.to_numpy()
-    _, off_buf, data_buf = arr.buffers()
-    off = np.frombuffer(off_buf, dtype=np.int32)[
-        arr.offset:arr.offset + len(arr) + 1]
-    data = (np.frombuffer(data_buf, dtype=np.uint8) if data_buf is not None
-            else np.empty(0, dtype=np.uint8))
-    return off, data
-
-
-class _ResidentRow:
-    """One stripe row of a resident pid.  The kernel reads the
-    ``seg_*`` arrays and ``*_blob`` bytes as attributes; each is a
-    zero-copy numpy slice of the pid's Arrow columns."""
-
-    __slots__ = ("_cols", "_i", "stripe")
-
-    def __init__(self, cols: dict, i: int, stripe: int):
-        self._cols = cols
-        self._i = i
-        self.stripe = stripe
-
-    def __getattr__(self, name):
-        try:
-            off, vals = self._cols[name]
-        except KeyError:
-            raise AttributeError(name) from None
-        return vals[off[self._i]:off[self._i + 1]]
-
-
-class _ResidentPid:
-    """One pid's postings, resident: a term column sorted by (term,
-    stripe) for ``searchsorted`` lookups plus flat views of the kernel
-    columns."""
-
-    __slots__ = ("terms", "stripes", "cols", "nbytes")
-
-    def __init__(self, table=None):
-        import pyarrow.compute as pc
-        if table is None or not table.num_rows:
-            self.terms = np.empty(0, dtype=object)
-            self.stripes = np.empty(0, dtype=np.int32)
-            self.cols, self.nbytes = {}, 0
-            return
-        order = pc.sort_indices(table, sort_keys=[("term", "ascending"),
-                                                  ("stripe", "ascending")])
-        if not np.array_equal(order.to_numpy(), np.arange(table.num_rows)):
-            table = table.take(order)
-        table = table.combine_chunks()
-        self.nbytes = int(table.nbytes)
-        self.terms = table.column("term").to_numpy(zero_copy_only=False)
-        self.stripes = table.column("stripe").to_numpy()
-        self.cols = {c: _flat_column(table.column(c)) for c in _ROW_ARRAYS}
-
-    def by_term(self, terms: np.ndarray) -> dict:
-        """``{term: [stripe-ordered rows]}`` for the ``terms`` (an
-        object array) present in this pid."""
-        los = self.terms.searchsorted(terms, side="left").tolist()
-        his = self.terms.searchsorted(terms, side="right").tolist()
-        return {t: [_ResidentRow(self.cols, i, int(self.stripes[i]))
-                    for i in range(lo, hi)]
-                for t, lo, hi in zip(terms.tolist(), los, his) if hi > lo}
-
-
-def _serving_pid_map(manifest) -> dict:
-    """``_postings_pid_map``, failing loudly where it cannot list the
-    postings files (the serving path never answers from a partial
-    view)."""
-    pid_map = _postings_pid_map(manifest)
-    if pid_map is None:
-        raise FileNotFoundError(
-            "serving path needs readable, POSIX-visible postings files; "
-            f"cannot list them under {manifest.index_dir}")
-    return pid_map
+def _evict(key) -> None:
+    """Drop a resident pid and its decoded postings (a pid that is not
+    resident keeps nothing in memory)."""
+    del _LOCAL_PIDS[key]
+    for ck in [ck for ck in _POSTINGS_CACHE if ck[:2] == key[:2]]:
+        _POSTINGS_CACHE_STATE["bytes"] -= _POSTINGS_CACHE.pop(ck)[1]
 
 
 def _load_pids(manifest, ckey, pids: list[int]) -> None:
-    """Make ``pids`` resident: open each postings file that holds one of
-    them once, read it whole and single-threaded, and keep each pid's
-    rows."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    pid_map = _serving_pid_map(manifest)
-    parts: dict[int, list] = {p: [] for p in pids}
+    """Make ``pids`` resident: :func:`_read_shard` of the files that hold
+    them, whole pids.  A pid loaded under a superseded build of the same
+    index dir (an in-place rebuild) is dropped first."""
+    d = manifest.index_dir
+    for key in [key for key in _LOCAL_PIDS
+                if key[2] == d and key[0] != ckey]:
+        _evict(key)
+    pid_map = _pid_map(manifest)
     files = sorted({f for p in pids for f in pid_map.get(p, (0, []))[1]})
-    for f in files:
-        with pq.ParquetFile(f) as pf:
-            t = pf.read(use_threads=False)
-        col = t.column("pid").to_numpy()
-        for p in np.unique(col).tolist():
-            if p in parts:
-                parts[p].append(t.filter(pa.array(col == p)))
+    shard = _read_shard(files, pids)
     for p in pids:
-        res = _ResidentPid(pa.concat_tables(parts.pop(p)) if parts[p]
-                           else None)
-        _LOCAL_PIDS[(ckey, p)] = res
-        _LOCAL_PIDS_STATE["bytes"] += res.nbytes
+        _LOCAL_PIDS[(ckey, p, d)] = shard.get(p) or _ResidentPid(p)
+
+
+def _resident(manifest, ckey, pid: int) -> _ResidentPid:
+    """The resident pid, loaded if missing."""
+    key = (ckey, pid, manifest.index_dir)
+    if key not in _LOCAL_PIDS:
+        _load_pids(manifest, ckey, [pid])
+    return _LOCAL_PIDS[key]
 
 
 def _local_rows(manifest, ckey, terms: list[str],
@@ -1690,75 +1659,33 @@ def _local_rows(manifest, ckey, terms: list[str],
     worker its own subset, so a shard never reads or keeps another
     shard's rows); ``None`` = every pid with postings.
     """
-    pids = sorted(_serving_pid_map(manifest)) if pids is None else \
+    d = manifest.index_dir
+    pids = sorted(_pid_map(manifest)) if pids is None else \
         [int(p) for p in pids]
-    missing = [p for p in pids if (ckey, p) not in _LOCAL_PIDS]
+    missing = [p for p in pids if (ckey, p, d) not in _LOCAL_PIDS]
     if missing:
         _load_pids(manifest, ckey, missing)
-    terms = np.asarray(list(terms), dtype=object)
-    out: dict[int, dict] = {}
+    shard = {}
     for p in pids:
-        _LOCAL_PIDS.move_to_end((ckey, p))
-        by_term = _LOCAL_PIDS[(ckey, p)].by_term(terms)
-        if by_term:
-            out[p] = by_term
+        _LOCAL_PIDS.move_to_end((ckey, p, d))
+        shard[p] = _LOCAL_PIDS[(ckey, p, d)]
+    out = _pid_terms(shard, terms)
     # evict after assembly, with this batch's pids pinned: the kernel
     # treats a missing term as "no hits on this partition", so dropping
     # a pid the batch needs would silently return partial results
-    current = {(ckey, p) for p in pids}
-    while _LOCAL_PIDS_STATE["bytes"] > _LOCAL_ROWS_MAX:
-        victim = next((key for key in _LOCAL_PIDS if key not in current),
-                      None)
-        if victim is None:
-            break  # only the pinned batch remains — over budget is fine
-        _LOCAL_PIDS_STATE["bytes"] -= _LOCAL_PIDS.pop(victim).nbytes
-        # decoded postings hold views of the pid's buffers: drop them
-        # too, or they would keep the evicted pid in memory
-        for key in [k for k in _POSTINGS_CACHE if k[:2] == victim]:
-            _POSTINGS_CACHE_STATE["bytes"] -= _POSTINGS_CACHE.pop(key)[1]
+    total = sum(res.nbytes for res in _LOCAL_PIDS.values())
+    if total > _LOCAL_ROWS_MAX:
+        for key in [key for key in _LOCAL_PIDS if key[0] != ckey
+                    or key[1] not in shard or key[2] != d]:
+            total -= _LOCAL_PIDS[key].nbytes
+            _evict(key)
+            if total <= _LOCAL_ROWS_MAX:
+                break
     return out
-
-
-def _local_norms(manifest, ckey, pid: int) -> np.ndarray:
-    key = (ckey, pid)
-    norms = _LOCAL_NORMS.get(key)
-    if norms is None:
-        import pyarrow.parquet as pq
-        blob = pq.read_table(os.path.join(manifest.norms_path,
-                                          f"pid={pid}"),
-                             columns=["norms"]).column("norms")[0].as_py()
-        norms = np.frombuffer(blob, dtype=np.uint8)
-        _LOCAL_NORMS[key] = norms
-    return norms
-
-
-_LOCAL_LIVE: dict = {}
-
-
-def _local_live(manifest, ckey, pid: int,
-                n_docs: int) -> np.ndarray | None:
-    """Resident per-pid live mask for the serving path, keyed by the
-    delete generation so a new ``delete_docs`` call invalidates it;
-    superseded generations' masks are dropped on load (a long-lived
-    server with periodic deletes must not accumulate one mask set per
-    generation)."""
-    if not manifest.delete_gen:
-        return None
-    key = (ckey, manifest.delete_gen, pid)
-    if key not in _LOCAL_LIVE:
-        for old in [k for k in _LOCAL_LIVE
-                    if k[0] == ckey and k[1] < manifest.delete_gen]:
-            del _LOCAL_LIVE[old]
-        _LOCAL_LIVE[key] = live_mask_for(
-            manifest.deletes_path, pid, manifest.num_partitions, n_docs)
-    return _LOCAL_LIVE[key]
 
 
 def clear_local_cache() -> None:
     _LOCAL_PIDS.clear()
-    _LOCAL_PIDS_STATE["bytes"] = 0
-    _LOCAL_NORMS.clear()
-    _LOCAL_LIVE.clear()
 
 
 def search_local(index: IndexManifest | str, queries: list[tuple[int, str]],
@@ -1772,14 +1699,15 @@ def search_local(index: IndexManifest | str, queries: list[tuple[int, str]],
     The reference's query path never schedules batch work — queries go to
     an index RESIDENT in accelerator memory and results come back in
     milliseconds (``PimSystemManager.java:401-437``).  This is that
-    serving path for a POSIX-visible index: each pid's postings and norms
-    are read once and stay resident (:func:`_local_rows`), so a request
-    whose pids are loaded reads no files; the identical ``_match_core``
-    kernel runs in-process per partition,
-    and a driver heap-merge — plus the warm postings cache, which in a
-    single process hits on every repeated term.  Use for interactive /
-    low-latency serving; use :func:`search` for cluster-scale batches.
-    Results are identical (differential-tested); returns a pandas frame
+    serving path for a POSIX-visible index: each pid's postings, norms
+    and live mask are read once and stay resident (:func:`_local_rows`),
+    so a request whose pids are loaded reads no files; the per-group
+    runner every direct route uses (:func:`_match_group`) runs
+    in-process over them, then a driver heap-merge — plus the warm
+    postings cache, which in a single process hits on every repeated
+    term.  Use for interactive / low-latency serving; use :func:`search`
+    for cluster-scale batches.  Results are identical
+    (differential-tested); returns a pandas frame
     ``(qid, doc_id, freq, norm, score)``.
 
     ``after`` = ``{qid: (after_score, after_doc_id)}`` pages past the
@@ -1796,44 +1724,14 @@ def search_local(index: IndexManifest | str, queries: list[tuple[int, str]],
         # frame (a caller mutating its result must not poison every
         # later empty result in the process)
         return _empty_result().copy()
-    avgdl = bm25.avg_field_length(manifest.sum_total_term_freq,
-                                  manifest.doc_count, precision)
-    payload = {
-        "queries": planned,
-        "k": int(k),
-        "precision": precision,
-        "cache": bm25.score_cache(avgdl, manifest.k1, manifest.b, precision),
-        "num_partitions": manifest.num_partitions,
-        "num_segments": manifest.num_segments,
-        "norms_path": manifest.norms_path,
-        "cache_key": (manifest.build_id or manifest.index_dir,
-                      manifest.doc_count, manifest.sum_total_term_freq),
-        "postings_cache_mb": int(postings_cache_mb),
-        "deletes_path": (manifest.deletes_path if manifest.delete_gen
-                         else None),
-    }
-    if after:
-        payload["after"] = {int(q): (float(s), int(d))
-                            for q, (s, d) in after.items()}
-    if gap_offsets:
-        payload["offsets"] = gap_offsets
+    payload = _kernel_payload(
+        manifest, precision, queries=planned, k=int(k),
+        postings_cache_mb=int(postings_cache_mb), after=after,
+        offsets=gap_offsets)
     ckey = payload["cache_key"]
     by_pid = _local_rows(manifest, ckey, list(needed_terms), pids=pids)
-    outs = []
-    for pid in sorted(by_pid):
-        norms = _local_norms(manifest, ckey, int(pid))
-        live = _local_live(manifest, ckey, int(pid), norms.size)
-        arrays = _match_core_arrays(payload, int(pid), None, norms,
-                                    by_term=by_pid[pid], live=live)
-        if arrays is not None:
-            outs.append(arrays)
-    if not outs:
+    res = _match_group(payload, {p: _resident(manifest, ckey, p)
+                                 for p in by_pid}, by_pid)
+    if res is None:
         return _empty_result().copy()  # public boundary: see above
-    # one frame for the whole batch (per-pid pandas construction was the
-    # next-biggest serving cost after the empty-frame fix)
-    res = pd.DataFrame({c: (np.concatenate([p[c] for p in outs])
-                            if len(outs) > 1 else outs[0][c])
-                        for c in ("qid", "doc_id", "freq", "norm", "score")})
-    return (res.sort_values(["qid", "score", "doc_id"],
-                            ascending=[True, False, True])
-            .groupby("qid", sort=True).head(k).reset_index(drop=True))
+    return _top_k(res, k)

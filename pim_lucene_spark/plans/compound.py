@@ -49,8 +49,6 @@ union with a field tag and compose per partition.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -60,14 +58,18 @@ from pyspark.sql import types as T
 from pim_lucene_spark.functions import bm25
 from pim_lucene_spark.functions.sloppy import sloppy_freqs_postings
 from pim_lucene_spark.manifest import IndexManifest
+from pim_lucene_spark.operators.deletes import live_mask_for
 from pim_lucene_spark.sparkutil import (cached_parquet, local_empty,
                                         manifest_scan_key, map_by_pid)
 from pim_lucene_spark.operators.search import (
     _assemble_by_term,
     _DecodeCtx,
+    _kernel_payload,
     _kernel_task_count,
     _phrase_match_counts,
+    _pid_norms,
     _resolve_norms_access,
+    _top_k,
     plan_queries,
     term_doc_freqs,
 )
@@ -548,10 +550,6 @@ def _compound_core(payload: dict, pid: int,
     fields = payload["fields"]
     clause_plan = payload["clauses"]  # sid -> (field, terms, weight)
 
-    import pyarrow.parquet as pq
-
-    from pim_lucene_spark.operators.deletes import live_mask_for
-
     ctxs, norms, live = {}, {}, {}
     for f, fmeta in fields.items():
         bt = per_field_by_term.get(f)
@@ -564,16 +562,7 @@ def _compound_core(payload: dict, pid: int,
         if resident is not None and f in resident:
             norms[f], live[f] = resident[f]
             continue
-        part_dir = os.path.join(fmeta["norms_path"], f"pid={pid}")
-        if not os.path.isdir(part_dir):
-            raise FileNotFoundError(
-                f"norms partition {part_dir} not visible from this "
-                "executor; the compound kernel needs a POSIX-visible "
-                "shared mount — the caller should have routed this "
-                "batch to the join-chain plan")
-        blob = (pq.read_table(part_dir, columns=["norms"])
-                .column("norms")[0].as_py())
-        norms[f] = np.frombuffer(blob, dtype=np.uint8)
+        norms[f] = _pid_norms(fmeta["norms_path"], pid)
         live[f] = live_mask_for(fmeta.get("deletes_path"), pid, P,
                                 norms[f].size)
 
@@ -1069,41 +1058,25 @@ def search_sloppy_kernel(spark: SparkSession, index, queries,
     empty = local_empty(spark, SLOPPY_KERNEL_SCHEMA)
     if not planned:
         return empty
-    avgdl = bm25.avg_field_length(manifest.sum_total_term_freq,
-                                  manifest.doc_count, precision)
-    payload = {
+    payload = _kernel_payload(
+        manifest, precision,
         # exact (slop=0) members of a mixed batch carry their gapped
         # PhraseQuery offsets (english analyzer) — the scan path is
         # gap-aware, and the two must stay bit-identical.  Sloppy
         # members keep consecutive offsets on BOTH paths (documented
         # divergence from Lucene's gapped SloppyPhraseMatcher).
-        "queries": [(int(qid), tuple(terms), float(w),
-                     int(slops.get(qid, 0)),
-                     gap_offsets.get(qid) if not slops.get(qid, 0)
-                     else None)
-                    for qid, terms, w in planned],
-        "cache": bm25.score_cache(avgdl, manifest.k1, manifest.b,
-                                  precision),
-        "cache_key": (manifest.build_id or manifest.index_dir,
-                      manifest.doc_count, manifest.sum_total_term_freq),
-        "norms_path": manifest.norms_path,
-        "deletes_path": (manifest.deletes_path if manifest.delete_gen
-                         else None),
-        "k": None if k is None else int(k),
-        "precision": precision,
-        "num_partitions": int(manifest.num_partitions),
-        "postings_cache_mb": 0,
-    }
+        queries=[(int(qid), tuple(terms), float(w),
+                  int(slops.get(qid, 0)),
+                  gap_offsets.get(qid) if not slops.get(qid, 0)
+                  else None)
+                 for qid, terms, w in planned],
+        k=None if k is None else int(k))
     scan = (cached_parquet(spark, manifest_scan_key(manifest),
                            *[manifest.chunk_path(c)
                              for c in range(manifest.build_chunks)])
             .filter(F.col("term").isin(list(needed))))
 
     def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        import pyarrow.parquet as pq
-
-        from pim_lucene_spark.operators.deletes import live_mask_for
-
         pid = int(key[0])
         P = payload["num_partitions"]
         kk = payload["k"]
@@ -1116,10 +1089,7 @@ def search_sloppy_kernel(spark: SparkSession, index, queries,
             return empty_pdf
         ctx = _DecodeCtx(_assemble_by_term(pdf), payload, pid,
                          ckey=payload["cache_key"])
-        part_dir = os.path.join(payload["norms_path"], f"pid={pid}")
-        blob = (pq.read_table(part_dir, columns=["norms"])
-                .column("norms")[0].as_py())
-        norms = np.frombuffer(blob, dtype=np.uint8)
+        norms = _pid_norms(payload["norms_path"], pid)
         live = live_mask_for(payload["deletes_path"], pid, P, norms.size)
         for qid, terms, w, q_slop, offs in payload["queries"]:
             docs, sc, fr = _leaf_match(ctx, norms, terms, w,
@@ -1292,17 +1262,7 @@ def _plan_aggregate_payload(spark: SparkSession,
                                 b.slops.get(sid, 0))
         if not needed and not ma_here:
             continue
-        avgdl = bm25.avg_field_length(m.sum_total_term_freq, m.doc_count,
-                                      precision)
-        fields_payload[f] = {
-            "cache": bm25.score_cache(avgdl, m.k1, m.b, precision),
-            "cache_key": (m.build_id or m.index_dir, m.doc_count,
-                          m.sum_total_term_freq),
-            "norms_path": m.norms_path,
-            "deletes_path": (m.deletes_path if m.delete_gen else None),
-            "num_segments": m.num_segments,
-            "nb_doc_per_segment": m.nb_doc_per_segment,
-        }
+        fields_payload[f] = _kernel_payload(m, precision)
         scans.append(
             cached_parquet(spark, manifest_scan_key(m),
                            *[m.chunk_path(c)
@@ -1674,17 +1634,7 @@ def eval_compound(spark: SparkSession, manifests: dict[str, IndexManifest],
                                 int((slops or {}).get(sid, 0)))
         if not needed and not ma_here:
             continue
-        avgdl = bm25.avg_field_length(m.sum_total_term_freq, m.doc_count,
-                                      precision)
-        fields_payload[f] = {
-            "cache": bm25.score_cache(avgdl, m.k1, m.b, precision),
-            "cache_key": (m.build_id or m.index_dir, m.doc_count,
-                          m.sum_total_term_freq),
-            "norms_path": m.norms_path,
-            "deletes_path": (m.deletes_path if m.delete_gen else None),
-            "num_segments": m.num_segments,
-            "nb_doc_per_segment": m.nb_doc_per_segment,
-        }
+        fields_payload[f] = _kernel_payload(m, precision)
         scans.append(
             cached_parquet(spark, manifest_scan_key(m),
                            *[m.chunk_path(c)
@@ -1742,14 +1692,11 @@ def _bm25f_core(payload: dict, pid: int,
     co-located postings; only top-k rows leave."""
     from pim_lucene_spark.functions.smallfloat import (byte4_to_int,
                                                        int_to_byte4)
-    import pyarrow.parquet as pq
 
     P = payload["num_partitions"]
     k = payload["k"]
     precision = payload["precision"]
     cache = payload["cache"]
-
-    from pim_lucene_spark.operators.deletes import live_mask_for
 
     ctxs = {}
     norms: dict[str, np.ndarray] = {}
@@ -1757,10 +1704,7 @@ def _bm25f_core(payload: dict, pid: int,
     # every field's norms participate in the combined norm even where the
     # field has no postings rows in this partition
     for f, fmeta in payload["fields"].items():
-        part_dir = os.path.join(fmeta["norms_path"], f"pid={pid}")
-        blob = (pq.read_table(part_dir, columns=["norms"])
-                .column("norms")[0].as_py())
-        norms[f] = np.frombuffer(blob, dtype=np.uint8)
+        norms[f] = _pid_norms(fmeta["norms_path"], pid)
         lv = live_mask_for(fmeta.get("deletes_path"), pid, P,
                            norms[f].size)
         if lv is not None:  # doc ids are shared: any field's deletion
@@ -1848,12 +1792,7 @@ def eval_bm25f(spark: SparkSession, manifests: dict[str, IndexManifest],
     num_partitions = None
     for f, m in manifests.items():
         num_partitions = m.num_partitions
-        fields_payload[f] = {
-            "cache_key": (m.build_id or m.index_dir, m.doc_count,
-                          m.sum_total_term_freq),
-            "norms_path": m.norms_path,
-            "deletes_path": (m.deletes_path if m.delete_gen else None),
-        }
+        fields_payload[f] = _kernel_payload(m, precision)
         scans.append(
             cached_parquet(spark, manifest_scan_key(m),
                            *[m.chunk_path(c)
@@ -1925,10 +1864,7 @@ def search_compound_local(index, queries,
     "collapse", "path", "values", "k"}``, or ``{"kind": "ranges",
     "path", "lo", "hi", "labels", "qids"}``.
     """
-    from pim_lucene_spark.operators.search import (_local_live,
-                                                   _local_norms,
-                                                   _local_rows,
-                                                   plan_queries)
+    from pim_lucene_spark.operators.search import _local_rows, _resident
     from pim_lucene_spark.plans.boolean import BooleanQuery
 
     from pim_lucene_spark.manifest import resolve_manifests
@@ -1952,7 +1888,6 @@ def search_compound_local(index, queries,
     iv_specs: dict[int, tuple] = {}
     leaf_offsets: dict[int, tuple] = {}
     fields_payload: dict[str, dict] = {}
-    ckeys: dict[str, tuple] = {}
     needed_by_field: dict[str, list] = {}
     P = next(iter(manifests.values())).num_partitions
     for f, m in manifests.items():
@@ -1976,19 +1911,8 @@ def search_compound_local(index, queries,
                                 b.slops.get(sid, 0))
         if not needed and not ma_here:
             continue
-        avgdl = bm25.avg_field_length(m.sum_total_term_freq, m.doc_count,
-                                      precision)
-        ckeys[f] = (m.build_id or m.index_dir, m.doc_count,
-                    m.sum_total_term_freq)
         needed_by_field[f] = list(needed)
-        fields_payload[f] = {
-            "cache": bm25.score_cache(avgdl, m.k1, m.b, precision),
-            "cache_key": ckeys[f],
-            "norms_path": m.norms_path,
-            "deletes_path": (m.deletes_path if m.delete_gen else None),
-            "num_segments": m.num_segments,
-            "nb_doc_per_segment": m.nb_doc_per_segment,
-        }
+        fields_payload[f] = _kernel_payload(m, precision)
     if facet_dim is not None:
         from pim_lucene_spark.operators.facets import facet_dir
         fdir = facet_dir(manifests[default_field], facet_dim)
@@ -2021,7 +1945,9 @@ def search_compound_local(index, queries,
     for f, needed in needed_by_field.items():
         if not needed:
             continue
-        by_pid = _local_rows(manifests[f], ckeys[f], needed, pids=pids)
+        by_pid = _local_rows(manifests[f],
+                             fields_payload[f]["cache_key"], needed,
+                             pids=pids)
         for pid, bt in by_pid.items():
             per_pid.setdefault(int(pid), {})[f] = bt
     if b.matchall_fields:
@@ -2031,11 +1957,13 @@ def search_compound_local(index, queries,
     outs = []
     for pid in sorted(per_pid):
         resident = {}
-        for f in fields_payload:  # every payload field's norms resident,
-            # postings rows or not (matchall enumerates from norms)
-            nb = _local_norms(manifests[f], ckeys[f], pid)
-            resident[f] = (nb, _local_live(manifests[f], ckeys[f], pid,
-                                           nb.size))
+        for f, fmeta in fields_payload.items():  # every payload field's
+            # norms resident, postings rows or not (matchall enumerates
+            # from norms)
+            resident[f] = _resident(manifests[f], fmeta["cache_key"],
+                                    pid).norms_live(fmeta["norms_path"],
+                                                    fmeta["deletes_path"],
+                                                    int(P))
         outs.append(_compound_core(payload, pid, per_pid[pid],
                                    resident=resident))
     if not outs:
@@ -2052,9 +1980,7 @@ def search_compound_local(index, queries,
                 [["qid", "value", "n"]].reset_index(drop=True))
     if agg_mode is not None:
         return _agg_mode_merge(agg_mode, res)
-    return (res.sort_values(["qid", "score", "doc_id"],
-                            ascending=[True, False, True])
-            .groupby("qid", sort=True).head(k).reset_index(drop=True))
+    return _top_k(res, k)
 
 
 def _agg_mode_empty(agg_mode: dict) -> pd.DataFrame:

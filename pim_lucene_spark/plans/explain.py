@@ -68,7 +68,7 @@ def explain(index: IndexManifest | str, query, doc_id: int,
 
     from pim_lucene_spark.functions import bm25
     from pim_lucene_spark.functions.tokenize import tokenize_one_with_offsets
-    from pim_lucene_spark.operators.search import _local_norms
+    from pim_lucene_spark.operators.search import _pid_norms
     slop = int(getattr(query, "slop", 0))
     if slop:
         raise ValueError("explain covers exact (slop=0) queries")
@@ -104,8 +104,7 @@ def explain(index: IndexManifest | str, query, doc_id: int,
     # norm byte from the per-pid norms blob (the kernel's own source)
     P = manifest.num_partitions
     pid, rel = int(doc_id) % P, int(doc_id) // P
-    ckey = ("explain", manifest.build_id or manifest.index_dir)
-    norm_byte = int(_local_norms(manifest, ckey, pid)[rel])
+    norm_byte = int(_pid_norms(manifest.norms_path, pid)[rel])
 
     avgdl = bm25.avg_field_length(manifest.sum_total_term_freq,
                                   doc_count, precision)
@@ -239,7 +238,7 @@ def _explain_synonym(manifest, q, doc_id: int, precision: str) -> dict:
     from pim_lucene_spark.functions import bm25
     from pim_lucene_spark.functions.smallfloat import byte4_to_int
     from pim_lucene_spark.functions.tokenize import tokenize_one
-    from pim_lucene_spark.operators.search import _local_norms
+    from pim_lucene_spark.operators.search import _pid_norms
 
     terms = [t for t, _ in q.terms]
     stats = pq.read_table(manifest.stats_path,
@@ -275,8 +274,7 @@ def _explain_synonym(manifest, q, doc_id: int, precision: str) -> dict:
                                 precision=precision)
     P = manifest.num_partitions
     pid, rel = int(doc_id) % P, int(doc_id) // P
-    ckey = ("explain", manifest.build_id or manifest.index_dir)
-    norm_byte = int(_local_norms(manifest, ckey, pid)[rel])
+    norm_byte = int(_pid_norms(manifest.norms_path, pid)[rel])
     avgdl = bm25.avg_field_length(manifest.sum_total_term_freq,
                                   doc_count, precision)
     cache = bm25.score_cache(avgdl, manifest.k1, manifest.b, precision)

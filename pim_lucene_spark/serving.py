@@ -253,13 +253,11 @@ class ShardedServer:
     # --- serving ------------------------------------------------------------
     @staticmethod
     def _merge(parts: list[pd.DataFrame], k: int) -> pd.DataFrame:
+        from pim_lucene_spark.operators.search import _top_k
         parts = [p for p in parts if len(p)]
         if not parts:
             return pd.DataFrame(columns=_RESULT_COLS)
-        res = pd.concat(parts, ignore_index=True)
-        return (res.sort_values(["qid", "score", "doc_id"],
-                                ascending=[True, False, True])
-                .groupby("qid", sort=True).head(k).reset_index(drop=True))
+        return _top_k(pd.concat(parts, ignore_index=True), k)
 
     @staticmethod
     def _unwrap(res):

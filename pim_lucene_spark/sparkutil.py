@@ -1,7 +1,7 @@
 """Driver-side Spark helpers shared by the query paths.
 
 Two measured latency sinks motivate this module (profiled at sf0.1,
-``scripts/profile_search.py``, guide §1):
+guide §1):
 
 - ``spark.createDataFrame([], schema)`` builds an **RDD-backed** empty
   relation (``Scan ExistingRDD``): every ``collect()`` on it launches a

@@ -71,12 +71,16 @@ def main() -> None:
         with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
             f.write(plan)
         # the distributed plan used above the size gate (forced)
+        prev = os.environ.get("SPARK_GRAFT_LOCAL_ROUTE_POSTINGS")
         os.environ["SPARK_GRAFT_LOCAL_ROUTE_POSTINGS"] = "0"
         try:
             plan = _capture(search(spark, manifest, qs, k=10,
                                    final_merge="window"))
         finally:
-            del os.environ["SPARK_GRAFT_LOCAL_ROUTE_POSTINGS"]
+            if prev is None:
+                del os.environ["SPARK_GRAFT_LOCAL_ROUTE_POSTINGS"]
+            else:
+                os.environ["SPARK_GRAFT_LOCAL_ROUTE_POSTINGS"] = prev
         with open(os.path.join(out_dir,
                                f"{name}_{suffix}_dist.txt"), "w") as f:
             f.write(plan)

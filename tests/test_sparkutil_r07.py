@@ -1,9 +1,9 @@
-"""Round-7 optimization internals: job-free empty frames, the cached
-parquet scan plan (incl. staleness), the sized mapInPandas kernel
-adapter, and the scale-adaptive task-count heuristic.
+"""Driver-side Spark helpers and kernel sizing: job-free empty frames,
+driver-merged results, the cached parquet scan plan (incl. staleness),
+the sized mapInPandas kernel adapter, the scale-adaptive task-count
+heuristic, and the interval key overflow guard.
 
-Each test pins an internals change from the r7 optimization round:
-results must be identical to the pre-optimization shapes, and the
+Results must be identical to the plain Spark shapes, and the
 latency-critical properties (no jobs for empties, fresh listing after a
 rewrite, whole pid groups per task) must hold.
 """
@@ -149,134 +149,6 @@ def test_kernel_task_count_bounds():
     assert _kernel_task_count(32, 20 * (1 << 16)) == 20
     assert _kernel_task_count(32, 10**9) == 32
     assert _kernel_task_count(1, 10**9) == 1
-
-
-def test_search_map_kernel_matches_cogroup(spark, tmp_index_dir):
-    """The r7 mapInPandas direct-norms kernel must return exactly what
-    the independent cogroup plan returns (and what the serving path
-    returns) — the three plans share _match_core but nothing else."""
-    from pim_lucene_spark import IndexConfig
-    from pim_lucene_spark.operators.index_build import build_index
-    from pim_lucene_spark.operators.search import search, search_local
-
-    docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-            .withColumnRenamed("text", "content"))
-    m = build_index(spark, docs, tmp_index_dir,
-                    IndexConfig(8, 4, build_chunks=1), id_col="doc_id")
-    queries = [(0, "merge"), (1, "batch batch batch"), (2, "the fast"),
-               (3, "zzz_not_there")]
-    a = (search(spark, m, queries, k=7).toPandas()
-         .sort_values(["qid", "doc_id"]).reset_index(drop=True))
-    b = (search(spark, m, queries, k=7, norms_access="cogroup").toPandas()
-         .sort_values(["qid", "doc_id"]).reset_index(drop=True))
-    c = (search_local(m, queries, k=7, postings_cache_mb=0)
-         .sort_values(["qid", "doc_id"]).reset_index(drop=True))
-    assert a.equals(b)
-    assert a.equals(c)
-
-
-def test_postings_file_groups_partition_pids(spark, tmp_index_dir,
-                                             monkeypatch):
-    """The zero-exchange file plan must own every pid exactly once
-    across task groups (the co-location contract the hash exchange
-    gave), and the planned task job must return exactly what the
-    exchange plan returns."""
-    from pim_lucene_spark import IndexConfig
-    from pim_lucene_spark.operators.index_build import build_index
-    from pim_lucene_spark.operators import search as S
-
-    docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-            .withColumnRenamed("text", "content"))
-    m = build_index(spark, docs, tmp_index_dir,
-                    IndexConfig(8, 4, build_chunks=2), id_col="doc_id")
-    groups = S._postings_file_groups(m, 5)
-    assert groups is not None and 1 <= len(groups) <= 5
-    seen: list[int] = []
-    for files, pids in groups:
-        assert files and pids
-        seen.extend(pids)
-    assert sorted(seen) == sorted(set(seen))  # each pid exactly once
-
-    queries = [(0, "merge"), (1, "the fast"), (2, "batch batch batch")]
-    monkeypatch.setenv("SPARK_GRAFT_LOCAL_ROUTE_POSTINGS", "0")
-    a = (S.search(spark, m, queries, k=6).toPandas()
-         .sort_values(["qid", "doc_id"]).reset_index(drop=True))
-    monkeypatch.setenv("SPARK_GRAFT_DIRECT_SCAN", "0")
-    b = (S.search(spark, m, queries, k=6).toPandas()
-         .sort_values(["qid", "doc_id"]).reset_index(drop=True))
-    assert len(a) and a.equals(b)
-
-
-def test_postings_file_plan_single_stage(spark, tmp_index_dir, monkeypatch):
-    """The file-plan query job must contain no Exchange and no Parquet
-    scan node (tasks read their files directly)."""
-    from pim_lucene_spark import IndexConfig
-    from pim_lucene_spark.operators.index_build import build_index
-    from pim_lucene_spark.operators.search import search
-
-    docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-            .withColumnRenamed("text", "content"))
-    m = build_index(spark, docs, tmp_index_dir,
-                    IndexConfig(8, 4, build_chunks=1), id_col="doc_id")
-    monkeypatch.setenv("SPARK_GRAFT_LOCAL_ROUTE_POSTINGS", "0")
-    plan = search(spark, m, [(0, "the fast")], k=None) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    assert "FileScan" not in plan and "Scan parquet" not in plan
-    assert "MapInPandas" in plan
-
-
-def test_local_route_matches_distributed(spark, tmp_index_dir, monkeypatch):
-    """The size-gated in-process route must return exactly what the
-    distributed job returns (bounded AND unbounded), and its collect
-    must launch zero Spark jobs."""
-    from pim_lucene_spark import IndexConfig
-    from pim_lucene_spark.operators.index_build import build_index
-    from pim_lucene_spark.operators import search as S
-
-    docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-            .withColumnRenamed("text", "content"))
-    m = build_index(spark, docs, tmp_index_dir,
-                    IndexConfig(8, 4, build_chunks=2), id_col="doc_id")
-    queries = [(0, "merge"), (1, "the fast"), (2, "batch batch batch")]
-    df = S.search(spark, m, queries, k=6, final_merge="driver")
-    before = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
-    rows = df.collect()  # LocalRelation: collect launches no job
-    after = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
-    assert len(after) == len(before)
-    a = (pd.DataFrame([r.asDict() for r in rows])
-         [["qid", "doc_id", "freq", "norm", "score"]]
-         .astype({"norm": "int32"})
-         .sort_values(["qid", "doc_id"]).reset_index(drop=True))
-    with monkeypatch.context() as mp:
-        mp.setenv("SPARK_GRAFT_LOCAL_ROUTE_POSTINGS", "0")
-        b = (S.search(spark, m, queries, k=6, final_merge="driver")
-             .toPandas().sort_values(["qid", "doc_id"])
-             .reset_index(drop=True))
-        c = (S.search(spark, m, queries, k=None).toPandas()
-             .sort_values(["qid", "doc_id"]).reset_index(drop=True))
-    assert len(a) and a.equals(b)
-    d = (S.search(spark, m, queries, k=None).toPandas()
-         .sort_values(["qid", "doc_id"]).reset_index(drop=True))
-    assert c.equals(d)
-
-
-def test_postings_pid_map_uri_fallback():
-    """URI index paths can't be statted by the driver — the plan must
-    decline (→ exchange fallback), never guess."""
-    from pim_lucene_spark.operators.search import _postings_pid_map
-
-    class _M:
-        build_chunks = 1
-        build_id = "x"
-        index_dir = "s3a://bucket/idx"
-        doc_count = 1
-        sum_total_term_freq = 1
-
-        def chunk_path(self, c):
-            return f"s3a://bucket/idx/postings_{c}"
-
-    assert _postings_pid_map(_M()) is None
 
 
 def test_interval_key_overflow_guard():
