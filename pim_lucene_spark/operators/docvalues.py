@@ -11,12 +11,13 @@ kernel (`plans/compound.py::_compound_core`):
 
 - :func:`sort_by_field` — ``IndexSearcher.search(query, n, Sort)`` with
   ``SortField(col, Type.LONG, reverse)``: each partition ships only its
-  k best (value, doc) pairs, so the exchange is O(P·k) regardless of
-  match counts (``TopFieldCollector`` with ``trackScores=false``).
+  k best (value, doc) pairs, so the rank window sees O(P·k) rows
+  regardless of match counts (``TopFieldCollector`` with
+  ``trackScores=false``).
 - :func:`collapse_topk` — the grouping module's one-doc-per-group
   collapse (``TopGroupsCollector`` head=1) over a facet ordinal
-  dimension: per (query, group) only the partition-best doc crosses,
-  O(queries × cardinality) never O(matches).
+  dimension: per (query, group) only the partition-best docs leave the
+  kernel, O(queries × cardinality) never O(matches).
 - :func:`facet_ranges` — ``LongRangeFacetCounts``: per-query counts for
   caller-given (possibly overlapping) ``[lo, hi)`` ranges, two binary
   searches per range over the sorted matched values.
@@ -37,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pim_lucene_spark.manifest import IndexManifest
-from pim_lucene_spark.sparkutil import local_empty, map_by_pid
+from pim_lucene_spark.sparkutil import local_empty
 
 DV_BLOB_SCHEMA = T.StructType([
     T.StructField("pid", T.IntegerType(), False),
@@ -184,25 +185,23 @@ def sort_by_field(spark: SparkSession, index, queries, col: str,
     page's last hit — the mark filters INSIDE the kernel before the
     per-partition cut, so page 50 ships the same ≤ P·k rows as page 1.
 
-    The plan: one postings pushdown scan → per-partition compound
-    kernel in sort mode (each partition emits its k best (value, doc)
-    pairs; matches index the resident sidecar, no value shuffle) → a
-    P·k-row rank window.  The sidecar for ``col`` must exist
-    (:func:`build_numeric_docvalues`).
+    The plan: the zero-exchange file plan runs the per-partition
+    compound kernel in sort mode (each task reads its pids' postings
+    and sidecar blobs; each partition emits its k best (value, doc)
+    pairs) → a P·k-row rank window, the only Exchange.  The sidecar for
+    ``col`` must exist (:func:`build_numeric_docvalues`).
     """
-    from pim_lucene_spark.plans.compound import (_compound_kernel,
-                                                 _plan_aggregate_payload)
+    from pim_lucene_spark.plans.compound import eval_aggregate
     manifests, default_field = _manifests_of(index, default_field)
     d = dv_dir(manifests[default_field], col)
-    specs, payload, postings = _plan_aggregate_payload(
-        spark, manifests, default_field, _wrap_queries(queries))
-    if postings is None:
+    res = eval_aggregate(
+        spark, manifests, default_field, _wrap_queries(queries),
+        {"sort": {"path": d, "reverse": bool(reverse), "k": int(k),
+                  "after": {int(q): (int(v), int(dc))
+                            for q, (v, dc) in (after or {}).items()}}},
+        SORT_RESULT_SCHEMA)
+    if res is None:
         return local_empty(spark, SORT_RESULT_SCHEMA)
-    payload["sort"] = {"path": d, "reverse": bool(reverse), "k": int(k),
-                       "after": {int(q): (int(v), int(dc))
-                                 for q, (v, dc) in (after or {}).items()}}
-    res = map_by_pid(postings, payload["_n_tasks"],
-                     _compound_kernel(payload), SORT_RESULT_SCHEMA)
     order = F.desc("sortval") if reverse else F.asc("sortval")
     w = Window.partitionBy("qid").orderBy(order, F.asc("doc_id"))
     return (res.withColumn("rank", F.row_number().over(w))
@@ -221,28 +220,26 @@ def collapse_topk(spark: SparkSession, index, queries, dim: str,
 
     ``dim`` is a facet ordinal dimension (:func:`~pim_lucene_spark.
     operators.facets.build_facet_index`); docs with a null dim value are
-    excluded (the grouping module's group-field contract).  Per
-    partition only per-(query, group) top-``group_size`` rows cross the
-    exchange.
+    excluded (the grouping module's group-field contract).  The
+    compound kernel runs on the zero-exchange file plan; per partition
+    only per-(query, group) top-``group_size`` rows reach the group
+    windows.
     """
     from pim_lucene_spark.operators.facets import facet_dir, facet_values
-    from pim_lucene_spark.plans.compound import (_compound_kernel,
-                                                 _plan_aggregate_payload)
+    from pim_lucene_spark.plans.compound import eval_aggregate
     manifests, default_field = _manifests_of(index, default_field)
     fdir = facet_dir(manifests[default_field], dim)
     values = facet_values(fdir)
-    specs, payload, postings = _plan_aggregate_payload(
+    rows = eval_aggregate(
         spark, manifests, default_field, _wrap_queries(queries),
-        precision=precision)
+        {"collapse": {"path": fdir, "group_size": int(group_size)}},
+        COLLAPSE_KERNEL_SCHEMA, precision=precision)
     vals_df = F.broadcast(spark.createDataFrame(
         list(enumerate(values)), "code int, value string"))
-    if postings is None:
+    if rows is None:
         return (local_empty(spark, COLLAPSE_KERNEL_SCHEMA)
                 .join(vals_df, "code")
                 .select("qid", "value", "doc_id", "score"))
-    payload["collapse"] = {"path": fdir, "group_size": int(group_size)}
-    rows = map_by_pid(postings, payload["_n_tasks"],
-                      _compound_kernel(payload), COLLAPSE_KERNEL_SCHEMA)
     # global per-group top-H = merge of ≤ P partition top-Hs; groups
     # rank per query by their head (rank-1) row
     w_g = Window.partitionBy("qid", "code").orderBy(
@@ -271,26 +268,23 @@ def facet_ranges(spark: SparkSession, index, queries, col: str,
     ``ranges``: ``(label, lo, hi)`` with unique labels.  The sidecar for
     ``col`` must exist (:func:`build_numeric_docvalues`).
     """
-    from pim_lucene_spark.plans.compound import (_compound_kernel,
-                                                 _plan_aggregate_payload)
-    labels = _check_ranges(ranges)
+    from pim_lucene_spark.plans.compound import eval_aggregate
+    _check_ranges(ranges)
     manifests, default_field = _manifests_of(index, default_field)
     d = dv_dir(manifests[default_field], col)
-    specs, payload, postings = _plan_aggregate_payload(
-        spark, manifests, default_field, _wrap_queries(queries))
+    agg = eval_aggregate(
+        spark, manifests, default_field, _wrap_queries(queries),
+        {"ranges": {"path": d, "lo": [int(r[1]) for r in ranges],
+                    "hi": [int(r[2]) for r in ranges]}},
+        RANGE_KERNEL_SCHEMA)
     scaffold = spark.createDataFrame(
         [(int(qid), i, lab) for qid, _ in queries
          for i, (lab, _, _) in enumerate(ranges)],
         "qid long, ridx int, label string")
-    if postings is None:
+    if agg is None:
         return scaffold.select("qid", "label",
                                F.lit(0).cast("long").alias("n"))
-    payload["ranges"] = {"path": d,
-                         "lo": [int(r[1]) for r in ranges],
-                         "hi": [int(r[2]) for r in ranges]}
-    agg = (map_by_pid(postings, payload["_n_tasks"],
-                      _compound_kernel(payload), RANGE_KERNEL_SCHEMA)
-           .groupBy("qid", "ridx").agg(F.sum("n").alias("n")))
+    agg = agg.groupBy("qid", "ridx").agg(F.sum("n").alias("n"))
     return (scaffold.join(agg, ["qid", "ridx"], "left")
             .select("qid", "label",
                     F.coalesce(F.col("n"), F.lit(0)).cast("long")
@@ -315,23 +309,28 @@ def facet_stats(spark: SparkSession, index, queries, dim: str, col: str,
     ``col`` over matched docs — ``(qid, value, n, sum_val, min_val,
     max_val, avg_val)``, top-``top_n`` buckets by (n desc, value asc).
 
-    Aggregation runs inside the per-partition kernel against the
-    resident ordinal + value sidecars; only per-bucket aggregate rows
-    cross the exchange (O(queries × cardinality), never O(matches)).
+    Aggregation runs inside the per-partition kernel on the
+    zero-exchange file plan, against the resident ordinal + value
+    sidecars; only per-bucket aggregate rows reach the ``groupBy(qid,
+    code)`` merge (O(queries × cardinality), never O(matches)).
     Both sidecars must exist (:func:`~pim_lucene_spark.operators.facets.
     build_facet_index`, :func:`build_numeric_docvalues`).
     """
-    from pim_lucene_spark.operators.facets import facet_dir, facet_values
-    from pim_lucene_spark.plans.compound import (_compound_kernel,
-                                                 _plan_aggregate_payload)
+    from pim_lucene_spark.operators.facets import (facet_dir, facet_values,
+                                                   ranked_buckets)
+    from pim_lucene_spark.plans.compound import eval_aggregate
     manifests, default_field = _manifests_of(index, default_field)
     fdir = facet_dir(manifests[default_field], dim)
     values = facet_values(fdir)
     vals_df = F.broadcast(spark.createDataFrame(
         list(enumerate(values)), "code int, value string"))
-    specs, payload, postings = _plan_aggregate_payload(
-        spark, manifests, default_field, _wrap_queries(queries))
-    if postings is None:
+    agg = eval_aggregate(
+        spark, manifests, default_field, _wrap_queries(queries),
+        {"facet_stats": {"ord_path": fdir,
+                         "val_path": dv_dir(manifests[default_field],
+                                            col)}},
+        FACET_STATS_KERNEL_SCHEMA)
+    if agg is None:
         return (local_empty(spark, FACET_STATS_KERNEL_SCHEMA)
                 .join(vals_df, "code")
                 .select("qid", "value", "n",
@@ -339,13 +338,7 @@ def facet_stats(spark: SparkSession, index, queries, dim: str, col: str,
                         F.col("mn").alias("min_val"),
                         F.col("mx").alias("max_val"),
                         F.lit(0.0).alias("avg_val")))
-    payload["facet_stats"] = {"ord_path": fdir,
-                              "val_path": dv_dir(
-                                  manifests[default_field], col)}
-    from pim_lucene_spark.operators.facets import ranked_buckets
-    agg = (map_by_pid(postings, payload["_n_tasks"],
-                      _compound_kernel(payload), FACET_STATS_KERNEL_SCHEMA)
-           .groupBy("qid", "code")
+    agg = (agg.groupBy("qid", "code")
            .agg(F.sum("n").alias("n"),
                 F.sum("sum").alias("sum_val"),
                 F.min("mn").alias("min_val"),

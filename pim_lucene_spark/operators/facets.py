@@ -11,7 +11,7 @@ shuffle.
 Counting happens INSIDE the per-partition compound kernel
 (`plans/compound.py::_compound_core` facet mode): each query's matched
 rel docs index the resident ordinal array and one ``bincount`` later
-only ``(qid, ordinal, count)`` rows cross the exchange —
+only ``(qid, ordinal, count)`` rows leave the kernel —
 O(queries × cardinality) per partition, never O(matches).  At 100 TB a
 stopword query facets over millions of matches per partition while
 shipping at most ``cardinality`` longs.
@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pim_lucene_spark.manifest import IndexManifest
-from pim_lucene_spark.sparkutil import local_empty, map_by_pid
+from pim_lucene_spark.sparkutil import local_empty
 
 FACET_BLOB_SCHEMA = T.StructType([
     T.StructField("pid", T.IntegerType(), False),
@@ -158,16 +158,15 @@ def facet_counts(spark: SparkSession,
 
     ``queries`` is ``[(qid, query)]`` where query is any typed query or
     boolean/dismax tree (plain strings analyze like ``count_matches``);
-    non-boolean queries wrap as a single-MUST boolean.  The plan: one
-    postings pushdown scan → per-partition compound kernel in facet
-    mode (only per-(query, ordinal) counts leave) → a tiny
-    ``groupBy(qid, code)`` sum → broadcast-join the value dictionary →
-    rank window.  The facet sidecar for ``dim`` must exist
+    non-boolean queries wrap as a single-MUST boolean.  The plan: the
+    zero-exchange file plan runs the per-partition compound kernel in
+    facet mode (each task reads its pids' postings and ordinal blobs;
+    only per-(query, ordinal) counts leave) → a tiny ``groupBy(qid,
+    code)`` sum → broadcast-join the value dictionary → rank window.  The facet sidecar for ``dim`` must exist
     (:func:`build_facet_index`).
     """
     from pim_lucene_spark.plans.boolean import BooleanQuery
-    from pim_lucene_spark.plans.compound import (_compound_kernel,
-                                                 _plan_aggregate_payload)
+    from pim_lucene_spark.plans.compound import eval_aggregate
     from pim_lucene_spark.plans.dismax import DisMaxQuery
 
     from pim_lucene_spark.manifest import resolve_manifests
@@ -178,17 +177,14 @@ def facet_counts(spark: SparkSession,
     wrapped = [(qid, q if isinstance(q, (BooleanQuery, DisMaxQuery))
                 else BooleanQuery(must=[q]))
                for qid, q in queries]
-    specs, payload, postings = _plan_aggregate_payload(
-        spark, manifests, default_field, wrapped)
+    agg = eval_aggregate(spark, manifests, default_field, wrapped,
+                         {"facet": {"path": fdir}}, FACET_COUNT_SCHEMA)
     vals_df = F.broadcast(spark.createDataFrame(
         list(enumerate(values)), "code int, value string"))
-    if postings is None:
+    if agg is None:
         return (local_empty(spark, FACET_COUNT_SCHEMA)
                 .join(vals_df, "code").select("qid", "value", "n"))
-    payload["facet"] = {"path": fdir}
-    agg = (map_by_pid(postings, payload["_n_tasks"],
-                      _compound_kernel(payload), FACET_COUNT_SCHEMA)
-           .groupBy("qid", "code").agg(F.sum("n").alias("n")))
+    agg = agg.groupBy("qid", "code").agg(F.sum("n").alias("n"))
     return ranked_buckets(agg, vals_df, top_n, ["qid", "value", "n"])
 
 

@@ -51,7 +51,9 @@ host↔DPU protocol in ``topdocs_sync.c:469-544``):
    Lucene ``TopScoreDocCollector`` tie-break order.
 
 Scale notes: the default plan is one ``Range → MapInPandas`` stage with
-no shuffle — postings and norms are read where the task runs.  Only the
+no shuffle — postings and norms are read where the task runs
+(:func:`_file_plan`; the compound, aggregate, BM25F and sloppy kernels
+of ``plans/compound.py`` run on the same plan).  Only the
 ``norms_access='cogroup'`` plan (URI layouts) shuffles, and then only
 rows for query terms.  The final window runs over at most ``P * k``
 rows per query.
@@ -61,6 +63,7 @@ from __future__ import annotations
 
 import os
 from collections import OrderedDict
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -1014,37 +1017,40 @@ def _match_group(payload: dict, shard: dict,
                          for c in RESULT_SCHEMA.fieldNames()})
 
 
-def _match_files(payload: dict, files: list[str],
+def _match_files(payload: dict, files: dict[str, list[str]],
                  pids: list[int]) -> pd.DataFrame | None:
-    """One file-plan group: read its files for the batch's terms, keep
-    its pids, run the per-group runner."""
+    """Search's file-plan runner (search plans over ``{"": manifest}``):
+    read the group's files for the batch's terms, keep its pids, run
+    the per-group runner."""
     terms = payload["needed_terms"]
-    shard = _read_shard(files, pids, terms)
+    shard = _read_shard(files[""], pids, terms)
     return _match_group(payload, shard, _pid_terms(shard, terms))
 
 
-def _file_plan(spark: SparkSession, manifest: IndexManifest,
-               payload: dict, n_tasks: int,
-               pids: list[int] | None = None) -> DataFrame:
-    """The zero-exchange ``Range → MapInPandas`` job: each of ``n_tasks``
-    tasks runs :func:`_match_files` on its ASSIGNED file group (of
-    ``pids`` only, when given) — no Exchange at all (guide §2.4 / §8.4
-    "co-locate instead of join": the postings Parquet is already laid
-    out by pid, so a repartition-by-pid shuffle would only re-create a
-    grouping the files already have).  :func:`_postings_file_groups`
-    guarantees every pid's rows live in exactly one group.  Needs
-    POSIX-visible index files from every executor — exactly the
-    precondition of direct norms access, which gates this plan."""
-    groups = _postings_file_groups(manifest, n_tasks, pids)
+def _file_plan(spark: SparkSession, manifests: dict[str, IndexManifest],
+               runner, schema: T.StructType, n_tasks: int,
+               pids=None) -> DataFrame:
+    """The zero-exchange ``Range → MapInPandas`` job every pid-grouped
+    kernel runs on: each of ``n_tasks`` tasks calls ``runner(files,
+    pids)`` on its ASSIGNED group (``files`` per field, of ``pids``
+    only, when given) and yields its frame — no Exchange at all (guide
+    §2.4 / §8.4 "co-locate instead of join": the postings Parquet is
+    already laid out by pid, so a repartition-by-pid shuffle would only
+    re-create a grouping the files already have).
+    :func:`_postings_file_groups` guarantees every pid lives in exactly
+    one group.  Needs POSIX-visible index files from every executor —
+    exactly the precondition of direct norms access, which gates this
+    plan."""
+    groups = _postings_file_groups(manifests, n_tasks, pids)
 
     def fn(it):
         for pdf in it:
             for gi in pdf["id"]:
-                out = _match_files(payload, *groups[int(gi)])
+                out = runner(*groups[int(gi)])
                 if out is not None:
                     yield out
     return (spark.range(0, len(groups), 1, max(1, len(groups)))
-            .mapInPandas(fn, RESULT_SCHEMA))
+            .mapInPandas(fn, schema))
 
 
 # in-process route ceiling (Σ doc_freq of a batch); see _local_route_max
@@ -1160,26 +1166,32 @@ def _pid_map(manifest: IndexManifest) -> dict:
     return pid_map
 
 
-def _postings_file_groups(manifest: IndexManifest, n_tasks: int,
-                          pids: list[int] | None = None
-                          ) -> list[tuple[list[str], list[int]]]:
-    """Bin-pack pids (all, or the given ``pids``) into ``n_tasks`` task
-    groups (LPT greedy on the per-pid byte estimate).  Each group is
-    ``(files, pids)``: its task reads those files and keeps those pids'
-    rows, so a pid is owned by exactly ONE task no matter how the writer
-    laid out the files."""
-    pid_map = _pid_map(manifest)
-    if pids is not None:
-        pid_map = {p: pid_map[p] for p in pids if p in pid_map}
-    n = max(1, min(int(n_tasks), len(pid_map)))
-    bins: list[list] = [[0.0, [], set()] for _ in range(n)]
-    for pid, (w, files) in sorted(pid_map.items(),
-                                  key=lambda kv: (-kv[1][0], kv[0])):
-        tgt = min(bins, key=lambda b: b[0])
+def _postings_file_groups(manifests: dict[str, IndexManifest],
+                          n_tasks: int, pids=None
+                          ) -> list[tuple[dict[str, list[str]], list[int]]]:
+    """Bin-pack pids into ``n_tasks`` task groups (LPT greedy on the
+    per-pid byte estimate summed over fields).  ``pids=None`` takes
+    every pid with postings in any field; given ``pids`` are all kept,
+    postings or not (a MatchAllDocs batch plans over every pid).  Each
+    group is ``({field: files}, pids)``: its task reads those files and
+    keeps those pids' rows, so a pid is owned by exactly ONE task no
+    matter how the writer laid out the files."""
+    maps = {f: _pid_map(m) for f, m in manifests.items()}
+    if pids is None:
+        pids = set().union(*maps.values())
+    weights = {int(p): sum(mp[p][0] for mp in maps.values() if p in mp)
+               for p in pids}
+    n = max(1, min(int(n_tasks), len(weights)))
+    bins: list[list] = [[0.0, [], {f: set() for f in maps}]
+                        for _ in range(n)]
+    for pid, w in sorted(weights.items(), key=lambda kv: (-kv[1], kv[0])):
+        tgt = min(bins, key=lambda b: (b[0], len(b[1])))
         tgt[0] += w
         tgt[1].append(pid)
-        tgt[2].update(files)
-    return [(sorted(fs), pids) for _, pids, fs in bins if pids]
+        for f, mp in maps.items():
+            tgt[2][f].update(mp.get(pid, (0, []))[1])
+    return [({f: sorted(fs) for f, fs in files.items()}, ps)
+            for _, ps, files in bins if ps]
 
 
 # term → doc_freq cache per index generation (0 = negative entry).  The
@@ -1404,8 +1416,9 @@ def _search_sync_rounds(spark, manifest: IndexManifest, payload: dict,
                                "round": rnd})
         live_pids = (sorted({p for m in progress.values() for p in m})
                      if rnd > 0 else None)
-        pdf = _file_plan(spark, manifest, payload_r, n_tasks,
-                         live_pids).toPandas()
+        pdf = _file_plan(spark, {"": manifest},
+                         partial(_match_files, payload_r), RESULT_SCHEMA,
+                         n_tasks, live_pids).toPandas()
         state = pdf[pdf["norm"] < 0]
         acc = _top_k(pd.concat([acc, pdf[pdf["norm"] >= 0]],
                                ignore_index=True), k)
@@ -1533,17 +1546,18 @@ def search(spark: SparkSession, index: IndexManifest | str,
         total_df = sum(term_doc_freqs(spark, manifest,
                                       list(needed_terms)).values())
         n_tasks = _kernel_task_count(manifest.num_partitions, total_df)
+        sync = bound_probe == "sync"
         if not bound_probe and 0 < total_df <= _local_route_max():
             # one-task-sized batch: the one-group file plan in-process
             # (the job the cluster would run, minus the scheduler — see
             # _local_route_max); identical results, differential-tested
-            (files, pids), = _postings_file_groups(manifest, 1)
+            (files, pids), = _postings_file_groups({"": manifest}, 1)
             pdf = _match_files(payload, files, pids)
             if pdf is None:
                 return local_empty(spark, RESULT_SCHEMA)
             return local_result(spark, pdf if unbounded else _top_k(pdf, k),
                                 RESULT_SCHEMA)
-        if bound_probe == "sync" and k < 1000:
+        if sync and k < 1000:
             # the reference's full iterative loop (topdocs_sync.c:
             # 469-544); off at k >= 1000 exactly like the reference.  A
             # Spark round costs ~0.1 s vs a DPU round's microseconds, so
@@ -1551,9 +1565,10 @@ def search(spark: SparkSession, index: IndexManifest | str,
             # protocol, not the constant, is the faithful part.
             return _search_sync_rounds(spark, manifest, payload, k, n_tasks,
                                        budget0=int(sync_budget0))
-        if bound_probe and manifest.num_partitions > 1:
-            probe = _file_plan(spark, manifest, payload, 1,
-                               pids=[0]).toPandas()
+        if bound_probe and not sync and manifest.num_partitions > 1:
+            probe = _file_plan(spark, {"": manifest},
+                               partial(_match_files, payload),
+                               RESULT_SCHEMA, 1, pids=[0]).toPandas()
             bounds = {}
             for qid, grp in probe.groupby("qid"):
                 sc = grp["score"].to_numpy()
@@ -1561,7 +1576,9 @@ def search(spark: SparkSession, index: IndexManifest | str,
                     bounds[int(qid)] = float(np.sort(sc)[-k])
             if bounds:
                 payload = dict(payload, bounds=bounds)
-        per_part = _file_plan(spark, manifest, payload, n_tasks)
+        per_part = _file_plan(spark, {"": manifest},
+                              partial(_match_files, payload), RESULT_SCHEMA,
+                              n_tasks)
 
     if unbounded:
         return per_part
@@ -1640,24 +1657,17 @@ def _load_pids(manifest, ckey, pids: list[int]) -> None:
         _LOCAL_PIDS[(ckey, p, d)] = shard.get(p) or _ResidentPid(p)
 
 
-def _resident(manifest, ckey, pid: int) -> _ResidentPid:
-    """The resident pid, loaded if missing."""
-    key = (ckey, pid, manifest.index_dir)
-    if key not in _LOCAL_PIDS:
-        _load_pids(manifest, ckey, [pid])
-    return _LOCAL_PIDS[key]
-
-
-def _local_rows(manifest, ckey, terms: list[str],
-                pids: list[int] | None = None) -> dict[int, dict]:
-    """``{pid: {term: [stripe-ordered rows]}}`` for the serving path.
+def _local_rows(manifest, ckey, pids=None) -> dict[int, _ResidentPid]:
+    """``{pid: _ResidentPid}`` for one serving batch.
 
     The residency unit is a pid: the first batch that needs a pid loads
     all of its postings once (:func:`_load_pids`); every later batch
     finds its terms in the resident columns with no file access.
     ``pids`` restricts the pids served (the sharded server gives each
     worker its own subset, so a shard never reads or keeps another
-    shard's rows); ``None`` = every pid with postings.
+    shard's rows); ``None`` = every pid with postings.  The caller holds
+    the returned pids for the whole batch, so a later eviction never
+    makes the batch read a pid twice.
     """
     d = manifest.index_dir
     pids = sorted(_pid_map(manifest)) if pids is None else \
@@ -1669,10 +1679,9 @@ def _local_rows(manifest, ckey, terms: list[str],
     for p in pids:
         _LOCAL_PIDS.move_to_end((ckey, p, d))
         shard[p] = _LOCAL_PIDS[(ckey, p, d)]
-    out = _pid_terms(shard, terms)
-    # evict after assembly, with this batch's pids pinned: the kernel
-    # treats a missing term as "no hits on this partition", so dropping
-    # a pid the batch needs would silently return partial results
+    # evict with this batch's pids pinned: the kernel treats a missing
+    # term as "no hits on this partition", so dropping a pid the batch
+    # needs would silently return partial results
     total = sum(res.nbytes for res in _LOCAL_PIDS.values())
     if total > _LOCAL_ROWS_MAX:
         for key in [key for key in _LOCAL_PIDS if key[0] != ckey
@@ -1681,7 +1690,7 @@ def _local_rows(manifest, ckey, terms: list[str],
             _evict(key)
             if total <= _LOCAL_ROWS_MAX:
                 break
-    return out
+    return shard
 
 
 def clear_local_cache() -> None:
@@ -1728,10 +1737,8 @@ def search_local(index: IndexManifest | str, queries: list[tuple[int, str]],
         manifest, precision, queries=planned, k=int(k),
         postings_cache_mb=int(postings_cache_mb), after=after,
         offsets=gap_offsets)
-    ckey = payload["cache_key"]
-    by_pid = _local_rows(manifest, ckey, list(needed_terms), pids=pids)
-    res = _match_group(payload, {p: _resident(manifest, ckey, p)
-                                 for p in by_pid}, by_pid)
+    shard = _local_rows(manifest, payload["cache_key"], pids=pids)
+    res = _match_group(payload, shard, _pid_terms(shard, needed_terms))
     if res is None:
         return _empty_result().copy()  # public boundary: see above
     return _top_k(res, k)

@@ -28,8 +28,8 @@ Reference semantics held bit-exactly:
   float.
 
 MatchAllDocs clauses host in-kernel as a constant per-doc contribution
-(never a materialized set; a null seed row per pid keeps postings-less
-partitions alive — the reference's ``MatchAllDocsQuery`` scorer is a
+(never a materialized set; such a batch runs the kernel on every pid,
+postings or not — the reference's ``MatchAllDocsQuery`` scorer is a
 constant iterator).  Constant-score multiterm clauses host in-kernel
 when their expansion (resident term dictionary, pyarrow pushdown) fits
 ``MAX_CLAUSE_COUNT`` — the match-set union stays in its partition.
@@ -43,11 +43,21 @@ never materializes a term list) stays on the join-chain path;
 
 Multi-field batches (``search_boolean_fields``, BM25F) ride the same
 kernel: every field's sub-index shares ``num_partitions``, so pid N of
-every field holds the same doc subset — the per-field postings scans
-union with a field tag and compose per partition.
+every field holds the same doc subset — a task reads each field's files
+for its pids and composes per partition.
+
+Every route runs on the zero-exchange file plan search uses
+(``Range → MapInPandas``, :func:`_run_file_plan`): each task reads its
+pids' postings per field once (:func:`~pim_lucene_spark.operators.
+search._read_shard`) plus their norms and live masks, and one per-pid
+runner (:func:`_run_pids`) feeds the kernel — the same runner the
+serving path feeds from its resident pids.  The only Exchange left is
+the rank window (or aggregate) over the kernel's per-partition rows.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -58,17 +68,16 @@ from pyspark.sql import types as T
 from pim_lucene_spark.functions import bm25
 from pim_lucene_spark.functions.sloppy import sloppy_freqs_postings
 from pim_lucene_spark.manifest import IndexManifest
-from pim_lucene_spark.operators.deletes import live_mask_for
-from pim_lucene_spark.sparkutil import (cached_parquet, local_empty,
-                                        manifest_scan_key, map_by_pid)
+from pim_lucene_spark.sparkutil import local_empty
 from pim_lucene_spark.operators.search import (
-    _assemble_by_term,
     _DecodeCtx,
+    _file_plan,
     _kernel_payload,
     _kernel_task_count,
     _phrase_match_counts,
-    _pid_norms,
+    _read_shard,
     _resolve_norms_access,
+    _ResidentPid,
     _top_k,
     plan_queries,
     term_doc_freqs,
@@ -540,31 +549,21 @@ def _eval_flat_batch(flat: list[dict], eval_leaf, precision: str,
 
 def _compound_core(payload: dict, pid: int,
                    per_field_by_term: dict[str, dict],
-                   resident: dict | None = None) -> pd.DataFrame:
-    """``resident`` (serving path): ``{field: (norms, live)}`` resident
-    blobs — skips the per-call norms/delete-mask file reads a kernel
-    task performs."""
+                   norms_live: dict[str, tuple]) -> pd.DataFrame:
+    """The compound kernel for one pid: ``per_field_by_term`` holds the
+    pid's rows per query term of each field that has any, and
+    ``norms_live`` every payload field's ``(norms, live mask)``
+    (:func:`_run_pids` supplies both)."""
     P = payload["num_partitions"]
     k = payload["k"]
     precision = payload["precision"]
     fields = payload["fields"]
     clause_plan = payload["clauses"]  # sid -> (field, terms, weight)
 
-    ctxs, norms, live = {}, {}, {}
-    for f, fmeta in fields.items():
-        bt = per_field_by_term.get(f)
-        if bt is None and not payload.get("has_matchall"):
-            # no postings rows for this field here and nothing that
-            # enumerates docs from norms alone — skip the norms read
-            continue
-        if bt is not None:
-            ctxs[f] = _DecodeCtx(bt, payload, pid, ckey=fmeta["cache_key"])
-        if resident is not None and f in resident:
-            norms[f], live[f] = resident[f]
-            continue
-        norms[f] = _pid_norms(fmeta["norms_path"], pid)
-        live[f] = live_mask_for(fmeta.get("deletes_path"), pid, P,
-                                norms[f].size)
+    ctxs = {f: _DecodeCtx(bt, payload, pid, ckey=fields[f]["cache_key"])
+            for f, bt in per_field_by_term.items()}
+    norms = {f: nl[0] for f, nl in norms_live.items()}
+    live = {f: nl[1] for f, nl in norms_live.items()}
 
     # cross-QUERY leaf amortization: distinct (field, terms, weight)
     # triples evaluate once per partition per batch — queries sharing
@@ -1006,15 +1005,72 @@ def _compound_core(payload: dict, pid: int,
     })
 
 
-def _compound_kernel(payload: dict):
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pid = int(key[0])
-        per_field: dict[str, dict] = {}
-        if len(pdf):
-            for f, grp in pdf.groupby("fld", sort=False):
-                per_field[f] = _assemble_by_term(grp)
-        return _compound_core(payload, pid, per_field)
-    return fn
+def _run_pids(payload: dict, core, shards: dict[str, dict],
+              pids) -> pd.DataFrame | None:
+    """The per-pid runner every pid-grouped kernel shares (compound,
+    aggregate modes, BM25F, sloppy) on the file plan and the serving
+    path.  ``shards`` = ``{field: {pid: _ResidentPid}}``; a pid missing
+    from a field's shard has no rows there.  For each pid: its rows per
+    ``payload["needed_terms"]`` of each field, every payload field's
+    norms and live mask (:meth:`_ResidentPid.norms_live`), then
+    ``core(payload, pid, per_field_by_term, norms_live)``.  A pid with
+    no rows runs only for a MatchAllDocs batch.  One frame, or ``None``
+    without rows."""
+    P = payload["num_partitions"]
+    terms = {f: np.asarray(ts, dtype=object)
+             for f, ts in payload["needed_terms"].items() if ts}
+    outs = []
+    for pid in sorted(pids):
+        res = {f: shards.get(f, {}).get(pid) or _ResidentPid(pid)
+               for f in payload["fields"]}
+        by_term = {}
+        for f, ts in terms.items():
+            bt = res[f].by_term(ts)
+            if bt:
+                by_term[f] = bt
+        if not by_term and not payload.get("has_matchall"):
+            continue
+        norms_live = {f: res[f].norms_live(fm["norms_path"],
+                                           fm["deletes_path"], P)
+                      for f, fm in payload["fields"].items()}
+        out = core(payload, pid, by_term, norms_live)
+        if len(out):
+            outs.append(out)
+    return pd.concat(outs, ignore_index=True) if outs else None
+
+
+def _read_group(payload: dict, core, files: dict[str, list[str]],
+                pids: list[int]) -> pd.DataFrame | None:
+    """One file-plan task: read the group's files once per field for
+    that field's terms (:func:`_read_shard`), then :func:`_run_pids`."""
+    shards = {f: _read_shard(fs, pids, payload["needed_terms"][f])
+              for f, fs in files.items()}
+    return _run_pids(payload, core, shards, pids)
+
+
+def _run_file_plan(spark: SparkSession,
+                   manifests: dict[str, IndexManifest], payload: dict,
+                   core, schema: T.StructType) -> DataFrame:
+    """``core`` over every pid on the zero-exchange file plan
+    (:func:`~pim_lucene_spark.operators.search._file_plan`): fields with
+    needed terms are read, tasks sized by their Σdf, and a MatchAllDocs
+    batch plans over every pid in ``range(P)``, postings or not."""
+    needed = payload["needed_terms"]
+    read = {f: manifests[f] for f, ts in needed.items() if ts}
+    total_df = sum(sum(term_doc_freqs(spark, m, needed[f]).values())
+                   for f, m in read.items())
+    P = payload["num_partitions"]
+    pids = list(range(P)) if payload.get("has_matchall") else None
+    return _file_plan(spark, read, partial(_read_group, payload, core),
+                      schema, _kernel_task_count(P, total_df), pids)
+
+
+def _top_k_window(df: DataFrame, k: int) -> DataFrame:
+    """Global top-``k`` per query over per-partition rows: a rank
+    window in (score desc, doc_id asc) order."""
+    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
+    return (df.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k).drop("rank"))
 
 
 SLOPPY_KERNEL_SCHEMA = T.StructType([
@@ -1037,7 +1093,8 @@ def search_sloppy_kernel(spark: SparkSession, index, queries,
     re-tokenizes the ENTIRE corpus per batch to recover token positions
     the index already stores; at 100× corpus scale that is a full-table
     Arrow tokenize per query batch.  This kernel instead reads only the
-    query terms' postings (Parquet ``term IN`` pushdown), intersects
+    query terms' postings (the file plan: each task reads its pids'
+    files directly, no Exchange), intersects
     candidates per partition, runs the exact Lucene
     ``SloppyPhraseMatcher`` traversal over the stored position streams
     (``functions/sloppy.py`` — the same floats as the scan, since both
@@ -1055,11 +1112,11 @@ def search_sloppy_kernel(spark: SparkSession, index, queries,
     gap_offsets: dict = {}
     planned, needed = plan_queries(spark, manifest, norm_q, k, precision,
                                    collect_offsets=gap_offsets)
-    empty = local_empty(spark, SLOPPY_KERNEL_SCHEMA)
     if not planned:
-        return empty
-    payload = _kernel_payload(
-        manifest, precision,
+        return local_empty(spark, SLOPPY_KERNEL_SCHEMA)
+    fmeta = _kernel_payload(manifest, precision)
+    payload = dict(
+        fmeta, fields={"": fmeta}, needed_terms={"": sorted(needed)},
         # exact (slop=0) members of a mixed batch carry their gapped
         # PhraseQuery offsets (english analyzer) — the scan path is
         # gap-aware, and the two must stay bit-identical.  Sloppy
@@ -1071,60 +1128,45 @@ def search_sloppy_kernel(spark: SparkSession, index, queries,
                   else None)
                  for qid, terms, w in planned],
         k=None if k is None else int(k))
-    scan = (cached_parquet(spark, manifest_scan_key(manifest),
-                           *[manifest.chunk_path(c)
-                             for c in range(manifest.build_chunks)])
-            .filter(F.col("term").isin(list(needed))))
-
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pid = int(key[0])
-        P = payload["num_partitions"]
-        kk = payload["k"]
-        out = {"qid": [], "doc_id": [], "freq": [], "norm": [],
-               "score": []}
-        empty_pdf = pd.DataFrame(out).astype(
-            {"qid": np.int64, "doc_id": np.int64, "freq": np.float64,
-             "norm": np.int32, "score": np.float64})
-        if not len(pdf):
-            return empty_pdf
-        ctx = _DecodeCtx(_assemble_by_term(pdf), payload, pid,
-                         ckey=payload["cache_key"])
-        norms = _pid_norms(payload["norms_path"], pid)
-        live = live_mask_for(payload["deletes_path"], pid, P, norms.size)
-        for qid, terms, w, q_slop, offs in payload["queries"]:
-            docs, sc, fr = _leaf_match(ctx, norms, terms, w,
-                                       payload["cache"],
-                                       payload["precision"], slop=q_slop,
-                                       offsets=offs)
-            if live is not None and docs.size:
-                keep = live[docs]
-                docs, sc, fr = docs[keep], sc[keep], fr[keep]
-            if docs.size == 0:
-                continue
-            order = np.lexsort((docs, -sc))
-            if kk is not None and order.size > kk:
-                order = order[:kk]
-            out["qid"].append(np.full(order.size, qid, dtype=np.int64))
-            out["doc_id"].append(docs[order] * P + pid)
-            out["freq"].append(fr[order])
-            out["norm"].append(norms[docs[order]].astype(np.int32))
-            out["score"].append(sc[order])
-        if not out["qid"]:
-            return empty_pdf
-        return pd.DataFrame({c: np.concatenate(v)
-                             for c, v in out.items()})
-
-    s_dfs = term_doc_freqs(spark, manifest, sorted(needed))
-    per_part = map_by_pid(
-        scan, _kernel_task_count(int(manifest.num_partitions),
-                                 sum(s_dfs.values())),
-        kernel, SLOPPY_KERNEL_SCHEMA)
+    per_part = _run_file_plan(spark, {"": manifest}, payload, _sloppy_core,
+                              SLOPPY_KERNEL_SCHEMA)
     if k is None:
         # clause-frame consumers: every match, no per-qid global sort
         return per_part
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (per_part.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k).drop("rank"))
+    return _top_k_window(per_part, k)
+
+
+def _sloppy_core(payload: dict, pid: int, per_field_by_term: dict,
+                 norms_live: dict) -> pd.DataFrame:
+    """Per-pid sloppy/exact phrase kernel: each query's partition-local
+    match set (:func:`_leaf_match`), deletes masked, per-partition
+    top-k."""
+    P = payload["num_partitions"]
+    kk = payload["k"]
+    norms, live = norms_live[""]
+    ctx = _DecodeCtx(per_field_by_term.get("", {}), payload, pid,
+                     ckey=payload["cache_key"])
+    out = {"qid": [], "doc_id": [], "freq": [], "norm": [], "score": []}
+    for qid, terms, w, q_slop, offs in payload["queries"]:
+        docs, sc, fr = _leaf_match(ctx, norms, terms, w, payload["cache"],
+                                   payload["precision"], slop=q_slop,
+                                   offsets=offs)
+        if live is not None and docs.size:
+            keep = live[docs]
+            docs, sc, fr = docs[keep], sc[keep], fr[keep]
+        if docs.size == 0:
+            continue
+        order = np.lexsort((docs, -sc))
+        if kk is not None and order.size > kk:
+            order = order[:kk]
+        out["qid"].append(np.full(order.size, qid, dtype=np.int64))
+        out["doc_id"].append(docs[order] * P + pid)
+        out["freq"].append(fr[order])
+        out["norm"].append(norms[docs[order]].astype(np.int32))
+        out["score"].append(sc[order])
+    if not out["qid"]:
+        return pd.DataFrame()
+    return pd.DataFrame({c: np.concatenate(v) for c, v in out.items()})
 
 
 COUNT_SCHEMA = T.StructType([
@@ -1141,15 +1183,11 @@ def count_compound(spark: SparkSession,
     rows that leave (one long per query per pid), summed driver-side.
     Queries whose clauses all analyze to absent terms count 0."""
     counts = {int(qid): 0 for qid, _ in queries}
-    specs, payload, postings = _plan_aggregate_payload(
-        spark, manifests, default_field, queries)
-    if postings is None:
+    per_part = eval_aggregate(spark, manifests, default_field, queries,
+                              {"count_only": True}, COUNT_SCHEMA)
+    if per_part is None:
         return counts
-    payload["count_only"] = True
-    agg = (map_by_pid(postings, payload["_n_tasks"],
-                      _compound_kernel(payload), COUNT_SCHEMA)
-           .groupBy("qid").agg(F.sum("n").alias("n")).collect())
-    for r in agg:
+    for r in per_part.groupBy("qid").agg(F.sum("n").alias("n")).collect():
         counts[int(r["qid"])] = int(r["n"])
     return counts
 
@@ -1166,7 +1204,6 @@ def _plan_iv_leaves(spark, manifest, iv: list, field: str,
     down."""
     if not iv:
         return set()
-    from pim_lucene_spark.operators.search import term_doc_freqs
     all_terms = sorted({t for _, slots, *_ in iv
                         for s in slots for t in s})
     dfs = term_doc_freqs(spark, manifest, all_terms)
@@ -1195,7 +1232,6 @@ def _plan_syn_leaves(spark, manifest, syn: list, precision: str,
     postings scan must push down."""
     if not syn:
         return set()
-    from pim_lucene_spark.operators.search import term_doc_freqs
     all_terms = sorted({t for _, ts, _, _ in syn for t in ts})
     dfs = term_doc_freqs(spark, manifest, all_terms)
     needed: set = set()
@@ -1214,102 +1250,106 @@ def _plan_syn_leaves(spark, manifest, syn: list, precision: str,
     return needed
 
 
-def _plan_aggregate_payload(spark: SparkSession,
-                            manifests: dict[str, IndexManifest],
-                            default_field: str, queries,
-                            precision: str = "float32"):
-    """Shared driver-side planning for the aggregate-only kernel modes
-    (count, facet, sort, collapse, ranges): specs + clause plan +
-    per-field payload + pushdown postings union.  ``postings`` is None
-    when every clause analyzes to index-wide-absent terms (nothing to
-    launch)."""
-    from pim_lucene_spark.plans.boolean import BooleanQuery
-
-    b = _SpecBuilder(spark, manifests, default_field)
-    specs = []
-    for qid, q in queries:
-        if isinstance(q, BooleanQuery):
-            specs.append(b.bool_spec(qid, q, default_field))
-        else:
-            specs.append(b.dismax_spec(qid, q, default_field))
+def _plan_compound(spark: SparkSession | None,
+                   manifests: dict[str, IndexManifest], specs: list[dict],
+                   leaves: dict[str, list], precision: str,
+                   postings_cache_mb: int = 0,
+                   matchall_fields: set | None = None,
+                   extra_terms: dict | None = None,
+                   slops: dict[int, int] | None = None,
+                   syn_leaves: dict[str, list] | None = None,
+                   iv_leaves: dict[str, list] | None = None
+                   ) -> dict | None:
+    """The one per-field planner of every compound route (ranked,
+    aggregate modes, serving): each field's leaves get their stats and
+    weights (``plan_queries``, synonym and interval planning) and the
+    field its payload entry and needed terms.  A field enters the
+    payload when it has terms to read or a MatchAllDocs clause
+    enumerates its docs.  Returns the kernel payload (``k`` unset), or
+    ``None`` when no field has anything to evaluate.  ``spark=None``
+    plans from the resident stats (serving path)."""
     clause_plan: dict[int, tuple] = {}
     syn_boosts: dict[int, tuple] = {}
     iv_specs: dict[int, tuple] = {}
-    total_df = 0
     leaf_offsets: dict[int, tuple] = {}
-    fields_payload, scans = {}, []
-    num_partitions = None
+    fields_payload: dict[str, dict] = {}
+    needed_terms: dict[str, list] = {}
+    matchall_fields = matchall_fields or set()
     for f, m in manifests.items():
-        lv = b.leaves.get(f) or []
-        syn = b.syn_leaves.get(f) or []
-        iv = b.iv_leaves.get(f) or []
-        ma_here = f in b.matchall_fields
-        extra = b.extra_terms.get(f) or set()
+        lv = leaves.get(f) or []
+        syn = (syn_leaves or {}).get(f) or []
+        iv = (iv_leaves or {}).get(f) or []
+        ma_here = f in matchall_fields
+        extra = set((extra_terms or {}).get(f) or ())
         if not lv and not ma_here and not extra and not syn and not iv:
             continue
-        if lv:
-            planned, needed = plan_queries(spark, m, lv, 1, precision,
-                                           collect_offsets=leaf_offsets)
-        else:
-            planned, needed = [], set()
+        planned, needed = plan_queries(spark, m, lv, None, precision,
+                                       collect_offsets=leaf_offsets)
         needed = set(needed) | extra | _plan_syn_leaves(
             spark, m, syn, precision, f, clause_plan, syn_boosts) \
             | _plan_iv_leaves(spark, m, iv, f, clause_plan, iv_specs)
-        total_df += sum(term_doc_freqs(spark, m, sorted(needed)).values())
-        num_partitions = m.num_partitions
-        for sid, ts, w in planned:
-            clause_plan[sid] = (f, tuple(ts), float(w),
-                                b.slops.get(sid, 0))
+        for sid, terms, w in planned:
+            clause_plan[sid] = (f, tuple(terms), float(w),
+                                int((slops or {}).get(sid, 0)))
         if not needed and not ma_here:
             continue
         fields_payload[f] = _kernel_payload(m, precision)
-        scans.append(
-            cached_parquet(spark, manifest_scan_key(m),
-                           *[m.chunk_path(c)
-                             for c in range(m.build_chunks)])
-            .filter(F.col("term").isin(list(needed)))
-            .withColumn("fld", F.lit(f)))
-    if not scans or not (clause_plan or b.matchall_fields
-                         or any(b.extra_terms.values())):
-        return specs, None, None
-    payload = {
+        needed_terms[f] = sorted(needed)
+    if not fields_payload:
+        return None
+    return {
         "specs": specs,
         "clauses": clause_plan,
         "syn_boosts": syn_boosts,
         "iv_specs": iv_specs,
         "leaf_offsets": leaf_offsets,
         "fields": fields_payload,
+        "needed_terms": needed_terms,
         "k": None,
         "precision": precision,
-        "num_partitions": int(num_partitions),
-        "postings_cache_mb": 0,
-        "has_matchall": bool(b.matchall_fields),
-        "_n_tasks": _kernel_task_count(int(num_partitions), total_df),
+        "num_partitions": int(next(iter(fields_payload.values()))
+                              ["num_partitions"]),
+        "postings_cache_mb": int(postings_cache_mb),
+        "has_matchall": bool(matchall_fields),
     }
-    postings = scans[0]
-    for s in scans[1:]:
-        postings = postings.unionByName(s)
-    if b.matchall_fields:
-        postings = postings.unionByName(
-            _pid_seed(spark, int(num_partitions), postings.schema))
-    return specs, payload, postings
 
 
-# ---------------------------------------------------------------------------
-# driver side
-# ---------------------------------------------------------------------------
+def _plan_batch(spark: SparkSession | None,
+                manifests: dict[str, IndexManifest], default_field: str,
+                queries, precision: str = "float32",
+                postings_cache_mb: int = 0) -> dict | None:
+    """Specs for ``(qid, BooleanQuery | DisMaxQuery)`` pairs, planned by
+    :func:`_plan_compound`."""
+    from pim_lucene_spark.plans.boolean import BooleanQuery
 
-def _pid_seed(spark: SparkSession, num_partitions: int,
-              schema) -> DataFrame:
-    """One null posting row per pid: keeps a kernel task alive on every
-    partition when the term scan has no rows there (MatchAllDocs must
-    emit from postings-less partitions).  The kernel's per-field groupby
-    drops the null ``fld`` rows before assembly, so the seed is never
-    decoded."""
-    return spark.range(num_partitions).select(
-        F.col("id").cast("int").alias("pid"),
-        *[F.lit(None).cast(fld.dataType).alias(fld.name)
-          for fld in schema.fields if fld.name != "pid"])
+    b = _SpecBuilder(spark, manifests, default_field)
+    specs = [b.bool_spec(qid, q, default_field)
+             if isinstance(q, BooleanQuery)
+             else b.dismax_spec(qid, q, default_field)
+             for qid, q in queries]
+    return _plan_compound(spark, manifests, specs, b.leaves, precision,
+                          postings_cache_mb,
+                          matchall_fields=b.matchall_fields,
+                          extra_terms=b.extra_terms, slops=b.slops,
+                          syn_leaves=b.syn_leaves, iv_leaves=b.iv_leaves)
+
+
+def eval_aggregate(spark: SparkSession, manifests: dict[str, IndexManifest],
+                   default_field: str, queries, mode: dict,
+                   schema: T.StructType,
+                   precision: str = "float32") -> DataFrame | None:
+    """The compound kernel in an aggregate mode (``mode`` is one of
+    ``{"count_only": True}``, ``{"facet": …}``, ``{"facet_stats": …}``,
+    ``{"sort": …}``, ``{"collapse": …}``, ``{"ranges": …}``) over the
+    file plan: the per-partition aggregate rows, with no Exchange below
+    them; ``None`` when every clause analyzes to index-wide-absent terms
+    (nothing to launch)."""
+    payload = _plan_batch(spark, manifests, default_field, queries,
+                          precision)
+    if payload is None:
+        return None
+    payload.update(mode)
+    return _run_file_plan(spark, manifests, payload, _compound_core, schema)
 
 
 def kernel_hostable(manifests: dict[str, IndexManifest]) -> bool:
@@ -1330,7 +1370,7 @@ def clause_kernelable(clause, allow_fielded=None, manifests=None,
     term/phrase leaves (ANY slop — the kernel runs the Lucene sloppy
     matcher over the stored position streams), fuzzy (driver-expanded),
     nested booleans, MatchAllDocs (constant per-doc contribution;
-    postings-less partitions run via the pid seed), and — when
+    the kernel runs on every pid, postings or not), and — when
     ``manifests`` is given — constant-score multiterm whose expansion
     fits the kernel cap (resident-dictionary probe, cached; the spec
     build reuses the same read).  Over-wide expansions route to the
@@ -1506,7 +1546,7 @@ class _SpecBuilder:
                                  if v in code_of))
             # pure drill-down queries enumerate the doc space without
             # postings — the matchall machinery (forced norms/live load
-            # + the per-pid seed row) provides exactly that
+            # + the kernel on every pid) provides exactly that
             self.matchall_fields.add(field)
             return {"kind": "dv_filter", "field": field, "path": fdir,
                     "codes": codes}
@@ -1593,86 +1633,40 @@ def eval_compound(spark: SparkSession, manifests: dict[str, IndexManifest],
                   iv_leaves: dict[str, list] | None = None) -> DataFrame:
     """Run prepared compound specs through the per-partition kernel.
 
-    One union scan (per-field ``term IN`` pushdown + field tag) →
-    ``groupBy(pid)`` kernel → global top-k window over ≤ P·k rows/query.
+    The fields are planned once (:func:`_plan_compound`); each file-plan
+    task reads its pids' postings per field, norms and live masks
+    directly (``Range → MapInPandas``, no Exchange) and composes per
+    partition; a global top-k window over ≤ P·k rows/query follows.
     ``return_partial`` returns the pre-window per-partition frame — the
-    exact row set this plan shuffles — for plan-shape tests/benchmarks.
-    ``matchall_fields`` (from ``_SpecBuilder``) names fields whose norms
-    a MatchAllDocs clause enumerates; their payload entries load even
-    with no needed terms, and one null seed row per pid keeps every
-    partition's kernel task alive where the scan alone has no rows.
+    exact row set the window's exchange shuffles — for plan-shape
+    tests/benchmarks.  ``matchall_fields`` (from ``_SpecBuilder``) names
+    fields whose norms a MatchAllDocs clause enumerates; such a batch
+    runs the kernel on every pid, postings or not.
     """
-    empty = local_empty(spark, COMPOUND_SCHEMA)
-    clause_plan: dict[int, tuple] = {}
-    syn_boosts: dict[int, tuple] = {}
-    iv_specs: dict[int, tuple] = {}
-    total_df = 0
-    leaf_offsets: dict[int, tuple] = {}
-    fields_payload: dict[str, dict] = {}
-    scans = []
-    num_partitions = None
-    for f, m in manifests.items():
-        lv = leaves.get(f) or []
-        syn = (syn_leaves or {}).get(f) or []
-        iv = (iv_leaves or {}).get(f) or []
-        ma_here = bool(matchall_fields) and f in matchall_fields
-        extra = set((extra_terms or {}).get(f) or ())
-        if not lv and not ma_here and not extra and not syn and not iv:
-            continue
-        if lv:
-            planned, needed = plan_queries(spark, m, lv, k, precision,
-                                           collect_offsets=leaf_offsets)
-        else:
-            planned, needed = [], set()
-        needed = set(needed) | extra | _plan_syn_leaves(
-            spark, m, syn, precision, f, clause_plan, syn_boosts) \
-            | _plan_iv_leaves(spark, m, iv, f, clause_plan, iv_specs)
-        total_df += sum(term_doc_freqs(spark, m, sorted(needed)).values())
-        num_partitions = m.num_partitions
-        for sid, terms, w in planned:
-            clause_plan[sid] = (f, tuple(terms), float(w),
-                                int((slops or {}).get(sid, 0)))
-        if not needed and not ma_here:
-            continue
-        fields_payload[f] = _kernel_payload(m, precision)
-        scans.append(
-            cached_parquet(spark, manifest_scan_key(m),
-                           *[m.chunk_path(c)
-                             for c in range(m.build_chunks)])
-            .filter(F.col("term").isin(list(needed)))
-            .withColumn("fld", F.lit(f)))
-    if not scans:
-        return empty
-    payload = {
-        "specs": specs,
-        "clauses": clause_plan,
-        "syn_boosts": syn_boosts,
-        "iv_specs": iv_specs,
-        "leaf_offsets": leaf_offsets,
-        "fields": fields_payload,
-        "k": None if k is None else int(k),
-        "precision": precision,
-        "num_partitions": int(num_partitions),
-        "postings_cache_mb": int(postings_cache_mb),
-        "has_matchall": bool(matchall_fields),
-        "_n_tasks": _kernel_task_count(int(num_partitions), total_df),
-    }
-    postings = scans[0]
-    for s in scans[1:]:
-        postings = postings.unionByName(s)
-    if matchall_fields:
-        postings = postings.unionByName(
-            _pid_seed(spark, int(num_partitions), postings.schema))
-    per_part = map_by_pid(postings, payload["_n_tasks"],
-                          _compound_kernel(payload), COMPOUND_SCHEMA)
+    payload = _plan_compound(spark, manifests, specs, leaves, precision,
+                             postings_cache_mb,
+                             matchall_fields=matchall_fields,
+                             extra_terms=extra_terms, slops=slops,
+                             syn_leaves=syn_leaves, iv_leaves=iv_leaves)
+    return _compound_frame(spark, manifests, payload, k, return_partial)
+
+
+def _compound_frame(spark: SparkSession,
+                    manifests: dict[str, IndexManifest],
+                    payload: dict | None, k: int | None,
+                    return_partial: bool = False) -> DataFrame:
+    """A planned compound batch on the file plan, then (``k`` set, no
+    ``return_partial``) the global top-k window."""
+    if payload is None:
+        return local_empty(spark, COMPOUND_SCHEMA)
+    payload["k"] = None if k is None else int(k)
+    per_part = _run_file_plan(spark, manifests, payload, _compound_core,
+                              COMPOUND_SCHEMA)
     if return_partial or k is None:
         # k=None: every match, unordered (no per-qid rank window) — the
         # clause-frame / nested-consumer contract, same as search()
         return per_part
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (per_part.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .drop("rank"))
+    return _top_k_window(per_part, k)
 
 
 BM25F_SCHEMA = T.StructType([
@@ -1684,12 +1678,14 @@ BM25F_SCHEMA = T.StructType([
 
 
 def _bm25f_core(payload: dict, pid: int,
-                per_field_by_term: dict[str, dict]) -> pd.DataFrame:
+                per_field_by_term: dict[str, dict],
+                norms_live: dict[str, tuple]) -> pd.DataFrame:
     """BM25F per-partition kernel (``CombinedFieldQuery.java:322-470``):
     per-doc weighted tf sum over every (field, term) pair, combined
     re-encoded norm (``MultiNormsLeafSimScorer.java:140-153``), ONE BM25
     score against the pseudo-field stats — all from this partition's
-    co-located postings; only top-k rows leave."""
+    co-located postings; only top-k rows leave.  Every field's norms
+    enter the combined norm, postings rows here or not."""
     from pim_lucene_spark.functions.smallfloat import (byte4_to_int,
                                                        int_to_byte4)
 
@@ -1698,20 +1694,14 @@ def _bm25f_core(payload: dict, pid: int,
     precision = payload["precision"]
     cache = payload["cache"]
 
-    ctxs = {}
-    norms: dict[str, np.ndarray] = {}
+    ctxs = {f: _DecodeCtx(bt, payload, pid,
+                          ckey=payload["fields"][f]["cache_key"])
+            for f, bt in per_field_by_term.items()}
+    norms = {f: nl[0] for f, nl in norms_live.items()}
     live_any: np.ndarray | None = None
-    # every field's norms participate in the combined norm even where the
-    # field has no postings rows in this partition
-    for f, fmeta in payload["fields"].items():
-        norms[f] = _pid_norms(fmeta["norms_path"], pid)
-        lv = live_mask_for(fmeta.get("deletes_path"), pid, P,
-                           norms[f].size)
+    for _, lv in norms_live.values():
         if lv is not None:  # doc ids are shared: any field's deletion
             live_any = lv if live_any is None else (live_any & lv)
-        bt = per_field_by_term.get(f)
-        if bt is not None:
-            ctxs[f] = _DecodeCtx(bt, payload, pid, ckey=fmeta["cache_key"])
 
     out_qid, out_doc, out_freq, out_score = [], [], [], []
     for spec in payload["specs"]:
@@ -1767,63 +1757,32 @@ def _bm25f_core(payload: dict, pid: int,
     })
 
 
-def _bm25f_kernel(payload: dict):
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pid = int(key[0])
-        per_field: dict[str, dict] = {}
-        if len(pdf):
-            for f, grp in pdf.groupby("fld", sort=False):
-                per_field[f] = _assemble_by_term(grp)
-        return _bm25f_core(payload, pid, per_field)
-    return fn
-
-
 def eval_bm25f(spark: SparkSession, manifests: dict[str, IndexManifest],
                specs: list[dict], qweights: dict, cache,
                norm_weights: list, needed_terms: list[str], k: int,
                precision: str) -> DataFrame:
-    """Run BM25F specs through the per-partition kernel: one union scan
-    (per-field ``term IN`` pushdown + field tag) → ``groupBy(pid)``
-    kernel → global top-k window."""
-    empty = local_empty(spark, BM25F_SCHEMA)
+    """Run BM25F specs through the per-partition kernel on the file plan
+    (each task reads every field's postings for ``needed_terms`` and
+    every field's norms for its pids; no Exchange) → global top-k
+    window."""
     if not specs or not needed_terms:
-        return empty
-    fields_payload, scans = {}, []
-    num_partitions = None
-    for f, m in manifests.items():
-        num_partitions = m.num_partitions
-        fields_payload[f] = _kernel_payload(m, precision)
-        scans.append(
-            cached_parquet(spark, manifest_scan_key(m),
-                           *[m.chunk_path(c)
-                             for c in range(m.build_chunks)])
-            .filter(F.col("term").isin(list(needed_terms)))
-            .withColumn("fld", F.lit(f)))
+        return local_empty(spark, BM25F_SCHEMA)
     payload = {
         "specs": specs,
         "qweights": qweights,
         "cache": cache,
         "norm_weights": norm_weights,
-        "fields": fields_payload,
+        "fields": {f: _kernel_payload(m, precision)
+                   for f, m in manifests.items()},
+        "needed_terms": {f: sorted(needed_terms) for f in manifests},
         "k": int(k),
         "precision": precision,
-        "num_partitions": int(num_partitions),
+        "num_partitions": int(next(iter(manifests.values()))
+                              .num_partitions),
         "postings_cache_mb": 0,
     }
-    postings = scans[0]
-    for s in scans[1:]:
-        postings = postings.unionByName(s)
-    bm_total = sum(
-        sum(term_doc_freqs(spark, m, sorted(needed_terms)).values())
-        for m in manifests.values())
-    per_part = map_by_pid(
-        postings,
-        _kernel_task_count(payload["num_partitions"], bm_total),
-        _bm25f_kernel(payload), BM25F_SCHEMA)
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (per_part.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .drop("rank"))
+    return _top_k_window(_run_file_plan(spark, manifests, payload,
+                                        _bm25f_core, BM25F_SCHEMA), k)
 
 
 def search_compound_local(index, queries,
@@ -1835,8 +1794,10 @@ def search_compound_local(index, queries,
                           facet_top_n: int = 10,
                           agg_mode: dict | None = None) -> pd.DataFrame:
     """Serving-path boolean/dismax: the SAME compound kernel with NO
-    Spark job — resident postings rows (``term IN`` pyarrow pushdown,
-    shared with :func:`~pim_lucene_spark.operators.search.search_local`),
+    Spark job — the file plan's per-pid runner (:func:`_run_pids`) fed
+    from resident pids (shared with
+    :func:`~pim_lucene_spark.operators.search.search_local`; each
+    field's pids are held for the whole batch, so none is read twice),
     per-pid norms/live blobs, in-process composition, host top-k merge.
     Returns a pandas frame (qid, doc_id, score); row-identical to
     :func:`search_compound` (differential-tested).
@@ -1864,111 +1825,42 @@ def search_compound_local(index, queries,
     "collapse", "path", "values", "k"}``, or ``{"kind": "ranges",
     "path", "lo", "hi", "labels", "qids"}``.
     """
-    from pim_lucene_spark.operators.search import _local_rows, _resident
-    from pim_lucene_spark.plans.boolean import BooleanQuery
-
     from pim_lucene_spark.manifest import resolve_manifests
+    from pim_lucene_spark.operators.search import _local_rows
     manifests, default_field = resolve_manifests(
         index, default_field if isinstance(index, dict) else "")
     if len({m.num_partitions for m in manifests.values()}) != 1:
         raise ValueError("fields disagree on num_partitions; the "
                          "compound kernel needs one shared pid space")
-    b = _SpecBuilder(None, manifests, default_field)
-    specs = []
-    for qid, q in queries:
-        if isinstance(q, BooleanQuery):
-            specs.append(b.bool_spec(qid, q, default_field))
-        else:
-            specs.append(b.dismax_spec(qid, q, default_field))
-    empty = pd.DataFrame({"qid": [], "doc_id": [], "score": []}).astype(
-        {"qid": np.int64, "doc_id": np.int64, "score": np.float64})
-
-    clause_plan: dict[int, tuple] = {}
-    syn_boosts: dict[int, tuple] = {}
-    iv_specs: dict[int, tuple] = {}
-    leaf_offsets: dict[int, tuple] = {}
-    fields_payload: dict[str, dict] = {}
-    needed_by_field: dict[str, list] = {}
-    P = next(iter(manifests.values())).num_partitions
-    for f, m in manifests.items():
-        lv = b.leaves.get(f) or []
-        syn = b.syn_leaves.get(f) or []
-        iv = b.iv_leaves.get(f) or []
-        ma_here = f in b.matchall_fields
-        extra = b.extra_terms.get(f) or set()
-        if not lv and not ma_here and not extra and not syn and not iv:
-            continue
-        if lv:
-            planned, needed = plan_queries(None, m, lv, k, precision,
-                                           collect_offsets=leaf_offsets)
-        else:
-            planned, needed = [], set()
-        needed = set(needed) | extra | _plan_syn_leaves(
-            None, m, syn, precision, f, clause_plan, syn_boosts) \
-            | _plan_iv_leaves(None, m, iv, f, clause_plan, iv_specs)
-        for sid, ts, w in planned:
-            clause_plan[sid] = (f, tuple(ts), float(w),
-                                b.slops.get(sid, 0))
-        if not needed and not ma_here:
-            continue
-        needed_by_field[f] = list(needed)
-        fields_payload[f] = _kernel_payload(m, precision)
+    payload = _plan_batch(None, manifests, default_field, queries,
+                          precision, postings_cache_mb)
     if facet_dim is not None:
         from pim_lucene_spark.operators.facets import facet_dir
         fdir = facet_dir(manifests[default_field], facet_dim)
         empty = pd.DataFrame({"qid": [], "value": [], "n": []}).astype(
             {"qid": np.int64, "value": str, "n": np.int64})
+        mode = {"facet": {"path": fdir}}
     elif agg_mode is not None:
         empty = _agg_mode_empty(agg_mode)
-    if not (clause_plan or b.matchall_fields
-            or any(b.extra_terms.values())) or not fields_payload:
+        mode = {agg_mode["kind"]: agg_mode}
+    else:
+        empty = pd.DataFrame({"qid": [], "doc_id": [], "score": []}).astype(
+            {"qid": np.int64, "doc_id": np.int64, "score": np.float64})
+        mode = {}
+    if payload is None:
         return empty
-    payload = {
-        "specs": specs,
-        "clauses": clause_plan,
-        "syn_boosts": syn_boosts,
-        "iv_specs": iv_specs,
-        "leaf_offsets": leaf_offsets,
-        "fields": fields_payload,
-        "k": int(k),
-        "precision": precision,
-        "num_partitions": int(P),
-        "postings_cache_mb": int(postings_cache_mb),
-        "has_matchall": bool(b.matchall_fields),
-    }
-    if facet_dim is not None:
-        payload["facet"] = {"path": fdir}
-    elif agg_mode is not None:
-        payload[agg_mode["kind"]] = agg_mode
-    # resident rows per field, regrouped per pid
-    per_pid: dict[int, dict[str, dict]] = {}
-    for f, needed in needed_by_field.items():
-        if not needed:
-            continue
-        by_pid = _local_rows(manifests[f],
-                             fields_payload[f]["cache_key"], needed,
-                             pids=pids)
-        for pid, bt in by_pid.items():
-            per_pid.setdefault(int(pid), {})[f] = bt
-    if b.matchall_fields:
-        # matchall must evaluate every resident pid, postings or not
-        for pid in (pids if pids is not None else range(P)):
-            per_pid.setdefault(int(pid), {})
-    outs = []
-    for pid in sorted(per_pid):
-        resident = {}
-        for f, fmeta in fields_payload.items():  # every payload field's
-            # norms resident, postings rows or not (matchall enumerates
-            # from norms)
-            resident[f] = _resident(manifests[f], fmeta["cache_key"],
-                                    pid).norms_live(fmeta["norms_path"],
-                                                    fmeta["deletes_path"],
-                                                    int(P))
-        outs.append(_compound_core(payload, pid, per_pid[pid],
-                                   resident=resident))
-    if not outs:
+    payload.update(mode, k=int(k))
+    # every payload field's resident pids, held for the whole batch (a
+    # later field's eviction never makes this batch re-read a pid);
+    # a MatchAllDocs batch runs on every pid, postings or not
+    if pids is None and payload["has_matchall"]:
+        pids = range(payload["num_partitions"])
+    shards = {f: _local_rows(manifests[f], fm["cache_key"], pids=pids)
+              for f, fm in payload["fields"].items()}
+    res = _run_pids(payload, _compound_core, shards,
+                    set().union(*shards.values()))
+    if res is None:
         return empty
-    res = pd.concat(outs, ignore_index=True)
     if facet_dim is not None:
         from pim_lucene_spark.operators.facets import facet_values
         vals = facet_values(fdir)
@@ -2069,17 +1961,7 @@ def search_compound(spark: SparkSession,
     trees passed :func:`clause_kernelable`; callers route the rest to the
     join-chain plan.
     """
-    from pim_lucene_spark.plans.boolean import BooleanQuery
-
-    b = _SpecBuilder(spark, manifests, default_field)
-    specs = []
-    for qid, q in queries:
-        if isinstance(q, BooleanQuery):
-            specs.append(b.bool_spec(qid, q, default_field))
-        else:
-            specs.append(b.dismax_spec(qid, q, default_field))
-    return eval_compound(spark, manifests, specs, b.leaves, k, precision,
-                         postings_cache_mb=postings_cache_mb,
-                         matchall_fields=b.matchall_fields,
-                         extra_terms=b.extra_terms, slops=b.slops,
-                         syn_leaves=b.syn_leaves, iv_leaves=b.iv_leaves)
+    return _compound_frame(spark, manifests,
+                           _plan_batch(spark, manifests, default_field,
+                                       queries, precision,
+                                       postings_cache_mb), k)

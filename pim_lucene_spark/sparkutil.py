@@ -184,33 +184,6 @@ def cached_parquet(spark: SparkSession, key: tuple,
     return df
 
 
-def map_by_pid(df: DataFrame, n_tasks: int, kernel, schema) -> DataFrame:
-    """Run a ``(key, pdf) -> pdf`` per-pid kernel as ``mapInPandas`` over
-    an explicit ``repartition(n_tasks, 'pid')``.
-
-    Drop-in replacement for ``groupBy('pid').applyInPandas(kernel,
-    schema)`` on query paths: AQE coalesces the tiny post-filter shuffle
-    of a ``groupBy`` to ONE task, serializing every pid's kernel behind
-    a single Python worker (measured 450 ms vs 255 ms per query at
-    sf0.1).  An explicit numbered repartition is user-specified
-    partitioning, which AQE never coalesces; the wrapper re-groups whole
-    pid groups from the task's batches — co-location is guaranteed by
-    the hash exchange, so the kernel sees exactly the same per-pid frame
-    (grouping column included) and results are identical.
-    """
-    def fn(it):
-        parts = [p for p in it if len(p)]
-        if not parts:
-            return
-        allp = (pd.concat(parts, ignore_index=True)
-                if len(parts) > 1 else parts[0])
-        for pid, grp in allp.groupby("pid", sort=True):
-            out = kernel((int(pid),), grp.reset_index(drop=True))
-            if len(out):
-                yield out
-    return df.repartition(int(n_tasks), "pid").mapInPandas(fn, schema)
-
-
 def manifest_scan_key(manifest) -> tuple:
     """Identity key for an index's file set — immutable per build (same
     composite the term-stats and warm-postings caches key on, so legacy

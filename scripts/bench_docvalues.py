@@ -65,8 +65,7 @@ def main() -> None:
                                                    facet_dir)
     from pim_lucene_spark.operators.index_build import build_index
     from pim_lucene_spark.operators.search import search
-    from pim_lucene_spark.plans.compound import (_compound_kernel,
-                                                 _plan_aggregate_payload)
+    from pim_lucene_spark.plans.compound import eval_aggregate
 
     src = os.path.join(SF_DIR, "documents.parquet")
     if not os.path.exists(src):
@@ -99,11 +98,8 @@ def main() -> None:
     def kernel_rows(mode_key, mode_val, schema):
         from pim_lucene_spark.plans.boolean import BooleanQuery
         wrapped = [(qid, BooleanQuery(must=[q])) for qid, q in QUERIES]
-        _, payload, postings = _plan_aggregate_payload(
-            spark, {"": manifest}, "", wrapped)
-        payload[mode_key] = mode_val
-        return (postings.groupBy("pid")
-                .applyInPandas(_compound_kernel(payload), schema).count())
+        return eval_aggregate(spark, {"": manifest}, "", wrapped,
+                              {mode_key: mode_val}, schema).count()
 
     sort_rows = kernel_rows(
         "sort", {"path": dv_dir(manifest, "n_chars"), "reverse": True,

@@ -193,6 +193,7 @@ def _run_compound_core(spark, m, bq, k=10):
 
     from pim_lucene_spark.functions import bm25
     from pim_lucene_spark.operators.search import (_assemble_by_term,
+                                                   _ResidentPid,
                                                    plan_queries,
                                                    reset_decode_stats)
     from pim_lucene_spark.plans.compound import _compound_core, _SpecBuilder
@@ -227,8 +228,11 @@ def _run_compound_core(spark, m, bq, k=10):
         if not len(pdf):
             continue
         reset_decode_stats()
+        norms_live = {"": _ResidentPid(pid).norms_live(
+            m.norms_path, None, m.num_partitions)}
         outs.append(_compound_core(payload, pid,
-                                   {"": _assemble_by_term(pdf)}))
+                                   {"": _assemble_by_term(pdf)},
+                                   norms_live))
         total += reset_decode_stats()["doc_bytes"]
     return total, pd.concat(outs, ignore_index=True)
 

@@ -441,19 +441,15 @@ def test_facade_wrappers(spark, dvidx):
 
 
 def test_sort_kernel_ships_at_most_p_times_k(spark, dvidx):
-    """The scale property: the exchange after the sort kernel carries
-    ≤ P·k rows per query no matter the match count."""
+    """The scale property: the rows the sort kernel hands to the rank
+    window's exchange are ≤ P·k per query no matter the match count."""
     from pim_lucene_spark.operators.docvalues import (SORT_RESULT_SCHEMA,
                                                       dv_dir)
-    from pim_lucene_spark.plans.compound import (_compound_kernel,
-                                                 _plan_aggregate_payload)
+    from pim_lucene_spark.plans.compound import eval_aggregate
     m, _ = dvidx
     wrapped = [(0, BooleanQuery(must=["red"]))]
-    specs, payload, postings = _plan_aggregate_payload(
-        spark, {"": m}, "", wrapped)
-    payload["sort"] = {"path": dv_dir(m, "size"), "reverse": False,
-                       "k": 3}
-    rows = (postings.groupBy("pid")
-            .applyInPandas(_compound_kernel(payload), SORT_RESULT_SCHEMA)
-            .count())
+    rows = eval_aggregate(
+        spark, {"": m}, "", wrapped,
+        {"sort": {"path": dv_dir(m, "size"), "reverse": False, "k": 3}},
+        SORT_RESULT_SCHEMA).count()
     assert rows <= m.num_partitions * 3

@@ -252,3 +252,68 @@ def test_resident_norms_and_masks_leave_with_their_pid(spark, tmp_path,
     assert S._LOCAL_PIDS and S._POSTINGS_CACHE
     assert all(key[0] == new for key in S._LOCAL_PIDS)
     assert all(key[0] == new for key in S._POSTINGS_CACHE)
+
+
+def test_multifield_compound_batch_reads_each_file_once(spark, tmp_path,
+                                                        monkeypatch):
+    """``search_compound_local`` over two fields with a 1-byte residency
+    budget: a later field's eviction drops the earlier field's pids from
+    the cache, yet the batch holds them, so each postings file and each
+    norms dir is read at most once per batch — and the rows equal the
+    distributed ``search_compound``."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    import pim_lucene_spark.operators.search as S
+    from pim_lucene_spark.index import MultiFieldIndex
+    from pim_lucene_spark.plans.boolean import BooleanQuery
+    from pim_lucene_spark.plans.compound import (search_compound,
+                                                 search_compound_local)
+    from pim_lucene_spark.plans.query import FieldedQuery
+
+    rng = np.random.default_rng(3)
+    vocab = ["red", "green", "blue", "sky", "apple", "pie"]
+    docs = pd.DataFrame({
+        "doc_id": range(30),
+        "title": [" ".join(rng.choice(vocab, size=2)) for _ in range(30)],
+        "body": [" ".join(rng.choice(vocab, size=8)) for _ in range(30)]})
+    mf = MultiFieldIndex.build(
+        spark, spark.createDataFrame(docs), str(tmp_path / "mf"),
+        fields={"title": "title", "body": "body"},
+        cfg=IndexConfig(num_partitions=3, num_segments=2, build_chunks=2),
+        id_col="doc_id")
+    batch = [(0, BooleanQuery(must=[FieldedQuery("title", "red")],
+                              should=[FieldedQuery("body", "sky")])),
+             (1, BooleanQuery(should=[FieldedQuery("title", "apple"),
+                                      FieldedQuery("body", "pie")]))]
+    want = search_compound(spark, mf.manifests, "body", batch,
+                           k=10).toPandas()
+    assert len(want)
+    for m in mf.manifests.values():  # the driver's pid maps, not counted
+        S._pid_map(m)
+    opened = _count_parquet_opens(monkeypatch)
+    norms_reads = []
+    real_read_table = pq.read_table
+
+    def counting(source, *args, **kwargs):
+        if f"{os.sep}norms{os.sep}pid=" in str(source):
+            norms_reads.append(str(source))
+        return real_read_table(source, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "read_table", counting)
+    old_max = S._LOCAL_ROWS_MAX
+    S.clear_local_cache()
+    S.clear_postings_cache()
+    try:
+        S._LOCAL_ROWS_MAX = 1
+        for _ in range(2):
+            del opened[:], norms_reads[:]
+            got = search_compound_local(mf.manifests, batch, k=10,
+                                        default_field="body")
+            assert opened and len(opened) == len(set(opened))
+            assert norms_reads and len(norms_reads) == len(set(norms_reads))
+            _assert_rows_equal(got, want)
+    finally:
+        S._LOCAL_ROWS_MAX = old_max
+        S.clear_local_cache()
+        S.clear_postings_cache()

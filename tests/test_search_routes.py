@@ -6,8 +6,9 @@ route that answers them: the in-process route, the zero-exchange file
 plan, the cogroup plan, the one-shot bound probe, the sync-round loop,
 the serving path, and the serving path split by ``pids=`` and merged.
 Rows must be identical, scores float-exact.  The file-plan shape
-(pid ownership, a single stage without Exchange or Parquet scan) and
-the pid map's failure contract are pinned here too.
+(pid ownership, a single stage without Exchange or Parquet scan), the
+pid map's failure contract and the sync loop's k >= 1000 cut-off are
+pinned here too.
 """
 
 import pandas as pd
@@ -104,13 +105,13 @@ def test_routes_agree_unbounded(spark, ridx, monkeypatch):
 
 
 def test_file_groups_own_each_pid_once(ridx):
-    groups = S._postings_file_groups(ridx, 5)
+    groups = S._postings_file_groups({"": ridx}, 5)
     assert 1 <= len(groups) <= 5
     seen = [p for files, pids in groups for p in pids]
-    assert all(files and pids for files, pids in groups)
+    assert all(files[""] and pids for files, pids in groups)
     assert sorted(seen) == sorted(set(seen)) == \
         sorted(S._postings_pid_map(ridx))
-    sub = S._postings_file_groups(ridx, 5, pids=[1, 3])
+    sub = S._postings_file_groups({"": ridx}, 5, pids=[1, 3])
     assert sorted(p for _, pids in sub for p in pids) == [1, 3]
 
 
@@ -199,3 +200,24 @@ def test_inline_gate_default_and_single_stats_lookup(spark, ridx,
     monkeypatch.setattr(S, "term_doc_freqs", counting)
     S.search(spark, ridx, QUERIES, k=5, final_merge="driver")
     assert len(calls) == 2  # plan_queries + the route's Σdf
+
+
+def test_sync_at_k_1000_runs_plain_file_plan(spark, ridx, monkeypatch):
+    """``bound_probe="sync"`` is off at k >= 1000 (like the reference):
+    it launches exactly one plain file-plan job — no probe over pid 0,
+    no sync rounds — and returns ``bound_probe=False``'s rows."""
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_ROUTE_POSTINGS", "0")
+    want = _rows(S.search(spark, ridx, QUERIES, k=1000,
+                          final_merge="driver"))
+    plans = []
+    real = S._file_plan
+
+    def counting(*args, **kwargs):
+        plans.append(kwargs.get("pids", args[5] if len(args) > 5 else None))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(S, "_file_plan", counting)
+    got = _rows(S.search(spark, ridx, QUERIES, k=1000, final_merge="driver",
+                         bound_probe="sync"))
+    assert plans == [None]
+    pd.testing.assert_frame_equal(got, want, check_exact=True)

@@ -1,22 +1,21 @@
 """Driver-side Spark helpers and kernel sizing: job-free empty frames,
 driver-merged results, the cached parquet scan plan (incl. staleness),
-the sized mapInPandas kernel adapter, the scale-adaptive task-count
-heuristic, and the interval key overflow guard.
+the scale-adaptive task-count heuristic, and the interval key overflow
+guard.
 
 Results must be identical to the plain Spark shapes, and the
 latency-critical properties (no jobs for empties, fresh listing after a
-rewrite, whole pid groups per task) must hold.
+rewrite) must hold.
 """
 
 
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pim_lucene_spark.sparkutil import (cached_parquet, local_empty,
-                                        local_result, map_by_pid)
+                                        local_result)
 
 SCHEMA = T.StructType([
     T.StructField("qid", T.LongType(), False),
@@ -101,43 +100,6 @@ def test_cached_parquet_reuses_plan_and_detects_rewrite(spark, tmp_path):
     df3 = cached_parquet(spark, key, d)
     assert df3 is not df1
     assert df3.count() == 3
-
-
-def test_map_by_pid_matches_applyinpandas(spark):
-    pdf = pd.DataFrame({
-        "pid": np.repeat(np.arange(6, dtype=np.int32), 4),
-        "v": np.arange(24, dtype=np.int64),
-    })
-    df = spark.createDataFrame(pdf)
-    out_schema = T.StructType([
-        T.StructField("pid", T.IntegerType(), False),
-        T.StructField("s", T.LongType(), False),
-        T.StructField("n", T.LongType(), False),
-    ])
-
-    def kernel(key, g: pd.DataFrame) -> pd.DataFrame:
-        # the adapter must hand over the whole pid group, key as a tuple
-        assert int(key[0]) == int(g["pid"].iloc[0])
-        return pd.DataFrame({"pid": [int(key[0])],
-                             "s": [int(g["v"].sum())],
-                             "n": [len(g)]})
-
-    a = (df.groupBy("pid").applyInPandas(kernel, out_schema)
-         .toPandas().sort_values("pid").reset_index(drop=True))
-    b = (map_by_pid(df, 3, kernel, out_schema)
-         .toPandas().sort_values("pid").reset_index(drop=True))
-    assert a.equals(b)
-    assert (b["n"] == 4).all()  # every group complete despite 3 tasks
-
-
-def test_map_by_pid_pins_task_count(spark):
-    df = spark.range(100).select(
-        F.col("id").cast("int").alias("pid"),
-        F.col("id").alias("v"))
-    out = map_by_pid(df, 5, lambda k, g: g.head(1), df.schema)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "REPARTITION_BY_NUM" in plan
-    assert out.count() == 100
 
 
 def test_kernel_task_count_bounds():
