@@ -10,9 +10,10 @@ disjoint document batches (incremental indexing):
   bases plus the previous source's **doc-id span** (max doc_id + 1,
   ``IndexManifest.span``) rounded up to a multiple of the partition count
   so that ``(doc + base_s) % P == doc % P``: a doc never changes partition,
-  which makes the merge embarrassingly parallel per partition (no doc
-  re-routing shuffle, only a ``groupBy(pid)`` co-location of the sources'
-  posting rows).  Using the span (not ``doc_count``) keeps re-merges of
+  which makes the merge embarrassingly parallel per partition: one
+  file-plan task (``Range → MapInPandas``, no Exchange) owns pid ``p`` in
+  every source and reads it with the shard reader every query kernel
+  uses.  Using the span (not ``doc_count``) keeps re-merges of
   already-merged indexes correct: a merged id space contains round-up gaps,
   so ``max doc_id + 1 > doc_count``.
 - Within a partition, every source's relative docIDs shift by the constant
@@ -29,9 +30,11 @@ disjoint document batches (incremental indexing):
   appear in any posting list).  Blob placement uses actual blob lengths,
   which for a merged source exceed its ``num_docs`` (padding).
 
-At 100 TB scale this is the compaction path for incremental builds: cost
-is one co-partitioned shuffle of compressed posting rows (no
-re-tokenization of content), the same way Lucene merges avoid re-analysis.
+At 100 TB scale this is the compaction path for incremental builds: each
+source's postings and norms are read once, in place, by the task that owns
+their pid — no shuffle of posting rows and no re-tokenization of content,
+the same way Lucene merges avoid re-analysis.  Like direct search, it needs
+POSIX-visible v3 sources (``norms/pid=N`` dirs).
 """
 
 from __future__ import annotations
@@ -42,15 +45,25 @@ import uuid
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pim_lucene_spark.functions import bm25
 from pim_lucene_spark.functions.postings import decode_columnar
+from pim_lucene_spark.functions.smallfloat import quantize_norm_inverse
 from pim_lucene_spark.manifest import IndexManifest
+from pim_lucene_spark.operators.deletes import deleted_ids, live_mask_for
 from pim_lucene_spark.operators.index_build import (
     NORMS_SCHEMA,
     POSTINGS_SCHEMA,
     encode_partition_postings,
+)
+from pim_lucene_spark.operators.search import (
+    _file_plan,
+    _kernel_task_count,
+    _pid_norms,
+    _read_shard,
+    _ResidentRow,
 )
 
 
@@ -58,95 +71,91 @@ def _load(m: IndexManifest | str) -> IndexManifest:
     return IndexManifest.load(m) if isinstance(m, str) else m
 
 
-def _merge_postings_kernel(rel_shifts: list[int], num_partitions: int,
+def _merge_postings_runner(ms: list[IndexManifest], rel_shifts: list[int],
                            num_segments: int, nb_doc_per_segment: int,
-                           stripe_cap: int,
-                           del_paths: list[str | None] | None = None,
-                           del_spans: list[int] | None = None):
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pid = int(key[0])
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=[f.name for f in POSTINGS_SCHEMA.fields])
-        # per-source live masks: a merge PURGES deleted docs (Lucene's
-        # merge-reclaims-deletes) by dropping their postings at the
-        # decoded level before re-encode
-        live_src: dict[int, np.ndarray | None] = {}
+                           stripe_cap: int):
+    """The file-plan runner of the postings merge: a task reads its pids
+    from every source with :func:`_read_shard` and merges each pid."""
+    P = ms[0].num_partitions
+    del_paths = [m.deletes_path if m.delete_gen else None for m in ms]
+    del_spans = [-(-m.span // P) for m in ms]
 
-        def get_live(src: int):
-            if src not in live_src:
-                path = del_paths[src] if del_paths else None
-                if path is None:
-                    live_src[src] = None
-                else:
-                    from pim_lucene_spark.operators.deletes import (
-                        live_mask_for,
-                    )
-                    live_src[src] = live_mask_for(
-                        path, pid, num_partitions, del_spans[src])
-            return live_src[src]
-
-        # factorize terms once at the ROW level: per-token term identity is
-        # an int64 code, never a Python string (rows ≪ tokens)
-        row_codes, uniques = pd.factorize(pdf["term"], sort=True)
-        srcs = pdf["src"].to_numpy(np.int64)
-        stripes = pdf["stripe"].to_numpy(np.int64)
-        # (code, src, stripe) order ⇒ concatenated streams are globally
-        # (term, doc, pos)-sorted: bases ascend across sources and each
-        # source row is doc-ordered with ascending stripes
-        order = np.lexsort((stripes, srcs, row_codes))
-        pdf = pdf.iloc[order]
-        row_codes = row_codes[order]
-
+    def merge_pid(pid: int, shards: list[dict]) -> pd.DataFrame | None:
+        res = [(i, s[pid]) for i, s in enumerate(shards) if pid in s]
+        # one sorted term dictionary over the sources; term identity
+        # travels as its int64 code, never a per-token Python string.
+        # Visiting rows in (term, source, stripe) order yields globally
+        # (term, doc, pos)-sorted streams: bases ascend across sources and
+        # each source row is doc-ordered with ascending stripes.  A merge
+        # PURGES deleted docs (Lucene's merge-reclaims-deletes) by dropping
+        # their postings at the decoded level before re-encode.
+        uniques = np.unique(np.concatenate([r.terms for _, r in res]))
+        by_src = [(i, r.by_term(uniques),
+                   live_mask_for(del_paths[i], pid, P, del_spans[i]))
+                  for i, r in res]
         code_parts, doc_parts, pos_parts = [], [], []
-        for code, row in zip(row_codes, pdf.itertuples(index=False)):
-            tp = decode_columnar(row.doc_blob, row.freq_blob, row.pos_blob,
-                                 np.asarray(row.seg_doc_counts),
-                                 decode_positions=True)
-            rel, freqs, pos = tp.rel_docs, tp.freqs, tp.positions
-            lv = get_live(int(row.src))
-            if lv is not None:
-                keep = lv[rel]
-                if not keep.all():
-                    pos = pos[np.repeat(keep, freqs)]
-                    rel, freqs = rel[keep], freqs[keep]
-                    if rel.size == 0:
-                        continue
-            abs_doc = (rel + rel_shifts[row.src]) * num_partitions + pid
-            tok_doc = np.repeat(abs_doc, freqs)
-            code_parts.append(np.full(tok_doc.size, code, dtype=np.int64))
-            doc_parts.append(tok_doc)
-            pos_parts.append(pos)
-        if not code_parts:
-            return pd.DataFrame(columns=[f.name for f in
-                                         POSTINGS_SCHEMA.fields])
-        codes = np.concatenate(code_parts)
-        tok_doc = np.concatenate(doc_parts)
-        tok_pos = np.concatenate(pos_parts)
+        for code, term in enumerate(uniques.tolist()):
+            for src, by_term, live in by_src:
+                for row in by_term.get(term, ()):
+                    tp = decode_columnar(row.doc_blob, row.freq_blob,
+                                         row.pos_blob, row.seg_doc_counts,
+                                         decode_positions=True)
+                    rel, freqs, pos = tp.rel_docs, tp.freqs, tp.positions
+                    if live is not None:
+                        keep = live[rel]
+                        pos = pos[np.repeat(keep, freqs)]
+                        rel, freqs = rel[keep], freqs[keep]
+                    tok_doc = np.repeat((rel + rel_shifts[src]) * P + pid,
+                                        freqs)
+                    code_parts.append(np.full(tok_doc.size, code,
+                                              dtype=np.int64))
+                    doc_parts.append(tok_doc)
+                    pos_parts.append(pos)
+        if not sum(c.size for c in code_parts):
+            return None
         return encode_partition_postings(
-            pid, codes, tok_doc, tok_pos,
-            np.asarray(uniques, dtype=object), num_partitions, num_segments,
+            pid, np.concatenate(code_parts), np.concatenate(doc_parts),
+            np.concatenate(pos_parts), uniques, P, num_segments,
             nb_doc_per_segment, stripe_cap)
 
-    return fn
+    def run(files: dict[str, list[str]], pids: list[int]
+            ) -> pd.DataFrame | None:
+        shards = [_read_shard(files[str(i)], pids) for i in range(len(ms))]
+        outs = [out for out in (merge_pid(p, shards) for p in pids)
+                if out is not None]
+        return pd.concat(outs, ignore_index=True) if outs else None
+
+    return run
 
 
-def _merge_norms_kernel(rel_shifts: list[int]):
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pid = int(key[0])
-        placed, total, size = [], 0, 0
-        for row in pdf.itertuples(index=False):
-            blob = np.frombuffer(row.norms, dtype=np.uint8)
-            off = rel_shifts[row.src]
-            placed.append((off, blob))
-            total += int(row.num_docs)
-            size = max(size, off + blob.size)
-        out = np.zeros(size, dtype=np.uint8)
-        for off, blob in placed:
-            out[off:off + blob.size] = blob
-        return pd.DataFrame({"pid": [pid], "num_docs": [total],
-                             "norms": [out.tobytes()]})
+def _merge_norms(spark: SparkSession, ms: list[IndexManifest],
+                 rel_shifts: list[int], n_tasks: int) -> DataFrame:
+    """One merged norms row per pid any source has norms for, each
+    source blob at its shifted offset.  The driver lists the sources'
+    ``pid=N`` dirs once; tasks read only those (loudly, via
+    :func:`_pid_norms`)."""
+    have = [{int(n[len("pid="):]) for n in os.listdir(m.norms_path)
+             if n.startswith("pid=")} for m in ms]
+    pids = sorted(set().union(*have))
 
-    return fn
+    def fn(it):
+        import pyarrow.parquet as pq
+        for pdf in it:
+            for pid in (pids[i] for i in pdf["id"].tolist()):
+                srcs = [(m.norms_path, off) for m, off, h
+                        in zip(ms, rel_shifts, have) if pid in h]
+                blobs = [_pid_norms(path, pid) for path, _ in srcs]
+                out = np.zeros(max(off + b.size for (_, off), b
+                                   in zip(srcs, blobs)), dtype=np.uint8)
+                for (_, off), b in zip(srcs, blobs):
+                    out[off:off + b.size] = b
+                total = sum(sum(pq.read_table(f"{path}/pid={pid}",
+                                              columns=["num_docs"])
+                                .column(0).to_pylist()) for path, _ in srcs)
+                yield pd.DataFrame({"pid": [pid], "num_docs": [total],
+                                    "norms": [out.tobytes()]})
+    return (spark.range(0, len(pids), 1, max(1, min(n_tasks, len(pids))))
+            .mapInPandas(fn, NORMS_SCHEMA))
 
 
 def merge_indexes(spark: SparkSession, sources: list,
@@ -163,10 +172,13 @@ def merge_indexes(spark: SparkSession, sources: list,
     if len(ms) < 2:
         raise ValueError("need at least two source indexes")
     P = ms[0].num_partitions
-    for m in ms[1:]:
+    for m in ms:
         if (m.num_partitions, m.tokenizer, m.k1, m.b) != \
                 (P, ms[0].tokenizer, ms[0].k1, ms[0].b):
             raise ValueError("sources disagree on partitions/tokenizer/BM25")
+        if m.version < 3:  # tasks read v3's norms/pid=N dirs directly
+            raise ValueError(f"source {m.index_dir} is index format v"
+                             f"{m.version}; merge needs v3 — rebuild it")
 
     t0 = time.time()
     # doc-base offsets from the padded SPAN, rounded up to multiples of P
@@ -195,19 +207,12 @@ def merge_indexes(spark: SparkSession, sources: list,
         doc_span=span, build_id=uuid.uuid4().hex,
     )
 
-    from pim_lucene_spark.functions import bm25
-    from pim_lucene_spark.functions.smallfloat import quantize_norm_inverse
-    avgdl32 = bm25.avg_field_length(sum_ttf, doc_count, "float32")
-    qf, _ = quantize_norm_inverse(bm25.score_cache(avgdl32, ms[0].k1, ms[0].b))
-    manifest.norm_quant_factor = int(qf)
-
     # --- docs: union with shifted ids; a merge PURGES deleted docs ---------
     any_del = any(m.delete_gen for m in ms)
     docs = None
     for m, base in zip(ms, bases):
         d = spark.read.parquet(m.docs_path)
         if m.delete_gen:
-            from pim_lucene_spark.operators.deletes import deleted_ids
             d = d.join(deleted_ids(spark, m), "doc_id", "left_anti")
         d = d.withColumn("doc_id", F.col("doc_id") + F.lit(base))
         # allowMissingColumns: sources may differ in payload meta columns
@@ -216,31 +221,19 @@ def merge_indexes(spark: SparkSession, sources: list,
             d, allowMissingColumns=True)
     docs.write.mode("overwrite").parquet(manifest.docs_path)
 
-    # --- postings: per-partition multi-way merge (deletes dropped at the
-    # decoded posting level; stats recomputed below) ------------------------
-    postings = None
-    for i, m in enumerate(ms):
-        p = (spark.read.parquet(*[m.chunk_path(c)
-                                  for c in range(m.build_chunks)])
-             .withColumn("src", F.lit(i)))
-        postings = p if postings is None else postings.unionByName(p)
-    kernel = _merge_postings_kernel(
-        rel_shifts, P, segs, nb_doc_per_segment, stripe_cap,
-        del_paths=[m.deletes_path if m.delete_gen else None for m in ms],
-        del_spans=[-(-m.span // P) for m in ms])
-    (postings.groupBy("pid").applyInPandas(kernel, POSTINGS_SCHEMA)
+    # --- postings: per-pid multi-way merge on the file plan; each task
+    # owns its pids in every source (deletes dropped at the decoded
+    # posting level; stats recomputed below).  Merge decodes every
+    # position, so the task count follows the token total.
+    n_tasks = _kernel_task_count(P, sum_ttf)
+    runner = _merge_postings_runner(ms, rel_shifts, segs, nb_doc_per_segment,
+                                    stripe_cap)
+    (_file_plan(spark, {str(i): m for i, m in enumerate(ms)}, runner,
+                POSTINGS_SCHEMA, n_tasks)
      .write.mode("overwrite").parquet(manifest.chunk_path(0)))
 
     # --- norms: shifted dense blobs, laid out per-pid for direct reads ------
-    norms = None
-    for i, m in enumerate(ms):
-        nm = (spark.read.parquet(m.norms_path)
-              .select(F.col("pid").cast("int").alias("pid"), "num_docs",
-                      "norms")
-              .withColumn("src", F.lit(i)))
-        norms = nm if norms is None else norms.unionByName(nm)
-    (norms.groupBy("pid").applyInPandas(_merge_norms_kernel(rel_shifts),
-                                        NORMS_SCHEMA)
+    (_merge_norms(spark, ms, rel_shifts, n_tasks)
      .write.mode("overwrite").partitionBy("pid").parquet(manifest.norms_path))
 
     # --- term stats: re-aggregate over merged postings ----------------------
@@ -249,6 +242,13 @@ def merge_indexes(spark: SparkSession, sources: list,
      .agg(F.sum("df").alias("doc_freq"), F.sum("ttf").alias("total_tf"))
      .write.mode("overwrite").parquet(manifest.stats_path))
 
+    metrics_rows = (merged.groupBy("pid").agg(
+        F.count_distinct("term").alias("terms"),
+        F.sum("df").alias("postings"),
+        F.sum("ttf").alias("tokens"),
+        (F.sum(F.length("doc_blob")) + F.sum(F.length("freq_blob"))
+         + F.sum(F.length("pos_blob"))).alias("bytes"),
+    ).collect())
     if any_del:
         # purged merge: collection stats shrink to the live corpus (the
         # moment Lucene's deleted-doc statistics catch up is the merge)
@@ -257,21 +257,14 @@ def merge_indexes(spark: SparkSession, sources: list,
             raise ValueError(
                 "merge produced an empty index: every source document "
                 "is deleted — nothing to compact")
-        sum_ttf = int(merged.agg(F.sum("ttf")).collect()[0][0] or 0)
-        manifest.doc_count, manifest.sum_total_term_freq = \
-            int(doc_count), sum_ttf
-        avgdl32 = bm25.avg_field_length(sum_ttf, doc_count, "float32")
-        qf, _ = quantize_norm_inverse(
-            bm25.score_cache(avgdl32, ms[0].k1, ms[0].b))
-        manifest.norm_quant_factor = int(qf)
+        manifest.doc_count = int(doc_count)
+        manifest.sum_total_term_freq = sum(int(r["tokens"])
+                                           for r in metrics_rows)
+    avgdl32 = bm25.avg_field_length(manifest.sum_total_term_freq,
+                                    manifest.doc_count, "float32")
+    qf, _ = quantize_norm_inverse(bm25.score_cache(avgdl32, ms[0].k1, ms[0].b))
+    manifest.norm_quant_factor = int(qf)
 
-    metrics_rows = (merged.groupBy("pid").agg(
-        F.count_distinct("term").alias("terms"),
-        F.sum("df").alias("postings"),
-        F.sum("ttf").alias("tokens"),
-        (F.sum(F.length("doc_blob")) + F.sum(F.length("freq_blob"))
-         + F.sum(F.length("pos_blob"))).alias("bytes"),
-    ).collect())
     manifest.metrics = {
         "merge_seconds": round(time.time() - t0, 3),
         "doc_count": manifest.doc_count,

@@ -255,3 +255,116 @@ def test_merge_three_way_with_striping(spark, tmp_index_dir):
         np.testing.assert_array_equal(
             np.float32(got.score.to_numpy()),
             np.float32(expected.score.to_numpy()), err_msg=text)
+
+
+def _vocab_docs(n, seed):
+    rng = np.random.default_rng(seed)
+    vocab = ["red", "green", "blue", "apple", "sky", "grass"]
+    return pd.DataFrame({
+        "doc_id": range(n),
+        "content": [" ".join(rng.choice(vocab, size=rng.integers(3, 9)))
+                    for _ in range(n)]})
+
+
+def _frame(df):
+    pdf = df.toPandas() if not isinstance(df, pd.DataFrame) else df
+    return pdf.sort_values(["qid", "doc_id"]).reset_index(drop=True)
+
+
+def _norms_pids(m):
+    return sorted(int(n[len("pid="):]) for n in os.listdir(m.norms_path)
+                  if n.startswith("pid="))
+
+
+def test_merge_sparse_and_emptied_pids(spark, tmp_index_dir):
+    """Sources whose pids are missing: one with fewer docs than P (its
+    norms hold only pid=0..2) and one whose pid 5 is wholly deleted.
+    The flat 3-way merge and the chain merge(merge(small, b), c) both
+    equal a brute-force scan of exactly the live docs at the merged ids,
+    float-exact."""
+    from pim_lucene_spark.operators.deletes import write_deletes
+    from pim_lucene_spark.plans.router import brute_force_search
+
+    P = 8
+    cfg = IndexConfig(num_partitions=P, num_segments=2, build_chunks=1)
+    frames = [_vocab_docs(3, 1), _vocab_docs(20, 2), _vocab_docs(10, 3)]
+    dels = [[], [5, 13], [2]]  # source 1: every doc of pid 5
+    srcs = []
+    for i, (f, d) in enumerate(zip(frames, dels)):
+        m = build_index(spark, spark.createDataFrame(f),
+                        os.path.join(tmp_index_dir, f"s{i}"), cfg,
+                        content_col="content", id_col="doc_id")
+        srcs.append(write_deletes(spark, m, d) if d else m)
+    assert _norms_pids(srcs[0]) == [0, 1, 2]
+
+    flat = merge_indexes(spark, srcs, os.path.join(tmp_index_dir, "flat"))
+    m01 = merge_indexes(spark, srcs[:2], os.path.join(tmp_index_dir, "m01"))
+    chain = merge_indexes(spark, [m01, srcs[2]],
+                          os.path.join(tmp_index_dir, "chain"))
+
+    bases = [0, 8, 32]  # spans 3 → 8, 20 → 24
+    live = pd.concat([f[~f.doc_id.isin(d)].assign(doc_id=f.doc_id + b)
+                      for f, d, b in zip(frames, dels, bases)],
+                     ignore_index=True)
+    qs = [(0, "red"), (1, "green apple"), (2, "sky"), (3, "blue grass"),
+          (4, "apple")]
+    want = _frame(brute_force_search(spark.createDataFrame(live), qs,
+                                     k=10 ** 6))
+    for merged in (flat, chain):
+        assert merged.doc_count == len(live) == 30
+        assert _norms_pids(merged) == list(range(P))
+        docs = spark.read.parquet(merged.docs_path).toPandas()
+        assert sorted(docs.doc_id) == sorted(live.doc_id)
+        got = _frame(search(spark, merged, qs, k=10 ** 6))
+        pd.testing.assert_frame_equal(got, want)
+
+
+def test_merge_rejects_pre_v3_source(spark, tmp_index_dir):
+    """Only v3 has the norms/pid=N layout merge tasks read directly."""
+    from pim_lucene_spark.manifest import IndexManifest
+
+    def manifest(name, version):
+        return IndexManifest(
+            index_dir=os.path.join(tmp_index_dir, name), num_partitions=2,
+            num_segments=1, doc_count=1, sum_total_term_freq=1,
+            nb_doc_per_segment=1, version=version)
+
+    with pytest.raises(ValueError, match="rebuild"):
+        merge_indexes(spark, [manifest("a", 3), manifest("b", 2)],
+                      os.path.join(tmp_index_dir, "m"))
+    assert not os.path.exists(os.path.join(tmp_index_dir, "m"))
+
+
+def test_merge_postings_and_norms_writes_have_no_shuffle(
+        spark, tmp_index_dir, monkeypatch):
+    """The postings and norms writes run on the file plan: every job of
+    either write is a single stage — a pid shuffle would add a map stage
+    to the write's job."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    cfg = IndexConfig(num_partitions=4, num_segments=2, build_chunks=1)
+    srcs = [build_index(spark, spark.createDataFrame(f),
+                        os.path.join(tmp_index_dir, f"s{i}"), cfg,
+                        content_col="content", id_col="doc_id")
+            for i, f in enumerate([DOCS_A, DOCS_B])]
+    sc = spark.sparkContext
+    write = DataFrameWriter.parquet
+
+    def tagged(self, path, *args, **kwargs):
+        sc.setJobGroup(f"write {path}", "merge write")
+        try:
+            return write(self, path, *args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", tagged)
+    merged = merge_indexes(spark, srcs, os.path.join(tmp_index_dir, "m"))
+    monkeypatch.undo()
+
+    tracker = sc.statusTracker()
+    for path in (merged.chunk_path(0), merged.norms_path):
+        jobs = tracker.getJobIdsForGroup(f"write {path}")
+        assert jobs, path
+        assert [len(tracker.getJobInfo(j).stageIds) for j in jobs] == \
+            [1] * len(jobs), path
