@@ -7,8 +7,9 @@ codecs (see :mod:`pim_lucene_spark.functions.postings`), reproducing the
 reference's delta+varint compression semantics
 (``PimIndexWriter.java:850-893``).
 
-Both directions loop only over *byte positions* (<= 10 iterations), never
-over values, so encode/decode stay O(bytes) numpy work.
+Neither direction loops over values: encode loops over *byte positions*
+(<= 10 iterations) and decode makes a fixed number of array passes, so
+both stay O(bytes) numpy work.
 """
 
 from __future__ import annotations
@@ -81,53 +82,28 @@ def decode_uvarints(buf: bytes | np.ndarray) -> np.ndarray:
     """Decode a buffer of concatenated varints → uint64 array.
 
     Single-byte values (the overwhelming case for delta-compressed doc
-    gaps, term freqs, and position gaps) decode as one ``astype``; only
-    the bytes belonging to multi-byte values — themselves a valid
-    varint sub-stream, groups being contiguous and terminated — go
-    through the generic per-byte-slot loop.
+    gaps, term freqs, and position gaps) decode as one ``astype``.
+    Otherwise each byte's 7 payload bits are shifted by its slot within
+    its value and every value's bytes are OR-reduced in one
+    ``reduceat`` — a fixed handful of array passes whatever the value
+    widths, so a request-sized stream of a few hundred bytes costs tens
+    of microseconds, not one pass per byte slot.
     """
     b = np.frombuffer(buf, dtype=np.uint8) if not isinstance(buf, np.ndarray) else buf
     if b.size == 0:
         return np.empty(0, dtype=np.uint64)
-    is_end = b < 0x80
-    ends = np.flatnonzero(is_end)
-    n = ends.size
-    if n == 0 or ends[-1] != b.size - 1:
+    cont = b >= 0x80
+    if cont[-1]:
         raise ValueError("truncated varint stream")
-    if n == b.size:  # every value fits one byte
+    if not cont.any():  # every value fits one byte
         return b.astype(np.uint64)
-    glen = np.empty(n, dtype=np.int64)
-    glen[0] = ends[0] + 1
-    glen[1:] = np.diff(ends)
-    multi = glen > 1
-    if multi.all():
-        return _decode_uvarints_loop(b, ends)
-    vals = np.empty(n, dtype=np.uint64)
-    single = ~multi
-    vals[single] = b[ends[single]]
-    grp = np.cumsum(is_end) - is_end  # byte i -> index of its group
-    mb = b[multi[grp]]
-    vals[multi] = _decode_uvarints_loop(mb, np.flatnonzero(mb < 0x80))
-    return vals
-
-
-def _decode_uvarints_loop(b: np.ndarray, ends: np.ndarray) -> np.ndarray:
-    """Generic multi-byte varint decode: one pass per byte slot."""
-    n = ends.size
-    grp = np.zeros(b.size, dtype=np.int64)
-    grp[1:] = np.cumsum(b[:-1] < 0x80)
-    starts = np.empty(n, dtype=np.int64)
+    ends = np.flatnonzero(~cont)
+    starts = np.empty_like(ends)
     starts[0] = 0
     starts[1:] = ends[:-1] + 1
-    pos_in_grp = np.arange(b.size, dtype=np.int64) - starts[grp]
-    vals = np.zeros(n, dtype=np.uint64)
-    max_pos = int(pos_in_grp.max())
-    for j in range(max_pos + 1):
-        sel = pos_in_grp == j
-        if not sel.any():
-            continue
-        vals[grp[sel]] |= (b[sel].astype(np.uint64) & _MASK7) << np.uint64(7 * j)
-    return vals
+    slot = np.arange(b.size) - np.repeat(starts, ends - starts + 1)
+    vals = (b & 0x7F).astype(np.uint64) << (_SEVEN * slot.astype(np.uint64))
+    return np.bitwise_or.reduceat(vals, starts)
 
 
 def zigzag_encode(values: np.ndarray) -> np.ndarray:

@@ -27,7 +27,12 @@ host↔DPU protocol in ``topdocs_sync.c:469-544``):
    k-way sorted docID intersection (leapfrog semantics, ``matcher.c:
    82-128``) → position alignment counting every overlapping occurrence
    (``matcher.c:133-177``) → BM25 scoring with Lucene's exact float32
-   expression tree → per-partition top-k.
+   expression tree → per-partition top-k.  Decode is batched the way a
+   DPU makes a few bulk passes over its resident lists: a phrase's
+   terms decode their doc ids and freqs in ONE varint pass per pid
+   (:func:`_decode_terms` joins the bytes of every selected segment of
+   every stripe row — each segment restarts its delta chain), and a
+   term's position units in one pass per alignment step.
 
    **Block-max pruning** (``score_lower_bound.c:88-122``,
    ``matcher.c:121-128`` semantics):
@@ -42,13 +47,18 @@ host↔DPU protocol in ``topdocs_sync.c:469-544``):
    - *phrase queries*: candidates are evaluated in descending upper-bound
      order (ub = score(min term tf, actual norm) — tighter than any
      segment-level bound) with the evaluation cut once the k-th best exact
-     score exceeds the next ub; position blobs are decoded **lazily per
-     (term, segment) unit** only when a candidate chunk actually touches
-     them, so a pruned tail (or a stopword-heavy term) never pays its
+     score exceeds the next ub; position blobs are decoded **lazily**:
+     only the (term, segment) units a candidate chunk actually touches
+     decode — all of a chunk's new units of one term in one
+     ``decode_positions_slice`` call over their joined bytes — so a
+     pruned tail (or a stopword-heavy term) never pays its
      position-decode cost.
 
 4. Global top-k per query: window rank over (score desc, doc_id asc) —
-   Lucene ``TopScoreDocCollector`` tie-break order.
+   Lucene ``TopScoreDocCollector`` tie-break order.  The host-side
+   merges (the collecting ``final_merge``, the sync rounds, serving)
+   cut with one numpy ``lexsort`` and a per-qid rank
+   (:func:`_top_k_index`).
 
 Scale notes: the default plan is one ``Range → MapInPandas`` stage with
 no shuffle — postings and norms are read where the task runs
@@ -119,83 +129,123 @@ class _LazyPostings:
     """One term's partition postings with per-(stripe, segment) lazy
     position decode.
 
-    Doc ids and freqs decode eagerly (they drive intersection and the
-    WAND bounds); the position stream of each (stripe, segment) unit is
-    sought via the stored skip sizes (``PimIndexWriter.java:903-916``) and
-    decoded only when :meth:`ensure_positions` is asked for a candidate
-    living inside it.
+    Doc ids and freqs arrive decoded (they drive intersection and the
+    WAND bounds) from :func:`_decode_terms`, which decodes one or
+    several terms in one pass.  The position
+    stream of each (stripe, segment) unit is sought via the stored skip
+    sizes (``PimIndexWriter.java:903-916``) and decoded only when
+    :meth:`ensure_positions` is asked for a candidate living inside it
+    — every such unit of one call in one pass over their joined bytes.
     """
 
     __slots__ = ("rel_docs", "freqs", "pos_offsets", "positions",
                  "_u_lo", "_u_hi", "_u_blob", "_u_blo", "_u_bhi", "_u_filled")
 
-    def __init__(self, rows, seg_mask: np.ndarray | None = None):
-        rel_parts, freq_parts = [], []
-        u_lo, u_blob, u_blo, u_bhi = [], [], [], []
-        plo = 0
-        for r in rows:  # rows pre-sorted by stripe
-            counts = np.asarray(r.seg_doc_counts, dtype=np.int64)
-            eff = counts > 0
-            if seg_mask is not None:
-                eff &= seg_mask
-            sel = np.flatnonzero(eff)
-            if sel.size == 0:
-                continue
-            dby = np.asarray(r.seg_doc_bytes, dtype=np.int64)
-            fby = np.asarray(r.seg_freq_bytes, dtype=np.int64)
-            pby = np.asarray(r.seg_pos_bytes, dtype=np.int64)
-            dend, fend, pend = np.cumsum(dby), np.cumsum(fby), np.cumsum(pby)
-            doc_b = b"".join(r.doc_blob[dend[i] - dby[i]:dend[i]] for i in sel)
-            freq_b = b"".join(r.freq_blob[fend[i] - fby[i]:fend[i]]
-                              for i in sel)
-            DECODE_STATS["doc_bytes"] += len(doc_b) + len(freq_b)
-            tp = decode_columnar(doc_b, freq_b, b"",
-                                 np.where(eff, counts, 0),
-                                 decode_positions=False)
-            rel_parts.append(tp.rel_docs)
-            freq_parts.append(tp.freqs)
-            for i in sel:
-                u_lo.append(plo)
-                u_blob.append(r.pos_blob)
-                u_blo.append(int(pend[i] - pby[i]))
-                u_bhi.append(int(pend[i]))
-                plo += int(counts[i])
-        if rel_parts:
-            self.rel_docs = np.concatenate(rel_parts)
-            self.freqs = np.concatenate(freq_parts)
-        else:
-            self.rel_docs = np.empty(0, dtype=np.int64)
-            self.freqs = np.empty(0, dtype=np.int64)
-        self.pos_offsets = np.zeros(self.freqs.size + 1, dtype=np.int64)
-        np.cumsum(self.freqs, out=self.pos_offsets[1:])
+    def __init__(self, rel_docs: np.ndarray, freqs: np.ndarray,
+                 u_lo: np.ndarray, u_blob: list, u_blo: list, u_bhi: list):
+        """``u_lo[j]`` is unit ``j``'s first posting; its position bytes
+        are ``u_blob[j][u_blo[j]:u_bhi[j]]``."""
+        self.rel_docs = rel_docs
+        self.freqs = freqs
+        self.pos_offsets = np.zeros(freqs.size + 1, dtype=np.int64)
+        np.cumsum(freqs, out=self.pos_offsets[1:])
         self.positions: np.ndarray | None = None
-        self._u_lo = np.asarray(u_lo, dtype=np.int64)
-        self._u_hi = (np.concatenate([self._u_lo[1:], [self.freqs.size]])
-                      if u_lo else np.empty(0, dtype=np.int64))
+        self._u_lo = u_lo
+        self._u_hi = np.append(u_lo[1:], freqs.size) if u_lo.size else u_lo
         self._u_blob = u_blob
         self._u_blo = u_blo
         self._u_bhi = u_bhi
-        self._u_filled = np.zeros(len(u_lo), dtype=bool)
+        self._u_filled = np.zeros(u_lo.size, dtype=bool)
 
     def ensure_positions(self, idx: np.ndarray) -> None:
-        """Decode the position units containing candidate indices ``idx``."""
+        """Decode the position units containing candidate indices
+        ``idx``: the units not decoded yet, joined into one
+        ``decode_positions_slice`` call (units are posting-aligned and
+        the position delta chain resets at every posting)."""
         if self.positions is None:
             self.positions = np.zeros(int(self.pos_offsets[-1]),
                                       dtype=np.int64)
         if self._u_lo.size == 0 or idx.size == 0:
             return
         uids = np.unique(np.searchsorted(self._u_lo, idx, side="right") - 1)
-        for u in uids:
-            if self._u_filled[u]:
-                continue
-            lo, hi = int(self._u_lo[u]), int(self._u_hi[u])
-            blob = self._u_blob[u][self._u_blo[u]:self._u_bhi[u]]
-            pos = decode_positions_slice(blob, self.freqs[lo:hi])
-            tlo = int(self.pos_offsets[lo])
-            self.positions[tlo:tlo + pos.size] = pos
-            self._u_filled[u] = True
-            DECODE_STATS["pos_bytes"] += len(blob)
-            DECODE_STATS["pos_units"] += 1
+        uids = uids[~self._u_filled[uids]]
+        if uids.size == 0:
+            return
+        los = self._u_lo[uids].tolist()
+        his = self._u_hi[uids].tolist()
+        us = uids.tolist()
+        blob = b"".join([self._u_blob[u][self._u_blo[u]:self._u_bhi[u]]
+                         for u in us])
+        freqs = (self.freqs[los[0]:his[0]] if len(us) == 1 else
+                 np.concatenate([self.freqs[lo:hi]
+                                 for lo, hi in zip(los, his)]))
+        pos = decode_positions_slice(blob, freqs)
+        offs = self.pos_offsets
+        src = 0
+        for lo, hi in zip(los, his):
+            tlo, thi = int(offs[lo]), int(offs[hi])
+            self.positions[tlo:thi] = pos[src:src + thi - tlo]
+            src += thi - tlo
+        self._u_filled[uids] = True
+        DECODE_STATS["pos_bytes"] += len(blob)
+        DECODE_STATS["pos_units"] += len(us)
+
+
+_EMPTY_I64 = np.empty(0, dtype=np.int64)
+
+
+def _decode_terms(row_lists: list, masks: list) -> list[_LazyPostings]:
+    """Doc ids and freqs of several terms in one decode pass.
+
+    ``row_lists[i]`` is term ``i``'s stripe-ordered rows and
+    ``masks[i]`` its segment mask (``None`` = every segment).  The doc
+    and freq bytes of every selected (row, segment) unit of every term
+    are joined and decoded by ONE ``decode_columnar`` call — valid
+    because each segment restarts its doc-id delta chain
+    (``PimIndexWriter.java:847-849``) — and split back into one
+    :class:`_LazyPostings` per term, whose positions stay undecoded."""
+    doc_parts, freq_parts, counts, spans = [], [], [], []
+    for rows, seg_mask in zip(row_lists, masks):
+        first = len(counts)
+        u_blob, u_blo, u_bhi = [], [], []
+        keep = None if seg_mask is None else seg_mask.tolist()
+        for r in rows:  # rows pre-sorted by stripe
+            db, fb, pb = r.doc_blob, r.freq_blob, r.pos_blob
+            d = f = p = 0
+            # a plain loop: a row holds num_segments (a handful of)
+            # entries, too few for numpy calls to pay their overhead
+            for i, (n, dn, fn, pn) in enumerate(zip(
+                    np.asarray(r.seg_doc_counts).tolist(),
+                    np.asarray(r.seg_doc_bytes).tolist(),
+                    np.asarray(r.seg_freq_bytes).tolist(),
+                    np.asarray(r.seg_pos_bytes).tolist())):
+                if n and (keep is None or keep[i]):
+                    doc_parts.append(db[d:d + dn])
+                    freq_parts.append(fb[f:f + fn])
+                    counts.append(n)
+                    u_blob.append(pb)
+                    u_blo.append(p)
+                    u_bhi.append(p + pn)
+                d += dn
+                f += fn
+                p += pn
+        spans.append((first, len(counts), u_blob, u_blo, u_bhi))
+    rel_docs = freqs = _EMPTY_I64
+    if counts:
+        doc_b, freq_b = b"".join(doc_parts), b"".join(freq_parts)
+        DECODE_STATS["doc_bytes"] += len(doc_b) + len(freq_b)
+        tp = decode_columnar(doc_b, freq_b, b"", counts,
+                             decode_positions=False)
+        rel_docs, freqs = tp.rel_docs, tp.freqs
+    starts = np.zeros(len(counts) + 1, dtype=np.int64)
+    np.cumsum(counts, out=starts[1:])
+    out = []
+    for first, last, u_blob, u_blo, u_bhi in spans:
+        lo, hi = int(starts[first]), int(starts[last])
+        out.append(_LazyPostings(rel_docs[lo:hi], freqs[lo:hi],
+                                 starts[first:last] - lo,
+                                 u_blob, u_blo, u_bhi))
+    return out
 
 
 def _phrase_match_counts(postings_by_term: list, cand_idx_by_term: list[np.ndarray],
@@ -289,8 +339,10 @@ def _postings_cache_put(key, lp: "_LazyPostings", budget_bytes: int):
     size = _lp_bytes(lp)
     if size > budget_bytes:
         return
-    # an entry outlives the rows it was decoded from: keep its own
-    # position bytes, not views that would pin every row read with them
+    # an entry outlives the rows and the joined decode it came from:
+    # keep its own arrays and position bytes, not views that would pin
+    # every row read (and every term decoded) with them
+    lp.rel_docs, lp.freqs = lp.rel_docs.copy(), lp.freqs.copy()
     lp._u_blob = [bytes(b[lo:hi]) for b, lo, hi
                   in zip(lp._u_blob, lp._u_blo, lp._u_bhi)]
     lp._u_blo = [0] * len(lp._u_blob)
@@ -371,7 +423,8 @@ def _single_term_topk(rows, norms: np.ndarray, weight: float,
     else:
         total_hint = total
     if cached is not None or (k >= total_hint and ext_bound == -np.inf):
-        lp = cached if cached is not None else _LazyPostings(rows)
+        lp = (cached if cached is not None
+              else _decode_terms([rows], [None])[0])
         if cached is None and cache_put is not None:
             cache_put(lp)
         cand, freqs = lp.rel_docs, lp.freqs
@@ -417,7 +470,7 @@ def _single_term_topk(rows, norms: np.ndarray, weight: float,
             j += 1
         mask = np.zeros(num_segments, dtype=bool)
         mask[order[i:j]] = True
-        lp = _LazyPostings(rows, mask)
+        lp = _decode_terms([rows], [mask])[0]
         cand_b, freqs_b = lp.rel_docs, lp.freqs
         if live is not None:  # deleted docs must not occupy the bound
             keep = live[cand_b]
@@ -474,7 +527,8 @@ class _DecodeCtx:
     Full decodes are cached across the query batch (repeated hot terms
     decode once) and, when the warm cache is enabled, across batches in
     the process-wide LRU; co-presence-masked decodes are query-specific.
-    Positions stay lazy either way.
+    :meth:`get_many` decodes all of a call's uncached terms in one
+    :func:`_decode_terms` pass.  Positions stay lazy either way.
     """
 
     __slots__ = ("by_term", "decoded", "pid", "ckey", "budget")
@@ -501,9 +555,9 @@ class _DecodeCtx:
             _postings_cache_put((self.ckey, self.pid, term), tp,
                                 self.budget)
 
-    def get(self, term, seg_mask=None) -> "_LazyPostings":
-        tp = self.probe(term)
-        if tp is None and seg_mask is not None and self.budget:
+    def _decode_mask(self, term, seg_mask):
+        """The segment mask to decode an uncached ``term`` with."""
+        if seg_mask is not None and self.budget:
             # warm cache on: a masked decode is query-specific and
             # re-done every batch — prefer one cacheable full decode for
             # modest terms (same residency tradeoff as the single-term
@@ -512,17 +566,31 @@ class _DecodeCtx:
                                           dtype=np.int64).sum())
                            for r in self.by_term[term])
             if est <= self.budget // 8:
-                seg_mask = None
-        if tp is None and seg_mask is not None:
-            # no full decode available: decode only the co-present
-            # segments (query-specific, not published)
-            return _LazyPostings(self.by_term[term], seg_mask)
-        if tp is None:
-            tp = _LazyPostings(self.by_term[term])
-            self.publish(term, tp)
-        # an already-decoded superset is always valid: masked-out
-        # segments hold docs that cannot survive the intersection
-        return tp
+                return None
+        return seg_mask
+
+    def get_many(self, terms, seg_mask=None) -> list["_LazyPostings"]:
+        """Postings of the distinct ``terms``: every term is probed
+        first, the misses decode together, and each full decode is
+        published in term order.  A miss with no full decode available
+        decodes only the co-present segments ``seg_mask`` (query-specific,
+        not published)."""
+        tps = [self.probe(t) for t in terms]
+        miss = [i for i, tp in enumerate(tps) if tp is None]
+        if not miss:
+            # an already-decoded superset is always valid: masked-out
+            # segments hold docs that cannot survive the intersection
+            return tps
+        masks = [self._decode_mask(terms[i], seg_mask) for i in miss]
+        lps = _decode_terms([self.by_term[terms[i]] for i in miss], masks)
+        for i, mask, lp in zip(miss, masks, lps):
+            if mask is None:
+                self.publish(terms[i], lp)
+            tps[i] = lp
+        return tps
+
+    def get(self, term, seg_mask=None) -> "_LazyPostings":
+        return self.get_many([term], seg_mask)[0]
 
 
 def _match_core(payload: dict, pid: int, postings_pdf: pd.DataFrame | None,
@@ -558,7 +626,6 @@ def _match_core_arrays(payload: dict, pid: int,
     cache_budget = ctx.budget
     _probe_cached = ctx.probe
     _publish = ctx.publish
-    get_decoded = ctx.get
 
     bounds = payload.get("bounds") or {}
     after_all = payload.get("after") or {}
@@ -618,7 +685,7 @@ def _match_core_arrays(payload: dict, pid: int,
             if not pres.any():
                 continue
             seg_mask = None if pres.all() else pres
-            tps = [get_decoded(t, seg_mask) for t in uniq]
+            tps = ctx.get_many(uniq, seg_mask)
 
             # k-way sorted docID intersection (leapfrog semantics)
             cand = tps[0].rel_docs
@@ -762,14 +829,29 @@ def _empty_result() -> pd.DataFrame:
     return _EMPTY_RESULT
 
 
+def _top_k_index(qid: np.ndarray, score: np.ndarray, doc_id: np.ndarray,
+                 k: int) -> np.ndarray:
+    """Row indices of each query's first ``k`` rows in (score desc,
+    doc_id asc) order — Lucene ``TopScoreDocCollector``'s tie-break —
+    with the queries in ascending qid order.  The sort is stable, so
+    fully tied rows keep their input order."""
+    order = np.lexsort((doc_id, -score, qid))
+    q = qid[order]
+    first = np.ones(q.size, dtype=bool)
+    np.not_equal(q[1:], q[:-1], out=first[1:])
+    starts = np.flatnonzero(first)
+    rank = np.arange(q.size) - np.repeat(starts,
+                                         np.diff(starts, append=q.size))
+    return order[rank < k]
+
+
 def _top_k(pdf: pd.DataFrame, k: int) -> pd.DataFrame:
     """Driver merge of per-pid top-k rows: each query's first ``k`` in
-    (score desc, doc_id asc) order — Lucene ``TopScoreDocCollector``'s
-    tie-break and the reference's host-side merge
-    (``topdocs_sync.c:369-412``)."""
-    return (pdf.sort_values(["qid", "score", "doc_id"],
-                            ascending=[True, False, True])
-            .groupby("qid", sort=False).head(k).reset_index(drop=True))
+    (score desc, doc_id asc) order (:func:`_top_k_index`) — the
+    reference's host-side merge (``topdocs_sync.c:369-412``)."""
+    keep = _top_k_index(pdf["qid"].to_numpy(), pdf["score"].to_numpy(),
+                        pdf["doc_id"].to_numpy(), k)
+    return pdf.take(keep).reset_index(drop=True)
 
 
 def _resolve_norms_access(norms_access: str, manifest) -> str:
@@ -996,11 +1078,11 @@ def _pid_terms(shard: dict, terms) -> dict[int, dict]:
 
 
 def _match_group(payload: dict, shard: dict,
-                 by_pid: dict[int, dict]) -> pd.DataFrame | None:
+                 by_pid: dict[int, dict]) -> dict | None:
     """The per-group runner every direct route shares: for each pid in
     ``by_pid`` (its rows per query term), its norms and live mask from
-    ``shard`` and the match kernel; one result frame for the group, or
-    ``None`` without hits."""
+    ``shard`` and the match kernel; the group's result columns as
+    arrays, or ``None`` without hits."""
     outs = []
     for pid in sorted(by_pid):
         norms, live = shard[pid].norms_live(payload["norms_path"],
@@ -1010,11 +1092,9 @@ def _match_group(payload: dict, shard: dict,
                                     by_term=by_pid[pid], live=live)
         if arrays is not None:
             outs.append(arrays)
-    if not outs:
-        return None
-    return pd.DataFrame({c: (np.concatenate([o[c] for o in outs])
-                             if len(outs) > 1 else outs[0][c])
-                         for c in RESULT_SCHEMA.fieldNames()})
+    if len(outs) <= 1:
+        return outs[0] if outs else None
+    return {c: np.concatenate([o[c] for o in outs]) for c in outs[0]}
 
 
 def _match_files(payload: dict, files: dict[str, list[str]],
@@ -1024,7 +1104,8 @@ def _match_files(payload: dict, files: dict[str, list[str]],
     the per-group runner."""
     terms = payload["needed_terms"]
     shard = _read_shard(files[""], pids, terms)
-    return _match_group(payload, shard, _pid_terms(shard, terms))
+    arrays = _match_group(payload, shard, _pid_terms(shard, terms))
+    return None if arrays is None else pd.DataFrame(arrays)
 
 
 def _file_plan(spark: SparkSession, manifests: dict[str, IndexManifest],
@@ -1254,7 +1335,15 @@ def _tokenize_queries_full(norm_queries: list[tuple[int, str, float]],
     keeps position increments, so the phrase "sort the window" becomes
     a gapped PhraseQuery — sort@x, window@x+2.  Offsets are normalized
     to start at 0 (a leading gap only shifts the match start).
+
+    ``whitespace`` needs no pipeline: it is one ``str.split`` per text
+    (:func:`tokenize_one`), which pandas' vectorized split would run
+    anyway behind ~1 ms of Series overhead — most of a one-query
+    serving request's planning time.
     """
+    if tokenizer == "whitespace":
+        return {qid: (tokenize_one(text, tokenizer), None, boost)
+                for qid, text, boost in norm_queries}
     texts = pd.Series([t for _, t, _ in norm_queries], dtype=object)
     if tokenizer != "english":
         from pim_lucene_spark.functions.tokenize import tokenize_series
@@ -1741,4 +1830,5 @@ def search_local(index: IndexManifest | str, queries: list[tuple[int, str]],
     res = _match_group(payload, shard, _pid_terms(shard, needed_terms))
     if res is None:
         return _empty_result().copy()  # public boundary: see above
-    return _top_k(res, k)
+    keep = _top_k_index(res["qid"], res["score"], res["doc_id"], k)
+    return pd.DataFrame({c: v[keep] for c, v in res.items()})

@@ -161,7 +161,7 @@ def _leaf_match(ctx: _DecodeCtx, norms: np.ndarray, terms: tuple,
     if not pres.any():
         return _EMPTY_I64, _EMPTY_F64, _EMPTY_F64
     seg_mask = None if pres.all() else pres
-    tps = [ctx.get(t, seg_mask) for t in uniq]
+    tps = ctx.get_many(uniq, seg_mask)
     cand = tps[0].rel_docs
     idxs = [np.arange(cand.size)]
     for tp in tps[1:]:
@@ -253,8 +253,8 @@ def _interval_match(ctx: _DecodeCtx, slots: tuple, weight: float,
     if not pres.any():
         return _EMPTY_I64, _EMPTY_F64
     seg_mask = None if pres.all() else pres
-    tp_of = {t: ctx.get(t, seg_mask)
-             for t in dict.fromkeys(t for s in live_slots for t in s)}
+    terms = list(dict.fromkeys(t for s in live_slots for t in s))
+    tp_of = dict(zip(terms, ctx.get_many(terms, seg_mask)))
     # candidate docs: ∩ over slots of (∪ over the slot's terms)
     cand = None
     for s in live_slots:

@@ -40,8 +40,6 @@ import pandas as pd
 
 from pim_lucene_spark.manifest import IndexManifest
 
-_RESULT_COLS = ["qid", "doc_id", "freq", "norm", "score"]
-
 
 def serve_local(manifest: IndexManifest, queries, k: int,
                 precision: str, postings_cache_mb: int,
@@ -52,7 +50,7 @@ def serve_local(manifest: IndexManifest, queries, k: int,
     (``plans/compound.py::search_compound_local``) — no Spark job on
     either path.  Compound rows surface NaN freq/norm, mirroring the
     distributed :meth:`FullTextIndex.query` union."""
-    from pim_lucene_spark.operators.search import search_local
+    from pim_lucene_spark.operators.search import _empty_result, search_local
     from pim_lucene_spark.plans.boolean import BooleanQuery
     from pim_lucene_spark.plans.compound import search_compound_local
     from pim_lucene_spark.plans.dismax import DisMaxQuery
@@ -116,7 +114,7 @@ def serve_local(manifest: IndexManifest, queries, k: int,
             ["qid", "doc_id", "freq", "norm", "score"]]
         parts.append(c)
     if not parts:
-        return pd.DataFrame(columns=_RESULT_COLS)
+        return _empty_result().copy()
     if len(parts) == 1:
         return parts[0]
     return pd.concat([p.astype({"freq": "float64"})
@@ -253,10 +251,10 @@ class ShardedServer:
     # --- serving ------------------------------------------------------------
     @staticmethod
     def _merge(parts: list[pd.DataFrame], k: int) -> pd.DataFrame:
-        from pim_lucene_spark.operators.search import _top_k
+        from pim_lucene_spark.operators.search import _empty_result, _top_k
         parts = [p for p in parts if len(p)]
         if not parts:
-            return pd.DataFrame(columns=_RESULT_COLS)
+            return _empty_result().copy()
         return _top_k(pd.concat(parts, ignore_index=True), k)
 
     @staticmethod

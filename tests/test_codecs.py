@@ -128,6 +128,20 @@ def test_uvarint_wire_format():
     assert encode_uvarints(np.array([300], np.uint64)).tobytes() == b"\xac\x02"
 
 
+def test_uvarint_decode_widths_and_truncation():
+    # every width 1..10 bytes, mixed in one stream, including 2**64 - 1
+    vals = np.array([0, 127, 128, 300, 2**14, 2**21 + 5, 2**28, 2**35,
+                     2**42 - 1, 2**42, 2**49, 2**56 + 1, 2**63, 2**64 - 1, 1],
+                    dtype=np.uint64)
+    assert set(uvarint_byte_lengths(vals).tolist()) == set(range(1, 11))
+    for order in (vals, vals[::-1]):
+        enc = encode_uvarints(order).tobytes()
+        np.testing.assert_array_equal(decode_uvarints(enc), order)
+    assert decode_uvarints(b"").size == 0
+    with pytest.raises(ValueError, match="truncated"):
+        decode_uvarints(b"\xac\x02\x80")
+
+
 @settings(max_examples=50, deadline=None)
 @given(st.lists(st.integers(min_value=-(2**31), max_value=2**31 - 1), max_size=100))
 def test_zigzag_roundtrip(values):

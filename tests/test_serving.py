@@ -66,6 +66,22 @@ def test_map_pipelines_batches_in_order(srv_index):
                     {c: e[c].dtype for c in e.columns}))
 
 
+def test_all_miss_request_keeps_result_dtypes(srv_index):
+    """A request no shard has hits for returns the same typed columns
+    as one with hits (int64 ids and freq, int32 norm, float64 score),
+    and so does an empty batch on one worker."""
+    from pim_lucene_spark.serving import serve_local
+
+    with ShardedServer(srv_index, num_workers=2, mode="shard") as srv:
+        hit = srv.search([(0, "red")], k=5)
+        miss = srv.search([(0, "zzznothere")], k=5)
+    assert len(hit) and not len(miss)
+    pd.testing.assert_series_equal(miss.dtypes, hit.dtypes)
+    none = serve_local(srv_index, [], k=5, precision="float32",
+                       postings_cache_mb=0, pids=None)
+    pd.testing.assert_series_equal(none.dtypes, hit.dtypes)
+
+
 def test_worker_error_surfaces(srv_index):
     with ShardedServer(srv_index, num_workers=2, mode="shard") as srv:
         with pytest.raises(Exception):
