@@ -889,9 +889,8 @@ class MultiFieldIndex:
                 [(f, float(np.float32(weights[f]))) for f in fnames],
                 needed, k, precision)
         if plan == "kernel":
-            raise ValueError("fields differ in num_partitions or need "
-                             "cogroup norms; the BM25F kernel cannot "
-                             "host this batch")
+            raise ValueError("fields differ in num_partitions; the "
+                             "BM25F kernel cannot host this batch")
 
         # weighted tf per (query, doc): one sub-query per DISTINCT term per
         # field (a hot term shared by N queries is decoded and scored

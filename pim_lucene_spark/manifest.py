@@ -56,9 +56,15 @@ class IndexManifest:
     delete_gen: int = 0
     deleted_count: int = 0
     # format version 3: norms parquet laid out as norms/pid=N/ so search
-    # tasks read their partition's blob directly (no norms shuffle);
-    # doc_span/build_id fields.  version 2: striped posting rows.
+    # and merge tasks read their partition's blob directly (no norms
+    # shuffle); doc_span/build_id fields.
     version: int = 3
+
+    def __post_init__(self):
+        if self.version < 3:
+            raise ValueError(
+                f"index {self.index_dir} is format v{self.version}; this "
+                "release reads only v3 indexes — rebuild it")
 
     # --- paths -------------------------------------------------------------
     @property

@@ -387,6 +387,33 @@ def _build_postings_kernel(num_partitions: int, num_segments: int,
     return fn
 
 
+def write_term_stats(postings: DataFrame, stats_path: str) -> None:
+    """The term stats table (Q2 source): Σdf and Σttf per term of a
+    postings table — the build's and the merge's one writer of it."""
+    (postings.groupBy("term")
+     .agg(F.sum("df").alias("doc_freq"), F.sum("ttf").alias("total_tf"))
+     .write.mode("overwrite").parquet(stats_path))
+
+
+def partition_metrics(postings: DataFrame) -> dict[int, dict]:
+    """``{pid: {terms, postings, tokens, bytes_compressed}}`` of a
+    postings table in one job — the ``ENABLE_STATS`` set
+    (``PimIndexWriter.java:638-649``) the manifest stores per
+    partition."""
+    rows = postings.groupBy("pid").agg(
+        F.count_distinct("term").alias("terms"),
+        F.sum("df").alias("postings"),
+        F.sum("ttf").alias("tokens"),
+        (F.sum(F.length("doc_blob")) + F.sum(F.length("freq_blob"))
+         + F.sum(F.length("pos_blob"))).alias("bytes"),
+    ).collect()
+    return {int(r["pid"]): {"terms": int(r["terms"]),
+                            "postings": int(r["postings"]),
+                            "tokens": int(r["tokens"]),
+                            "bytes_compressed": int(r["bytes"])}
+            for r in rows}
+
+
 def advise_num_partitions(manifest: IndexManifest | None = None, *,
                           corpus_tokens: int | None = None,
                           budget_bytes: int = 48 << 20,
@@ -721,48 +748,28 @@ def build_index(
     # --- term stats (Q2 source) ∥ per-partition metrics ------------------------
     def _stats_job() -> None:
         if not os.path.exists(os.path.join(index_dir, "_STATS_DONE")):
-            (postings.groupBy("term")
-                     .agg(F.sum("df").alias("doc_freq"),
-                          F.sum("ttf").alias("total_tf"))
-                     .write.mode("overwrite").parquet(manifest.stats_path))
+            write_term_stats(postings, manifest.stats_path)
             open(os.path.join(index_dir, "_STATS_DONE"), "w").close()
-
-    def _metrics_job():
-        # the ENABLE_STATS set (PimIndexWriter.java:638-649)
-        return (postings.groupBy("pid").agg(
-            F.count_distinct("term").alias("terms"),
-            F.sum("df").alias("postings"),
-            F.sum("ttf").alias("tokens"),
-            (F.sum(F.length("doc_blob")) + F.sum(F.length("freq_blob"))
-             + F.sum(F.length("pos_blob"))).alias("bytes"),
-        ).collect())
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_stats = pool.submit(_stats_job)
-        f_metrics = pool.submit(_metrics_job)
+        f_metrics = pool.submit(partition_metrics, postings)
         f_stats.result()
-        metrics_rows = f_metrics.result()
+        per_partition = f_metrics.result()
     _mark("stats+metrics")
     manifest.metrics = {
         "build_seconds": round(time.time() - t0, 3),
         "phase_seconds": phase_t,
         "doc_count": doc_count,
         "sum_total_term_freq": sum_ttf,
-        "per_partition": {
-            int(r["pid"]): {
-                "terms": int(r["terms"]),
-                "postings": int(r["postings"]),
-                "tokens": int(r["tokens"]),
-                "bytes_compressed": int(r["bytes"]),
-            } for r in metrics_rows
-        },
+        "per_partition": per_partition,
     }
     if cfg.max_partition_bytes:
         # size guard (reference: MAX_DPU_INDEX_SIZE per DPU,
         # DpuSystemExecutor.java:40) — advisory here: a Spark partition is
         # not RAM-bound, but an oversized one is a task-skew smell
-        over = {int(r["pid"]): int(r["bytes"]) for r in metrics_rows
-                if int(r["bytes"]) > cfg.max_partition_bytes}
+        over = {p: v["bytes_compressed"] for p, v in per_partition.items()
+                if v["bytes_compressed"] > cfg.max_partition_bytes}
         if over:
             import warnings
             worst = max(over.values())

@@ -57,13 +57,14 @@ from pim_lucene_spark.operators.index_build import (
     NORMS_SCHEMA,
     POSTINGS_SCHEMA,
     encode_partition_postings,
+    partition_metrics,
+    write_term_stats,
 )
 from pim_lucene_spark.operators.search import (
     _file_plan,
     _kernel_task_count,
     _pid_norms,
     _read_shard,
-    _ResidentRow,
 )
 
 
@@ -176,9 +177,6 @@ def merge_indexes(spark: SparkSession, sources: list,
         if (m.num_partitions, m.tokenizer, m.k1, m.b) != \
                 (P, ms[0].tokenizer, ms[0].k1, ms[0].b):
             raise ValueError("sources disagree on partitions/tokenizer/BM25")
-        if m.version < 3:  # tasks read v3's norms/pid=N dirs directly
-            raise ValueError(f"source {m.index_dir} is index format v"
-                             f"{m.version}; merge needs v3 — rebuild it")
 
     t0 = time.time()
     # doc-base offsets from the padded SPAN, rounded up to multiples of P
@@ -238,17 +236,8 @@ def merge_indexes(spark: SparkSession, sources: list,
 
     # --- term stats: re-aggregate over merged postings ----------------------
     merged = spark.read.parquet(manifest.chunk_path(0))
-    (merged.groupBy("term")
-     .agg(F.sum("df").alias("doc_freq"), F.sum("ttf").alias("total_tf"))
-     .write.mode("overwrite").parquet(manifest.stats_path))
-
-    metrics_rows = (merged.groupBy("pid").agg(
-        F.count_distinct("term").alias("terms"),
-        F.sum("df").alias("postings"),
-        F.sum("ttf").alias("tokens"),
-        (F.sum(F.length("doc_blob")) + F.sum(F.length("freq_blob"))
-         + F.sum(F.length("pos_blob"))).alias("bytes"),
-    ).collect())
+    write_term_stats(merged, manifest.stats_path)
+    per_partition = partition_metrics(merged)
     if any_del:
         # purged merge: collection stats shrink to the live corpus (the
         # moment Lucene's deleted-doc statistics catch up is the merge)
@@ -258,8 +247,8 @@ def merge_indexes(spark: SparkSession, sources: list,
                 "merge produced an empty index: every source document "
                 "is deleted — nothing to compact")
         manifest.doc_count = int(doc_count)
-        manifest.sum_total_term_freq = sum(int(r["tokens"])
-                                           for r in metrics_rows)
+        manifest.sum_total_term_freq = sum(v["tokens"]
+                                           for v in per_partition.values())
     avgdl32 = bm25.avg_field_length(manifest.sum_total_term_freq,
                                     manifest.doc_count, "float32")
     qf, _ = quantize_norm_inverse(bm25.score_cache(avgdl32, ms[0].k1, ms[0].b))
@@ -270,14 +259,7 @@ def merge_indexes(spark: SparkSession, sources: list,
         "doc_count": manifest.doc_count,
         "sources": [m.index_dir for m in ms],
         "doc_bases": bases,
-        "per_partition": {
-            int(r["pid"]): {
-                "terms": int(r["terms"]),
-                "postings": int(r["postings"]),
-                "tokens": int(r["tokens"]),
-                "bytes_compressed": int(r["bytes"]),
-            } for r in metrics_rows
-        },
+        "per_partition": per_partition,
     }
     manifest.save()
     return manifest

@@ -60,13 +60,12 @@ host↔DPU protocol in ``topdocs_sync.c:469-544``):
    cut with one numpy ``lexsort`` and a per-qid rank
    (:func:`_top_k_index`).
 
-Scale notes: the default plan is one ``Range → MapInPandas`` stage with
-no shuffle — postings and norms are read where the task runs
+Scale notes: the one distributed plan is one ``Range → MapInPandas``
+stage with no shuffle — postings and norms are read where the task runs
 (:func:`_file_plan`; the compound, aggregate, BM25F and sloppy kernels
-of ``plans/compound.py`` run on the same plan).  Only the
-``norms_access='cogroup'`` plan (URI layouts) shuffles, and then only
-rows for query terms.  The final window runs over at most ``P * k``
-rows per query.
+of ``plans/compound.py`` run on the same plan).  The index must sit on
+a POSIX-visible path (local disk or a shared mount).  The final window
+runs over at most ``P * k`` rows per query.
 """
 
 from __future__ import annotations
@@ -90,7 +89,6 @@ from pim_lucene_spark.functions.tokenize import tokenize_one
 from pim_lucene_spark.manifest import IndexManifest
 from pim_lucene_spark.operators.deletes import live_mask_for
 from pim_lucene_spark.sparkutil import (
-    cached_parquet,
     local_empty,
     local_result,
     manifest_scan_key,
@@ -508,18 +506,6 @@ def _single_term_topk(rows, norms: np.ndarray, weight: float,
     return cand, freqs, nb, scores, state
 
 
-def _assemble_by_term(postings_pdf: pd.DataFrame) -> dict[str, list]:
-    """Reassemble striped postings rows per term in stripe order (hot
-    terms are striped across rows — skew bound,
-    ``IndexConfig.max_postings_per_stripe``)."""
-    by_term: dict[str, list] = {}
-    for row in postings_pdf.itertuples(index=False):
-        by_term.setdefault(row.term, []).append(row)
-    for rows in by_term.values():
-        rows.sort(key=lambda r: r.stripe)
-    return by_term
-
-
 class _DecodeCtx:
     """Per-(partition, batch) decode cache shared by the search and
     compound kernels.
@@ -593,25 +579,12 @@ class _DecodeCtx:
         return self.get_many([term], seg_mask)[0]
 
 
-def _match_core(payload: dict, pid: int, postings_pdf: pd.DataFrame | None,
-                norms: np.ndarray,
-                by_term: dict[str, list] | None = None,
-                live: np.ndarray | None = None) -> pd.DataFrame:
-    """Pandas adapter over :func:`_match_core_arrays` for callers that
-    hold a postings frame (the cogroup kernel); the direct routes pass
-    Arrow-backed rows through :func:`_match_group` instead."""
-    arrays = _match_core_arrays(payload, pid, postings_pdf, norms,
-                                by_term=by_term, live=live)
-    if arrays is None:
-        return _empty_result()
-    return pd.DataFrame(arrays)
-
-
-def _match_core_arrays(payload: dict, pid: int,
-                       postings_pdf: pd.DataFrame | None,
-                       norms: np.ndarray,
-                       by_term: dict[str, list] | None = None,
+def _match_core_arrays(payload: dict, pid: int, norms: np.ndarray,
+                       by_term: dict[str, list],
                        live: np.ndarray | None = None) -> dict | None:
+    """The match kernel over one pid: ``by_term`` holds its stripe-ordered
+    rows per query term (:meth:`_ResidentPid.by_term`); the pid's result
+    columns as arrays, or ``None`` without hits."""
     out_qid, out_doc, out_freq, out_norm, out_score = [], [], [], [], []
     P = payload["num_partitions"]
     k = payload["k"]
@@ -619,9 +592,6 @@ def _match_core_arrays(payload: dict, pid: int,
     cache = payload["cache"]
     num_segments = payload["num_segments"]
 
-    if by_term is None:
-        # (the direct routes pass rows split by _read_shard)
-        by_term = _assemble_by_term(postings_pdf)
     ctx = _DecodeCtx(by_term, payload, pid)
     cache_budget = ctx.budget
     _probe_cached = ctx.probe
@@ -854,19 +824,6 @@ def _top_k(pdf: pd.DataFrame, k: int) -> pd.DataFrame:
     return pdf.take(keep).reset_index(drop=True)
 
 
-def _resolve_norms_access(norms_access: str, manifest) -> str:
-    """'auto' → 'direct' only for a plain filesystem path the driver can
-    stat; scheme-qualified URIs (s3a://, hdfs://) and driver-invisible
-    dirs fall back to the always-working cogroup instead of failing at
-    query time inside an executor."""
-    if norms_access != "auto":
-        return norms_access
-    if "://" not in manifest.norms_path and \
-            os.path.isdir(manifest.norms_path):
-        return "direct"
-    return "cogroup"
-
-
 def _kernel_payload(manifest: IndexManifest, precision: str,
                     **extra) -> dict:
     """The one builder of kernel payloads: an index's scoring and layout
@@ -885,9 +842,9 @@ def _kernel_payload(manifest: IndexManifest, precision: str,
         "norms_path": manifest.norms_path,
         "deletes_path": (manifest.deletes_path if manifest.delete_gen
                          else None),
-        # v1/v2 manifests have no build_id — the key mixes in
-        # content-derived stats so an in-place rebuild of a legacy index
-        # cannot serve stale decoded postings from warm workers
+        # the key mixes content-derived stats in with the build_id, so
+        # an in-place rebuild cannot serve stale decoded postings from
+        # warm workers
         "cache_key": manifest_scan_key(manifest),
     }
     payload.update(extra)
@@ -895,22 +852,6 @@ def _kernel_payload(manifest: IndexManifest, precision: str,
         payload["after"] = {int(q): (float(s), int(d))
                             for q, (s, d) in payload["after"].items()}
     return payload
-
-
-def _match_kernel(payload: dict):
-    """Cogroup kernel (``norms_access='cogroup'``): the pid's norms blob
-    arrives as a cogrouped frame instead of a direct read — the plan for
-    object-store URIs and layouts executors cannot list."""
-    def fn(key, postings_pdf: pd.DataFrame,
-           norms_pdf: pd.DataFrame) -> pd.DataFrame:
-        pid = int(key[0])
-        if len(postings_pdf) == 0 or len(norms_pdf) == 0:
-            return _empty_result()
-        norms = np.frombuffer(norms_pdf.iloc[0]["norms"], dtype=np.uint8)
-        live = live_mask_for(payload.get("deletes_path"), pid,
-                             payload["num_partitions"], norms.size)
-        return _match_core(payload, pid, postings_pdf, norms, live=live)
-    return fn
 
 
 # ---------------------------------------------------------------------------
@@ -935,9 +876,8 @@ def _pid_norms(norms_path: str, pid: int) -> np.ndarray:
         # URI): fail loudly, never return empty hits
         raise FileNotFoundError(
             f"norms partition {part_dir} not visible from this "
-            "process; direct norms access needs a POSIX-visible shared "
-            "mount — object stores and non-shared layouts take the "
-            "cogroup plan (search(norms_access='cogroup'))")
+            "process; search needs the index on a POSIX-visible shared "
+            "mount (local disk, NFS, Lustre, a FUSE-mounted object store)")
     blob = pq.read_table(part_dir, columns=["norms"]) \
         .column("norms")[0].as_py()
     return np.frombuffer(blob, dtype=np.uint8)
@@ -1088,8 +1028,8 @@ def _match_group(payload: dict, shard: dict,
         norms, live = shard[pid].norms_live(payload["norms_path"],
                                             payload["deletes_path"],
                                             payload["num_partitions"])
-        arrays = _match_core_arrays(payload, pid, None, norms,
-                                    by_term=by_pid[pid], live=live)
+        arrays = _match_core_arrays(payload, pid, norms, by_pid[pid],
+                                    live=live)
         if arrays is not None:
             outs.append(arrays)
     if len(outs) <= 1:
@@ -1119,9 +1059,9 @@ def _file_plan(spark: SparkSession, manifests: dict[str, IndexManifest],
     already laid out by pid, so a repartition-by-pid shuffle would only
     re-create a grouping the files already have).
     :func:`_postings_file_groups` guarantees every pid lives in exactly
-    one group.  Needs POSIX-visible index files from every executor —
-    exactly the precondition of direct norms access, which gates this
-    plan."""
+    one group.  Needs POSIX-visible index files from every executor
+    (:func:`_pid_map` and :func:`_pid_norms` fail loudly without
+    them)."""
     groups = _postings_file_groups(manifests, n_tasks, pids)
 
     def fn(it):
@@ -1134,34 +1074,27 @@ def _file_plan(spark: SparkSession, manifests: dict[str, IndexManifest],
             .mapInPandas(fn, schema))
 
 
-# in-process route ceiling (Σ doc_freq of a batch); see _local_route_max
+# Postings-volume ceiling for the in-process query route.  If a query
+# batch's total postings volume (Σ doc_freq over its terms) does not
+# exceed what ONE kernel task is sized to handle, a distributed job cannot
+# run faster than a single task — and that one task would still pay the
+# full Python-stage job overhead (~170-250 ms measured on a 4-core host
+# for an *identity* mapInPandas job, vs single-digit ms of actual kernel
+# work).  Below the ceiling the driver runs the one-group file plan
+# in-process instead — the exact job the cluster would have executed,
+# minus the scheduler (and the reference engine's own query path is
+# host-resident for the same reason).  The ceiling is its own constant,
+# not the per-task sizing (_POSTINGS_PER_TASK), so raising task sizes
+# never widens in-process routing.  Measured break-evens (quiet host): a
+# single hot-term query still wins inline at Σdf = 500k (284 vs 485 ms)
+# and loses by Σdf = 1M (1466 vs 592 ms), but a 20-phrase batch at Σdf =
+# 108k already loses (570-890 ms inline vs ~330 ms distributed —
+# per-posting work grows with query count), so it stays at one task's
+# budget rather than the single-query crossover.
 _LOCAL_ROUTE_POSTINGS = 1 << 16
-
-
-def _local_route_max() -> int:
-    """Postings-volume ceiling for the in-process query route.
-
-    If a query batch's total postings volume (Σ doc_freq over its
-    terms) does not exceed what ONE kernel task is sized to handle, a
-    distributed job cannot run faster than a single task — and that one
-    task would still pay the full Python-stage job overhead (~170-250 ms
-    measured on a 4-core host for an *identity* mapInPandas job, vs
-    single-digit ms of actual kernel work).  Below the ceiling the
-    driver runs the one-group file plan in-process instead — the exact
-    job the cluster would have executed, minus the scheduler (and the
-    reference engine's own query path is host-resident for the same
-    reason).  The ceiling is its own constant, not the cluster's
-    per-task sizing (``SPARK_GRAFT_POSTINGS_PER_TASK``), so raising task
-    sizes never widens in-process routing;
-    ``SPARK_GRAFT_LOCAL_ROUTE_POSTINGS`` overrides it (0 disables the
-    route).  Measured break-evens (quiet host): a single hot-term query
-    still wins inline at Σdf = 500k (284 vs 485 ms) and loses by Σdf =
-    1M (1466 vs 592 ms), but a 20-phrase batch at Σdf = 108k already
-    loses (570-890 ms inline vs ~330 ms distributed — per-posting work
-    grows with query count), so the default stays at one task's budget
-    rather than the single-query crossover."""
-    return int(os.environ.get("SPARK_GRAFT_LOCAL_ROUTE_POSTINGS",
-                              str(_LOCAL_ROUTE_POSTINGS)))
+# kernel task sizing (_kernel_task_count): postings per task, task floor
+_POSTINGS_PER_TASK = 1 << 16
+_KERNEL_TASK_FLOOR = 8
 
 
 def _kernel_task_count(num_partitions: int, total_postings: int) -> int:
@@ -1174,13 +1107,11 @@ def _kernel_task_count(num_partitions: int, total_postings: int) -> int:
     decode work (a few MB, tens of ms) comfortably above the ~5-10 ms
     task-launch cost; a small floor overlaps the per-pid norms reads
     even for tiny queries; the cap is one task per index partition (a
-    pid is the indivisible kernel unit).  Env-overridable for cluster
-    tuning; the defaults are size-derived, not core-count-derived.
+    pid is the indivisible kernel unit).  Task counts derive from the
+    data size, not the core count.
     """
-    target = int(os.environ.get("SPARK_GRAFT_POSTINGS_PER_TASK",
-                                str(1 << 16)))
-    floor = int(os.environ.get("SPARK_GRAFT_KERNEL_TASK_FLOOR", "8"))
-    want = max(floor, -(-int(total_postings) // max(target, 1)))
+    want = max(_KERNEL_TASK_FLOOR,
+               -(-int(total_postings) // _POSTINGS_PER_TASK))
     return max(1, min(int(num_partitions), want))
 
 
@@ -1243,7 +1174,7 @@ def _pid_map(manifest: IndexManifest) -> dict:
         raise FileNotFoundError(
             "direct postings access needs readable, POSIX-visible "
             f"postings files; cannot list them under {manifest.index_dir}"
-            " — use search(norms_access='cogroup') for object stores")
+            " — object stores need a POSIX mount")
     return pid_map
 
 
@@ -1533,7 +1464,6 @@ def search(spark: SparkSession, index: IndexManifest | str,
            queries: list[tuple[int, str]], k: int | None = 10,
            precision: str = "float32",
            final_merge: str = "window",
-           norms_access: str = "auto",
            bound_probe=False,
            postings_cache_mb: int = 0,
            sync_budget0: int = 4096,
@@ -1550,18 +1480,11 @@ def search(spark: SparkSession, index: IndexManifest | str,
     the reference's host-side merge (``topdocs_sync.c:369-412``) — one
     exchange less, lower latency for small k.
 
-    ``norms_access``: ``'direct'`` has each kernel task read its pids'
-    postings files and norms blobs itself (the zero-exchange file plan,
-    or in-process for a batch whose Σdf fits one task) — requires a
-    POSIX-visible shared mount (local disk, NFS, Lustre, FUSE-mounted
-    object store); a layout the driver cannot list, or a task that
-    cannot see its norms dir, fails loudly.  ``'cogroup'`` shuffles
-    postings and norms through a Spark cogroup instead (raw object-store
-    URIs, v2 indexes, exotic deployments).  ``'auto'`` (default) picks
-    ``direct`` only when the norms path is a plain filesystem path the
-    driver can stat (a scheme-qualified URI like ``s3a://…`` or a dir
-    the driver can't see falls back to ``cogroup`` instead of failing
-    at query time).
+    Each kernel task reads its pids' postings files and norms blobs
+    itself (the zero-exchange file plan, or in-process for a batch whose
+    Σdf fits one task), so the index needs a POSIX-visible path (local
+    disk, NFS, Lustre, a FUSE-mounted object store); a layout the driver
+    cannot list, or a task that cannot see its norms dir, fails loudly.
 
     ``bound_probe``: the reference's adaptive bound broadcast
     (``topdocs_sync.c:469-544``: the host pushes the running global k-th
@@ -1574,9 +1497,9 @@ def search(spark: SparkSession, index: IndexManifest | str,
     budgets (``sync_budget0 * 2**round``), per-round driver k-heap
     merge, tightened-bound rebroadcast, and relaunch of only the
     (query, partition) pairs that can still contribute — disabled at
-    k >= 1000 exactly like the reference.  Both run the file plan
-    (direct access only), are admissible (k docs already achieve every
-    broadcast bound) and return identical results (differential-tested).
+    k >= 1000 exactly like the reference.  Both run the file plan, are
+    admissible (k docs already achieve every broadcast bound) and return
+    identical results (differential-tested).
 
     ``postings_cache_mb`` > 0 enables the per-worker warm postings cache
     (the B15 index-load-to-PIM analogue): decoded postings of hot
@@ -1619,55 +1542,42 @@ def search(spark: SparkSession, index: IndexManifest | str,
         postings_cache_mb=int(postings_cache_mb), after=after,
         offsets=gap_offsets, needed_terms=list(needed_terms))
 
-    direct = (_resolve_norms_access(norms_access, manifest) == "direct"
-              and manifest.version >= 3)
-    if not direct:
-        postings = (cached_parquet(spark, manifest_scan_key(manifest),
-                                   *[manifest.chunk_path(c) for c in
-                                     range(manifest.build_chunks)])
-                    .filter(F.col("term").isin(list(needed_terms))))
-        norms = cached_parquet(spark, manifest_scan_key(manifest),
-                               manifest.norms_path)
-        per_part = (postings.groupBy("pid")
-                    .cogroup(norms.groupBy("pid"))
-                    .applyInPandas(_match_kernel(payload), RESULT_SCHEMA))
-    else:
-        total_df = sum(term_doc_freqs(spark, manifest,
-                                      list(needed_terms)).values())
-        n_tasks = _kernel_task_count(manifest.num_partitions, total_df)
-        sync = bound_probe == "sync"
-        if not bound_probe and 0 < total_df <= _local_route_max():
-            # one-task-sized batch: the one-group file plan in-process
-            # (the job the cluster would run, minus the scheduler — see
-            # _local_route_max); identical results, differential-tested
-            (files, pids), = _postings_file_groups({"": manifest}, 1)
-            pdf = _match_files(payload, files, pids)
-            if pdf is None:
-                return local_empty(spark, RESULT_SCHEMA)
-            return local_result(spark, pdf if unbounded else _top_k(pdf, k),
-                                RESULT_SCHEMA)
-        if sync and k < 1000:
-            # the reference's full iterative loop (topdocs_sync.c:
-            # 469-544); off at k >= 1000 exactly like the reference.  A
-            # Spark round costs ~0.1 s vs a DPU round's microseconds, so
-            # the initial budget is scaled up (sync_budget0) — the
-            # protocol, not the constant, is the faithful part.
-            return _search_sync_rounds(spark, manifest, payload, k, n_tasks,
-                                       budget0=int(sync_budget0))
-        if bound_probe and not sync and manifest.num_partitions > 1:
-            probe = _file_plan(spark, {"": manifest},
-                               partial(_match_files, payload),
-                               RESULT_SCHEMA, 1, pids=[0]).toPandas()
-            bounds = {}
-            for qid, grp in probe.groupby("qid"):
-                sc = grp["score"].to_numpy()
-                if sc.size >= k:  # bound valid only when k docs achieve it
-                    bounds[int(qid)] = float(np.sort(sc)[-k])
-            if bounds:
-                payload = dict(payload, bounds=bounds)
-        per_part = _file_plan(spark, {"": manifest},
-                              partial(_match_files, payload), RESULT_SCHEMA,
-                              n_tasks)
+    total_df = sum(term_doc_freqs(spark, manifest,
+                                  list(needed_terms)).values())
+    n_tasks = _kernel_task_count(manifest.num_partitions, total_df)
+    sync = bound_probe == "sync"
+    if not bound_probe and 0 < total_df <= _LOCAL_ROUTE_POSTINGS:
+        # one-task-sized batch: the one-group file plan in-process (the
+        # job the cluster would run, minus the scheduler — see
+        # _LOCAL_ROUTE_POSTINGS); identical results, differential-tested
+        (files, pids), = _postings_file_groups({"": manifest}, 1)
+        pdf = _match_files(payload, files, pids)
+        if pdf is None:
+            return local_empty(spark, RESULT_SCHEMA)
+        return local_result(spark, pdf if unbounded else _top_k(pdf, k),
+                            RESULT_SCHEMA)
+    if sync and k < 1000:
+        # the reference's full iterative loop (topdocs_sync.c:469-544);
+        # off at k >= 1000 exactly like the reference.  A Spark round
+        # costs ~0.1 s vs a DPU round's microseconds, so the initial
+        # budget is scaled up (sync_budget0) — the protocol, not the
+        # constant, is the faithful part.
+        return _search_sync_rounds(spark, manifest, payload, k, n_tasks,
+                                   budget0=int(sync_budget0))
+    if bound_probe and not sync and manifest.num_partitions > 1:
+        probe = _file_plan(spark, {"": manifest},
+                           partial(_match_files, payload),
+                           RESULT_SCHEMA, 1, pids=[0]).toPandas()
+        bounds = {}
+        for qid, grp in probe.groupby("qid"):
+            sc = grp["score"].to_numpy()
+            if sc.size >= k:  # bound valid only when k docs achieve it
+                bounds[int(qid)] = float(np.sort(sc)[-k])
+        if bounds:
+            payload = dict(payload, bounds=bounds)
+    per_part = _file_plan(spark, {"": manifest},
+                          partial(_match_files, payload), RESULT_SCHEMA,
+                          n_tasks)
 
     if unbounded:
         return per_part

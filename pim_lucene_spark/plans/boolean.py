@@ -151,9 +151,9 @@ def _classify_clauses(queries, resolve_field):
                         f"{type(clause).__name__} evaluates in the "
                         "compound kernel (merged stats / resident "
                         "ordinal arrays / stored position streams have "
-                        "no join-chain form); this index layout "
-                        "(cogroup norms or v<3) cannot host the kernel "
-                        "— rebuild the index or drop the clause")
+                        "no join-chain form); the join plan cannot "
+                        "evaluate it — use plan='auto' or drop the "
+                        "clause")
                 elif (isinstance(clause, PhraseQuery)
                       and int(clause.slop) != 0):
                     slot["sloppy"].append(
@@ -257,14 +257,13 @@ def search_boolean(spark: SparkSession, index, queries, k: int = 10,
       only per-partition top-k (one shuffle of ≤ P·k rows/query; see
       ``plans/compound.py``).  Hosts term/phrase (ANY slop — the Lucene
       sloppy matcher runs over the stored position streams)/fuzzy/
-      matchall/nested clauses and capped constant-score multiterm on
-      POSIX-visible v3 indexes.
+      matchall/nested clauses and capped constant-score multiterm.
     - **join** (fallback; ``plan='join'`` forces it): clause match sets
       materialize through one batched job per family and compose via a
       deterministic join chain — needed for over-cap multiterm
-      expansions, cogroup-norms indexes, and ``k=None`` clause
-      evaluation.  MatchAllDocs frames are bounded (other-clause docs ∪
-      k-smallest-of-rest, deletes excluded); scoring and sloppy clauses
+      expansions and ``k=None`` clause evaluation.  MatchAllDocs frames
+      are bounded (other-clause docs ∪ k-smallest-of-rest, deletes
+      excluded); scoring and sloppy clauses
       ship their full match sets (``k=None`` — inherent to clause-frame
       semantics, since a doc's composed rank needs every clause score),
       but no per-qid rank window runs over those frames — they flow
@@ -282,22 +281,17 @@ def search_boolean(spark: SparkSession, index, queries, k: int = 10,
     if plan != "join":
         from pim_lucene_spark.manifest import IndexManifest
         from pim_lucene_spark.plans.compound import (clause_kernelable,
-                                                     kernel_hostable,
                                                      search_compound)
         manifest = (IndexManifest.load(index) if isinstance(index, str)
                     else index)
         kq, jq = [], []
-        if kernel_hostable({"": manifest}):
-            for qid, bq in queries:
-                (kq if clause_kernelable(bq, manifests={"": manifest})
-                 else jq).append((qid, bq))
-        else:
-            jq = list(queries)
+        for qid, bq in queries:
+            (kq if clause_kernelable(bq, manifests={"": manifest})
+             else jq).append((qid, bq))
         if plan == "kernel" and jq:
             raise ValueError("batch contains clauses the compound kernel "
                              "cannot host (over-cap multiterm "
-                             "expansions) or the index needs cogroup "
-                             "norms")
+                             "expansions)")
         parts = []
         if kq:
             parts.append(search_compound(spark, {"": manifest}, "", kq,

@@ -76,7 +76,6 @@ from pim_lucene_spark.operators.search import (
     _kernel_task_count,
     _phrase_match_counts,
     _read_shard,
-    _resolve_norms_access,
     _ResidentPid,
     _top_k,
     plan_queries,
@@ -1353,15 +1352,9 @@ def eval_aggregate(spark: SparkSession, manifests: dict[str, IndexManifest],
 
 
 def kernel_hostable(manifests: dict[str, IndexManifest]) -> bool:
-    """The compound kernel needs direct (POSIX-visible) norms, v3+
-    layouts, and one shared pid space across every field."""
-    ps = set()
-    for m in manifests.values():
-        if m.version < 3 or \
-                _resolve_norms_access("auto", m) != "direct":
-            return False
-        ps.add(m.num_partitions)
-    return len(ps) == 1
+    """The compound kernel needs one shared pid space across every
+    field (always true for a single index)."""
+    return len({m.num_partitions for m in manifests.values()}) == 1
 
 
 def clause_kernelable(clause, allow_fielded=None, manifests=None,

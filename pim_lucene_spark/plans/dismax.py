@@ -86,23 +86,18 @@ def search_dismax(spark: SparkSession, index, queries, k: int = 10,
     if plan != "join":
         from pim_lucene_spark.manifest import IndexManifest
         from pim_lucene_spark.plans.compound import (clause_kernelable,
-                                                     kernel_hostable,
                                                      search_compound)
         manifest = (IndexManifest.load(index) if isinstance(index, str)
                     else index)
         kq, jq = [], []
-        if kernel_hostable({"": manifest}):
-            for qid, dq in queries:
-                (kq if all(clause_kernelable(c, manifests={"": manifest})
-                           for c in dq.clauses)
-                 else jq).append((qid, dq))
-        else:
-            jq = list(queries)
+        for qid, dq in queries:
+            (kq if all(clause_kernelable(c, manifests={"": manifest})
+                       for c in dq.clauses)
+             else jq).append((qid, dq))
         if plan == "kernel" and jq:
             raise ValueError("batch contains clauses the compound kernel "
                              "cannot host (over-cap multiterm "
-                             "expansions) or the index needs cogroup "
-                             "norms")
+                             "expansions)")
         parts = []
         if kq:
             parts.append(search_compound(spark, {"": manifest}, "", kq,

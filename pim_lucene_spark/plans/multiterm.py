@@ -580,10 +580,9 @@ def search_multiterm(spark: SparkSession, index: IndexManifest | str,
 def _search_scoring(spark, manifest, queries, k, precision,
                     empty) -> DataFrame:
     from pim_lucene_spark.plans.compound import (_SpecBuilder,
-                                                 eval_compound,
-                                                 kernel_hostable)
+                                                 eval_compound)
 
-    if k is not None and kernel_hostable({"": manifest}):
+    if k is not None:
         # in-kernel composition: the expansion's per-term match sets
         # never leave their partition — the per-doc expansion-order sum
         # runs in the kernel and only per-partition top-k rows shuffle

@@ -251,7 +251,8 @@ def search_with_fallback(spark: SparkSession, index: IndexManifest | str | None,
     (``plans/compound.py::search_sloppy_kernel``: postings pushdown +
     stored-position ``SloppyPhraseMatcher``, per-partition top-k) —
     bit-identical to the scan, without re-tokenizing the corpus; the
-    scan remains for index-less/cogroup-norms cases or
+    scan remains for index-less calls, indexes whose build is not
+    complete, an explicit docs frame or scan kwargs, and
     ``sloppy_plan='scan'``.  ``slop`` may be a ``{qid: slop}`` dict
     (mixed exact+sloppy batches run in one pass on either path).  When
     no docs frame is supplied the scan reads the index's own docs table.
@@ -275,18 +276,15 @@ def search_with_fallback(spark: SparkSession, index: IndexManifest | str | None,
     # extra kwargs like exclude_ids/tokenizer are scan parameters)
     if any_slop and index is not None and docs is None and not kw \
             and sloppy_plan != "scan":
-        from pim_lucene_spark.plans.compound import (kernel_hostable,
-                                                     search_sloppy_kernel)
+        from pim_lucene_spark.plans.compound import search_sloppy_kernel
         manifest = (IndexManifest.load(index) if isinstance(index, str)
                     else index)
-        ready = (len(manifest.completed_chunks) == manifest.build_chunks
-                 and kernel_hostable({"": manifest}))
-        if ready:
+        if len(manifest.completed_chunks) == manifest.build_chunks:
             return search_sloppy_kernel(spark, manifest, queries, k=k,
                                         slop=slop, precision=precision)
         if sloppy_plan == "kernel":
-            raise ValueError("index not ready or not kernel-hostable for "
-                             "the sloppy kernel path")
+            raise ValueError("index build incomplete; the sloppy kernel "
+                             "path needs every chunk built")
     if docs is None:
         if index is None:
             raise ValueError("brute-force route requires the docs DataFrame "

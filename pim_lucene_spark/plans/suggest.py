@@ -240,22 +240,18 @@ def count_matches(spark: SparkSession, index: IndexManifest | str,
                      .agg(F.count("*").alias("n_hits")))
     if compound:
         # boolean/dismax count via the count-only compound kernel when
-        # the index + clauses qualify (same guards as search_boolean /
-        # search_dismax); the rest fall back to the join plan + groupBy
-        # count so cogroup-norms / v<3 indexes and sloppy/constant-score
-        # clauses still count instead of raising in executors
+        # the clauses qualify (same guards as search_boolean /
+        # search_dismax); the rest (over-cap multiterm expansions,
+        # fielded clauses) fall back to the join plan + groupBy count
         from pim_lucene_spark.plans.compound import (clause_kernelable,
-                                                     count_compound,
-                                                     kernel_hostable)
+                                                     count_compound)
         kq, jq = [], []
-        hostable = kernel_hostable({"": manifest})
         for qid, q in compound:
             mf = {"": manifest}
-            ok = hostable and (
-                all(clause_kernelable(c, manifests=mf)
-                    for c in q.clauses)
-                if isinstance(q, DisMaxQuery)
-                else clause_kernelable(q, manifests=mf))
+            ok = (all(clause_kernelable(c, manifests=mf)
+                      for c in q.clauses)
+                  if isinstance(q, DisMaxQuery)
+                  else clause_kernelable(q, manifests=mf))
             (kq if ok else jq).append((qid, q))
         if kq:
             counts = count_compound(spark, {"": manifest}, "", kq)

@@ -6,9 +6,8 @@ the declarative parts stay inside Catalyst's optimizations:
   a pruned ``ReadSchema`` (no blob columns for the stats lookup);
 - term-stats aggregate: partial (map-side) aggregation + WholeStageCodegen
   spans around the exchange;
-- search plan (norms_access='direct'): exactly ONE exchange (postings on
-  ``pid``) — the norms side reads per-pid Parquet inside the kernel and
-  never appears in the plan;
+- search plan (the file plan): no exchange and no Parquet scan node —
+  each task reads its pids' postings and norms files inside the kernel;
 - zero-shuffle simhash: no Exchange at all.
 
 Usage: PYTHONPATH=. python scripts/explain_plans.py [index_dir]
@@ -78,7 +77,7 @@ def main() -> None:
      .explain("formatted"))
 
     print("=" * 72)
-    print("4. search (direct norms) — ONE exchange total, no norms scan")
+    print("4. search (file plan) — norms read inside the kernel, no scan")
     print("=" * 72)
     from pim_lucene_spark.operators.search import search
     search(spark, manifest, [(0, "the fast"), (1, "merge")],

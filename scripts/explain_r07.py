@@ -34,6 +34,7 @@ def main() -> None:
 
     from pim_lucene_spark import IndexConfig
     from pim_lucene_spark.operators.index_build import build_index
+    from pim_lucene_spark.operators import search as S
     from pim_lucene_spark.operators.search import search
 
     docs = (spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
@@ -71,16 +72,13 @@ def main() -> None:
         with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
             f.write(plan)
         # the distributed plan used above the size gate (forced)
-        prev = os.environ.get("SPARK_GRAFT_LOCAL_ROUTE_POSTINGS")
-        os.environ["SPARK_GRAFT_LOCAL_ROUTE_POSTINGS"] = "0"
+        prev = S._LOCAL_ROUTE_POSTINGS
+        S._LOCAL_ROUTE_POSTINGS = 0
         try:
             plan = _capture(search(spark, manifest, qs, k=10,
                                    final_merge="window"))
         finally:
-            if prev is None:
-                del os.environ["SPARK_GRAFT_LOCAL_ROUTE_POSTINGS"]
-            else:
-                os.environ["SPARK_GRAFT_LOCAL_ROUTE_POSTINGS"] = prev
+            S._LOCAL_ROUTE_POSTINGS = prev
         with open(os.path.join(out_dir,
                                f"{name}_{suffix}_dist.txt"), "w") as f:
             f.write(plan)

@@ -162,7 +162,7 @@ def test_gapped_phrase_equals_full_scan(spark, english, cache_mb):
 
 def test_file_plan_equals_full_scan(spark, striped, monkeypatch):
     """The distributed route runs the same decoder in its tasks."""
-    monkeypatch.setenv("SPARK_GRAFT_LOCAL_ROUTE_POSTINGS", "0")
+    monkeypatch.setattr(S, "_LOCAL_ROUTE_POSTINGS", 0)
     want = _page(_oracle(spark, striped, QUERIES, "whitespace"), 5)
     got = _rows(S.search(spark, striped[0], QUERIES, k=5,
                          final_merge="driver"))

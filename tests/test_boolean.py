@@ -363,3 +363,90 @@ def test_matchall_clause_in_boolean(spark, bidx):
     grn = set(_scores(spark, bidx, "green"))
     assert set(got.doc_id) == set(range(6)) - grn
     assert (got.score == 2.0).all()
+
+
+def test_count_matches_boolean_sloppy_clause_joins(spark, tmp_path):
+    """A boolean containing a sloppy-phrase clause is not kernelable —
+    count_matches must fall back to the join plan instead of launching
+    the count kernel (which raises NotImplementedError in executors)."""
+    from pim_lucene_spark.plans.boolean import BooleanQuery, search_boolean
+    from pim_lucene_spark.plans.query import PhraseQuery
+    from pim_lucene_spark.plans.suggest import count_matches
+
+    docs = pd.DataFrame({
+        "doc_id": range(5),
+        "content": ["red apple pie", "red tart pie", "red pie",
+                    "green pie", "red apple"],
+    })
+    m = build_index(spark, spark.createDataFrame(docs),
+                    str(tmp_path / "cntslop"),
+                    IndexConfig(2, 1, build_chunks=1),
+                    content_col="content", id_col="doc_id")
+    bq = BooleanQuery(must=[PhraseQuery("red pie", slop=1)],
+                      should=["apple"])
+    plain = BooleanQuery(must=["red"], should=["pie"])
+    got = (count_matches(spark, m, [(0, bq), (1, plain)])
+           .toPandas().set_index("qid").n_hits)
+    assert got[0] == search_boolean(spark, m, [(0, bq)], k=10 ** 6).count()
+    assert got[1] == search_boolean(spark, m, [(1, plain)],
+                                    k=10 ** 6).count()
+    assert got[0] == 3  # docs 0,1,2: "red ? pie" within one position gap
+
+
+def test_boolean_and_dismax_join_k_none(spark, tmp_path):
+    """k=None on the join plan returns the full clause-evaluation frame
+    (the documented contract; pre-fix it was a TypeError)."""
+    from pim_lucene_spark.plans.boolean import BooleanQuery, search_boolean
+    from pim_lucene_spark.plans.dismax import DisMaxQuery, search_dismax
+
+    rng = np.random.default_rng(5)
+    vocab = ["red", "green", "blue", "apple", "sky"]
+    docs = pd.DataFrame({
+        "doc_id": range(40),
+        "content": [" ".join(rng.choice(vocab, size=6)) for _ in range(40)],
+    })
+    m = build_index(spark, spark.createDataFrame(docs),
+                    str(tmp_path / "knone"),
+                    IndexConfig(2, 1, build_chunks=1),
+                    content_col="content", id_col="doc_id")
+    bq = [(0, BooleanQuery(must=["red"], should=["apple"]))]
+    dq = [(0, DisMaxQuery(clauses=["red", "apple"], tie=0.3))]
+    for fn, batch in ((search_boolean, bq), (search_dismax, dq)):
+        full = fn(spark, m, batch, k=10 ** 9, plan="join").toPandas()
+        none = fn(spark, m, batch, k=None, plan="join").toPandas()
+        a = full.sort_values(["qid", "doc_id"]).reset_index(drop=True)
+        b = none.sort_values(["qid", "doc_id"]).reset_index(drop=True)
+        pd.testing.assert_frame_equal(a, b)
+
+
+def test_constant_score_exotic_inner(spark, tmp_path):
+    """ConstantScoreQuery wraps ANY query: DisMax and nested
+    ConstantScore inners take the recursive path (review finding: the
+    boolean rewrite only hosts clause-form inners)."""
+    from pim_lucene_spark.index import FullTextIndex
+    from pim_lucene_spark.plans.dismax import DisMaxQuery
+    from pim_lucene_spark.plans.query import (ConstantScoreQuery,
+                                              PhraseQuery)
+
+    docs = pd.DataFrame({
+        "doc_id": range(6),
+        "content": ["red apple", "green pear", "red plum",
+                    "apple tart", "red sun", "pear pie"],
+    })
+    m = build_index(spark, spark.createDataFrame(docs),
+                    str(tmp_path / "csq"), IndexConfig(2, 1, build_chunks=1),
+                    content_col="content", id_col="doc_id")
+    idx = FullTextIndex(spark, m)
+    res = idx.query([
+        (0, ConstantScoreQuery(DisMaxQuery(clauses=["red", "apple"]),
+                               boost=2.0)),
+        (1, ConstantScoreQuery(
+            ConstantScoreQuery(PhraseQuery("red apple"), boost=9.0),
+            boost=0.5)),
+    ], k=10, precision="float64").toPandas()
+    q0 = res[res.qid == 0]
+    assert sorted(q0.doc_id) == [0, 2, 3, 4]  # red ∪ apple
+    assert (q0.score == 2.0).all()
+    q1 = res[res.qid == 1]
+    assert sorted(q1.doc_id) == [0]
+    assert (q1.score == 0.5).all()  # outer boost wins

@@ -9,7 +9,6 @@ single pass on a hot-term batch (the whole point: the global bound
 from every partition's first round beats one partition's sample).
 """
 
-import os
 
 import numpy as np
 import pandas as pd
@@ -67,18 +66,13 @@ def test_sync_equals_single_pass(spark, sidx, budget0):
     pd.testing.assert_frame_equal(base, got.astype(base.dtypes.to_dict()))
 
 
-def _load_pid(m, needed, spark):
-    import pyarrow.parquet as pq
-    postings = (spark.read.parquet(m.chunk_path(0))
-                .filter(f"term in ({','.join(repr(t) for t in needed)})")
-                .toPandas())
-    parts = {}
-    for pid, grp in postings.groupby("pid"):
-        blob = (pq.read_table(os.path.join(m.norms_path, f"pid={pid}"),
-                              columns=["norms"]).column("norms")[0]
-                .as_py())
-        parts[int(pid)] = (grp, np.frombuffer(blob, dtype=np.uint8))
-    return parts
+def _load_pid(m, needed):
+    """``{pid: (rows per query term, norms)}`` through the shard reader."""
+    (files, pids), = S._postings_file_groups({"": m}, 1)
+    shard = S._read_shard(files[""], pids, needed)
+    return {pid: (by_term, shard[pid].norms_live(m.norms_path, None,
+                                                 m.num_partitions)[0])
+            for pid, by_term in S._pid_terms(shard, needed).items()}
 
 
 def _payload(m, queries, k, spark):
@@ -98,7 +92,7 @@ def _run_sync_inprocess(m, queries, k, spark, budget0):
     """The _search_sync_rounds driver loop with the kernel invoked
     in-process (DECODE_STATS observable).  Returns (result, rounds)."""
     payload, needed = _payload(m, queries, k, spark)
-    parts = _load_pid(m, needed, spark)
+    parts = _load_pid(m, needed)
     progress, bounds, acc, budget, rnd = {}, {}, None, budget0, 0
     while True:
         p = dict(payload, bounds=bounds,
@@ -108,8 +102,10 @@ def _run_sync_inprocess(m, queries, k, spark, budget0):
         pids = (sorted(parts) if rnd == 0 else
                 sorted({x for mm in progress.values() for x in mm}))
         for pid in pids:
-            grp, norms = parts[pid]
-            outs.append(S._match_core(p, pid, grp, norms))
+            by_term, norms = parts[pid]
+            arrays = S._match_core_arrays(p, pid, norms, by_term)
+            outs.append(S._empty_result() if arrays is None
+                        else pd.DataFrame(arrays))
         pdf = pd.concat(outs, ignore_index=True)
         state = pdf[pdf["norm"] < 0]
         res = pdf[pdf["norm"] >= 0]

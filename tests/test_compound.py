@@ -189,11 +189,9 @@ def test_bm25f_kernel_matches_join(spark, mfidx, precision):
 def _run_compound_core(spark, m, bq, k=10):
     """Drive the compound kernel in-process over every pid, returning
     (doc_bytes decoded, result frame) — DECODE_STATS plan evidence."""
-    import pyarrow.parquet as pq
-
     from pim_lucene_spark.functions import bm25
-    from pim_lucene_spark.operators.search import (_assemble_by_term,
-                                                   _ResidentPid,
+    from pim_lucene_spark.operators.search import (_postings_file_groups,
+                                                   _read_shard,
                                                    plan_queries,
                                                    reset_decode_stats)
     from pim_lucene_spark.plans.compound import _compound_core, _SpecBuilder
@@ -219,19 +217,18 @@ def _run_compound_core(spark, m, bq, k=10):
         "num_partitions": m.num_partitions,
         "postings_cache_mb": 0,
     }
+    (files, pids), = _postings_file_groups({"": m}, 1)
+    shard = _read_shard(files[""], pids, needed)
+    terms = np.asarray(list(needed), dtype=object)
     total, outs = 0, []
     for pid in range(m.num_partitions):
-        pdf = pq.read_table(
-            m.chunk_path(0),
-            filters=[("term", "in", list(needed)),
-                     ("pid", "=", pid)]).to_pandas()
-        if not len(pdf):
+        if pid not in shard:
             continue
         reset_decode_stats()
-        norms_live = {"": _ResidentPid(pid).norms_live(
+        norms_live = {"": shard[pid].norms_live(
             m.norms_path, None, m.num_partitions)}
         outs.append(_compound_core(payload, pid,
-                                   {"": _assemble_by_term(pdf)},
+                                   {"": shard[pid].by_term(terms)},
                                    norms_live))
         total += reset_decode_stats()["doc_bytes"]
     return total, pd.concat(outs, ignore_index=True)

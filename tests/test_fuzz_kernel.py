@@ -4,7 +4,7 @@ segments → block-max/lazy-decode → UB cut → bound seeding) without Spark
 job overhead, differentially checked against the pure-pandas model.
 
 This is the high-volume complement to the Spark-path suites: the same
-kernels Spark invokes (`encode_partition_postings`, `_match_core`) are
+kernels Spark invokes (`encode_partition_postings`, `_match_core_arrays`) are
 driven in-process, so a full random case costs milliseconds and edge
 geometry (1-doc corpora, stripe_cap=1, empty docs, k=1, huge k, repeated
 query terms, unicode) gets dense coverage.  Set ``FUZZ_CASES`` to crank
@@ -15,6 +15,7 @@ import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from pim_lucene_spark.functions import bm25
@@ -25,7 +26,10 @@ from pim_lucene_spark.functions.smallfloat import (
 from pim_lucene_spark.functions.tokenize import token_counts, tokenize_to_codes
 from pim_lucene_spark.model import BruteForceModel
 from pim_lucene_spark.operators import search as S
-from pim_lucene_spark.operators.index_build import encode_partition_postings
+from pim_lucene_spark.operators.index_build import (
+    PA_POSTINGS_SCHEMA,
+    encode_partition_postings,
+)
 
 VOCAB = np.array(["a", "b", "c", "aa", "ab", "ba", "zz", "w1", "w2",
                   "éé", "日本", "x", "the", "q"], dtype=object)
@@ -86,8 +90,16 @@ def _engine_search(corpus, queries, P, segs, stripe_cap, k, bounds=None):
     }
     if bounds:
         payload["bounds"] = bounds
-    outs = [S._match_core(payload, pid, pdf, norms[pid])
-            for pid, pdf in postings.items()]
+    terms = np.asarray(sorted({t for _, ts, _ in planned for t in ts}),
+                       dtype=object)
+    outs = []
+    for pid, pdf in postings.items():
+        res = S._ResidentPid(pid, pa.Table.from_pandas(
+            pdf, schema=PA_POSTINGS_SCHEMA, preserve_index=False))
+        arrays = S._match_core_arrays(payload, pid, norms[pid],
+                                      res.by_term(terms))
+        outs.append(S._empty_result() if arrays is None
+                    else pd.DataFrame(arrays))
     res = pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
         columns=["qid", "doc_id", "freq", "norm", "score"])
     return (res.sort_values(["qid", "score", "doc_id"],

@@ -320,7 +320,9 @@ def test_merge_sparse_and_emptied_pids(spark, tmp_index_dir):
 
 
 def test_merge_rejects_pre_v3_source(spark, tmp_index_dir):
-    """Only v3 has the norms/pid=N layout merge tasks read directly."""
+    """Only v3 has the norms/pid=N layout merge tasks read directly: a
+    pre-v3 source fails when its manifest is built, before any merge
+    output exists."""
     from pim_lucene_spark.manifest import IndexManifest
 
     def manifest(name, version):

@@ -5,7 +5,9 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from pim_lucene_spark.config import IndexConfig
 from pim_lucene_spark.operators import multimodal as mm
+from pim_lucene_spark.operators.index_build import build_index
 
 
 def _media(spark, n=6):
@@ -61,3 +63,76 @@ def test_decode_media_real_audio():
     sf.write(buf, np.sin(np.linspace(0, 20, 8000)), 8000, format="WAV")
     f = mm.decode_media(buf.getvalue(), "audio/wav")
     assert f.shape == (mm.FEATURE_DIM,) and abs(float(f.sum()) - 1.0) < 1e-5
+
+
+# ---------------------------------------------------------------- hybrid
+
+def _clustered_emb(n=240, dim=16, seed=11, clusters=24):
+    rng = np.random.default_rng(seed)
+    centers = rng.standard_normal((clusters, dim))
+    m = (centers[np.arange(n) % clusters]
+         + 0.25 * rng.standard_normal((n, dim))).astype(np.float32)
+    return pd.DataFrame({"vec_id": range(n),
+                         "embedding": [list(map(float, r)) for r in m]})
+
+
+@pytest.fixture(scope="module")
+def hybrid_setup(spark, tmp_path_factory):
+    rng = np.random.default_rng(7)
+    vocab = ["spark", "merge", "scan", "row", "fast", "data", "join"]
+    n = 240
+    docs = pd.DataFrame({
+        "doc_id": range(n),
+        "content": [" ".join(rng.choice(vocab, size=8)) for _ in range(n)],
+    })
+    m = build_index(spark, spark.createDataFrame(docs),
+                    str(tmp_path_factory.mktemp("hybidx")),
+                    IndexConfig(2, 1, build_chunks=1),
+                    content_col="content", id_col="doc_id")
+    emb = _clustered_emb(n)
+    # query pseudo-vectors live at ids >= n; make q 300 and 301 identical
+    # so each would rank #1 in the other's dense list if not excluded
+    qv = emb.iloc[3].embedding
+    extra = pd.DataFrame({"vec_id": [300, 301],
+                          "embedding": [list(qv), list(qv)]})
+    emb_all = spark.createDataFrame(pd.concat([emb, extra],
+                                              ignore_index=True))
+    return m, emb_all
+
+
+def test_hybrid_excludes_all_query_vectors(spark, hybrid_setup):
+    from pim_lucene_spark.operators.fusion import hybrid_search
+    m, emb = hybrid_setup
+    got = hybrid_search(spark, m, emb,
+                        [(0, "spark merge", 300), (1, "fast data", 301)],
+                        k=10, n_candidates=15, ann="bruteforce").toPandas()
+    assert not set(got.doc_id) & {300, 301}
+    assert set(got.qid) == {0, 1}
+
+
+def test_hybrid_lsh_path_and_auto(spark, hybrid_setup):
+    """ann='lsh' fuses through the bucketed dense path with recall@10
+    >= 0.9 vs the brute-force fusion; ann='auto' picks by corpus size."""
+    from pim_lucene_spark.operators.fusion import hybrid_search
+    m, emb = hybrid_setup
+    batch = [(0, "spark merge", 300), (1, "fast data", 301)]
+    kw = dict(k=10, n_candidates=15, num_planes=6, num_tables=8, dim=16)
+    exact = hybrid_search(spark, m, emb, batch, ann="bruteforce",
+                          **kw).toPandas()
+    lsh = hybrid_search(spark, m, emb, batch, ann="lsh", **kw).toPandas()
+    assert not set(lsh.doc_id) & {300, 301}
+    ex = exact.groupby("qid").doc_id.apply(set).to_dict()
+    ap = lsh.groupby("qid").doc_id.apply(set).to_dict()
+    hits = sum(len(ex[q] & ap.get(q, set())) for q in ex)
+    assert hits / sum(len(v) for v in ex.values()) >= 0.9
+    # auto: below threshold == bruteforce result, above == lsh result
+    auto_bf = hybrid_search(spark, m, emb, batch, ann="auto",
+                            lsh_threshold=10 ** 6, **kw).toPandas()
+    pd.testing.assert_frame_equal(
+        auto_bf.sort_values(["qid", "doc_id"]).reset_index(drop=True),
+        exact.sort_values(["qid", "doc_id"]).reset_index(drop=True))
+    auto_lsh = hybrid_search(spark, m, emb, batch, ann="auto",
+                             lsh_threshold=0, **kw).toPandas()
+    pd.testing.assert_frame_equal(
+        auto_lsh.sort_values(["qid", "doc_id"]).reset_index(drop=True),
+        lsh.sort_values(["qid", "doc_id"]).reset_index(drop=True))

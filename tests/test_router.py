@@ -161,22 +161,25 @@ def test_sloppy_matches_duckdb_oracle(spark):
     pd.testing.assert_frame_equal(res, odf.astype(res.dtypes.to_dict()))
 
 
-def test_norms_access_auto_resolution(spark, tmp_index_dir):
-    """'auto' picks direct only for driver-visible plain paths; object
-    store URIs and missing dirs fall back to cogroup (never a
-    query-time FileNotFoundError on non-shared deployments)."""
-    from types import SimpleNamespace
-    from pim_lucene_spark.operators.search import _resolve_norms_access
-    m = SimpleNamespace(norms_path="s3a://bucket/idx/norms")
-    assert _resolve_norms_access("auto", m) == "cogroup"
-    m = SimpleNamespace(norms_path="/definitely/not/mounted/norms")
-    assert _resolve_norms_access("auto", m) == "cogroup"
-    cfg = IndexConfig(num_partitions=2, num_segments=1, build_chunks=1)
-    built = build_index(spark, spark.createDataFrame(FIXTURE_DOCS),
-                        tmp_index_dir, cfg, content_col="content",
-                        id_col="doc_id")
-    assert _resolve_norms_access("auto", built) == "direct"
-    assert _resolve_norms_access("cogroup", built) == "cogroup"
+def test_pre_v3_index_rejected_by_load_and_search(spark, tmp_index_dir):
+    """A pre-v3 manifest (no norms/pid=N layout) fails once, at load,
+    with a rebuild hint — for IndexManifest.load and for search()."""
+    import dataclasses
+    import json
+    import os
+
+    from pim_lucene_spark.manifest import IndexManifest
+    from pim_lucene_spark.operators.search import search
+    meta = dataclasses.asdict(IndexManifest(
+        index_dir=tmp_index_dir, num_partitions=2, num_segments=1,
+        doc_count=1, sum_total_term_freq=1, nb_doc_per_segment=1))
+    meta["version"] = 2
+    with open(os.path.join(tmp_index_dir, "manifest.json"), "w") as f:
+        json.dump(meta, f)
+    with pytest.raises(ValueError, match="rebuild"):
+        IndexManifest.load(tmp_index_dir)
+    with pytest.raises(ValueError, match="rebuild"):
+        search(spark, tmp_index_dir, [(0, "red")])
 
 
 def test_mixed_per_query_slops_single_scan(spark):

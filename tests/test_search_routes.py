@@ -3,14 +3,15 @@
 One index with deletes, one set of query shapes (term, phrase,
 repeated-term phrase, a ``searchAfter`` page, ``k=None``), and every
 route that answers them: the in-process route, the zero-exchange file
-plan, the cogroup plan, the one-shot bound probe, the sync-round loop,
-the serving path, and the serving path split by ``pids=`` and merged.
+plan, the one-shot bound probe, the sync-round loop, the serving path,
+and the serving path split by ``pids=`` and merged.
 Rows must be identical, scores float-exact.  The file-plan shape
 (pid ownership, a single stage without Exchange or Parquet scan), the
 pid map's failure contract and the sync loop's k >= 1000 cut-off are
 pinned here too.
 """
 
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -18,6 +19,7 @@ from pim_lucene_spark import IndexConfig
 from pim_lucene_spark.operators import search as S
 from pim_lucene_spark.operators.deletes import write_deletes
 from pim_lucene_spark.operators.index_build import build_index
+from pim_lucene_spark.operators.search import search
 
 QUERIES = [(0, "merge"), (1, "the fast"), (2, "batch batch batch"),
            (3, "zzz_not_there"), (4, "the")]
@@ -48,10 +50,8 @@ def _rows(df) -> pd.DataFrame:
 def _spark_routes(spark, m, monkeypatch, **kw) -> dict:
     out = {"inline": S.search(spark, m, QUERIES, **kw)}
     with monkeypatch.context() as mp:
-        mp.setenv("SPARK_GRAFT_LOCAL_ROUTE_POSTINGS", "0")
+        mp.setattr(S, "_LOCAL_ROUTE_POSTINGS", 0)
         out["file_plan"] = S.search(spark, m, QUERIES, **kw)
-    out["cogroup"] = S.search(spark, m, QUERIES, norms_access="cogroup",
-                              **kw)
     out["bound_probe"] = S.search(spark, m, QUERIES, bound_probe=True,
                                   **kw)
     out["sync"] = S.search(spark, m, QUERIES, bound_probe="sync",
@@ -118,7 +118,7 @@ def test_file_groups_own_each_pid_once(ridx):
 def test_file_plan_single_stage(spark, ridx, monkeypatch):
     """The file-plan job has no Exchange and no Parquet scan node:
     tasks read their files directly."""
-    monkeypatch.setenv("SPARK_GRAFT_LOCAL_ROUTE_POSTINGS", "0")
+    monkeypatch.setattr(S, "_LOCAL_ROUTE_POSTINGS", 0)
     plan = S.search(spark, ridx, [(0, "the fast")], k=None) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
@@ -158,7 +158,8 @@ def test_failed_pid_map_scan_is_not_cached(spark, ridx, monkeypatch):
     scan succeeds and search() answers from the file plan."""
     import pyarrow.parquet as pq
 
-    want = _rows(S.search(spark, ridx, QUERIES, k=5, norms_access="cogroup"))
+    monkeypatch.setattr(S, "_LOCAL_ROUTE_POSTINGS", 0)
+    want = _rows(S.search(spark, ridx, QUERIES, k=5))
     S._FILE_PLAN_CACHE.clear()
     real = pq.read_table
     calls = []
@@ -176,20 +177,16 @@ def test_failed_pid_map_scan_is_not_cached(spark, ridx, monkeypatch):
         pass
     monkeypatch.setattr(pq, "read_table", real)
     assert S._postings_pid_map(ridx)
-    monkeypatch.setenv("SPARK_GRAFT_LOCAL_ROUTE_POSTINGS", "0")
     got = _rows(S.search(spark, ridx, QUERIES, k=5))
     pd.testing.assert_frame_equal(got, want, check_exact=True)
 
 
 def test_inline_gate_default_and_single_stats_lookup(spark, ridx,
                                                      monkeypatch):
-    """The in-process gate has its own default (cluster task sizing
-    does not widen it), and one search() call looks Σdf up once beyond
-    planning."""
-    monkeypatch.delenv("SPARK_GRAFT_LOCAL_ROUTE_POSTINGS", raising=False)
-    monkeypatch.setenv("SPARK_GRAFT_POSTINGS_PER_TASK", str(1 << 30))
-    assert S._local_route_max() == 1 << 16
-    monkeypatch.setenv("SPARK_GRAFT_LOCAL_ROUTE_POSTINGS", "0")
+    """The in-process gate is one task's postings budget, and one
+    search() call looks Σdf up once beyond planning."""
+    assert S._LOCAL_ROUTE_POSTINGS == 1 << 16
+    monkeypatch.setattr(S, "_LOCAL_ROUTE_POSTINGS", 0)
     real = S.term_doc_freqs
     calls = []
 
@@ -206,7 +203,7 @@ def test_sync_at_k_1000_runs_plain_file_plan(spark, ridx, monkeypatch):
     """``bound_probe="sync"`` is off at k >= 1000 (like the reference):
     it launches exactly one plain file-plan job — no probe over pid 0,
     no sync rounds — and returns ``bound_probe=False``'s rows."""
-    monkeypatch.setenv("SPARK_GRAFT_LOCAL_ROUTE_POSTINGS", "0")
+    monkeypatch.setattr(S, "_LOCAL_ROUTE_POSTINGS", 0)
     want = _rows(S.search(spark, ridx, QUERIES, k=1000,
                           final_merge="driver"))
     plans = []
@@ -221,3 +218,97 @@ def test_sync_at_k_1000_runs_plain_file_plan(spark, ridx, monkeypatch):
                          bound_probe="sync"))
     assert plans == [None]
     pd.testing.assert_frame_equal(got, want, check_exact=True)
+
+
+# ------------------------------------------- k=None: no rank window
+
+@pytest.fixture(scope="module")
+def small_index(spark, tmp_path_factory):
+    rng = np.random.default_rng(11)
+    vocab = ["alpha", "beta", "gamma", "delta", "epsilon"]
+    docs = pd.DataFrame({
+        "doc_id": range(60),
+        "content": [" ".join(rng.choice(vocab, size=8)) for _ in range(60)],
+    })
+    d = str(tmp_path_factory.mktemp("small") / "idx")
+    return build_index(spark, spark.createDataFrame(docs), d,
+                       IndexConfig(2, 1, build_chunks=1),
+                       content_col="content", id_col="doc_id")
+
+
+def test_k_none_equals_huge_k_rows(spark, small_index):
+    batch = [(0, "alpha"), (1, "beta gamma")]
+    full = search(spark, small_index, batch, k=10 ** 9).toPandas()
+    none = search(spark, small_index, batch, k=None).toPandas()
+    a = full.sort_values(["qid", "doc_id"]).reset_index(drop=True)
+    b = none.sort_values(["qid", "doc_id"]).reset_index(drop=True)
+    pd.testing.assert_frame_equal(a, b)
+
+
+def test_k_none_plan_has_no_rank_window(spark, small_index, monkeypatch):
+    # pin the distributed plan (the size gate would otherwise route
+    # this tiny index through the in-process path, which has no plan)
+    monkeypatch.setattr(S, "_LOCAL_ROUTE_POSTINGS", 0)
+    plan = (search(spark, small_index, [(0, "alpha")], k=None)
+            ._jdf.queryExecution().executedPlan().toString())
+    assert "Window" not in plan, plan
+    # the bounded path keeps its window (sanity that the probe works)
+    plan_k = (search(spark, small_index, [(0, "alpha")], k=10)
+              ._jdf.queryExecution().executedPlan().toString())
+    assert "Window" in plan_k
+
+
+def test_no_internal_huge_k_call_sites():
+    """No ``k=10 ** 9`` search/clause-frame call remains in the package
+    (docstrings and default-param *sentinels inside* search are fine —
+    this greps call sites only)."""
+    import pathlib
+    import re
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "pim_lucene_spark"
+    offenders = []
+    for p in pkg.rglob("*.py"):
+        if p.name == "model.py":  # driver-side pandas simulator
+            continue
+        for i, line in enumerate(p.read_text().splitlines(), 1):
+            s = line.strip()
+            if s.startswith("#"):
+                continue
+            # kwarg call sites only (k=10**9 followed by , or )); the
+            # one internal sentinel assignment in search() is exempt
+            if re.search(r"\bk\s*=\s*10\s*\*\*\s*9\s*[,)]", line):
+                offenders.append(f"{p.name}:{i}: {s}")
+    assert not offenders, offenders
+
+
+def test_exotic_constant_score_wrappers_kernel_index(spark, small_index):
+    """/code-review r6: the exotic ConstantScore recursion uses k=None —
+    it must stay on the kernel plan for kernel-only inners and survive
+    double nesting (rank <= None used to return empty silently)."""
+    from pim_lucene_spark.index import FullTextIndex
+    from pim_lucene_spark.plans.dismax import DisMaxQuery
+    from pim_lucene_spark.plans.query import ConstantScoreQuery
+
+    idx = FullTextIndex.open(spark, small_index.index_dir)
+    dm = DisMaxQuery(clauses=["alpha", "beta"], tie=0.5)
+    single = idx.query([(0, ConstantScoreQuery(dm, boost=2.5))],
+                       k=100).toPandas()
+    assert len(single) > 0
+    assert (single.score == 2.5).all()
+    double = idx.query(
+        [(0, ConstantScoreQuery(ConstantScoreQuery(dm, boost=9.0),
+                                boost=3.5))], k=100).toPandas()
+    assert sorted(double.doc_id) == sorted(single.doc_id)
+    assert (double.score == 3.5).all()
+
+
+def test_k_none_auto_routes_to_kernel_same_rows(spark, small_index):
+    from pim_lucene_spark.plans.boolean import BooleanQuery, search_boolean
+    batch = [(0, BooleanQuery(must=["alpha"], should=["beta"]))]
+    auto = (search_boolean(spark, small_index, batch, k=None)
+            .toPandas().sort_values(["qid", "doc_id"])
+            .reset_index(drop=True))
+    join = (search_boolean(spark, small_index, batch, k=None, plan="join")
+            .toPandas().sort_values(["qid", "doc_id"])
+            .reset_index(drop=True))
+    assert list(auto.doc_id) == list(join.doc_id)
+    assert list(auto.score) == list(join.score)
