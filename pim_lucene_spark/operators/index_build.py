@@ -320,14 +320,15 @@ def _token_sort(codes: np.ndarray, tok_doc: np.ndarray,
                 tok_pos: np.ndarray, num_partitions: int) -> np.ndarray:
     """(term, doc, pos) token ordering for the encode kernel.
 
-    Default: ``np.lexsort`` (3 stable keysort passes).  Two measured
-    alternatives, both committed NEGATIVE results (the sort is a small
-    slice of a tokenize-dominated kernel):
+    One unstable introsort over a packed int64 key; ``np.lexsort`` (3
+    stable keysort passes) when the key does not fit.  The history of
+    the choice (the sort is a small slice of a tokenize-dominated
+    kernel):
 
     - round 3: doc-regroup + per-doc stable argsort — SLOWER on the real
       corpus (post-shuffle doc order is near-sorted, so the stable
       doc/pos passes are near-free).
-    - round 4 (``PIM_TOKEN_SORT=packed``): pack ``(code, rel_doc, pos)``
+    - round 4 (packed key): pack ``(code, rel_doc, pos)``
       into ONE int64 (keys unique within a pid group — docs in a group
       are ≡ pid (mod P), so ``doc // P`` is injective and
       order-preserving) and run a single unstable introsort.  3× faster
@@ -337,12 +338,11 @@ def _token_sort(codes: np.ndarray, tok_doc: np.ndarray,
     - round 5: after the matrix-compress encoder cut the encode phase
       ~4×, the sort became a third of the kernel and the packed key now
       wins the same alternating 500k A/B best-of-3: kernel 12.01 s vs
-      13.44 s (``BENCH_SORT_AB.json``).  Packed is the DEFAULT; it
+      13.44 s (``BENCH_SORT_AB.json``).  Packed is the only mode; it
       falls back to lexsort when the packed ranges exceed 63 bits
       (identical order — keys are unique either way).
     """
-    mode = os.environ.get("PIM_TOKEN_SORT", "packed")
-    if mode == "lexsort" or codes.size == 0:
+    if codes.size == 0:
         return np.lexsort((tok_pos, tok_doc, codes))
     rel = tok_doc // num_partitions
     bits_c = max(1, int(codes.max()).bit_length())
@@ -527,10 +527,10 @@ def build_index(
     # source frame before the docs table lands on disk.  The one true
     # dependency is doc_count (segment width); it comes free from the ID
     # assignment's per-partition counts, or — for user-ID'd sources —
-    # from one count() job over the source before the overlapped phase
-    # (a real scan for non-trivial frames, accepted: segment width must
-    # be known before any kernel runs).  Resumed builds keep the serial
-    # docs-parquet
+    # from one count/min/max job over the source before the overlapped
+    # phase, which also rejects ids outside 0..N-1 (a real scan for
+    # non-trivial frames, accepted: segment width must be known before
+    # any kernel runs).  Resumed builds keep the serial docs-parquet
     # path (the stored snapshot is the stable input there).
     base_frame = None  # postings/norms source for the overlapped path
     doc_count_early: int | None = None
@@ -543,7 +543,16 @@ def build_index(
                 df, order_cols or [content_col])
         else:
             df = df.withColumn("doc_id", F.col(id_col).cast("long"))
-            doc_count_early = df.count()
+            ids = df.agg(F.count(F.lit(1)).alias("n"),
+                         F.min("doc_id").alias("lo"),
+                         F.max("doc_id").alias("hi")).collect()[0]
+            doc_count_early = int(ids["n"])
+            if doc_count_early and (ids["lo"] != 0
+                                    or ids["hi"] != doc_count_early - 1):
+                # segment widths derive from doc_count: fail with the
+                # contract error before any kernel sees the ids
+                raise ValueError(
+                    "doc ids must be dense 0..N-1 (use assign_doc_ids)")
         docs_src = df.withColumn("sha256", F.sha2(F.col(content_col), 256))
         if content_col != "content":
             docs_src = docs_src.withColumnRenamed(content_col, "content")

@@ -23,7 +23,10 @@ host↔DPU protocol in ``topdocs_sync.c:469-544``):
    ``norms/pid=N/`` Parquet layout by :func:`_pid_norms` — a side-data
    read, never a Spark shuffle, the way a Lucene segment reads its own
    norms file) and its live mask feed one Arrow-vectorized kernel
-   (:func:`_match_group`).  Kernel: vectorized varint decode →
+   (:func:`_match_core_arrays`) through the per-pid runner every
+   pid-grouped kernel shares (:func:`_run_pids`; the compound,
+   aggregate, BM25F and sloppy kernels of ``plans/compound.py`` are its
+   other cores).  Kernel: vectorized varint decode →
    k-way sorted docID intersection (leapfrog semantics, ``matcher.c:
    82-128``) → position alignment counting every overlapping occurrence
    (``matcher.c:133-177``) → BM25 scoring with Lucene's exact float32
@@ -58,14 +61,14 @@ host↔DPU protocol in ``topdocs_sync.c:469-544``):
    Lucene ``TopScoreDocCollector`` tie-break order.  The host-side
    merges (the collecting ``final_merge``, the sync rounds, serving)
    cut with one numpy ``lexsort`` and a per-qid rank
-   (:func:`_top_k_index`).
+   (:func:`_top_k_index`); the distributed one is a rank window
+   (:func:`_top_k_window`).
 
 Scale notes: the one distributed plan is one ``Range → MapInPandas``
 stage with no shuffle — postings and norms are read where the task runs
-(:func:`_file_plan`; the compound, aggregate, BM25F and sloppy kernels
-of ``plans/compound.py`` run on the same plan).  The index must sit on
-a POSIX-visible path (local disk or a shared mount).  The final window
-runs over at most ``P * k`` rows per query.
+(:func:`_file_plan` over :func:`_read_group`, for every kernel).  The
+index must sit on a POSIX-visible path (local disk or a shared mount).
+The final window runs over at most ``P * k`` rows per query.
 """
 
 from __future__ import annotations
@@ -579,18 +582,54 @@ class _DecodeCtx:
         return self.get_many([term], seg_mask)[0]
 
 
-def _match_core_arrays(payload: dict, pid: int, norms: np.ndarray,
-                       by_term: dict[str, list],
-                       live: np.ndarray | None = None) -> dict | None:
-    """The match kernel over one pid: ``by_term`` holds its stripe-ordered
-    rows per query term (:meth:`_ResidentPid.by_term`); the pid's result
-    columns as arrays, or ``None`` without hits."""
+def _phrase_candidates(ctx: _DecodeCtx, terms, cand_segs=None):
+    """A multi-term phrase's candidate docs on one pid.  Only segments
+    where EVERY term has postings can hold a match (co-presence prune,
+    ``dpu.c:204-207`` semantics; ``cand_segs`` narrows them further),
+    so only those decode, in one :meth:`_DecodeCtx.get_many` call; then
+    a k-way sorted docID intersection (leapfrog semantics).  Returns
+    ``(postings, cand, idxs)`` in ``terms`` order — ``idxs[i]`` maps
+    ``cand`` into ``postings[i]`` — or ``None`` when no doc holds every
+    term."""
+    uniq = list(dict.fromkeys(terms))
+    pres = None
+    for t in uniq:
+        p = None
+        for r in ctx.by_term[t]:
+            c = np.asarray(r.seg_doc_counts) > 0
+            p = c if p is None else (p | c)
+        pres = p if pres is None else (pres & p)
+    if cand_segs is not None:
+        pres = pres & cand_segs
+    if not pres.any():
+        return None
+    tps = ctx.get_many(uniq, None if pres.all() else pres)
+    cand = tps[0].rel_docs
+    idxs = [np.arange(cand.size)]
+    for tp in tps[1:]:
+        cand, ia, ib = np.intersect1d(cand, tp.rel_docs, assume_unique=True,
+                                      return_indices=True)
+        idxs = [ix[ia] for ix in idxs] + [ib]
+        if cand.size == 0:
+            return None
+    order = [uniq.index(t) for t in terms]
+    return [tps[j] for j in order], cand, [idxs[j] for j in order]
+
+
+def _match_core_arrays(payload: dict, pid: int, by_term: dict[str, dict],
+                       norms_live: dict[str, tuple]) -> dict | None:
+    """The term/phrase kernel over one pid, a :func:`_run_pids` core on
+    field ``""``: ``by_term[""]`` holds the pid's stripe-ordered rows per
+    query term and ``norms_live[""]`` its ``(norms, live mask)``; the
+    pid's result columns as arrays, or ``None`` without hits."""
     out_qid, out_doc, out_freq, out_norm, out_score = [], [], [], [], []
     P = payload["num_partitions"]
     k = payload["k"]
     precision = payload["precision"]
     cache = payload["cache"]
     num_segments = payload["num_segments"]
+    by_term = by_term.get("", {})
+    norms, live = norms_live[""]
 
     ctx = _DecodeCtx(by_term, payload, pid)
     cache_budget = ctx.budget
@@ -620,12 +659,10 @@ def _match_core_arrays(payload: dict, pid: int, norms: np.ndarray,
                 start_idx = int(mine)
         if any(t not in by_term for t in terms):
             continue  # this partition lacks a term → no hits here
-        uniq = list(dict.fromkeys(terms))
-        multi = len(terms) > 1
         ext = float(bounds.get(qid, -np.inf))
         aft = after_all.get(qid)
 
-        if not multi:
+        if len(terms) == 1:
             t0 = terms[0]
             cand, freqs, norm_bytes, scores, st = _single_term_topk(
                 by_term[t0], norms, weight, cache, precision, k,
@@ -643,36 +680,16 @@ def _match_core_arrays(payload: dict, pid: int, norms: np.ndarray,
             if cand.size == 0:
                 continue
         else:
-            # co-presence prune: a phrase can only match in segments
-            # where EVERY term has postings (dpu.c:204-207 semantics)
-            pres = None
-            for t in uniq:
-                p = None
-                for r in by_term[t]:
-                    c = np.asarray(r.seg_doc_counts) > 0
-                    p = c if p is None else (p | c)
-                pres = p if pres is None else (pres & p)
-            if not pres.any():
+            found = _phrase_candidates(ctx, terms)
+            if found is None:
                 continue
-            seg_mask = None if pres.all() else pres
-            tps = ctx.get_many(uniq, seg_mask)
-
-            # k-way sorted docID intersection (leapfrog semantics)
-            cand = tps[0].rel_docs
-            idxs = [np.arange(cand.size)]
-            for tp in tps[1:]:
-                cand, ia, ib = np.intersect1d(cand, tp.rel_docs,
-                                              assume_unique=True,
-                                              return_indices=True)
-                idxs = [ix[ia] for ix in idxs] + [ib]
-                if cand.size == 0:
-                    break
-            if live is not None and cand.size:
+            tps, cand, idxs = found
+            if live is not None:
                 keep = live[cand]  # deleted docs leave the candidate set
                 cand = cand[keep]  # before any WAND bound accumulates
                 idxs = [ix[keep] for ix in idxs]
-            if cand.size == 0:
-                continue
+                if cand.size == 0:
+                    continue
 
             tfs = np.stack([tp.freqs[ix] for tp, ix in zip(tps, idxs)])
             norm_bytes = norms[cand]
@@ -684,7 +701,6 @@ def _match_core_arrays(payload: dict, pid: int, norms: np.ndarray,
             ub_freq = tfs.min(axis=0)
             ub = bm25.score(ub_freq, norm_bytes, weight, cache, precision)
             order = np.argsort(-ub.astype(np.float64), kind="stable")
-            term_order = [uniq.index(t) for t in terms]
             freqs = np.zeros(cand.size, dtype=np.int64)
             scores = np.full(cand.size, -np.inf)
             chunk = max(4 * k, 256)
@@ -710,9 +726,8 @@ def _match_core_arrays(payload: dict, pid: int, norms: np.ndarray,
                 if cut < ext or (n_scored >= k and cut < kth_best):
                     break  # no remaining candidate can beat the k-th
                 sub_counts = _phrase_match_counts(
-                    [tps[j] for j in term_order],
-                    [idxs[j][sel] for j in term_order],
-                    sel.size, offsets=offsets_all.get(qid))
+                    tps, [ix[sel] for ix in idxs], sel.size,
+                    offsets=offsets_all.get(qid))
                 freqs[sel] = sub_counts
                 hit = sub_counts > 0
                 if hit.any():
@@ -815,22 +830,33 @@ def _top_k_index(qid: np.ndarray, score: np.ndarray, doc_id: np.ndarray,
     return order[rank < k]
 
 
-def _top_k(pdf: pd.DataFrame, k: int) -> pd.DataFrame:
-    """Driver merge of per-pid top-k rows: each query's first ``k`` in
-    (score desc, doc_id asc) order (:func:`_top_k_index`) — the
-    reference's host-side merge (``topdocs_sync.c:369-412``)."""
-    keep = _top_k_index(pdf["qid"].to_numpy(), pdf["score"].to_numpy(),
-                        pdf["doc_id"].to_numpy(), k)
-    return pdf.take(keep).reset_index(drop=True)
+def _top_k(rows, k: int) -> pd.DataFrame:
+    """Driver merge of per-pid top-k rows (a frame, or a kernel's dict
+    of column arrays): each query's first ``k`` in (score desc, doc_id
+    asc) order (:func:`_top_k_index`) as one frame — the reference's
+    host-side merge (``topdocs_sync.c:369-412``)."""
+    cols = {c: np.asarray(v) for c, v in rows.items()}
+    keep = _top_k_index(cols["qid"], cols["score"], cols["doc_id"], k)
+    return pd.DataFrame({c: v[keep] for c, v in cols.items()})
+
+
+def _top_k_window(df: DataFrame, k: int) -> DataFrame:
+    """Global top-``k`` per query over per-partition rows: a rank
+    window in (score desc, doc_id asc) order."""
+    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
+    return (df.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k).drop("rank"))
 
 
 def _kernel_payload(manifest: IndexManifest, precision: str,
-                    **extra) -> dict:
+                    needed_terms=None, **extra) -> dict:
     """The one builder of kernel payloads: an index's scoring and layout
     inputs (score cache, partition/segment shape, norms and delete
     paths, decode-cache key) plus the caller's ``extra`` keys (queries,
     ``k``, ``after``, ...).  Search, the serving path and every
-    compound/BM25F field read their per-index inputs from here."""
+    compound/BM25F field read their per-index inputs from here.
+    ``needed_terms`` makes it a single-field payload for
+    :func:`_run_pids`: the index is field ``""`` with those terms."""
     avgdl = bm25.avg_field_length(manifest.sum_total_term_freq,
                                   manifest.doc_count, precision)
     payload = {
@@ -847,6 +873,9 @@ def _kernel_payload(manifest: IndexManifest, precision: str,
         # warm workers
         "cache_key": manifest_scan_key(manifest),
     }
+    if needed_terms is not None:
+        payload.update(fields={"": dict(payload)},
+                       needed_terms={"": sorted(needed_terms)})
     payload.update(extra)
     if payload.get("after"):
         payload["after"] = {int(q): (float(s), int(d))
@@ -855,10 +884,10 @@ def _kernel_payload(manifest: IndexManifest, precision: str,
 
 
 # ---------------------------------------------------------------------------
-# shard reader: every direct route (in-process, file plan, bound probe,
-# sync rounds, serving) reads postings through _read_shard, norms through
-# _pid_norms, and runs _match_group — the reference's DPU model, where
-# each DPU reads its own self-contained index partition
+# shard reader: every route (in-process, file plan, bound probe, sync
+# rounds, serving) reads postings through _read_shard, norms through
+# _pid_norms, and feeds its kernel through _run_pids — the reference's
+# DPU model, where each DPU reads its own self-contained index partition
 # (PimIndexWriter.java).
 # ---------------------------------------------------------------------------
 _ROW_ARRAYS = ("seg_doc_counts", "seg_doc_bytes", "seg_freq_bytes",
@@ -1005,47 +1034,50 @@ def _read_shard(files: list[str], pids, terms=None
             for p, ts in parts.items() if ts}
 
 
-def _pid_terms(shard: dict, terms) -> dict[int, dict]:
-    """``{pid: {term: [stripe-ordered rows]}}`` over the shard's pids
-    that hold any of ``terms``."""
-    terms = np.asarray(list(terms), dtype=object)
-    out = {}
-    for p, res in shard.items():
-        by_term = res.by_term(terms)
-        if by_term:
-            out[p] = by_term
-    return out
-
-
-def _match_group(payload: dict, shard: dict,
-                 by_pid: dict[int, dict]) -> dict | None:
-    """The per-group runner every direct route shares: for each pid in
-    ``by_pid`` (its rows per query term), its norms and live mask from
-    ``shard`` and the match kernel; the group's result columns as
-    arrays, or ``None`` without hits."""
+def _run_pids(payload: dict, core, shards: dict[str, dict],
+              pids) -> dict | None:
+    """The per-pid runner every kernel shares (term/phrase, compound,
+    aggregate modes, BM25F, sloppy) on the file plan and the serving
+    path.  ``shards`` = ``{field: {pid: _ResidentPid}}``; a pid missing
+    from a field's shard has no rows there.  For each pid: its rows per
+    ``payload["needed_terms"]`` of each field, every payload field's
+    norms and live mask (:meth:`_ResidentPid.norms_live`), then
+    ``core(payload, pid, by_term, norms_live)`` → a dict of column
+    arrays or ``None``.  A pid with no rows runs only for a
+    MatchAllDocs batch.  The pids' columns concatenated, or ``None``
+    without rows."""
+    P = payload["num_partitions"]
+    terms = {f: np.asarray(ts, dtype=object)
+             for f, ts in payload["needed_terms"].items() if ts}
     outs = []
-    for pid in sorted(by_pid):
-        norms, live = shard[pid].norms_live(payload["norms_path"],
-                                            payload["deletes_path"],
-                                            payload["num_partitions"])
-        arrays = _match_core_arrays(payload, pid, norms, by_pid[pid],
-                                    live=live)
-        if arrays is not None:
-            outs.append(arrays)
+    for pid in sorted(pids):
+        res = {f: shards.get(f, {}).get(pid) or _ResidentPid(pid)
+               for f in payload["fields"]}
+        by_term = {}
+        for f, ts in terms.items():
+            bt = res[f].by_term(ts)
+            if bt:
+                by_term[f] = bt
+        if not by_term and not payload.get("has_matchall"):
+            continue
+        norms_live = {f: res[f].norms_live(fm["norms_path"],
+                                           fm["deletes_path"], P)
+                      for f, fm in payload["fields"].items()}
+        out = core(payload, pid, by_term, norms_live)
+        if out is not None:
+            outs.append(out)
     if len(outs) <= 1:
         return outs[0] if outs else None
     return {c: np.concatenate([o[c] for o in outs]) for c in outs[0]}
 
 
-def _match_files(payload: dict, files: dict[str, list[str]],
-                 pids: list[int]) -> pd.DataFrame | None:
-    """Search's file-plan runner (search plans over ``{"": manifest}``):
-    read the group's files for the batch's terms, keep its pids, run
-    the per-group runner."""
-    terms = payload["needed_terms"]
-    shard = _read_shard(files[""], pids, terms)
-    arrays = _match_group(payload, shard, _pid_terms(shard, terms))
-    return None if arrays is None else pd.DataFrame(arrays)
+def _read_group(payload: dict, core, files: dict[str, list[str]],
+                pids: list[int]) -> dict | None:
+    """One file-plan task: read the group's files once per field for
+    that field's terms (:func:`_read_shard`), then :func:`_run_pids`."""
+    shards = {f: _read_shard(fs, pids, payload["needed_terms"][f])
+              for f, fs in files.items()}
+    return _run_pids(payload, core, shards, pids)
 
 
 def _file_plan(spark: SparkSession, manifests: dict[str, IndexManifest],
@@ -1054,7 +1086,8 @@ def _file_plan(spark: SparkSession, manifests: dict[str, IndexManifest],
     """The zero-exchange ``Range → MapInPandas`` job every pid-grouped
     kernel runs on: each of ``n_tasks`` tasks calls ``runner(files,
     pids)`` on its ASSIGNED group (``files`` per field, of ``pids``
-    only, when given) and yields its frame — no Exchange at all (guide
+    only, when given) and yields its columns (arrays or a frame) as one
+    frame — no Exchange at all (guide
     §2.4 / §8.4 "co-locate instead of join": the postings Parquet is
     already laid out by pid, so a repartition-by-pid shuffle would only
     re-create a grouping the files already have).
@@ -1069,7 +1102,7 @@ def _file_plan(spark: SparkSession, manifests: dict[str, IndexManifest],
             for gi in pdf["id"]:
                 out = runner(*groups[int(gi)])
                 if out is not None:
-                    yield out
+                    yield pd.DataFrame(out)
     return (spark.range(0, len(groups), 1, max(1, len(groups)))
             .mapInPandas(fn, schema))
 
@@ -1437,8 +1470,8 @@ def _search_sync_rounds(spark, manifest: IndexManifest, payload: dict,
         live_pids = (sorted({p for m in progress.values() for p in m})
                      if rnd > 0 else None)
         pdf = _file_plan(spark, {"": manifest},
-                         partial(_match_files, payload_r), RESULT_SCHEMA,
-                         n_tasks, live_pids).toPandas()
+                         partial(_read_group, payload_r, _match_core_arrays),
+                         RESULT_SCHEMA, n_tasks, live_pids).toPandas()
         state = pdf[pdf["norm"] < 0]
         acc = _top_k(pd.concat([acc, pdf[pdf["norm"] >= 0]],
                                ignore_index=True), k)
@@ -1538,9 +1571,10 @@ def search(spark: SparkSession, index: IndexManifest | str,
     if not planned:
         return local_empty(spark, RESULT_SCHEMA)
     payload = _kernel_payload(
-        manifest, precision, queries=planned, k=int(k),
+        manifest, precision, needed_terms, queries=planned, k=int(k),
         postings_cache_mb=int(postings_cache_mb), after=after,
-        offsets=gap_offsets, needed_terms=list(needed_terms))
+        offsets=gap_offsets)
+    run = partial(_read_group, payload, _match_core_arrays)
 
     total_df = sum(term_doc_freqs(spark, manifest,
                                   list(needed_terms)).values())
@@ -1551,11 +1585,11 @@ def search(spark: SparkSession, index: IndexManifest | str,
         # job the cluster would run, minus the scheduler — see
         # _LOCAL_ROUTE_POSTINGS); identical results, differential-tested
         (files, pids), = _postings_file_groups({"": manifest}, 1)
-        pdf = _match_files(payload, files, pids)
-        if pdf is None:
+        res = run(files, pids)
+        if res is None:
             return local_empty(spark, RESULT_SCHEMA)
-        return local_result(spark, pdf if unbounded else _top_k(pdf, k),
-                            RESULT_SCHEMA)
+        return local_result(spark, pd.DataFrame(res) if unbounded
+                            else _top_k(res, k), RESULT_SCHEMA)
     if sync and k < 1000:
         # the reference's full iterative loop (topdocs_sync.c:469-544);
         # off at k >= 1000 exactly like the reference.  A Spark round
@@ -1565,18 +1599,17 @@ def search(spark: SparkSession, index: IndexManifest | str,
         return _search_sync_rounds(spark, manifest, payload, k, n_tasks,
                                    budget0=int(sync_budget0))
     if bound_probe and not sync and manifest.num_partitions > 1:
-        probe = _file_plan(spark, {"": manifest},
-                           partial(_match_files, payload),
-                           RESULT_SCHEMA, 1, pids=[0]).toPandas()
+        probe = _file_plan(spark, {"": manifest}, run, RESULT_SCHEMA, 1,
+                           pids=[0]).toPandas()
         bounds = {}
         for qid, grp in probe.groupby("qid"):
             sc = grp["score"].to_numpy()
             if sc.size >= k:  # bound valid only when k docs achieve it
                 bounds[int(qid)] = float(np.sort(sc)[-k])
         if bounds:
-            payload = dict(payload, bounds=bounds)
-    per_part = _file_plan(spark, {"": manifest},
-                          partial(_match_files, payload), RESULT_SCHEMA,
+            run = partial(_read_group, dict(payload, bounds=bounds),
+                          _match_core_arrays)
+    per_part = _file_plan(spark, {"": manifest}, run, RESULT_SCHEMA,
                           n_tasks)
 
     if unbounded:
@@ -1586,11 +1619,7 @@ def search(spark: SparkSession, index: IndexManifest | str,
         return local_result(spark, _top_k(per_part.toPandas(), k),
                             RESULT_SCHEMA)
 
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (per_part
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .drop("rank"))
+    return _top_k_window(per_part, k)
 
 
 def page_marks(page: pd.DataFrame) -> dict[int, tuple[float, int]]:
@@ -1709,8 +1738,8 @@ def search_local(index: IndexManifest | str, queries: list[tuple[int, str]],
     milliseconds (``PimSystemManager.java:401-437``).  This is that
     serving path for a POSIX-visible index: each pid's postings, norms
     and live mask are read once and stay resident (:func:`_local_rows`),
-    so a request whose pids are loaded reads no files; the per-group
-    runner every direct route uses (:func:`_match_group`) runs
+    so a request whose pids are loaded reads no files; the per-pid
+    runner every route uses (:func:`_run_pids`) runs the kernel
     in-process over them, then a driver heap-merge — plus the warm
     postings cache, which in a single process hits on every repeated
     term.  Use for interactive / low-latency serving; use :func:`search`
@@ -1733,12 +1762,11 @@ def search_local(index: IndexManifest | str, queries: list[tuple[int, str]],
         # later empty result in the process)
         return _empty_result().copy()
     payload = _kernel_payload(
-        manifest, precision, queries=planned, k=int(k),
+        manifest, precision, needed_terms, queries=planned, k=int(k),
         postings_cache_mb=int(postings_cache_mb), after=after,
         offsets=gap_offsets)
     shard = _local_rows(manifest, payload["cache_key"], pids=pids)
-    res = _match_group(payload, shard, _pid_terms(shard, needed_terms))
+    res = _run_pids(payload, _match_core_arrays, {"": shard}, shard)
     if res is None:
         return _empty_result().copy()  # public boundary: see above
-    keep = _top_k_index(res["qid"], res["score"], res["doc_id"], k)
-    return pd.DataFrame({c: v[keep] for c, v in res.items()})
+    return _top_k(res, k)

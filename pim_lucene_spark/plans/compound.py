@@ -48,10 +48,14 @@ for its pids and composes per partition.
 
 Every route runs on the zero-exchange file plan search uses
 (``Range → MapInPandas``, :func:`_run_file_plan`): each task reads its
-pids' postings per field once (:func:`~pim_lucene_spark.operators.
-search._read_shard`) plus their norms and live masks, and one per-pid
-runner (:func:`_run_pids`) feeds the kernel — the same runner the
-serving path feeds from its resident pids.  The only Exchange left is
+pids' postings per field once plus their norms and live masks, and the
+per-pid runner the term/phrase kernel uses
+(:func:`~pim_lucene_spark.operators.search._run_pids`) feeds the
+kernel — the same runner the serving path feeds from its resident
+pids.  Every kernel here (:func:`_compound_core` in each mode,
+:func:`_bm25f_core`, :func:`_sloppy_core`) returns its pid's columns as
+arrays, or ``None`` without rows; the runner concatenates them and a
+frame is built once per task or request.  The only Exchange left is
 the rank window (or aggregate) over the kernel's per-partition rows.
 """
 
@@ -61,7 +65,7 @@ from functools import partial
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -74,10 +78,12 @@ from pim_lucene_spark.operators.search import (
     _file_plan,
     _kernel_payload,
     _kernel_task_count,
+    _phrase_candidates,
     _phrase_match_counts,
-    _read_shard,
-    _ResidentPid,
+    _read_group,
+    _run_pids,
     _top_k,
+    _top_k_window,
     plan_queries,
     term_doc_freqs,
 )
@@ -129,10 +135,8 @@ def _leaf_match(ctx: _DecodeCtx, norms: np.ndarray, terms: tuple,
     (whole segments decode, and every doc inside a decoded segment gets
     its exact score), which is exactly what lookup composition needs.
     """
-    by_term = ctx.by_term
-    if any(t not in by_term for t in terms):
+    if any(t not in ctx.by_term for t in terms):
         return _EMPTY_I64, _EMPTY_F64, _EMPTY_F64
-    uniq = list(dict.fromkeys(terms))
     if len(terms) == 1:
         seg_mask = None
         if cand_segs is not None and not cand_segs.all():
@@ -146,40 +150,17 @@ def _leaf_match(ctx: _DecodeCtx, norms: np.ndarray, terms: tuple,
             o = np.argsort(docs, kind="stable")
             docs, sc, fr = docs[o], sc[o], fr[o]
         return docs, sc, fr
-    # co-presence prune: a phrase can only match in segments where EVERY
-    # term has postings
-    pres = None
-    for t in uniq:
-        p = None
-        for r in by_term[t]:
-            c = np.asarray(r.seg_doc_counts) > 0
-            p = c if p is None else (p | c)
-        pres = p if pres is None else (pres & p)
-    if cand_segs is not None:
-        pres = pres & cand_segs
-    if not pres.any():
+    found = _phrase_candidates(ctx, terms, cand_segs)
+    if found is None:
         return _EMPTY_I64, _EMPTY_F64, _EMPTY_F64
-    seg_mask = None if pres.all() else pres
-    tps = ctx.get_many(uniq, seg_mask)
-    cand = tps[0].rel_docs
-    idxs = [np.arange(cand.size)]
-    for tp in tps[1:]:
-        cand, ia, ib = np.intersect1d(cand, tp.rel_docs,
-                                      assume_unique=True,
-                                      return_indices=True)
-        idxs = [ix[ia] for ix in idxs] + [ib]
-        if cand.size == 0:
-            return _EMPTY_I64, _EMPTY_F64, _EMPTY_F64
-    term_order = [uniq.index(t) for t in terms]
+    tps, cand, idxs = found
     if slop:
-        counts = sloppy_freqs_postings(
-            [tps[j] for j in term_order], [idxs[j] for j in term_order],
-            cand.size, list(terms), int(slop))
+        counts = sloppy_freqs_postings(tps, idxs, cand.size, list(terms),
+                                       int(slop))
         hit = counts > 0.0
     else:
-        counts = _phrase_match_counts([tps[j] for j in term_order],
-                                      [idxs[j] for j in term_order],
-                                      cand.size, offsets=offsets)
+        counts = _phrase_match_counts(tps, idxs, cand.size,
+                                      offsets=offsets)
         hit = counts > 0
     if not hit.any():
         return _EMPTY_I64, _EMPTY_F64, _EMPTY_F64
@@ -546,13 +527,22 @@ def _eval_flat_batch(flat: list[dict], eval_leaf, precision: str,
                  for j in range(3))
 
 
+def _columns(cols: list[str], parts: list[list]) -> dict | None:
+    """A core's output: ``parts[i]`` holds column ``cols[i]``'s
+    per-query arrays; ``None`` when no query produced a row."""
+    if not parts[0]:
+        return None
+    return {c: np.concatenate(p) for c, p in zip(cols, parts)}
+
+
 def _compound_core(payload: dict, pid: int,
                    per_field_by_term: dict[str, dict],
-                   norms_live: dict[str, tuple]) -> pd.DataFrame:
+                   norms_live: dict[str, tuple]) -> dict | None:
     """The compound kernel for one pid: ``per_field_by_term`` holds the
     pid's rows per query term of each field that has any, and
     ``norms_live`` every payload field's ``(norms, live mask)``
-    (:func:`_run_pids` supplies both)."""
+    (:func:`_run_pids` supplies both).  The pid's columns as arrays, in
+    the mode's schema order, or ``None`` without rows."""
     P = payload["num_partitions"]
     k = payload["k"]
     precision = payload["precision"]
@@ -739,14 +729,14 @@ def _compound_core(payload: dict, pid: int,
     if payload.get("count_only"):
         # IndexSearcher.count semantics: only per-(query, partition)
         # match COUNTS leave the kernel — one long per query per pid
-        return pd.DataFrame({
+        return {
             "qid": np.asarray([s["qid"] for s in payload["specs"]],
                               dtype=np.int64),
             "n": np.asarray(
                 [_eval_spec(s, eval_leaf, precision,
                             eval_ma=eval_ma)[0].size
                  for s in payload["specs"]], dtype=np.int64),
-        })
+        }
 
     if payload.get("facet"):
         # facet counting (SortedSetDocValuesFacetCounts semantics):
@@ -770,13 +760,7 @@ def _compound_core(payload: dict, pid: int,
             qs.append(np.full(nz.size, spec["qid"], dtype=np.int64))
             cs.append(nz.astype(np.int32))
             ns.append(bc[nz])
-        if not qs:
-            return pd.DataFrame(
-                {"qid": [], "code": [], "n": []}).astype(
-                {"qid": np.int64, "code": np.int32, "n": np.int64})
-        return pd.DataFrame({"qid": np.concatenate(qs),
-                             "code": np.concatenate(cs),
-                             "n": np.concatenate(ns)})
+        return _columns(["qid", "code", "n"], [qs, cs, ns])
 
     if payload.get("facet_stats"):
         # association-facet aggregation (TaxonomyFacetIntAssociations /
@@ -816,15 +800,8 @@ def _compound_core(payload: dict, pid: int,
             f_s.append(np.add.reduceat(v, first))
             f_mn.append(np.minimum.reduceat(v, first))
             f_mx.append(np.maximum.reduceat(v, first))
-        cols = ["qid", "code", "n", "sum", "mn", "mx"]
-        if not f_q:
-            return pd.DataFrame({c: [] for c in cols}).astype(
-                {"qid": np.int64, "code": np.int32, "n": np.int64,
-                 "sum": np.int64, "mn": np.int64, "mx": np.int64})
-        return pd.DataFrame(dict(zip(cols, [
-            np.concatenate(f_q), np.concatenate(f_c),
-            np.concatenate(f_n), np.concatenate(f_s),
-            np.concatenate(f_mn), np.concatenate(f_mx)])))
+        return _columns(["qid", "code", "n", "sum", "mn", "mx"],
+                        [f_q, f_c, f_n, f_s, f_mn, f_mx])
 
     if payload.get("sort"):
         # sort-by-field (TopFieldCollector / Sort(SortField(LONG))
@@ -868,14 +845,7 @@ def _compound_core(payload: dict, pid: int,
             o_q.append(np.full(order.size, spec["qid"], dtype=np.int64))
             o_d.append(docs[order] * P + pid)
             o_v.append(key[order])
-        if not o_q:
-            return pd.DataFrame(
-                {"qid": [], "doc_id": [], "sortval": []}).astype(
-                {"qid": np.int64, "doc_id": np.int64,
-                 "sortval": np.int64})
-        return pd.DataFrame({"qid": np.concatenate(o_q),
-                             "doc_id": np.concatenate(o_d),
-                             "sortval": np.concatenate(o_v)})
+        return _columns(["qid", "doc_id", "sortval"], [o_q, o_d, o_v])
 
     if payload.get("collapse"):
         # field collapsing / grouping (lucene/grouping
@@ -911,15 +881,8 @@ def _compound_core(payload: dict, pid: int,
             c_c.append(grp[sel].astype(np.int32))
             c_d.append(docs[sel] * P + pid)
             c_s.append(scores[sel])
-        if not c_q:
-            return pd.DataFrame(
-                {"qid": [], "code": [], "doc_id": [], "score": []}).astype(
-                {"qid": np.int64, "code": np.int32, "doc_id": np.int64,
-                 "score": np.float64})
-        return pd.DataFrame({"qid": np.concatenate(c_q),
-                             "code": np.concatenate(c_c),
-                             "doc_id": np.concatenate(c_d),
-                             "score": np.concatenate(c_s)})
+        return _columns(["qid", "code", "doc_id", "score"],
+                        [c_q, c_c, c_d, c_s])
 
     if payload.get("ranges"):
         # numeric range facets (LongRangeFacetCounts): sort each query's
@@ -947,12 +910,7 @@ def _compound_core(payload: dict, pid: int,
             r_q.append(np.full(nz.size, spec["qid"], dtype=np.int64))
             r_r.append(nz.astype(np.int32))
             r_n.append(n[nz].astype(np.int64))
-        if not r_q:
-            return pd.DataFrame({"qid": [], "ridx": [], "n": []}).astype(
-                {"qid": np.int64, "ridx": np.int32, "n": np.int64})
-        return pd.DataFrame({"qid": np.concatenate(r_q),
-                             "ridx": np.concatenate(r_r),
-                             "n": np.concatenate(r_n)})
+        return _columns(["qid", "ridx", "n"], [r_q, r_r, r_n])
 
     flat, general = [], []
     for spec in payload["specs"]:
@@ -993,58 +951,7 @@ def _compound_core(payload: dict, pid: int,
         out_qid.append(np.full(order.size, spec["qid"], dtype=np.int64))
         out_doc.append(docs[order] * P + pid)
         out_score.append(scores[order])
-
-    if not out_qid:
-        return pd.DataFrame({"qid": [], "doc_id": [], "score": []}).astype(
-            {"qid": np.int64, "doc_id": np.int64, "score": np.float64})
-    return pd.DataFrame({
-        "qid": np.concatenate(out_qid),
-        "doc_id": np.concatenate(out_doc),
-        "score": np.concatenate(out_score),
-    })
-
-
-def _run_pids(payload: dict, core, shards: dict[str, dict],
-              pids) -> pd.DataFrame | None:
-    """The per-pid runner every pid-grouped kernel shares (compound,
-    aggregate modes, BM25F, sloppy) on the file plan and the serving
-    path.  ``shards`` = ``{field: {pid: _ResidentPid}}``; a pid missing
-    from a field's shard has no rows there.  For each pid: its rows per
-    ``payload["needed_terms"]`` of each field, every payload field's
-    norms and live mask (:meth:`_ResidentPid.norms_live`), then
-    ``core(payload, pid, per_field_by_term, norms_live)``.  A pid with
-    no rows runs only for a MatchAllDocs batch.  One frame, or ``None``
-    without rows."""
-    P = payload["num_partitions"]
-    terms = {f: np.asarray(ts, dtype=object)
-             for f, ts in payload["needed_terms"].items() if ts}
-    outs = []
-    for pid in sorted(pids):
-        res = {f: shards.get(f, {}).get(pid) or _ResidentPid(pid)
-               for f in payload["fields"]}
-        by_term = {}
-        for f, ts in terms.items():
-            bt = res[f].by_term(ts)
-            if bt:
-                by_term[f] = bt
-        if not by_term and not payload.get("has_matchall"):
-            continue
-        norms_live = {f: res[f].norms_live(fm["norms_path"],
-                                           fm["deletes_path"], P)
-                      for f, fm in payload["fields"].items()}
-        out = core(payload, pid, by_term, norms_live)
-        if len(out):
-            outs.append(out)
-    return pd.concat(outs, ignore_index=True) if outs else None
-
-
-def _read_group(payload: dict, core, files: dict[str, list[str]],
-                pids: list[int]) -> pd.DataFrame | None:
-    """One file-plan task: read the group's files once per field for
-    that field's terms (:func:`_read_shard`), then :func:`_run_pids`."""
-    shards = {f: _read_shard(fs, pids, payload["needed_terms"][f])
-              for f, fs in files.items()}
-    return _run_pids(payload, core, shards, pids)
+    return _columns(["qid", "doc_id", "score"], [out_qid, out_doc, out_score])
 
 
 def _run_file_plan(spark: SparkSession,
@@ -1062,14 +969,6 @@ def _run_file_plan(spark: SparkSession,
     pids = list(range(P)) if payload.get("has_matchall") else None
     return _file_plan(spark, read, partial(_read_group, payload, core),
                       schema, _kernel_task_count(P, total_df), pids)
-
-
-def _top_k_window(df: DataFrame, k: int) -> DataFrame:
-    """Global top-``k`` per query over per-partition rows: a rank
-    window in (score desc, doc_id asc) order."""
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (df.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k).drop("rank"))
 
 
 SLOPPY_KERNEL_SCHEMA = T.StructType([
@@ -1113,9 +1012,8 @@ def search_sloppy_kernel(spark: SparkSession, index, queries,
                                    collect_offsets=gap_offsets)
     if not planned:
         return local_empty(spark, SLOPPY_KERNEL_SCHEMA)
-    fmeta = _kernel_payload(manifest, precision)
-    payload = dict(
-        fmeta, fields={"": fmeta}, needed_terms={"": sorted(needed)},
+    payload = _kernel_payload(
+        manifest, precision, needed,
         # exact (slop=0) members of a mixed batch carry their gapped
         # PhraseQuery offsets (english analyzer) — the scan path is
         # gap-aware, and the two must stay bit-identical.  Sloppy
@@ -1136,16 +1034,16 @@ def search_sloppy_kernel(spark: SparkSession, index, queries,
 
 
 def _sloppy_core(payload: dict, pid: int, per_field_by_term: dict,
-                 norms_live: dict) -> pd.DataFrame:
+                 norms_live: dict) -> dict | None:
     """Per-pid sloppy/exact phrase kernel: each query's partition-local
     match set (:func:`_leaf_match`), deletes masked, per-partition
-    top-k."""
+    top-k; the pid's columns as arrays, or ``None`` without hits."""
     P = payload["num_partitions"]
     kk = payload["k"]
     norms, live = norms_live[""]
     ctx = _DecodeCtx(per_field_by_term.get("", {}), payload, pid,
                      ckey=payload["cache_key"])
-    out = {"qid": [], "doc_id": [], "freq": [], "norm": [], "score": []}
+    o_q, o_d, o_f, o_n, o_s = [], [], [], [], []
     for qid, terms, w, q_slop, offs in payload["queries"]:
         docs, sc, fr = _leaf_match(ctx, norms, terms, w, payload["cache"],
                                    payload["precision"], slop=q_slop,
@@ -1158,14 +1056,13 @@ def _sloppy_core(payload: dict, pid: int, per_field_by_term: dict,
         order = np.lexsort((docs, -sc))
         if kk is not None and order.size > kk:
             order = order[:kk]
-        out["qid"].append(np.full(order.size, qid, dtype=np.int64))
-        out["doc_id"].append(docs[order] * P + pid)
-        out["freq"].append(fr[order])
-        out["norm"].append(norms[docs[order]].astype(np.int32))
-        out["score"].append(sc[order])
-    if not out["qid"]:
-        return pd.DataFrame()
-    return pd.DataFrame({c: np.concatenate(v) for c, v in out.items()})
+        o_q.append(np.full(order.size, qid, dtype=np.int64))
+        o_d.append(docs[order] * P + pid)
+        o_f.append(fr[order])
+        o_n.append(norms[docs[order]].astype(np.int32))
+        o_s.append(sc[order])
+    return _columns(["qid", "doc_id", "freq", "norm", "score"],
+                    [o_q, o_d, o_f, o_n, o_s])
 
 
 COUNT_SCHEMA = T.StructType([
@@ -1672,13 +1569,14 @@ BM25F_SCHEMA = T.StructType([
 
 def _bm25f_core(payload: dict, pid: int,
                 per_field_by_term: dict[str, dict],
-                norms_live: dict[str, tuple]) -> pd.DataFrame:
+                norms_live: dict[str, tuple]) -> dict | None:
     """BM25F per-partition kernel (``CombinedFieldQuery.java:322-470``):
     per-doc weighted tf sum over every (field, term) pair, combined
     re-encoded norm (``MultiNormsLeafSimScorer.java:140-153``), ONE BM25
     score against the pseudo-field stats — all from this partition's
     co-located postings; only top-k rows leave.  Every field's norms
-    enter the combined norm, postings rows here or not."""
+    enter the combined norm, postings rows here or not.  The pid's
+    columns as arrays, or ``None`` without hits."""
     from pim_lucene_spark.functions.smallfloat import (byte4_to_int,
                                                        int_to_byte4)
 
@@ -1736,18 +1634,8 @@ def _bm25f_core(payload: dict, pid: int,
         out_doc.append(union[order] * P + pid)
         out_freq.append(freq[order])
         out_score.append(sc[order])
-
-    if not out_qid:
-        return pd.DataFrame(
-            {"qid": [], "doc_id": [], "freq": [], "score": []}).astype(
-            {"qid": np.int64, "doc_id": np.int64, "freq": np.float64,
-             "score": np.float64})
-    return pd.DataFrame({
-        "qid": np.concatenate(out_qid),
-        "doc_id": np.concatenate(out_doc),
-        "freq": np.concatenate(out_freq),
-        "score": np.concatenate(out_score),
-    })
+    return _columns(["qid", "doc_id", "freq", "score"],
+                    [out_qid, out_doc, out_freq, out_score])
 
 
 def eval_bm25f(spark: SparkSession, manifests: dict[str, IndexManifest],
@@ -1857,14 +1745,15 @@ def search_compound_local(index, queries,
     if facet_dim is not None:
         from pim_lucene_spark.operators.facets import facet_values
         vals = facet_values(fdir)
-        agg = (res.groupby(["qid", "code"], as_index=False)["n"].sum())
+        agg = (pd.DataFrame(res).groupby(["qid", "code"], as_index=False)
+               ["n"].sum())
         agg["value"] = agg.pop("code").map(lambda c: vals[int(c)])
         agg = agg.sort_values(["qid", "n", "value"],
                               ascending=[True, False, True])
         return (agg.groupby("qid", sort=True).head(int(facet_top_n))
                 [["qid", "value", "n"]].reset_index(drop=True))
     if agg_mode is not None:
-        return _agg_mode_merge(agg_mode, res)
+        return _agg_mode_merge(agg_mode, pd.DataFrame(res))
     return _top_k(res, k)
 
 

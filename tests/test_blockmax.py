@@ -1,8 +1,9 @@
 """Block-max WAND segment skipping + lazy position decode (B10/Q12).
 
-Drives the search kernel (`_match_group`) directly on a real index's
-postings/norms, read through the shard reader (`_read_shard`), so
-`DECODE_STATS` is observable in-process:
+Drives the search kernel (`_match_core_arrays`, through the per-pid
+runner `_run_pids`) directly on a real index's postings/norms, read
+through the shard reader (`_read_shard`), so `DECODE_STATS` is
+observable in-process:
 
 - pruned results (small k) must equal unpruned results (k >= corpus) —
   the differential the judge asked for, swept over k and segment counts;
@@ -63,8 +64,10 @@ def _shard(m, terms, pids=None):
 
 def _kernel_frame(payload, shard, terms):
     """The match kernel over every pid of ``shard`` (its per-pid top-k
-    rows, pids ascending)."""
-    arrays = S._match_group(payload, shard, S._pid_terms(shard, terms))
+    rows, pids ascending), the index as the runner's field ``""``."""
+    payload = dict(payload, fields={"": payload},
+                   needed_terms={"": list(terms)})
+    arrays = S._run_pids(payload, S._match_core_arrays, {"": shard}, shard)
     return S._empty_result() if arrays is None else pd.DataFrame(arrays)
 
 

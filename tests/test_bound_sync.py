@@ -70,9 +70,10 @@ def _load_pid(m, needed):
     """``{pid: (rows per query term, norms)}`` through the shard reader."""
     (files, pids), = S._postings_file_groups({"": m}, 1)
     shard = S._read_shard(files[""], pids, needed)
-    return {pid: (by_term, shard[pid].norms_live(m.norms_path, None,
-                                                 m.num_partitions)[0])
-            for pid, by_term in S._pid_terms(shard, needed).items()}
+    terms = np.asarray(needed, dtype=object)
+    return {pid: (res.by_term(terms), res.norms_live(m.norms_path, None,
+                                                     m.num_partitions)[0])
+            for pid, res in shard.items()}
 
 
 def _payload(m, queries, k, spark):
@@ -103,7 +104,8 @@ def _run_sync_inprocess(m, queries, k, spark, budget0):
                 sorted({x for mm in progress.values() for x in mm}))
         for pid in pids:
             by_term, norms = parts[pid]
-            arrays = S._match_core_arrays(p, pid, norms, by_term)
+            arrays = S._match_core_arrays(p, pid, {"": by_term},
+                                          {"": (norms, None)})
             outs.append(S._empty_result() if arrays is None
                         else pd.DataFrame(arrays))
         pdf = pd.concat(outs, ignore_index=True)

@@ -227,9 +227,10 @@ def _run_compound_core(spark, m, bq, k=10):
         reset_decode_stats()
         norms_live = {"": shard[pid].norms_live(
             m.norms_path, None, m.num_partitions)}
-        outs.append(_compound_core(payload, pid,
-                                   {"": shard[pid].by_term(terms)},
-                                   norms_live))
+        out = _compound_core(payload, pid, {"": shard[pid].by_term(terms)},
+                             norms_live)
+        if out is not None:
+            outs.append(pd.DataFrame(out))
         total += reset_decode_stats()["doc_bytes"]
     return total, pd.concat(outs, ignore_index=True)
 

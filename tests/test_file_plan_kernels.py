@@ -225,3 +225,115 @@ def test_matchall_runs_pids_without_postings(spark, tmp_path):
           ["qid", "doc_id"])
     counts = C.count_compound(spark, {"": m}, "", batch)
     assert counts == {0: 11, 1: 11}
+
+
+# "ghost" lives only in docs the fixture deletes: it keeps its postings
+# and stats, so every pid holding it runs its kernel, which matches no
+# live doc and returns no columns
+GHOST = [(0, BooleanQuery(must=["ghost"])),
+         (1, BooleanQuery(should=[PhraseQuery("ghost red"), "ghost"])),
+         (2, DisMaxQuery(clauses=["ghost"], tie=0.5))]
+GHOST_TEXT = [(0, "ghost red"), (1, "ghost")]
+RANGES = [("lo", 0, 10), ("mid", 5, 30), ("hi", 30, 99)]
+
+
+@pytest.fixture(scope="module")
+def ghost_idx(spark, tmp_path_factory):
+    pdf = _corpus(n=80, seed=9)
+    ghost = [3, 17, 42]
+    for col in ("content", "title"):
+        pdf.loc[ghost, col] = pdf.loc[ghost, col] + " ghost red"
+    cfg = IndexConfig(num_partitions=4, num_segments=2, build_chunks=1)
+    sdf = spark.createDataFrame(pdf)
+    idx = FullTextIndex(spark, build_index(
+        spark, sdf, str(tmp_path_factory.mktemp("ghost")), cfg,
+        content_col="content", id_col="doc_id",
+        meta_cols=["category", "size"]))
+    idx.build_facets("category")
+    idx.build_docvalues("size")
+    mf = MultiFieldIndex.build(
+        spark, sdf, str(tmp_path_factory.mktemp("ghost_mf")),
+        fields={"title": "title", "body": "content"}, cfg=cfg,
+        id_col="doc_id")
+    idx.delete_docs(ghost)
+    mf.delete_docs(ghost)
+    return idx.manifest, mf
+
+
+# name → (file-plan entry, serving entry or None), each over a batch
+EMPTY_CASES = {
+    "search_compound": (
+        lambda s, m, mf, b: C.search_compound(s, {"": m}, "", b, k=6),
+        lambda m, b: C.search_compound_local(m, b, k=6)),
+    "facet_counts": (
+        lambda s, m, mf, b: FC.facet_counts(s, m, b, "category"),
+        lambda m, b: FC.facet_counts_local(m, b, "category")),
+    "facet_stats": (
+        lambda s, m, mf, b: DV.facet_stats(s, m, b, "category", "size"),
+        lambda m, b: DV.facet_stats_local(m, b, "category", "size")),
+    "sort_by_field": (
+        lambda s, m, mf, b: DV.sort_by_field(s, m, b, "size", k=5),
+        lambda m, b: DV.sort_by_field_local(m, b, "size", k=5)),
+    "collapse_topk": (
+        lambda s, m, mf, b: DV.collapse_topk(s, m, b, "category", k=3,
+                                             group_size=2),
+        lambda m, b: DV.collapse_topk_local(m, b, "category", k=3,
+                                            group_size=2)),
+    "facet_ranges": (
+        lambda s, m, mf, b: DV.facet_ranges(s, m, b, "size", RANGES),
+        lambda m, b: DV.facet_ranges_local(m, b, "size", RANGES)),
+    "eval_bm25f": (
+        lambda s, m, mf, b: mf.search_bm25f(
+            BM25F if b is BATCH else [(0, "ghost")], k=8,
+            field_weights={"title": 2.0, "body": 1.0}, plan="kernel"),
+        None),
+    "search_sloppy_kernel": (
+        lambda s, m, mf, b: C.search_sloppy_kernel(
+            s, m, SLOPPY if b is BATCH else GHOST_TEXT, k=6, slop=SLOPS),
+        None),
+}
+
+
+def _assert_empty(got, batch, name) -> None:
+    if name == "facet_ranges":   # one zero count per (query, range)
+        assert len(got) == len(batch) * len(RANGES)
+        assert not got.n.any()
+    else:
+        assert len(got) == 0
+
+
+@pytest.mark.parametrize("name", list(EMPTY_CASES))
+def test_no_match_batch_returns_empty_schema(spark, ghost_idx, name,
+                                             monkeypatch):
+    """A batch whose terms exist but match no live doc: every pid's
+    kernel returns ``None``, and each entry point still answers with its
+    schema (a matching batch's), on the file plan and when serving."""
+    m, mf = ghost_idx
+    run, local = EMPTY_CASES[name]
+    want, got = run(spark, m, mf, BATCH), run(spark, m, mf, GHOST)
+    assert want.count()
+    assert got.schema == want.schema
+    _assert_empty(got.toPandas(), GHOST, name)
+    if local is None:
+        return
+    want = local(m, BATCH)
+    outs = []
+    real = C._compound_core
+
+    def recording(*args):
+        outs.append(real(*args))
+        return outs[-1]
+
+    monkeypatch.setattr(C, "_compound_core", recording)
+    got = local(m, GHOST)
+    assert outs and all(o is None for o in outs)
+    assert len(want)
+    assert got.dtypes.to_dict() == want.dtypes.to_dict()
+    assert list(got.columns) == list(want.columns)
+    _assert_empty(got, GHOST, name)
+
+
+def test_no_match_batch_counts_zero(spark, ghost_idx):
+    m, _ = ghost_idx
+    assert C.count_compound(spark, {"": m}, "", GHOST) == {0: 0, 1: 0,
+                                                          2: 0}

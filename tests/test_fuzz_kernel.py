@@ -96,8 +96,9 @@ def _engine_search(corpus, queries, P, segs, stripe_cap, k, bounds=None):
     for pid, pdf in postings.items():
         res = S._ResidentPid(pid, pa.Table.from_pandas(
             pdf, schema=PA_POSTINGS_SCHEMA, preserve_index=False))
-        arrays = S._match_core_arrays(payload, pid, norms[pid],
-                                      res.by_term(terms))
+        arrays = S._match_core_arrays(payload, pid,
+                                      {"": res.by_term(terms)},
+                                      {"": (norms[pid], None)})
         outs.append(S._empty_result() if arrays is None
                     else pd.DataFrame(arrays))
     res = pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
