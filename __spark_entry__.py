@@ -954,14 +954,12 @@ def _sloppy_bool_specs():
 
 def _q_sloppy_boolean(spark, sf_dir):
     """Sloppy phrase clauses inside booleans, hosted by the compound
-    kernel (plan='kernel' asserts the route): index positions feed the
-    exact Lucene SloppyPhraseMatcher; scores must equal the recursive-
+    kernel: index positions feed the exact Lucene SloppyPhraseMatcher; scores must equal the recursive-
     CTE DuckDB oracle."""
     from pim_lucene_spark.plans.boolean import BooleanQuery, search_boolean
     m = _get_index(spark, sf_dir)
     bqs = [(qid, BooleanQuery(**spec)) for qid, spec in _sloppy_bool_specs()]
-    res = search_boolean(spark, m, bqs, k=10, precision="float64",
-                         plan="kernel")
+    res = search_boolean(spark, m, bqs, k=10, precision="float64")
     return res.select("qid", "doc_id", F.round("score", 6).alias("score"))
 
 

@@ -19,11 +19,10 @@ import json
 import os
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from pim_lucene_spark.config import IndexConfig
-from pim_lucene_spark.manifest import IndexManifest
+from pim_lucene_spark.manifest import IndexManifest, resolve_manifests
 from pim_lucene_spark.sparkutil import local_empty
 
 
@@ -246,10 +245,9 @@ class FullTextIndex:
             # constant.  Both therefore ride the compound kernel
             # (per-partition k smallest live matching ids, P·k
             # exchange) instead of shipping a docs-table crossJoin or
-            # the inner match set at k=10**9; non-kernelable inners
-            # fall to the (bounded) join-chain matchall frame.
-            # precision float64 keeps score == boost bit-exact
-            # (constant scores never touch BM25 floats).
+            # the inner match set at k=10**9.  precision float64
+            # keeps score == boost bit-exact (constant scores never
+            # touch BM25 floats).
             from pim_lucene_spark.plans.query import PhraseQuery, TermQuery
             clause_ok = (str, TermQuery, PhraseQuery, BooleanQuery,
                          MatchAllDocsQuery, SynonymQuery) + MultiTermQueryT
@@ -446,7 +444,7 @@ class MultiFieldIndex:
         self.index_dir = index_dir
         self.fields = fields
         self.default_field = default_field
-        self.manifests = manifests
+        self.manifests, _ = resolve_manifests(manifests, default_field)
 
     @classmethod
     def build(cls, spark: SparkSession, docs: DataFrame, index_dir: str,
@@ -531,8 +529,9 @@ class MultiFieldIndex:
         """Classic query strings WITH ``field:`` bindings — e.g.
         ``'+title:merge body:scan*'``.  Each parsed query becomes a
         boolean whose clauses evaluate on their field's sub-index
-        (unfielded clauses take the default field), composed by the
-        shared join chain; single clauses run as a one-MUST boolean
+        (unfielded clauses take the default field), composed per
+        partition by the compound kernel (fields share one pid space);
+        single clauses run as a one-MUST boolean
         (identical score).  ``synonyms`` applies query-time term
         expansion (``apply_synonyms``).  Returns (qid, doc_id, score)."""
         from pim_lucene_spark.plans.boolean import (BooleanQuery,
@@ -564,11 +563,10 @@ class MultiFieldIndex:
         but evaluated by the resident compound kernel over every field's
         sub-index (shared pid space).  Returns a pandas frame
         (qid, doc_id, score); row-identical to the distributed fielded
-        plans (differential-tested).  Fuzzy clauses expand against the
-        resident term dictionary and sloppy clauses run the resident
-        matcher over stored positions; only over-cap constant-score
-        multiterm expansions raise (``ExpansionTooWide`` → use the
-        distributed path)."""
+        plans (differential-tested).  Fuzzy and constant-score multiterm
+        clauses expand against the resident term dictionary (at any
+        width) and sloppy clauses run the resident matcher over stored
+        positions."""
         from pim_lucene_spark.plans.boolean import BooleanQuery
         from pim_lucene_spark.plans.compound import search_compound_local
         from pim_lucene_spark.plans.parser import parse_query
@@ -763,8 +761,7 @@ class MultiFieldIndex:
 
     def search_bm25f(self, queries: list[tuple[int, str]], k: int = 10,
                      field_weights: dict[str, float] | None = None,
-                     precision: str = "float32",
-                     plan: str = "auto") -> DataFrame:
+                     precision: str = "float32") -> DataFrame:
         """True BM25F ranking — the sandbox ``CombinedFieldQuery`` scoring
         (``CombinedFieldQuery.java:322-470``): the query's terms across all
         fields score as ONE pseudo-term in ONE pseudo-field.
@@ -785,8 +782,9 @@ class MultiFieldIndex:
         score-sum exactly where BM25F says it should (shared idf and
         length normalization).  Exact and exhaustive by construction —
         like Lucene's scorer it iterates the full disjunction; the plan is
-        one IN-pushdown postings scan per field, one freq shuffle, a
-        column-pruned norms join, and a top-k window.
+        the per-partition BM25F kernel over every field's co-located
+        postings and norms (fields share ``num_partitions``), then a
+        top-k window over ≤ P·k rows per query.
 
         Float caveat: per-doc freq and norm sums run in column order, not
         Lucene's docid-iterator order; with field weights that are small
@@ -794,23 +792,18 @@ class MultiFieldIndex:
         sum is exact, so order cannot matter.  Returns
         (qid, doc_id, freq, score).
         """
-        from pyspark.sql import Window
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
         from pim_lucene_spark.functions import bm25
-        from pim_lucene_spark.functions.smallfloat import (
-            byte4_to_int,
-            int_to_byte4,
-        )
         from pim_lucene_spark.operators.search import (
             _normalize_queries,
             _tokenize_queries,
-            search,
         )
 
         weights = field_weights or {f: 1.0 for f in self.fields}
-        manifests = {f: self._field(f) for f in weights}
+        manifests, _ = resolve_manifests(
+            {f: self._field(f) for f in weights})
         any_m = next(iter(manifests.values()))
         tokenizer, k1, b = any_m.tokenizer, any_m.k1, any_m.b
 
@@ -864,111 +857,24 @@ class MultiFieldIndex:
         if not planned:
             return empty
 
-        from pim_lucene_spark.plans.compound import (eval_bm25f,
-                                                     kernel_hostable)
-        if plan not in ("auto", "kernel", "join"):
-            raise ValueError(f"unknown plan {plan!r}")
-        if plan != "join" and kernel_hostable(manifests):
-            # in-kernel plan (plans/compound.py): per-field postings are
-            # co-located by doc_id % P, so the weighted-tf disjunction,
-            # combined-norm re-encode and single BM25 score all run per
-            # partition; only top-k rows shuffle — no k=10**9 per-term
-            # sub-searches, no freq shuffle, no norms join
-            fnames = list(manifests)
-            specs = []
-            for qid in planned:
-                terms = per_q[qid][0]
-                specs.append({"qid": int(qid), "op": "bm25f",
-                              "pairs": [(f, t,
-                                         float(np.float32(weights[f])))
-                                        for f in fnames for t in terms]})
-            needed = sorted({t for qid in planned for t in per_q[qid][0]})
-            return eval_bm25f(
-                self.spark, manifests, specs,
-                {int(q): float(w) for q, w in planned.items()}, cache,
-                [(f, float(np.float32(weights[f]))) for f in fnames],
-                needed, k, precision)
-        if plan == "kernel":
-            raise ValueError("fields differ in num_partitions; the "
-                             "BM25F kernel cannot host this batch")
-
-        # weighted tf per (query, doc): one sub-query per DISTINCT term per
-        # field (a hot term shared by N queries is decoded and scored
-        # once, not N times), fanned back out to qids via a broadcast
-        # mapping before the single freq shuffle
-        terms_unique = list(dict.fromkeys(
-            t for qid in planned for t in per_q[qid][0]))
-        tid_of = {t: i for i, t in enumerate(terms_unique)}
-        sub = [(i, t) for i, t in enumerate(terms_unique)]
-        mapping = self.spark.createDataFrame(
-            [(tid_of[t], qid) for qid in planned for t in per_q[qid][0]],
-            "tid long, qid long")
-        parts = []
-        for f, m in manifests.items():
-            res = search(self.spark, m, sub, k=None, precision=precision)
-            parts.append(res.select(
-                F.col("qid").alias("tid"), "doc_id",
-                (F.col("freq").cast("double")
-                 * float(np.float32(weights[f]))).alias("wtf")))
-        un = parts[0]
-        for p in parts[1:]:
-            un = un.unionByName(p)
-        freq = (un.join(F.broadcast(mapping), "tid")
-                .groupBy("qid", "doc_id").agg(F.sum("wtf").alias("freq")))
-
-        # combined norm byte per doc (MultiNormsLeafSimScorer.java:140-153)
+        # per-field postings are co-located by doc_id % P, so the
+        # weighted-tf disjunction, combined-norm re-encode and single
+        # BM25 score all run per partition (plans/compound.py); only
+        # top-k rows shuffle
+        from pim_lucene_spark.plans.compound import eval_bm25f
         fnames = list(manifests)
-        norms = None
-        for f in fnames:
-            part = (self.spark.read.parquet(manifests[f].docs_path)
-                    .select("doc_id", F.col("norm").alias(f"norm_{f}")))
-            norms = part if norms is None else norms.join(part, "doc_id",
-                                                          "full")
-        ws = [float(np.float32(weights[f])) for f in fnames]
-
-        @F.pandas_udf(T.IntegerType())
-        def combine_norms(s: pd.DataFrame) -> pd.Series:
-            acc = np.zeros(len(s), dtype=np.float32)
-            for w, f in zip(ws, fnames):
-                v = s[f"norm_{f}"].to_numpy(dtype=np.float64,
-                                            na_value=np.nan)
-                dec = byte4_to_int(np.nan_to_num(v).astype(np.int64))
-                acc += np.where(np.isnan(v), np.float32(0.0),
-                                (np.float32(w)
-                                 * dec.astype(np.float32))).astype(np.float32)
-            rounded = np.floor(acc + np.float32(0.5)).astype(np.int64)
-            return pd.Series(int_to_byte4(rounded).astype(np.int32))
-
-        norms = norms.select(
-            "doc_id",
-            combine_norms(F.struct(*[F.col(f"norm_{f}") for f in fnames]))
-            .alias("nb"))
-
-        wq = F.create_map(*[F.lit(x) for kv in planned.items() for x in kv])
-        joined = (freq.join(norms, "doc_id")
-                  .withColumn("w", wq[F.col("qid")]))
-
-        cache_arr = cache
-
-        @F.pandas_udf(T.DoubleType())
-        def score_udf(freq_s: pd.Series, nb_s: pd.Series,
-                      w_s: pd.Series) -> pd.Series:
-            out = np.empty(len(freq_s), dtype=np.float64)
-            fq = freq_s.to_numpy(np.float64)
-            nb = nb_s.to_numpy(np.int64)
-            w = w_s.to_numpy(np.float64)
-            for wv in np.unique(w):
-                m = w == wv
-                out[m] = bm25.score(fq[m], nb[m], float(wv), cache_arr,
-                                    precision).astype(np.float64)
-            return pd.Series(out)
-
-        scored = joined.select("qid", "doc_id", "freq",
-                               score_udf("freq", "nb", "w").alias("score"))
-        win = Window.partitionBy("qid").orderBy(F.desc("score"),
-                                                F.asc("doc_id"))
-        return (scored.withColumn("rank", F.row_number().over(win))
-                .filter(F.col("rank") <= k).drop("rank"))
+        specs = []
+        for qid in planned:
+            terms = per_q[qid][0]
+            specs.append({"qid": int(qid), "op": "bm25f",
+                          "pairs": [(f, t, float(np.float32(weights[f])))
+                                    for f in fnames for t in terms]})
+        needed = sorted({t for qid in planned for t in per_q[qid][0]})
+        return eval_bm25f(
+            self.spark, manifests, specs,
+            {int(q): float(w) for q, w in planned.items()}, cache,
+            [(f, float(np.float32(weights[f]))) for f in fnames],
+            needed, k, precision)
 
     def field_stats(self) -> dict[str, dict]:
         """Per-field collection stats (each field has its own avgdl)."""

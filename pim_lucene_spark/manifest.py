@@ -134,11 +134,18 @@ def resolve_manifests(index, default_field: str = ""
     """Normalize every index-argument shape the multi-surface entry
     points accept — one manifest, an index-dir path, or a
     ``{field: manifest|path}`` dict — to ``(manifests, default_field)``.
-    Shared by the facet / doc-values / compound serving surfaces so the
-    field-resolution rules can never diverge."""
+    Shared by every multi-field surface so the field-resolution rules
+    can never diverge.  Fields must share ``num_partitions``: pid N of
+    every field then holds the same doc subset, the co-location that
+    per-partition composition needs (``ValueError`` otherwise)."""
     if isinstance(index, dict):
         manifests = {f: (IndexManifest.load(m) if isinstance(m, str)
                          else m) for f, m in index.items()}
+        parts = {f: m.num_partitions for f, m in manifests.items()}
+        if len(set(parts.values())) > 1:
+            raise ValueError(f"fields disagree on num_partitions {parts}; "
+                             "per-partition composition needs one shared "
+                             "pid space")
         if default_field not in manifests:
             default_field = next(iter(manifests))
         return manifests, default_field

@@ -527,8 +527,9 @@ def build_index(
     # source frame before the docs table lands on disk.  The one true
     # dependency is doc_count (segment width); it comes free from the ID
     # assignment's per-partition counts, or — for user-ID'd sources —
-    # from one count/min/max job over the source before the overlapped
-    # phase, which also rejects ids outside 0..N-1 (a real scan for
+    # from one count/distinct/min/max job over the source before the
+    # overlapped phase, which also rejects ids that are not exactly
+    # 0..N-1 — out of range or duplicated (a real scan for
     # non-trivial frames, accepted: segment width must be known before
     # any kernel runs).  Resumed builds keep the serial docs-parquet
     # path (the stored snapshot is the stable input there).
@@ -544,11 +545,13 @@ def build_index(
         else:
             df = df.withColumn("doc_id", F.col(id_col).cast("long"))
             ids = df.agg(F.count(F.lit(1)).alias("n"),
+                         F.count_distinct("doc_id").alias("nd"),
                          F.min("doc_id").alias("lo"),
                          F.max("doc_id").alias("hi")).collect()[0]
             doc_count_early = int(ids["n"])
             if doc_count_early and (ids["lo"] != 0
-                                    or ids["hi"] != doc_count_early - 1):
+                                    or ids["hi"] != doc_count_early - 1
+                                    or ids["nd"] != doc_count_early):
                 # segment widths derive from doc_count: fail with the
                 # contract error before any kernel sees the ids
                 raise ValueError(

@@ -1552,9 +1552,8 @@ def search(spark: SparkSession, index: IndexManifest | str,
     exact.  Queries absent from the dict start at page 1.
 
     ``k=None`` returns EVERY match with no per-partition cut and no
-    global rank window — the contract for clause-frame and exhaustive-
-    union consumers (boolean join plan, combined-field exhaustive plan,
-    count paths).  The per-qid window would otherwise sort a query's
+    global rank window — the contract for exhaustive-union consumers
+    (combined-field exhaustive plan, count paths).  The per-qid window would otherwise sort a query's
     entire match set on one task; unbounded consumers aggregate or join
     the frame downstream, so the order is noise they must not pay for.
     """

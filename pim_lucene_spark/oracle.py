@@ -409,11 +409,12 @@ def boolean_bm25_sql(queries: list[tuple[int, dict]], k: int | None = 10,
     """BooleanQuery oracle → (qid, doc_id, score).
 
     ``queries``: ``(qid, {"must": [...], "should": [...], "must_not":
-    [...], "filter": [...], "boost": b})``.  Mirrors the engine's
-    composition exactly (``plans/boolean.py``): inner joins for
+    [...], "filter": [...], "boost": b})``.  Composes with the engine's
+    ``BooleanWeight`` semantics (``plans/boolean.py``): inner joins for
     MUST/FILTER, left joins for SHOULD under a base, chained FULL joins
     for pure-SHOULD, NOT EXISTS for MUST_NOT, and a coalesce-chain score
-    sum in clause-declaration order (deterministic — hash-safe)."""
+    sum in clause-declaration order — the association the compound
+    kernel uses (deterministic — hash-safe)."""
     ctes, selects = [], []
     for qid, spec in queries:
         boost = float(spec.get("boost", 1.0))
@@ -668,11 +669,11 @@ def dismax_bm25_sql(queries: list[tuple[int, dict]], k: int | None = 10,
     """DisjunctionMaxQuery oracle → (qid, doc_id, score).
 
     ``queries``: ``(qid, {"clauses": [text, ...], "tie": t, "boost": b})``
-    with optional per-clause ``(text, boost)`` tuples.  Mirrors
-    ``plans/dismax.py`` exactly: per-clause BM25 selects chained with
-    FULL joins, ``greatest`` of coalesced scores + tie * (ordered sum −
-    max), boost multiplied at the top — the same float64 association
-    order as the engine's Catalyst expression, so hashes match."""
+    with optional per-clause ``(text, boost)`` tuples.  Per-clause BM25
+    selects chained with FULL joins, ``greatest`` of coalesced scores +
+    tie * (ordered sum − max), boost multiplied at the top — the same
+    float64 association order as the compound kernel's dismax fold
+    (``plans/dismax.py``), so hashes match."""
     ctes, selects = [], []
     for qid, spec in queries:
         tie = float(spec.get("tie", 0.0))

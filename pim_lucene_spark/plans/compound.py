@@ -7,11 +7,9 @@ scoring-boolean sum, BM25F weighted-tf merge) therefore never need to
 push per-clause match sets through a shuffle: each partition evaluates
 every clause locally against its co-located postings (shared decode
 cache), composes per doc in numpy — in clause-declaration order, the
-exact float association of the join-chain plan and the DuckDB oracles —
-and emits only its top-k composed rows.  One shuffle of ≤ P·k rows per
-query replaces the former ``k=10**9`` clause frames + full-outer-join
-chains (the round-3 scale defect: a stopword SHOULD clause used to ship
-its entire match set through the exchange).
+float association of the DuckDB oracles — and emits only its top-k
+composed rows: one shuffle of ≤ P·k rows per query, never a clause's
+full match set.
 
 Reference semantics held bit-exactly:
 
@@ -30,19 +28,20 @@ Reference semantics held bit-exactly:
 MatchAllDocs clauses host in-kernel as a constant per-doc contribution
 (never a materialized set; such a batch runs the kernel on every pid,
 postings or not — the reference's ``MatchAllDocsQuery`` scorer is a
-constant iterator).  Constant-score multiterm clauses host in-kernel
-when their expansion (resident term dictionary, pyarrow pushdown) fits
-``MAX_CLAUSE_COUNT`` — the match-set union stays in its partition.
-Sloppy phrase clauses host in-kernel too: the stored per-term position
-streams feed the exact Lucene ``SloppyPhraseMatcher`` traversal
+constant iterator).  Constant-score multiterm clauses host in-kernel at
+any width: the expansion (resident term dictionary, pyarrow pushdown)
+is folded into a sorted doc-id union ``MAX_CLAUSE_COUNT`` terms at a
+time, and the union stays in its partition (Lucene's constant-score
+rewrite is a doc-id set union with no clause cap).  Sloppy phrase
+clauses host in-kernel too: the stored per-term position streams feed
+the exact Lucene ``SloppyPhraseMatcher`` traversal
 (``functions/sloppy.py``) per candidate doc — no corpus re-tokenize,
-no unbounded scan frame.  The one clause family the kernel cannot host
-(over-wide multiterm expansions — the distributed constant-score path
-never materializes a term list) stays on the join-chain path;
-``search_boolean`` routes per query, so a batch mixes both plans.
+no unbounded scan frame.  Every boolean, DisMax, scoring-multiterm,
+fielded boolean and BM25F query therefore has this one plan.
 
 Multi-field batches (``search_boolean_fields``, BM25F) ride the same
-kernel: every field's sub-index shares ``num_partitions``, so pid N of
+kernel: every field's sub-index shares ``num_partitions`` (checked once,
+in :func:`~pim_lucene_spark.manifest.resolve_manifests`), so pid N of
 every field holds the same doc subset — a task reads each field's files
 for its pids and composes per partition.
 
@@ -96,12 +95,6 @@ COMPOUND_SCHEMA = T.StructType([
 
 _EMPTY_I64 = np.empty(0, dtype=np.int64)
 _EMPTY_F64 = np.empty(0, dtype=np.float64)
-
-
-class ExpansionTooWide(NotImplementedError):
-    """A constant-score multi-term clause expands past the kernel cap;
-    the distributed router re-routes the query to the join-chain plan
-    (whose constant-score path never materializes a term list)."""
 
 
 # ---------------------------------------------------------------------------
@@ -306,11 +299,11 @@ def _eval_spec(spec: dict, eval_leaf, precision: str,
     stopword SHOULD under a rare MUST never decodes its full postings,
     the MAXSCORE essential/non-essential split for the based case).
 
-    Float order matches the join-chain plan exactly: the old plan's
-    Catalyst sum runs over coalesced clause columns left-to-right (MUST
-    columns in declaration order, then SHOULD columns); adding a
-    coalesced 0.0 is the float identity, so accumulating only the
-    present clauses in the same order is bit-equal.
+    Float order matches the DuckDB oracle's coalesced clause-column sum
+    exactly: left-to-right over MUST columns in declaration order, then
+    SHOULD columns; adding a coalesced 0.0 is the float identity, so
+    accumulating only the present clauses in the same order is
+    bit-equal.
     """
     def ev(cl, c):
         if cl["kind"] == "scored":
@@ -535,6 +528,26 @@ def _columns(cols: list[str], parts: list[list]) -> dict | None:
     return {c: np.concatenate(p) for c, p in zip(cols, parts)}
 
 
+def _const_union(ctx: _DecodeCtx, slices: tuple) -> np.ndarray:
+    """Sorted rel-doc union of a constant-score expansion on one pid,
+    decoded one slice of terms at a time.  A multi-slice expansion
+    drops each slice's fresh decodes before the next, so the pid holds
+    one slice plus the union however wide the expansion is."""
+    union = _EMPTY_I64
+    for terms in slices:
+        terms = [t for t in terms if t in ctx.by_term]
+        if not terms:
+            continue
+        fresh = [t for t in terms if t not in ctx.decoded]
+        docs = np.concatenate([lp.rel_docs for lp in ctx.get_many(terms)])
+        # unique also sorts (stripe order is not global)
+        union = np.union1d(union, docs)
+        if len(slices) > 1:
+            for t in fresh:
+                ctx.decoded.pop(t, None)
+    return union
+
+
 def _compound_core(payload: dict, pid: int,
                    per_field_by_term: dict[str, dict],
                    norms_live: dict[str, tuple]) -> dict | None:
@@ -693,23 +706,18 @@ def _compound_core(payload: dict, pid: int,
             # constant-score multiterm: sorted union of the expansion's
             # co-located (live) match sets; exact score == weight.
             # Candidate restriction is unnecessary — consumers accept a
-            # superset frame — and the union caches per (field, terms)
+            # superset frame — and the union caches per (field, slices)
             # so repeated wildcards across a batch decode once.
             f = cl["field"]
             ctx = ctxs.get(f)
             if ctx is None:
                 return _EMPTY_I64, _EMPTY_F64
-            key = (f, cl["terms"])
+            key = (f, cl["slices"])
             docs = const_cache.get(key)
             if docs is None:
-                sets = [ctx.get(t).rel_docs for t in cl["terms"]
-                        if t in ctx.by_term]
-                if not sets:
-                    docs = _EMPTY_I64
-                else:  # unique also sorts (stripe order is not global)
-                    docs = np.unique(np.concatenate(sets))
-                    if live.get(f) is not None and docs.size:
-                        docs = docs[live[f][docs]]
+                docs = _const_union(ctx, cl["slices"])
+                if live.get(f) is not None and docs.size:
+                    docs = docs[live[f][docs]]
                 const_cache[key] = docs
             return docs, np.full(docs.size, w, dtype=np.float64)
         # matchall: constant contribution to every co-located live doc;
@@ -1248,72 +1256,13 @@ def eval_aggregate(spark: SparkSession, manifests: dict[str, IndexManifest],
     return _run_file_plan(spark, manifests, payload, _compound_core, schema)
 
 
-def kernel_hostable(manifests: dict[str, IndexManifest]) -> bool:
-    """The compound kernel needs one shared pid space across every
-    field (always true for a single index)."""
-    return len({m.num_partitions for m in manifests.values()}) == 1
-
-
-def clause_kernelable(clause, allow_fielded=None, manifests=None,
-                      field=None) -> bool:
-    """True when a clause tree can evaluate inside the compound kernel:
-    term/phrase leaves (ANY slop — the kernel runs the Lucene sloppy
-    matcher over the stored position streams), fuzzy (driver-expanded),
-    nested booleans, MatchAllDocs (constant per-doc contribution;
-    the kernel runs on every pid, postings or not), and — when
-    ``manifests`` is given — constant-score multiterm whose expansion
-    fits the kernel cap (resident-dictionary probe, cached; the spec
-    build reuses the same read).  Over-wide expansions route to the
-    join-chain plan."""
-    from pim_lucene_spark.plans.boolean import BooleanQuery
-    from pim_lucene_spark.plans.multiterm import (FuzzyQuery,
-                                                  MultiTermQueryT,
-                                                  expand_const_local)
-    from pim_lucene_spark.plans.query import (DocValuesRangeQuery,
-                                              FacetFilterQuery,
-                                              FieldedQuery,
-                                              MatchAllDocsQuery,
-                                              PhraseQuery, SynonymQuery,
-                                              TermQuery)
-
-    from pim_lucene_spark.plans.query import IntervalQuery
-    if isinstance(clause, (MatchAllDocsQuery, SynonymQuery,
-                           FacetFilterQuery, DocValuesRangeQuery,
-                           IntervalQuery)):
-        return True
-    if isinstance(clause, FieldedQuery):
-        if allow_fielded is None:
-            return False
-        return (clause.field in allow_fielded
-                and clause_kernelable(clause.query, allow_fielded,
-                                      manifests, clause.field))
-    if isinstance(clause, BooleanQuery):
-        return all(clause_kernelable(c, allow_fielded, manifests, field)
-                   for role in ("must", "filter", "should", "must_not")
-                   for c in getattr(clause, role))
-    if isinstance(clause, FuzzyQuery):
-        return True
-    if isinstance(clause, MultiTermQueryT):
-        if manifests is None:
-            return False
-        m = manifests.get(field) if field is not None else None
-        if m is None:
-            m = next(iter(manifests.values()))
-        return expand_const_local(m, clause) is not None
-    if isinstance(clause, PhraseQuery):
-        return True  # any slop: the kernel hosts the sloppy matcher too
-    if isinstance(clause, TermQuery) or isinstance(clause, str):
-        return True
-    return False
-
-
 class _SpecBuilder:
     """Flattens typed query trees into kernel specs + leaf lists.
 
     Leaf sids are globally unique across the batch; each leaf carries
     (field, text, boost) and goes through the SAME stats/weight planning
     as the engine search path (``plan_queries``), so clause weights are
-    bit-identical to the join-chain plan's sub-searches.
+    bit-identical to the engine's own term/phrase searches.
     """
 
     def __init__(self, spark, manifests: dict[str, IndexManifest],
@@ -1351,6 +1300,7 @@ class _SpecBuilder:
         (BooleanWeight passes its boost down to scoring sub-weights)."""
         from pim_lucene_spark.plans.boolean import (BooleanQuery,
                                                     _clause_text_boost)
+        import pim_lucene_spark.plans.multiterm as MT
         from pim_lucene_spark.plans.multiterm import (FuzzyQuery,
                                                       MultiTermQueryT,
                                                       expand_const_local,
@@ -1359,12 +1309,14 @@ class _SpecBuilder:
                                                   MatchAllDocsQuery)
 
         if isinstance(clause, FieldedQuery):
+            if clause.field not in self.manifests:
+                raise ValueError(f"unknown field {clause.field!r}; have "
+                                 f"{sorted(self.manifests)}")
             return self._clause(clause.field, clause.query, eff_boost)
         if isinstance(clause, MatchAllDocsQuery):
             # hosted in-kernel as a constant per-doc contribution — the
             # reference scorer is a constant iterator over every live
-            # doc, never a materialized set (the former join-path
-            # crossJoin shipped the whole docs table per query)
+            # doc, never a materialized set
             self.matchall_fields.add(field)
             return {"kind": "matchall",
                     "weight": float(clause.boost) * eff_boost,
@@ -1399,17 +1351,14 @@ class _SpecBuilder:
             # inside a boolean: CONSTANT_SCORE — docs matching ANY
             # expanded term score the clause boost.  The expansion comes
             # from the resident term dictionary (pyarrow pushdown, no
-            # Spark job); past the cap the clause stays on the
-            # distributed constant-score path (which never materializes
-            # a term list), signalled by ExpansionTooWide.
+            # Spark job) at any width; the kernel decodes it in slices
+            # of MAX_CLAUSE_COUNT terms (read here, at spec-build time).
             exp = expand_const_local(self.manifests[field], clause)
-            if exp is None:
-                raise ExpansionTooWide(
-                    f"{type(clause).__name__} expands past the kernel "
-                    "cap; route this query to the join-chain plan")
             self.extra_terms[field].update(exp)
+            step = MT.MAX_CLAUSE_COUNT
             return {"kind": "const_or", "field": field,
-                    "terms": tuple(exp),
+                    "slices": tuple(tuple(exp[i:i + step])
+                                    for i in range(0, len(exp), step)),
                     "weight": float(clause.boost) * eff_boost}
         from pim_lucene_spark.plans.query import (DocValuesRangeQuery,
                                                   FacetFilterQuery,
@@ -1710,9 +1659,6 @@ def search_compound_local(index, queries,
     from pim_lucene_spark.operators.search import _local_rows
     manifests, default_field = resolve_manifests(
         index, default_field if isinstance(index, dict) else "")
-    if len({m.num_partitions for m in manifests.values()}) != 1:
-        raise ValueError("fields disagree on num_partitions; the "
-                         "compound kernel needs one shared pid space")
     payload = _plan_batch(None, manifests, default_field, queries,
                           precision, postings_cache_mb)
     if facet_dim is not None:
@@ -1839,9 +1785,8 @@ def search_compound(spark: SparkSession,
                     postings_cache_mb: int = 0) -> DataFrame:
     """Kernel-side boolean/dismax batch → DataFrame(qid, doc_id, score).
 
-    ``queries``: (qid, BooleanQuery | DisMaxQuery) pairs whose clause
-    trees passed :func:`clause_kernelable`; callers route the rest to the
-    join-chain plan.
+    ``queries``: (qid, BooleanQuery | DisMaxQuery) pairs; every clause
+    family evaluates in the kernel.
     """
     return _compound_frame(spark, manifests,
                            _plan_batch(spark, manifests, default_field,

@@ -116,7 +116,7 @@ def more_like_this(spark: SparkSession, index: IndexManifest | str,
             clauses = [t for t, _ in sorted(terms)]
         queries.append((qid, BooleanQuery(should=clauses)))
     if not queries:
-        from pim_lucene_spark.plans.boolean import BOOL_RESULT_SCHEMA
-        return local_empty(spark, BOOL_RESULT_SCHEMA)
+        from pim_lucene_spark.plans.compound import COMPOUND_SCHEMA
+        return local_empty(spark, COMPOUND_SCHEMA)
     return search_boolean(spark, manifest, queries, k=k,
                           precision=precision)

@@ -21,11 +21,9 @@ dictionary:
   join + map, never a ``collect``).
 - **``scoring_boolean`` collects the expansion** (Lucene semantics cap it
   at ``IndexSearcher.maxClauseCount`` = 1024 — ``TooManyClauses`` is the
-  reference behavior, raised here as ``ValueError``), then runs ONE
-  batched engine search over all (query, term) clauses and composes
-  per-doc scores with a deterministic ord-ordered JVM fold
-  (``F.aggregate`` over ``sort_array`` — reproducible float association
-  order, so the DuckDB oracle hash-matches).
+  reference behavior, raised here as ``ValueError``), then composes the
+  per-doc sum over the expanded term clauses in expansion order inside
+  the compound kernel (``plans/compound.py``).
 
 Fuzzy semantics pin to ``FuzzyTermsEnum.java:239-256``: per-term boost
 ``ed == 0 ? 1 : 1 - ed / min(|term|, |query|)`` (code points, float32),
@@ -53,7 +51,6 @@ import re
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -367,18 +364,14 @@ def expand_fuzzy(spark: SparkSession, manifest: IndexManifest,
     return scored[:q.max_expansions]
 
 
-def expand_const_local(manifest: IndexManifest, q,
-                       cap: int | None = None) -> list[str] | None:
+def expand_const_local(manifest: IndexManifest, q) -> list[str]:
     """Driver-side expansion of a non-fuzzy multi-term query against the
     term-stats Parquet (pyarrow pushdown, no Spark job) for the compound
-    kernel's constant-score hosting: sorted matched terms, or ``None``
-    when the expansion exceeds ``cap`` (the caller keeps such clauses on
-    the distributed constant-score path, which never materializes a term
-    list).  Cached per (build, query) — routing probes and the spec
-    build share one read."""
-    if cap is None:
-        cap = MAX_CLAUSE_COUNT  # read at call time (testable)
-    key = (manifest.build_id or manifest.index_dir, q, int(cap))
+    kernel's constant-score hosting: every matched term, sorted.  No
+    clause cap applies (Lucene's constant-score rewrite is a doc-id set
+    union); the kernel folds wide expansions in slices.  Cached per
+    (build, query) — repeated clauses share one read."""
+    key = (manifest.build_id or manifest.index_dir, q)
     if key in _LOCAL_FUZZY_CACHE:
         return _LOCAL_FUZZY_CACHE[key]
     import re as _re
@@ -416,7 +409,7 @@ def expand_const_local(manifest: IndexManifest, q,
     terms = col.to_pylist()
     if rx is not None:
         terms = [t for t in terms if rx.match(t)]
-    out = sorted(terms) if len(terms) <= cap else None
+    out = sorted(terms)
     if len(_LOCAL_FUZZY_CACHE) > 4096:
         _LOCAL_FUZZY_CACHE.clear()
     _LOCAL_FUZZY_CACHE[key] = out
@@ -507,8 +500,7 @@ def search_multiterm(spark: SparkSession, index: IndexManifest | str,
                      precision: str = "float32") -> DataFrame:
     """Batched multi-term search → DataFrame(qid, doc_id, score).
 
-    ``k=None`` returns every matching doc with no top-k window (clause
-    evaluation inside boolean composition).
+    ``k=None`` returns every matching doc with no top-k window.
 
     ``rewrite='constant_score'``: every matching doc scores the query
     boost; ties (all of them) break doc-id asc.  Fully distributed —
@@ -516,16 +508,17 @@ def search_multiterm(spark: SparkSession, index: IndexManifest | str,
     stage, ``distinct`` is the only shuffle.  FuzzyQuery still selects
     its top-N terms driver-side (inherent to its semantics).
 
-    ``rewrite='scoring_boolean'``: BM25 per expanded term via ONE
-    batched engine search, per-doc sum folded in expansion-ord order
-    (deterministic float association both precisions).
+    ``rewrite='scoring_boolean'``: BM25 per expanded term, the per-doc
+    sum folded in expansion order inside the compound kernel (one
+    pure-SHOULD boolean per query; deterministic float association at
+    both precisions).
     """
     manifest = IndexManifest.load(index) if isinstance(index, str) else index
     empty = local_empty(spark, MT_RESULT_SCHEMA)
     if not queries:
         return empty
     if rewrite == "scoring_boolean":
-        return _search_scoring(spark, manifest, queries, k, precision, empty)
+        return _search_scoring(spark, manifest, queries, k, precision)
     if rewrite != "constant_score":
         raise ValueError(f"unknown rewrite {rewrite!r}")
 
@@ -577,61 +570,24 @@ def search_multiterm(spark: SparkSession, index: IndexManifest | str,
             .select("qid", "doc_id", F.col("boost").alias("score")))
 
 
-def _search_scoring(spark, manifest, queries, k, precision,
-                    empty) -> DataFrame:
+def _search_scoring(spark, manifest, queries, k,
+                    precision) -> DataFrame:
+    """Scoring-boolean rewrite in the compound kernel: each query is a
+    pure-SHOULD boolean over its expanded terms, so the per-doc sum runs
+    in expansion order per partition and (``k`` set) only top-k rows
+    shuffle; ``k=None`` returns every match."""
     from pim_lucene_spark.plans.compound import (_SpecBuilder,
                                                  eval_compound)
 
-    if k is not None:
-        # in-kernel composition: the expansion's per-term match sets
-        # never leave their partition — the per-doc expansion-order sum
-        # runs in the kernel and only per-partition top-k rows shuffle
-        b = _SpecBuilder(spark, {"": manifest}, "")
-        specs = []
-        for qid, q in queries:
-            qboost = float(getattr(q, "boost", 1.0))
-            inner = tuple(
-                b._leaf("", t, tb * qboost)
-                for t, tb in expand_terms(spark, manifest, q))
-            specs.append({"qid": int(qid), "op": "bool", "must": (),
-                          "filter": (), "should": inner, "must_not": (),
-                          "msm": 0})
-        return eval_compound(spark, {"": manifest}, specs, b.leaves, k,
-                             precision)
-    return _search_scoring_join(spark, manifest, queries, k, precision,
-                                empty)
-
-
-def _search_scoring_join(spark, manifest, queries, k, precision,
-                         empty) -> DataFrame:
-    from pim_lucene_spark.operators.search import search
-
-    sub, mapping = [], []
+    b = _SpecBuilder(spark, {"": manifest}, "")
+    specs = []
     for qid, q in queries:
         qboost = float(getattr(q, "boost", 1.0))
-        for ordi, (term, tboost) in enumerate(
-                expand_terms(spark, manifest, q)):
-            sid = len(sub)
-            sub.append((sid, term, tboost * qboost))
-            mapping.append((sid, int(qid), ordi))
-    if not sub:
-        return empty
-    res = search(spark, manifest, sub, k=None, precision=precision)
-    mp = spark.createDataFrame(mapping, "sid long, qid long, ord int")
-    j = (res.select(F.col("qid").alias("sid"), "doc_id", "score")
-         .join(F.broadcast(mp), "sid"))
-    # deterministic double fold in expansion-ord order; float32 mode then
-    # casts the sum to float (BooleanWeight sums clause floats in double,
-    # returns float)
-    folded = F.aggregate(
-        F.sort_array(F.collect_list(F.struct("ord", "score"))),
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x["score"])
-    if precision == "float32":
-        folded = folded.cast("float").cast("double")
-    agg = j.groupBy("qid", "doc_id").agg(folded.alias("score"))
-    if k is None:
-        return agg
-    win = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (agg.withColumn("rank", F.row_number().over(win))
-            .filter(F.col("rank") <= k).drop("rank"))
+        inner = tuple(
+            b._leaf("", t, tb * qboost)
+            for t, tb in expand_terms(spark, manifest, q))
+        specs.append({"qid": int(qid), "op": "bool", "must": (),
+                      "filter": (), "should": inner, "must_not": (),
+                      "msm": 0})
+    return eval_compound(spark, {"": manifest}, specs, b.leaves, k,
+                         precision)

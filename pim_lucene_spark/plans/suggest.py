@@ -239,35 +239,13 @@ def count_matches(spark: SparkSession, index: IndexManifest | str,
         parts.append(res.groupBy("qid")
                      .agg(F.count("*").alias("n_hits")))
     if compound:
-        # boolean/dismax count via the count-only compound kernel when
-        # the clauses qualify (same guards as search_boolean /
-        # search_dismax); the rest (over-cap multiterm expansions,
-        # fielded clauses) fall back to the join plan + groupBy count
-        from pim_lucene_spark.plans.compound import (clause_kernelable,
-                                                     count_compound)
-        kq, jq = [], []
-        for qid, q in compound:
-            mf = {"": manifest}
-            ok = (all(clause_kernelable(c, manifests=mf)
-                      for c in q.clauses)
-                  if isinstance(q, DisMaxQuery)
-                  else clause_kernelable(q, manifests=mf))
-            (kq if ok else jq).append((qid, q))
-        if kq:
-            counts = count_compound(spark, {"": manifest}, "", kq)
-            parts.append(spark.createDataFrame(
-                [(int(q), int(n)) for q, n in counts.items()],
-                "qid long, n_hits long"))
-        if jq:
-            from pim_lucene_spark.plans.boolean import search_boolean
-            from pim_lucene_spark.plans.dismax import search_dismax
-            jb = [(qid, q) for qid, q in jq if isinstance(q, BooleanQuery)]
-            jd = [(qid, q) for qid, q in jq if isinstance(q, DisMaxQuery)]
-            for batch, fn in ((jb, search_boolean), (jd, search_dismax)):
-                if batch:
-                    res = fn(spark, manifest, batch, k=None, plan="join")
-                    parts.append(res.groupBy("qid")
-                                 .agg(F.count("*").alias("n_hits")))
+        # boolean/dismax count via the count-only compound kernel: one
+        # long per query per pid leaves the partitions
+        from pim_lucene_spark.plans.compound import count_compound
+        counts = count_compound(spark, {"": manifest}, "", compound)
+        parts.append(spark.createDataFrame(
+            [(int(q), int(n)) for q, n in counts.items()],
+            "qid long, n_hits long"))
     all_qids = spark.createDataFrame([(int(q),) for q, _ in queries],
                                      "qid long")
     out = parts[0] if parts else None

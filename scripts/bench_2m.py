@@ -107,15 +107,8 @@ def main() -> None:
         return round(min(w), 3)
 
     out["kernel_wall_sec"] = best(
-        lambda: (search_boolean(spark, manifest, bqs, k=K,
-                                plan="kernel").count(),
-                 search_dismax(spark, manifest, dqs, k=K,
-                               plan="kernel").count()))
-    out["join_wall_sec"] = best(
-        lambda: (search_boolean(spark, manifest, bqs, k=K,
-                                plan="join").count(),
-                 search_dismax(spark, manifest, dqs, k=K,
-                               plan="join").count()))
+        lambda: (search_boolean(spark, manifest, bqs, k=K).count(),
+                 search_dismax(spark, manifest, dqs, k=K).count()))
 
     # --- multi-round bound sync vs single pass on hot terms ----------------
     hot = [(200 + i, t) for i, t in enumerate(
@@ -135,8 +128,7 @@ def main() -> None:
     out["delete_write_sec"] = round(time.time() - t0, 3)
     out["deleted_count"] = manifest.deleted_count
     t0 = time.time()
-    post = search_boolean(spark, manifest, bqs, k=K,
-                          plan="kernel").toPandas()
+    post = search_boolean(spark, manifest, bqs, k=K).toPandas()
     out["query_after_delete_sec"] = round(time.time() - t0, 3)
     assert not (post.doc_id % 100 == 0).any() or \
         (post.doc_id[post.doc_id % 100 == 0] >= n_del * 100).all()

@@ -120,27 +120,12 @@ def main() -> None:
     t_scan = best(lambda: brute_force_search(
         docs, SLOPPY_QUERIES, k=K, slop=SLOPS).collect())
 
-    # --- sloppy-in-boolean: kernel vs join plan ----------------------------
+    # --- sloppy-in-boolean on the compound kernel --------------------------
     bqs = []
     for i, s in enumerate(BOOL_SPECS):
         should = [PhraseQuery(t, slop=sl) for t, sl in s["should_sloppy"]]
         bqs.append((200 + i, BooleanQuery(must=s["must"], should=should)))
-    bk = (search_boolean(spark, manifest, bqs, k=K, plan="kernel")
-          .toPandas().sort_values(["qid", "score", "doc_id"],
-                                  ascending=[True, False, True])
-          .reset_index(drop=True))
-    bj = (search_boolean(spark, manifest, bqs, k=K, plan="join")
-          .toPandas().sort_values(["qid", "score", "doc_id"],
-                                  ascending=[True, False, True])
-          .reset_index(drop=True))
-    b_mism = int((bk[["qid", "doc_id"]].values
-                  != bj[["qid", "doc_id"]].values).any(axis=1).sum()) \
-        if len(bk) == len(bj) else -1
-
-    t_bk = best(lambda: search_boolean(spark, manifest, bqs, k=K,
-                                       plan="kernel").collect())
-    t_bj = best(lambda: search_boolean(spark, manifest, bqs, k=K,
-                                       plan="join").collect())
+    t_bk = best(lambda: search_boolean(spark, manifest, bqs, k=K).collect())
 
     out = {
         "docs": int(N_DOCS),
@@ -151,11 +136,8 @@ def main() -> None:
         "speedup": round(t_scan / t_kernel, 2),
         "bool_queries": len(bqs),
         "wall_bool_kernel_sec": round(t_bk, 3),
-        "wall_bool_join_sec": round(t_bj, 3),
-        "bool_speedup": round(t_bj / t_bk, 2),
         "mismatches": mism,
         "score_mismatches": sc_mism,
-        "bool_mismatches": b_mism,
         "reps": REPS,
         "cpus": CPUS,
     }

@@ -196,10 +196,9 @@ def main() -> None:
 
     # --- parsed replay: the same mixed lines through the classic query
     # parser (multi-word line → OR boolean of terms → the compound
-    # kernel; one word → term query).  Differential: kernel vs
-    # join-chain plan rank+float32-score identity on a sample.
+    # kernel; one word → term query); a sample is checked against
+    # resident serving below.
     from pim_lucene_spark.index import FullTextIndex
-    from pim_lucene_spark.plans.boolean import BooleanQuery, search_boolean
     from pim_lucene_spark.plans.parser import parse_query
 
     idx = FullTextIndex(spark, manifest)
@@ -217,17 +216,6 @@ def main() -> None:
     parsed_rows = idx.parse_and_query(pq, k=k).collect()
     parsed_s = time.time() - t0
     psample = pq[::mixed_every]
-    typed = []
-    for qid, s in psample:
-        q = parse_query(s)
-        if not isinstance(q, BooleanQuery):
-            continue  # single-term lines have no join-plan counterpart
-        typed.append((qid, q))
-    joined = search_boolean(spark, manifest, typed, k=k,
-                            plan="join").collect()
-    parsed_mm = rank_diff(
-        [r for r in parsed_rows if r["qid"] in {q for q, _ in typed}],
-        joined, [q for q, _ in typed])
 
     # --- resident serving of the parsed mixed batch: typed queries
     # (term + boolean) through the sharded server's compound serving
@@ -307,7 +295,6 @@ def main() -> None:
         "subset_diff_mismatches": sub_mm,
         "qps_parsed_boolean": round(len(pq) / parsed_s, 2),
         "parsed_diff_sampled": len(typed),
-        "parsed_diff_mismatches": parsed_mm,
         "qps_parsed_serving_replica": round(len(typed_all)
                                             / serve_parsed_s, 2),
         "parsed_serving_diff_mismatches": serve_mm,

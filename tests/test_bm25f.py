@@ -36,8 +36,11 @@ K1, B = 1.2, 0.75
 
 
 def _model_bm25f(docs: pd.DataFrame, query: str,
-                 weights: dict[str, float]) -> dict[int, float]:
-    """Direct float32 model of the reference scoring, from raw text."""
+                 weights: dict[str, float],
+                 precision: str = "float32") -> dict[int, float]:
+    """Direct model of the reference scoring, from raw text, at
+    ``precision`` (the combined norm is float32 either way)."""
+    dt = np.float32 if precision == "float32" else np.float64
     fields = list(weights)
     toks = {f: [str(t).split() for t in docs[f]] for f in fields}
     n_docs = len(docs)
@@ -48,7 +51,7 @@ def _model_bm25f(docs: pd.DataFrame, query: str,
     sum_ttf = sum(int(np.floor(np.float64(np.float32(weights[f]))
                                * sum(len(t) for t in toks[f])))
                   for f in fields)
-    avgdl = np.float32(sum_ttf / float(doc_count))
+    avgdl = dt(sum_ttf / float(doc_count))
     # pseudo term stats
     df_max, ttf = 0, 0
     for t in terms:
@@ -60,15 +63,13 @@ def _model_bm25f(docs: pd.DataFrame, query: str,
                                     * sum(tk.count(t) for tk in toks[f])))
     if df_max == 0:
         return {}
-    idf = np.float32(math.log(1.0 + (doc_count - df_max + 0.5)
-                              / (df_max + 0.5)))
+    idf = dt(math.log(1.0 + (doc_count - df_max + 0.5) / (df_max + 0.5)))
     scores = {}
     for i in range(n_docs):
-        freq = np.float32(0.0)
+        freq = dt(0.0)
         for f in fields:
             for t in terms:
-                freq += np.float32(weights[f]) * np.float32(
-                    toks[f][i].count(t))
+                freq += dt(np.float32(weights[f])) * dt(toks[f][i].count(t))
         if freq <= 0:
             continue
         nv = np.float32(0.0)
@@ -76,12 +77,10 @@ def _model_bm25f(docs: pd.DataFrame, query: str,
             dec = byte4_to_int(int(int_to_byte4(len(toks[f][i]))))
             nv += np.float32(weights[f]) * np.float32(dec)
         nb = int(int_to_byte4(int(np.floor(nv + np.float32(0.5)))))
-        qdl = np.float32(byte4_to_int(nb))
-        cache = np.float32(1.0) / (np.float32(K1) * (
-            (np.float32(1.0) - np.float32(B))
-            + np.float32(B) * qdl / avgdl))
+        qdl = dt(byte4_to_int(nb))
+        cache = dt(1.0) / (dt(K1) * ((dt(1.0) - dt(B)) + dt(B) * qdl / avgdl))
         w = idf
-        scores[i] = float(w - w / (np.float32(1.0) + freq * cache))
+        scores[i] = float(w - w / (dt(1.0) + freq * cache))
     return scores
 
 

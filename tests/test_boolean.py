@@ -394,10 +394,11 @@ def test_count_matches_boolean_sloppy_clause_joins(spark, tmp_path):
 
 
 def test_boolean_and_dismax_join_k_none(spark, tmp_path):
-    """k=None on the join plan returns the full clause-evaluation frame
-    (the documented contract; pre-fix it was a TypeError)."""
+    """k=None returns every match: the same rows as an unbounded k, and
+    equal to the index-free reference."""
     from pim_lucene_spark.plans.boolean import BooleanQuery, search_boolean
     from pim_lucene_spark.plans.dismax import DisMaxQuery, search_dismax
+    from tests.compound_ref import reference_compound
 
     rng = np.random.default_rng(5)
     vocab = ["red", "green", "blue", "apple", "sky"]
@@ -412,11 +413,14 @@ def test_boolean_and_dismax_join_k_none(spark, tmp_path):
     bq = [(0, BooleanQuery(must=["red"], should=["apple"]))]
     dq = [(0, DisMaxQuery(clauses=["red", "apple"], tie=0.3))]
     for fn, batch in ((search_boolean, bq), (search_dismax, dq)):
-        full = fn(spark, m, batch, k=10 ** 9, plan="join").toPandas()
-        none = fn(spark, m, batch, k=None, plan="join").toPandas()
+        full = fn(spark, m, batch, k=10 ** 9).toPandas()
+        none = fn(spark, m, batch, k=None).toPandas()
         a = full.sort_values(["qid", "doc_id"]).reset_index(drop=True)
         b = none.sort_values(["qid", "doc_id"]).reset_index(drop=True)
         pd.testing.assert_frame_equal(a, b)
+        pd.testing.assert_frame_equal(
+            b, reference_compound(spark, docs, {"content": m}, "content",
+                                  batch, k=None), check_exact=True)
 
 
 def test_constant_score_exotic_inner(spark, tmp_path):

@@ -1,7 +1,8 @@
-"""In-kernel compound composition (plans/compound.py) vs the join-chain
-plans — bit-identical scores, and the plan-shape property the kernel
-exists for: only per-partition top-k rows reach the shuffle (the join
-plan shipped every clause's full match set)."""
+"""In-kernel compound composition (plans/compound.py) vs the index-free
+reference (``tests/compound_ref.py``: brute-force clause scans composed
+in pandas) — bit-identical scores, and the plan-shape property the
+kernel exists for: only per-partition top-k rows reach the shuffle,
+never a clause's full match set."""
 
 import numpy as np
 import pandas as pd
@@ -14,6 +15,7 @@ from pim_lucene_spark.plans.boolean import (BooleanQuery, search_boolean,
 from pim_lucene_spark.plans.dismax import DisMaxQuery, search_dismax
 from pim_lucene_spark.plans.multiterm import FuzzyQuery, search_multiterm
 from pim_lucene_spark.plans.query import FieldedQuery, PhraseQuery, TermQuery
+from tests.compound_ref import reference_compound
 
 VOCAB = ["red", "green", "blue", "apple", "brick", "house", "sky",
          "grass", "sunset", "pie", "tart", "only", "the", "fast"]
@@ -57,17 +59,23 @@ BOOL_BATCH = [
 
 def _cmp(a, b):
     a = a.toPandas().sort_values(["qid", "doc_id"]).reset_index(drop=True)
-    b = b.toPandas().sort_values(["qid", "doc_id"]).reset_index(drop=True)
+    if not isinstance(b, pd.DataFrame):
+        b = b.toPandas()
+    b = b.sort_values(["qid", "doc_id"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b, check_exact=True)
     return a
+
+
+def _ref(spark, cidx, batch, k=10, precision="float32"):
+    return reference_compound(spark, _corpus(), {"content": cidx},
+                              "content", batch, k=k, precision=precision)
 
 
 @pytest.mark.parametrize("precision", ["float32", "float64"])
 def test_boolean_kernel_matches_join(spark, cidx, precision):
     got = _cmp(search_boolean(spark, cidx, BOOL_BATCH, k=10,
-                              precision=precision, plan="kernel"),
-               search_boolean(spark, cidx, BOOL_BATCH, k=10,
-                              precision=precision, plan="join"))
+                              precision=precision),
+               _ref(spark, cidx, BOOL_BATCH, precision=precision))
     assert set(got.qid) >= {0, 1, 2, 3, 4, 5, 6}
 
 
@@ -79,33 +87,28 @@ def test_dismax_kernel_matches_join(spark, cidx, precision):
         (2, DisMaxQuery(clauses=[TermQuery("red", boost=3.0), "blue",
                                  "grass"], tie=0.5, boost=2.0)),
     ]
-    _cmp(search_dismax(spark, cidx, batch, k=10, precision=precision,
-                       plan="kernel"),
-         search_dismax(spark, cidx, batch, k=10, precision=precision,
-                       plan="join"))
+    _cmp(search_dismax(spark, cidx, batch, k=10, precision=precision),
+         _ref(spark, cidx, batch, precision=precision))
 
 
 @pytest.mark.parametrize("precision", ["float32", "float64"])
 def test_scoring_boolean_kernel_matches_join(spark, cidx, precision):
-    from pim_lucene_spark.plans.multiterm import (MT_RESULT_SCHEMA,
-                                                  _search_scoring_join)
     batch = [(0, FuzzyQuery("aple", max_edits=2)),
              (1, FuzzyQuery("grass", max_edits=1, boost=2.0))]
-    a = search_multiterm(spark, cidx, batch, k=10,
-                         rewrite="scoring_boolean", precision=precision)
-    b = _search_scoring_join(spark, cidx, batch, 10, precision,
-                             spark.createDataFrame([], MT_RESULT_SCHEMA))
-    _cmp(a, b)
+    for k in (10, None):
+        a = search_multiterm(spark, cidx, batch, k=k,
+                             rewrite="scoring_boolean", precision=precision)
+        _cmp(a, _ref(spark, cidx, batch, k=k, precision=precision))
 
 
 def test_auto_routes_mixed_batch(spark, cidx):
-    """A batch mixing kernel-able and join-only (sloppy clause) queries
-    splits per query and still matches the all-join plan."""
+    """A batch mixing plain and sloppy-clause booleans composes in one
+    kernel batch and matches the reference."""
     batch = BOOL_BATCH[:3] + [
         (9, BooleanQuery(must=[PhraseQuery("red apple", slop=2)],
                          should=["sky"]))]
-    _cmp(search_boolean(spark, cidx, batch, k=10, plan="auto"),
-         search_boolean(spark, cidx, batch, k=10, plan="join"))
+    _cmp(search_boolean(spark, cidx, batch, k=10),
+         _ref(spark, cidx, batch))
 
 
 def test_kernel_shuffle_is_topk_bounded(spark, cidx):
@@ -126,8 +129,8 @@ def test_kernel_shuffle_is_topk_bounded(spark, cidx):
     per_pid = partial.groupby(partial.doc_id % P).size()
     assert (per_pid <= k).all()
 
-    # the join plan's clause frame for the same query (what used to
-    # cross the exchange): the stopword's entire match set
+    # a clause frame for the same query (what a clause-at-a-time plan
+    # would push through the exchange): the stopword's entire match set
     clause_rows = search(spark, cidx, [(0, "red"), (1, "the")], k=10 ** 9
                          ).count()
     # ≥3× even on this 120-doc corpus; the ratio grows with corpus size
@@ -137,21 +140,23 @@ def test_kernel_shuffle_is_topk_bounded(spark, cidx):
 
 # --- multi-field: fielded boolean + BM25F ------------------------------
 
-@pytest.fixture(scope="module")
-def mfidx(spark, tmp_path_factory):
-    from pim_lucene_spark.index import MultiFieldIndex
+def _mf_docs(n=80):
     rng = np.random.default_rng(11)
-    n = 80
-    pdf = pd.DataFrame({
+    return pd.DataFrame({
         "doc_id": range(n),
         "title": [" ".join(rng.choice(VOCAB[:8], size=rng.integers(2, 5)))
                   for _ in range(n)],
         "body": [" ".join(rng.choice(VOCAB, size=rng.integers(6, 20)))
                  for _ in range(n)],
     })
+
+
+@pytest.fixture(scope="module")
+def mfidx(spark, tmp_path_factory):
+    from pim_lucene_spark.index import MultiFieldIndex
     cfg = IndexConfig(num_partitions=4, num_segments=2, build_chunks=1)
     return MultiFieldIndex.build(
-        spark, spark.createDataFrame(pdf),
+        spark, spark.createDataFrame(_mf_docs()),
         str(tmp_path_factory.mktemp("mfcompound")),
         fields={"title": "title", "body": "body"}, cfg=cfg,
         id_col="doc_id")
@@ -159,7 +164,6 @@ def mfidx(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("precision", ["float32", "float64"])
 def test_fielded_boolean_kernel_matches_join(spark, mfidx, precision):
-    from pim_lucene_spark.plans.boolean import _search_boolean_fields_join
     batch = [
         (0, BooleanQuery(must=[FieldedQuery("title", "red")],
                          should=[FieldedQuery("body", "apple"), "sky"])),
@@ -170,20 +174,22 @@ def test_fielded_boolean_kernel_matches_join(spark, mfidx, precision):
     ]
     a = search_boolean_fields(spark, mfidx.manifests, "body", batch, k=10,
                               precision=precision)
-    b = _search_boolean_fields_join(spark, mfidx.manifests, "body", batch,
-                                    10, precision)
-    _cmp(a, b)
+    _cmp(a, reference_compound(spark, _mf_docs(), mfidx.manifests, "body",
+                               batch, k=10, precision=precision))
 
 
 @pytest.mark.parametrize("precision", ["float32", "float64"])
 def test_bm25f_kernel_matches_join(spark, mfidx, precision):
+    from tests.test_bm25f import _model_bm25f
     qs = [(0, "red apple"), (1, "apple"), (2, "green grass sky")]
     w = {"title": 2.0, "body": 1.0}
-    a = mfidx.search_bm25f(qs, k=10, field_weights=w, precision=precision,
-                           plan="kernel")
-    b = mfidx.search_bm25f(qs, k=10, field_weights=w, precision=precision,
-                           plan="join")
-    _cmp(a, b)
+    got = mfidx.search_bm25f(qs, k=10, field_weights=w,
+                             precision=precision).toPandas()
+    for qid, text in qs:
+        exp = _model_bm25f(_mf_docs(), text, w, precision)
+        top = sorted(exp.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
+        mine = got[got.qid == qid]
+        assert dict(zip(mine.doc_id, mine.score)) == dict(top), text
 
 
 def _run_compound_core(spark, m, bq, k=10):
@@ -239,8 +245,8 @@ def test_based_should_clause_decodes_fewer_bytes(spark, tmp_path):
     """MAXSCORE-flavored lookup mode: a stopword SHOULD under a rare,
     segment-localized MUST decodes only the base docs' segments, never
     the stopword's full postings (DECODE_STATS evidence, kernel driven
-    in-process) — and the lookup-mode result still matches the join
-    plan bit-exactly."""
+    in-process) — and the lookup-mode result still matches the
+    reference bit-exactly."""
     rng = np.random.default_rng(3)
     n = 480
     rows = []
@@ -265,9 +271,10 @@ def test_based_should_clause_decodes_fewer_bytes(spark, tmp_path):
     # the stopword decodes only the needle docs' segments (1 of 8)
     assert based_bytes < pure_bytes * 0.6
 
-    exp = search_boolean(
-        spark, m, [(0, BooleanQuery(must=["needle"], should=["the"]))],
-        k=10, plan="join").toPandas()
+    exp = reference_compound(
+        spark, pd.DataFrame({"doc_id": range(n), "content": rows}),
+        {"content": m}, "content",
+        [(0, BooleanQuery(must=["needle"], should=["the"]))], k=10)
     got = (based_out.sort_values(["qid", "score", "doc_id"],
                                  ascending=[True, False, True])
            .groupby("qid").head(10))
@@ -292,9 +299,9 @@ def test_compound_local_matches_distributed(spark, cidx):
         a = (search_compound_local(cidx, batch, k=10)
              .sort_values(["qid", "doc_id"]).reset_index(drop=True))
         b = (search_boolean(spark, cidx, [x for x in batch if x[0] != 20],
-                            k=10, plan="kernel").toPandas())
+                            k=10).toPandas())
         c = (search_dismax(spark, cidx, [x for x in batch if x[0] == 20],
-                           k=10, plan="kernel").toPandas())
+                           k=10).toPandas())
         exp = (pd.concat([b, c], ignore_index=True)
                .sort_values(["qid", "doc_id"]).reset_index(drop=True))
         pd.testing.assert_frame_equal(a.astype(exp.dtypes.to_dict()), exp)
@@ -304,7 +311,7 @@ def test_compound_local_matches_distributed(spark, cidx):
     fb = [(8, BooleanQuery(should=[FuzzyQuery("aple")]))]
     a = (search_compound_local(cidx, fb, k=10)
          .sort_values(["qid", "doc_id"]).reset_index(drop=True))
-    b = (search_boolean(spark, cidx, fb, k=10, plan="kernel").toPandas()
+    b = (search_boolean(spark, cidx, fb, k=10).toPandas()
          .sort_values(["qid", "doc_id"]).reset_index(drop=True))
     pd.testing.assert_frame_equal(a.astype(b.dtypes.to_dict()), b)
 
@@ -338,14 +345,8 @@ def test_sharded_server_serves_boolean_batches(spark, cidx):
 
 def test_random_boolean_trees_kernel_matches_join(spark, cidx):
     """Property fuzz: random boolean trees (roles, msm, boosts, phrases,
-    nesting) — kernel and join plans must agree bit-for-bit at float32.
-
-    Kept small (16 trees, nesting depth ≤ 1, batches of 8): the JOIN
-    side's Catalyst tree grows combinatorially with batch size and
-    nesting — a 40-query deep-nested batch OOMs a 4g driver merely
-    STRINGIFYING the plan, and 12-query batches plan for minutes
-    (measured; the kernel plan is one groupBy regardless of batch
-    shape) — which is the scale story in miniature."""
+    nesting) — the kernel and the reference must agree bit-for-bit at
+    float32 (16 trees, nesting depth ≤ 1, batches of 8)."""
     rng = np.random.default_rng(42)
 
     def rand_clause(depth):
@@ -376,8 +377,8 @@ def test_random_boolean_trees_kernel_matches_join(spark, cidx):
     trees = [(i, rand_bool()) for i in range(16)]
     for lo in range(0, 16, 8):
         batch = trees[lo:lo + 8]
-        _cmp(search_boolean(spark, cidx, batch, k=10, plan="kernel"),
-             search_boolean(spark, cidx, batch, k=10, plan="join"))
+        _cmp(search_boolean(spark, cidx, batch, k=10),
+             _ref(spark, cidx, batch))
 
 
 SLOPPY_BOOL_BATCH = [
@@ -396,12 +397,11 @@ SLOPPY_BOOL_BATCH = [
 @pytest.mark.parametrize("precision", ["float32", "float64"])
 def test_sloppy_boolean_kernel_matches_join(spark, cidx, precision):
     """Sloppy phrase clauses host IN-KERNEL (stored position streams →
-    SloppyPhraseMatcher) — bit-identical to the join plan's scan-path
+    SloppyPhraseMatcher) — bit-identical to the reference's scan-path
     clause frames, including repeated terms and sloppy-in-must_not."""
     got = _cmp(search_boolean(spark, cidx, SLOPPY_BOOL_BATCH, k=10,
-                              precision=precision, plan="kernel"),
-               search_boolean(spark, cidx, SLOPPY_BOOL_BATCH, k=10,
-                              precision=precision, plan="join"))
+                              precision=precision),
+               _ref(spark, cidx, SLOPPY_BOOL_BATCH, precision=precision))
     assert set(got.qid) == {0, 1, 2, 3, 4}
 
 
@@ -412,8 +412,8 @@ def test_sloppy_dismax_kernel_matches_join(spark, cidx):
         (1, DisMaxQuery(clauses=[PhraseQuery("the fast", slop=1)],
                         boost=2.0)),
     ]
-    _cmp(search_dismax(spark, cidx, batch, k=10, plan="kernel"),
-         search_dismax(spark, cidx, batch, k=10, plan="join"))
+    _cmp(search_dismax(spark, cidx, batch, k=10),
+         _ref(spark, cidx, batch))
 
 
 def test_compound_local_hosts_sloppy_clause(spark, cidx):
@@ -422,8 +422,7 @@ def test_compound_local_hosts_sloppy_clause(spark, cidx):
     from pim_lucene_spark.plans.compound import search_compound_local
     loc = (search_compound_local(cidx, SLOPPY_BOOL_BATCH, k=10)
            .sort_values(["qid", "doc_id"]).reset_index(drop=True))
-    dist = (search_boolean(spark, cidx, SLOPPY_BOOL_BATCH, k=10,
-                           plan="kernel").toPandas()
+    dist = (search_boolean(spark, cidx, SLOPPY_BOOL_BATCH, k=10).toPandas()
             .sort_values(["qid", "doc_id"]).reset_index(drop=True))
     pd.testing.assert_frame_equal(loc.astype(dist.dtypes.to_dict()), dist,
                                   check_exact=True)

@@ -91,13 +91,12 @@ def test_compound_and_multiterm_honor_deletes(spark, didx):
     deleted = sorted(set(pre.doc_id))[:8]
     FullTextIndex(spark, didx).delete_docs(deleted)
 
-    for plan in ("kernel", "join"):
-        got = _frame(search_boolean(spark, didx, batch, k=10, plan=plan))
-        exp = (pre[~pre.doc_id.isin(deleted)]
-               .sort_values(["qid", "score", "doc_id"],
-                            ascending=[True, False, True])
-               .groupby("qid").head(10))
-        pd.testing.assert_frame_equal(got, _frame(exp))
+    got = _frame(search_boolean(spark, didx, batch, k=10))
+    exp = (pre[~pre.doc_id.isin(deleted)]
+           .sort_values(["qid", "score", "doc_id"],
+                        ascending=[True, False, True])
+           .groupby("qid").head(10))
+    pd.testing.assert_frame_equal(got, _frame(exp))
 
     mt = search_multiterm(spark, didx, [(0, PrefixQuery("r"))],
                           k=10 ** 6).toPandas()
@@ -228,12 +227,11 @@ def test_bm25f_and_dismax_honor_deletes(spark, tmp_path):
     pre = mf.search_bm25f(qs, k=10 ** 6).toPandas()
     deleted = sorted(set(pre.doc_id))[:6]
     mf.delete_docs(deleted)
-    for plan in ("kernel", "join"):
-        got = (mf.search_bm25f(qs, k=10 ** 6, plan=plan).toPandas()
-               .sort_values(["qid", "doc_id"]).reset_index(drop=True))
-        exp = (pre[~pre.doc_id.isin(deleted)]
-               .sort_values(["qid", "doc_id"]).reset_index(drop=True))
-        pd.testing.assert_frame_equal(got, exp)
+    got = (mf.search_bm25f(qs, k=10 ** 6).toPandas()
+           .sort_values(["qid", "doc_id"]).reset_index(drop=True))
+    exp = (pre[~pre.doc_id.isin(deleted)]
+           .sort_values(["qid", "doc_id"]).reset_index(drop=True))
+    pd.testing.assert_frame_equal(got, exp)
 
     # dismax sloppy clause == the scan-path clause score (single clause:
     # dismax score IS the clause score), auto plan routes it correctly
@@ -282,8 +280,8 @@ def test_update_docs_rejects_missing_uid_column(spark, tmp_path):
 
 def test_random_deletes_compound_kernel_join_and_serving_agree(
         spark, tmp_index_dir):
-    """Random delete sets × boolean/dismax batches: kernel plan, join
-    plan and the serving path must all agree bit-for-bit, and equal the
+    """Random delete sets × boolean/dismax batches: the kernel plan and
+    the serving path must agree bit-for-bit, and equal the
     pre-delete result minus the deleted ids (stats-preserving)."""
     from pim_lucene_spark.operators.search import clear_local_cache
     from pim_lucene_spark.index import FullTextIndex
@@ -316,11 +314,10 @@ def test_random_deletes_compound_kernel_join_and_serving_agree(
                 .groupby("qid").head(k)
                 .sort_values(["qid", "doc_id"]).reset_index(drop=True))
 
-    for plan in ("kernel", "join"):
-        got = _frame(search_boolean(spark, m, batch, k=8, plan=plan))
-        pd.testing.assert_frame_equal(got, expect(pre_b))
-        gotd = _frame(search_dismax(spark, m, dbatch, k=8, plan=plan))
-        pd.testing.assert_frame_equal(gotd, expect(pre_d))
+    got = _frame(search_boolean(spark, m, batch, k=8))
+    pd.testing.assert_frame_equal(got, expect(pre_b))
+    gotd = _frame(search_dismax(spark, m, dbatch, k=8))
+    pd.testing.assert_frame_equal(gotd, expect(pre_d))
     loc = _frame(search_compound_local(m, batch + dbatch, k=8))
     exp = (pd.concat([expect(pre_b), expect(pre_d)])
            .sort_values(["qid", "doc_id"]).reset_index(drop=True))

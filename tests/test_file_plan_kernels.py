@@ -24,6 +24,7 @@ from pim_lucene_spark.plans.boolean import BooleanQuery, search_boolean
 from pim_lucene_spark.plans.dismax import DisMaxQuery
 from pim_lucene_spark.plans.query import MatchAllDocsQuery, PhraseQuery
 from pim_lucene_spark.plans.router import search_with_fallback
+from tests.compound_ref import reference_compound
 
 VOCAB = ["red", "green", "blue", "apple", "house", "sky", "the", "fast",
          "pie", "tart"]
@@ -106,10 +107,25 @@ def _count_ref(m):
                          "n": [int(n.get(q, 0)) for q, _ in BATCH]})
 
 
-def _bm25f(mf, plan):
+def _bm25f(mf):
     return mf.search_bm25f(BM25F, k=8, field_weights={"title": 2.0,
-                                                      "body": 1.0},
-                           plan=plan)
+                                                      "body": 1.0})
+
+
+def _bm25f_ref(spark, mf):
+    """Top-8 of the independent BM25F model, deleted docs excluded
+    (they still count toward the statistics)."""
+    from pim_lucene_spark.operators.deletes import deleted_ids
+    from tests.test_bm25f import _model_bm25f
+    gone = set(deleted_ids(spark, mf.manifests["body"]).toPandas().doc_id)
+    docs = _corpus().rename(columns={"content": "body"})
+    rows = []
+    for qid, text in BM25F:
+        sc = _model_bm25f(docs, text, {"title": 2.0, "body": 1.0})
+        live = sorted(((d, s) for d, s in sc.items() if d not in gone),
+                      key=lambda kv: (-kv[1], kv[0]))[:8]
+        rows += [(qid, d, s) for d, s in live]
+    return pd.DataFrame(rows, columns=["qid", "doc_id", "score"])
 
 
 # name → (file-plan entry point, reference route, sort keys)
@@ -152,8 +168,8 @@ CASES = {
         lambda s, m, mf: DV.facet_stats_local(m, BATCH, "category", "size"),
         ["qid", "value"]),
     "eval_bm25f": (
-        lambda s, m, mf: _bm25f(mf, "kernel"),
-        lambda s, m, mf: _bm25f(mf, "join"),
+        lambda s, m, mf: _bm25f(mf),
+        lambda s, m, mf: _bm25f_ref(s, mf),
         ["qid", "doc_id"]),
     "search_sloppy_kernel": (
         lambda s, m, mf: C.search_sloppy_kernel(s, m, SLOPPY, k=6,
@@ -221,7 +237,8 @@ def test_matchall_runs_pids_without_postings(spark, tmp_path):
         assert list(got[got.qid == qid].doc_id) == live
     assert (got[got.qid == 1].score == 2.0).all()
     _same(got, C.search_compound_local(m, batch, k=12), ["qid", "doc_id"])
-    _same(got, search_boolean(spark, m, batch, k=12, plan="join"),
+    _same(got, reference_compound(spark, docs, {"content": m}, "content",
+                                  batch, k=12, exclude_ids=[5]),
           ["qid", "doc_id"])
     counts = C.count_compound(spark, {"": m}, "", batch)
     assert counts == {0: 11, 1: 11}
@@ -285,7 +302,7 @@ EMPTY_CASES = {
     "eval_bm25f": (
         lambda s, m, mf, b: mf.search_bm25f(
             BM25F if b is BATCH else [(0, "ghost")], k=8,
-            field_weights={"title": 2.0, "body": 1.0}, plan="kernel"),
+            field_weights={"title": 2.0, "body": 1.0}),
         None),
     "search_sloppy_kernel": (
         lambda s, m, mf, b: C.search_sloppy_kernel(

@@ -85,7 +85,7 @@ def test_serving_fuzzy_compound_matches_distributed(spark, fidx):
         (2, BooleanQuery(must=["table"],
                          must_not=[FuzzyQuery("mergX", max_edits=1)])),
     ]
-    dist = (search_boolean(spark, fidx, batch, k=5, plan="kernel")
+    dist = (search_boolean(spark, fidx, batch, k=5)
             .toPandas().sort_values(["qid", "doc_id"])
             .reset_index(drop=True))
     loc = (search_compound_local(fidx, batch, k=5)

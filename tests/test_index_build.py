@@ -47,3 +47,16 @@ def test_non_dense_user_ids_rejected(spark, tmp_index_dir, ids):
         build_index(spark, spark.createDataFrame(docs), tmp_index_dir,
                     IndexConfig(4, 2, build_chunks=1),
                     content_col="content", id_col="doc_id")
+
+
+def test_duplicate_user_ids_rejected(spark, tmp_index_dir):
+    """40 docs with id 5 replaced by a second 6: count, min and max all
+    look dense, the distinct count does not — the contract error, not a
+    failure inside the norms kernel."""
+    ids = [6 if i == 5 else i for i in range(40)]
+    docs = pd.DataFrame({"doc_id": ids,
+                         "content": [f"alpha beta w{i % 7}" for i in ids]})
+    with pytest.raises(ValueError, match="doc ids must be dense"):
+        build_index(spark, spark.createDataFrame(docs), tmp_index_dir,
+                    IndexConfig(4, 2, build_chunks=1),
+                    content_col="content", id_col="doc_id")

@@ -1,10 +1,9 @@
-"""MatchAllDocs in the compound kernel + bounded join-chain frames.
+"""MatchAllDocs in the compound kernel.
 
-Round-5 scale fix (VERDICT r4 item 1): *:* clauses host in-kernel as a
-constant per-doc contribution (never a materialized docs frame) and
-ConstantScoreQuery wrappers rewrite to must=[*:*(boost)]+filter=[inner]
-so they ride the same per-partition-top-k plan; the join-chain fallback
-bounds its matchall frame to other-clause docs ∪ k-smallest-of-rest.
+*:* clauses host in-kernel as a constant per-doc contribution (never a
+materialized docs frame) and ConstantScoreQuery wrappers rewrite to
+must=[*:*(boost)]+filter=[inner] so they ride the same
+per-partition-top-k plan; results match the index-free reference.
 Reference: MatchAllDocsQuery's scorer is a constant iterator
 (``MatchAllDocsQuery.java``), never a collected doc set.
 """
@@ -15,10 +14,10 @@ import pytest
 
 from pim_lucene_spark.config import IndexConfig
 from pim_lucene_spark.operators.index_build import build_index
-from pim_lucene_spark.plans.boolean import (BooleanQuery, _matchall_frame,
-                                            search_boolean)
+from pim_lucene_spark.plans.boolean import BooleanQuery, search_boolean
 from pim_lucene_spark.plans.query import (ConstantScoreQuery,
                                           MatchAllDocsQuery, PhraseQuery)
+from tests.compound_ref import reference_compound
 
 DOCS = pd.DataFrame({
     "doc_id": range(12),
@@ -45,12 +44,11 @@ def midx(spark, tmp_path_factory):
 
 
 def test_matchall_kernel_equals_join(spark, midx):
-    kern = search_boolean(spark, midx, BATCH, k=5,
-                          plan="kernel").toPandas()
-    join = search_boolean(spark, midx, BATCH, k=5, plan="join").toPandas()
+    kern = search_boolean(spark, midx, BATCH, k=5).toPandas()
     a = kern.sort_values(["qid", "doc_id"]).reset_index(drop=True)
-    b = join.sort_values(["qid", "doc_id"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
+    b = reference_compound(spark, DOCS, {"content": midx}, "content",
+                           BATCH, k=5)
+    pd.testing.assert_frame_equal(a, b, check_exact=True)
     # pure *:* boost=2: the 5 smallest doc ids at score 2.0
     q0 = a[a.qid == 0]
     assert list(q0.doc_id) == [0, 1, 2, 3, 4]
@@ -59,7 +57,7 @@ def test_matchall_kernel_equals_join(spark, midx):
 
 def test_matchall_serving_equals_kernel(spark, midx):
     from pim_lucene_spark.plans.compound import search_compound_local
-    kern = (search_boolean(spark, midx, BATCH, k=5, plan="kernel")
+    kern = (search_boolean(spark, midx, BATCH, k=5)
             .toPandas().sort_values(["qid", "doc_id"])
             .reset_index(drop=True))
     loc = (search_compound_local(midx, BATCH, k=5)
@@ -76,32 +74,26 @@ def test_matchall_honors_deletes_all_routes(spark, midx, tmp_path):
                                                          build_chunks=1),
                     content_col="content", id_col="doc_id")
     m = write_deletes(spark, m, [0, 1, 2])
-    kern = search_boolean(spark, m, BATCH, k=6, plan="kernel").toPandas()
-    join = search_boolean(spark, m, BATCH, k=6, plan="join").toPandas()
+    kern = search_boolean(spark, m, BATCH, k=6).toPandas()
     loc = search_compound_local(m, BATCH, k=6)
-    for res in (kern, join, loc):
+    for res in (kern, loc):
         assert not set(res.doc_id) & {0, 1, 2}
     a = kern.sort_values(["qid", "doc_id"]).reset_index(drop=True)
-    b = join.sort_values(["qid", "doc_id"]).reset_index(drop=True)
+    b = reference_compound(spark, DOCS, {"content": m}, "content", BATCH,
+                           k=6, exclude_ids=[0, 1, 2])
     c = loc.sort_values(["qid", "doc_id"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
+    pd.testing.assert_frame_equal(a, b, check_exact=True)
     pd.testing.assert_frame_equal(a, c.astype(a.dtypes.to_dict()))
     counts = count_compound(spark, {"": m}, "", BATCH)
     assert counts[0] == 9        # 12 docs - 3 deleted
 
 
-def test_wrappers_route_kernel_not_join(spark, midx, monkeypatch):
-    """MatchAllDocs + ConstantScore(kernelable inner) wrappers must never
-    reach the join-chain plan (the old path shipped the inner match set
-    at k=10**9 / a docs-table crossJoin)."""
-    import pim_lucene_spark.plans.boolean as B
+def test_wrappers_route_kernel_not_join(spark, midx):
+    """MatchAllDocs + ConstantScore wrappers answer through the compound
+    kernel at score == boost (never the inner match set at k=10**9 or a
+    docs-table crossJoin)."""
     from pim_lucene_spark.index import FullTextIndex
 
-    def boom(*a, **kw):
-        raise AssertionError("join-chain plan reached for a kernelable "
-                             "wrapper batch")
-
-    monkeypatch.setattr(B, "_search_boolean_join", boom)
     idx = FullTextIndex(spark, midx)
     res = idx.query([
         (0, MatchAllDocsQuery(boost=3.0)),
@@ -117,33 +109,13 @@ def test_wrappers_route_kernel_not_join(spark, midx, monkeypatch):
 
 
 def test_parsed_matchall_routes_kernel(spark, midx):
-    """Every parsed-query route containing *:* is kernel-hostable — no
-    clause frame of any kind (plan='kernel' would raise otherwise)."""
+    """Every parsed-query shape containing *:* composes in the kernel
+    and matches the reference."""
     from pim_lucene_spark.plans.parser import parse_query
     for s in ("*:* -red", "red *:*", "+apple *:*", "(red *:*) +apple"):
         q = parse_query(s)
-        res = search_boolean(spark, midx, [(0, q)], k=5,
-                             plan="kernel").toPandas()
-        join = search_boolean(spark, midx, [(0, q)], k=5,
-                              plan="join").toPandas()
+        res = search_boolean(spark, midx, [(0, q)], k=5).toPandas()
         a = res.sort_values("doc_id").reset_index(drop=True)
-        b = join.sort_values("doc_id").reset_index(drop=True)
-        pd.testing.assert_frame_equal(a, b)
-
-
-def test_join_matchall_frame_is_bounded(spark, midx):
-    """The join-chain matchall frame ships |other_docs| + k ids per
-    matchall sid — never the whole docs table (for bounded k)."""
-    others = spark.createDataFrame(
-        [(0, 5, 1.0), (0, 7, 0.5)], "sid long, doc_id long, score double")
-    ma = [(1, 2.0)]
-    frame = _matchall_frame(spark, midx, ma, others, k=3).toPandas()
-    # {5,7} from others ∪ {0,1,2} (3 smallest of the rest) = 5 ids
-    assert sorted(frame.doc_id) == [0, 1, 2, 5, 7]
-    assert (frame.score == 2.0).all()
-    # huge k (nested clause evaluation) falls back to the full id scan
-    full = _matchall_frame(spark, midx, ma, others, k=10 ** 9)
-    assert full.count() == len(DOCS)
-    # no others: the k smallest ids alone
-    solo = _matchall_frame(spark, midx, ma, None, k=4).toPandas()
-    assert sorted(solo.doc_id) == [0, 1, 2, 3]
+        b = reference_compound(spark, DOCS, {"content": midx}, "content",
+                               [(0, q)], k=5)
+        pd.testing.assert_frame_equal(a, b, check_exact=True)

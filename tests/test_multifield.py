@@ -206,3 +206,40 @@ def test_multifield_delete_docs_accepts_dataframe(spark, tmp_path):
     for name in idx.fields:
         assert idx.manifests[name].deleted_count == 2, name
     assert idx.search_term("red", field="title").count() == 0
+
+
+def test_mixed_num_partitions_rejected_once(spark, tmp_path):
+    """Fields built at P=2 and P=4 and assembled by hand share no pid
+    space: every multi-field entry point raises the one
+    ``resolve_manifests`` ValueError before any Spark job starts."""
+    from pim_lucene_spark.operators.index_build import build_index
+    from pim_lucene_spark.plans.boolean import (BooleanQuery,
+                                                search_boolean_fields)
+    from pim_lucene_spark.plans.compound import search_compound_local
+    from pim_lucene_spark.plans.query import FieldedQuery
+
+    sdf = spark.createDataFrame(BASIC)
+    mans = {f: build_index(spark, sdf.select("doc_id", f),
+                           str(tmp_path / f), IndexConfig(p, 1,
+                                                          build_chunks=1),
+                           content_col=f, id_col="doc_id")
+            for f, p in (("field1", 2), ("field2", 4))}
+    bq = [(0, BooleanQuery(must=["red", FieldedQuery("field2", "red")]))]
+    fake = MultiFieldIndex.__new__(MultiFieldIndex)
+    fake.spark, fake.fields, fake.default_field, fake.manifests = (
+        spark, list(mans), "field1", mans)
+    sc = spark.sparkContext
+    sc.setJobGroup("mixed_p", "mixed num_partitions")
+    try:
+        for call in (
+                lambda: MultiFieldIndex(spark, str(tmp_path), list(mans),
+                                        "field1", mans),
+                lambda: search_boolean_fields(spark, mans, "field1", bq),
+                lambda: fake.search_bm25f([(0, "red")]),
+                lambda: search_compound_local(mans, bq,
+                                              default_field="field1")):
+            with pytest.raises(ValueError, match="num_partitions"):
+                call()
+        assert list(sc.statusTracker().getJobIdsForGroup("mixed_p")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)

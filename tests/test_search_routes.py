@@ -222,16 +222,19 @@ def test_sync_at_k_1000_runs_plain_file_plan(spark, ridx, monkeypatch):
 
 # ------------------------------------------- k=None: no rank window
 
-@pytest.fixture(scope="module")
-def small_index(spark, tmp_path_factory):
+def _small_docs():
     rng = np.random.default_rng(11)
     vocab = ["alpha", "beta", "gamma", "delta", "epsilon"]
-    docs = pd.DataFrame({
+    return pd.DataFrame({
         "doc_id": range(60),
         "content": [" ".join(rng.choice(vocab, size=8)) for _ in range(60)],
     })
+
+
+@pytest.fixture(scope="module")
+def small_index(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("small") / "idx")
-    return build_index(spark, spark.createDataFrame(docs), d,
+    return build_index(spark, spark.createDataFrame(_small_docs()), d,
                        IndexConfig(2, 1, build_chunks=1),
                        content_col="content", id_col="doc_id")
 
@@ -303,12 +306,13 @@ def test_exotic_constant_score_wrappers_kernel_index(spark, small_index):
 
 def test_k_none_auto_routes_to_kernel_same_rows(spark, small_index):
     from pim_lucene_spark.plans.boolean import BooleanQuery, search_boolean
+    from tests.compound_ref import reference_compound
     batch = [(0, BooleanQuery(must=["alpha"], should=["beta"]))]
     auto = (search_boolean(spark, small_index, batch, k=None)
             .toPandas().sort_values(["qid", "doc_id"])
             .reset_index(drop=True))
-    join = (search_boolean(spark, small_index, batch, k=None, plan="join")
-            .toPandas().sort_values(["qid", "doc_id"])
-            .reset_index(drop=True))
+    join = reference_compound(spark, _small_docs(),
+                              {"content": small_index}, "content", batch,
+                              k=None)
     assert list(auto.doc_id) == list(join.doc_id)
     assert list(auto.score) == list(join.score)

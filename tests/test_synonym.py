@@ -161,16 +161,6 @@ def test_synonym_respects_deletes(spark, synidx, tmp_path):
     assert len(got) > 0
 
 
-def test_synonym_join_plan_raises(spark, synidx):
-    from pim_lucene_spark.plans.boolean import _search_boolean_join
-    m, _ = synidx
-    with pytest.raises(NotImplementedError, match="compound kernel"):
-        _search_boolean_join(
-            spark, m,
-            [(0, BooleanQuery(must=[SynonymQuery(("quick",))]))],
-            10, "float32")
-
-
 def test_facade_routes_synonym(spark, synidx):
     """FullTextIndex.query and query_local both route SynonymQuery
     through the compound kernel, row-identical."""
