@@ -1751,21 +1751,46 @@ def search_local(index: IndexManifest | str, queries: list[tuple[int, str]],
     as :func:`search`.
     """
     manifest = IndexManifest.load(index) if isinstance(index, str) else index
+    payload = _plan_local(manifest, queries, k, precision,
+                          postings_cache_mb, after=after)
+    res = (None if payload is None else
+           _run_local({"": manifest}, payload, _match_core_arrays, pids))
+    if res is None:
+        # public API boundary: hand out a copy, never the shared cached
+        # frame (a caller mutating its result must not poison every
+        # later empty result in the process)
+        return _empty_result().copy()
+    return _top_k(res, k)
+
+
+def _plan_local(manifest: IndexManifest, queries, k: int, precision: str,
+                postings_cache_mb: int, after=None) -> dict | None:
+    """The plan step of a resident term/phrase batch: stats and weights
+    (:func:`plan_queries`) and the kernel payload, or ``None`` when no
+    query can match.  Runs where the request arrives — once per
+    request, however many shards then run it."""
     gap_offsets: dict = {}
     planned, needed_terms = plan_queries(None, manifest, queries, k,
                                          precision,
                                          collect_offsets=gap_offsets)
     if not planned:
-        # public API boundary: hand out a copy, never the shared cached
-        # frame (a caller mutating its result must not poison every
-        # later empty result in the process)
-        return _empty_result().copy()
-    payload = _kernel_payload(
+        return None
+    return _kernel_payload(
         manifest, precision, needed_terms, queries=planned, k=int(k),
         postings_cache_mb=int(postings_cache_mb), after=after,
         offsets=gap_offsets)
-    shard = _local_rows(manifest, payload["cache_key"], pids=pids)
-    res = _run_pids(payload, _match_core_arrays, {"": shard}, shard)
-    if res is None:
-        return _empty_result().copy()  # public boundary: see above
-    return _top_k(res, k)
+
+
+def _run_local(manifests: dict[str, IndexManifest], payload: dict, core,
+               pids=None) -> dict | None:
+    """The run step of a resident batch: every payload field's resident
+    pids (:func:`_local_rows`, restricted to ``pids``), held for the
+    whole batch so a later field's eviction never makes it re-read a
+    pid, then :func:`_run_pids` with ``core``.  A MatchAllDocs batch
+    runs on every pid, postings or not.  The rows as column arrays,
+    uncut across pids, or ``None``."""
+    if pids is None and payload.get("has_matchall"):
+        pids = range(payload["num_partitions"])
+    shards = {f: _local_rows(manifests[f], fm["cache_key"], pids=pids)
+              for f, fm in payload["fields"].items()}
+    return _run_pids(payload, core, shards, set().union(*shards.values()))

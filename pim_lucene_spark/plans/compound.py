@@ -80,7 +80,7 @@ from pim_lucene_spark.operators.search import (
     _phrase_candidates,
     _phrase_match_counts,
     _read_group,
-    _run_pids,
+    _run_local,
     _top_k,
     _top_k_window,
     plan_queries,
@@ -1656,7 +1656,6 @@ def search_compound_local(index, queries,
     "path", "lo", "hi", "labels", "qids"}``.
     """
     from pim_lucene_spark.manifest import resolve_manifests
-    from pim_lucene_spark.operators.search import _local_rows
     manifests, default_field = resolve_manifests(
         index, default_field if isinstance(index, dict) else "")
     payload = _plan_batch(None, manifests, default_field, queries,
@@ -1677,15 +1676,7 @@ def search_compound_local(index, queries,
     if payload is None:
         return empty
     payload.update(mode, k=int(k))
-    # every payload field's resident pids, held for the whole batch (a
-    # later field's eviction never makes this batch re-read a pid);
-    # a MatchAllDocs batch runs on every pid, postings or not
-    if pids is None and payload["has_matchall"]:
-        pids = range(payload["num_partitions"])
-    shards = {f: _local_rows(manifests[f], fm["cache_key"], pids=pids)
-              for f, fm in payload["fields"].items()}
-    res = _run_pids(payload, _compound_core, shards,
-                    set().union(*shards.values()))
+    res = _run_local(manifests, payload, _compound_core, pids)
     if res is None:
         return empty
     if facet_dim is not None:

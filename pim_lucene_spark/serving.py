@@ -12,47 +12,75 @@ two placements:
   postings).  A worker loads only its own pids, each once, so a shard
   never keeps another shard's rows and resident bytes per process
   shrink ~1/W while the union covers the whole index.  Every batch fans
-  to all shards and the per-shard per-query top-k frames merge on the
-  host — top-k of a union is the merge of per-shard top-ks, so results
-  are row-identical to the serial path (differential-tested).  This is
+  to all shards and the shards' per-pid top-k rows merge on the host —
+  top-k of a union is the merge of per-pid top-ks, so results are
+  row-identical to the serial path (differential-tested).  This is
   the latency mode, and the only mode whose residency scales to indexes
   bigger than one process' budget (the 100 TB shape: one shard per
   executor, not per core).
 - ``mode="replica"``: every worker holds the WHOLE pid range and whole
-  batches round-robin across workers — no per-batch fan-out or merge,
-  so many-batch throughput scales with cores at the cost of W× resident
+  batches round-robin across workers — no per-batch fan-out, and the
+  host cuts one worker's rows, so many-batch throughput scales with cores at the cost of W× resident
   bytes.  This is the throughput mode for indexes that fit per-process
   (the reference's multithreaded driver over one loaded index).
 
 ``search(queries, k)`` serves one batch; ``map(batches, k)`` pipelines
 many with a bounded in-flight window.  Workers fork lazily on first use;
-``close()`` (or the context manager) terminates them.  Results come back
-as small top-k pandas frames over pipes — ≤ W·|queries|·k rows a batch.
+``close()`` (or the context manager) terminates them.
+
+The client plans each request once (:func:`plan_request`: stats,
+weights, kernel payloads) and sends the same pickled plan to every
+worker it targets, as the reference serializes a query once and
+broadcasts it to every DPU (``PimSystemManager.java:283-293``).  A
+worker only runs the kernel over its resident pids and replies with the
+per-pid top-k rows as column arrays; the client cuts each query's top-k
+once and builds the request's one frame, as the reference's host
+scores and merges the DPUs' raw result arrays
+(``DpuExecutorSGResultsReader.java:56-81``).
 """
 
 from __future__ import annotations
 
 import multiprocessing as mp
 import os
+from collections import deque
+from multiprocessing.reduction import ForkingPickler
 from typing import Iterable
 
+import numpy as np
 import pandas as pd
 
 from pim_lucene_spark.manifest import IndexManifest
+from pim_lucene_spark.sparkutil import manifest_scan_key
+
+# Result columns of a request with term/phrase queries only ...
+_PLAIN_DTYPES = {"qid": np.int64, "doc_id": np.int64, "freq": np.int64,
+                 "norm": np.int32, "score": np.float64}
+# ... and of one with any compound query, whose rows carry NaN freq and
+# norm (the distributed :meth:`FullTextIndex.query` union's shape).  The
+# query kinds fix a request's dtypes, never its hits.
+_MIXED_DTYPES = dict(_PLAIN_DTYPES, freq=np.float64, norm=np.float64)
 
 
-def serve_local(manifest: IndexManifest, queries, k: int,
-                precision: str, postings_cache_mb: int,
-                pids: list[int] | None) -> pd.DataFrame:
-    """One resident-process batch, mixed query types: ``(qid, text)`` /
-    typed Term/Phrase tuples go through the term/phrase serving kernel;
-    typed Boolean/DisMax queries through the compound serving kernel
-    (``plans/compound.py::search_compound_local``) — no Spark job on
-    either path.  Compound rows surface NaN freq/norm, mirroring the
-    distributed :meth:`FullTextIndex.query` union."""
-    from pim_lucene_spark.operators.search import _empty_result, search_local
+def _index_state(manifest: IndexManifest) -> tuple:
+    """The index state a plan is made for: its file set and delete
+    generation."""
+    return manifest_scan_key(manifest), manifest.delete_gen
+
+
+def plan_request(manifest: IndexManifest, queries, k: int, precision: str,
+                 postings_cache_mb: int) -> dict:
+    """Plan one mixed-type request, once: ``(qid, text)`` / typed
+    Term/Phrase tuples for the term/phrase kernel
+    (``operators/search.py::_plan_local``); typed Boolean/DisMax queries,
+    and the query types that rewrite to them, for the compound kernel
+    (``plans/compound.py::_plan_batch``).  Returns ``{"state",
+    "dtypes", "runs"}``: the index state it was planned at, the result
+    column dtypes, and one ``(core, payload)`` per kernel batch that
+    can match anything."""
+    from pim_lucene_spark.operators.search import _plan_local
     from pim_lucene_spark.plans.boolean import BooleanQuery
-    from pim_lucene_spark.plans.compound import search_compound_local
+    from pim_lucene_spark.plans.compound import _plan_batch
     from pim_lucene_spark.plans.dismax import DisMaxQuery
     from pim_lucene_spark.plans.multiterm import FuzzyQuery
     from pim_lucene_spark.plans.query import (ConstantScoreQuery,
@@ -97,51 +125,87 @@ def serve_local(manifest: IndexManifest, queries, k: int,
                 typed.append((qid, BooleanQuery(must=[q])))
             else:
                 plain.append(to_tuple(qid, q))
-    parts = []
+    runs = []
     if plain:
-        parts.append(search_local(manifest, plain, k=k,
-                                  precision=precision,
-                                  postings_cache_mb=postings_cache_mb,
-                                  pids=pids))
+        payload = _plan_local(manifest, plain, k, precision,
+                              postings_cache_mb)
+        if payload is not None:
+            runs.append(("match", payload))
     for batch, prec in ((typed, precision), (wrap64, "float64")):
-        if not batch:
+        payload = (_plan_batch(None, {"": manifest}, "", batch, prec,
+                               postings_cache_mb) if batch else None)
+        if payload is not None:
+            payload["k"] = int(k)
+            runs.append(("compound", payload))
+    return {"state": _index_state(manifest),
+            "dtypes": _MIXED_DTYPES if typed or wrap64 else _PLAIN_DTYPES,
+            "runs": runs}
+
+
+def _run_request(manifest: IndexManifest, request: dict,
+                 pids: list[int] | None) -> dict:
+    """Run a planned request over the resident ``pids`` (``None`` = all
+    pids): each kernel batch through ``operators/search.py::_run_local``.
+    Returns the per-pid top-k rows as the request's typed result
+    columns, uncut across pids.  Raises ``RuntimeError`` when the plan
+    was made at another index state than ``manifest``'s."""
+    from pim_lucene_spark.operators import search
+    from pim_lucene_spark.plans import compound
+
+    state = _index_state(manifest)
+    if request["state"] != state:
+        raise RuntimeError(
+            f"stale serving plan: planned at index state "
+            f"{request['state']} but served at {state} (a state is the "
+            f"index's cache key and delete generation)")
+    cores = {"match": search._match_core_arrays,
+             "compound": compound._compound_core}
+    parts = []
+    for core, payload in request["runs"]:
+        res = search._run_local({"": manifest}, payload, cores[core], pids)
+        if res is None:
             continue
-        c = search_compound_local(manifest, batch, k=k,
-                                  precision=prec,
-                                  postings_cache_mb=postings_cache_mb,
-                                  pids=pids)
-        c = c.assign(freq=float("nan"), norm=float("nan"))[
-            ["qid", "doc_id", "freq", "norm", "score"]]
-        parts.append(c)
-    if not parts:
-        return _empty_result().copy()
-    if len(parts) == 1:
-        return parts[0]
-    return pd.concat([p.astype({"freq": "float64"})
-                      if "freq" in p else p for p in parts],
-                     ignore_index=True)
+        if core == "compound":   # compound rows have no freq or norm
+            nan = np.full(res["qid"].size, np.nan)
+            res = dict(res, freq=nan, norm=nan)
+        parts.append(res)
+    # the empty array types a reply without rows
+    return {c: np.concatenate([np.empty(0, dt)] + [p[c] for p in parts]
+                              ).astype(dt, copy=False)
+            for c, dt in request["dtypes"].items()}
 
 
-def _worker_main(conn, index_dir: str, pids: list[int] | None,
-                 precision: str, postings_cache_mb: int):
-    """Worker loop: resident single-process server over ``pids``
-    (``None`` = all pids — replica mode)."""
+def serve_local(manifest: IndexManifest, queries, k: int,
+                precision: str, postings_cache_mb: int,
+                pids: list[int] | None) -> pd.DataFrame:
+    """One resident-process batch, mixed query types, with no Spark job
+    on any path: :func:`plan_request`, :func:`_run_request` over
+    ``pids`` and one top-k cut — a sharded server's client and one
+    worker in one process.  Compound rows surface NaN freq/norm,
+    mirroring the distributed :meth:`FullTextIndex.query` union."""
+    from pim_lucene_spark.operators.search import _top_k
+    request = plan_request(manifest, queries, k, precision,
+                           postings_cache_mb)
+    return _top_k(_run_request(manifest, request, pids), k)
+
+
+def _worker_main(conn, manifest: IndexManifest, pids: list[int] | None):
+    """Worker loop: runs each planned request over ``pids`` (``None`` =
+    all pids — replica mode) and replies with its column arrays.
+    ``manifest`` is the client's, inherited through the fork, so a
+    worker serves the index state the client plans at."""
     from pim_lucene_spark.operators.search import (clear_local_cache,
                                                    clear_postings_cache)
     clear_local_cache()      # drop fork-inherited residency — each worker
     clear_postings_cache()   # builds its own shard-scoped caches
-    manifest = IndexManifest.load(index_dir)
     while True:
-        msg = conn.recv()
+        msg = conn.recv()    # recv_bytes + ForkingPickler.loads
         if msg is None:
             conn.close()
             return
-        tag, queries, k = msg
+        tag, request = msg
         try:
-            res = serve_local(manifest, queries, k=k, precision=precision,
-                              postings_cache_mb=postings_cache_mb,
-                              pids=pids)
-            conn.send((tag, res))
+            conn.send((tag, _run_request(manifest, request, pids)))
         except BaseException as exc:  # surface the failure, keep serving
             conn.send((tag, exc))
 
@@ -218,10 +282,10 @@ class ShardedServer:
             parent, child = self._ctx.Pipe()
             pids = ([p for p in range(P) if p % W == w]
                     if self.mode == "shard" else None)
+            # fork before the client plans anything: a worker inherits
+            # the client's manifest, not its planning caches
             proc = self._ctx.Process(
-                target=_worker_main,
-                args=(child, self.manifest.index_dir, pids, self.precision,
-                      self.postings_cache_mb),
+                target=_worker_main, args=(child, self.manifest, pids),
                 daemon=True)
             proc.start()
             child.close()
@@ -250,12 +314,14 @@ class ShardedServer:
 
     # --- serving ------------------------------------------------------------
     @staticmethod
-    def _merge(parts: list[pd.DataFrame], k: int) -> pd.DataFrame:
-        from pim_lucene_spark.operators.search import _empty_result, _top_k
-        parts = [p for p in parts if len(p)]
-        if not parts:
-            return _empty_result().copy()
-        return _top_k(pd.concat(parts, ignore_index=True), k)
+    def _merge(parts: list, k: int) -> pd.DataFrame:
+        """The host merge: each query's top-``k`` over every shard's
+        rows in one cut.  ``parts`` are worker replies (column arrays)
+        or :func:`serve_local` frames; both index by column name, and
+        their typed columns, empty or not, fix the result's dtypes."""
+        from pim_lucene_spark.operators.search import _top_k
+        return _top_k({c: np.concatenate([np.asarray(p[c]) for p in parts])
+                       for c in _PLAIN_DTYPES}, k)
 
     @staticmethod
     def _unwrap(res):
@@ -282,75 +348,67 @@ class ShardedServer:
         replies = [self._recv_tagged(conn, expect) for conn in conns]
         return [self._unwrap(r) for r in replies]
 
+    def _plan(self, queries, k: int) -> dict:
+        return plan_request(self.manifest, queries, k, self.precision,
+                            self.postings_cache_mb)
+
+    def _send(self, i: int, request: dict) -> list:
+        """Pickle planned request ``i`` once and send the same bytes to
+        each of its workers — every shard, or one replica round-robin;
+        returns those workers' pipes."""
+        buf = ForkingPickler.dumps((i, request))
+        conns = (self._conns if self.mode == "shard"
+                 else [self._conns[i % self.num_workers]])
+        for conn in conns:
+            conn.send_bytes(buf)
+        return conns
+
     def search(self, queries: list[tuple[int, str]],
                k: int = 10) -> pd.DataFrame:
         """One batch.  Shard mode: all shards in parallel + host merge.
         Replica mode: one worker takes the whole batch."""
         self._ensure_started()
-        if self.mode == "replica":
-            self._conns[0].send((0, queries, k))
-            return self._unwrap(self._recv_tagged(self._conns[0], 0))
-        for conn in self._conns:
-            conn.send((0, queries, k))
-        return self._merge(self._gather(self._conns, 0), k)
+        conns = self._send(0, self._plan(queries, k))
+        return self._merge(self._gather(conns, 0), k)
 
     def map(self, batches: Iterable[list[tuple[int, str]]],
             k: int = 10) -> list[pd.DataFrame]:
         """Pipeline many batches.
 
-        Replica mode: batch ``i`` goes whole to worker ``i % W`` — W
-        batches compute concurrently, no merge.  Shard mode: every batch
-        fans to all shards with a bounded in-flight window of 2, so the
-        host merge of batch ``i-1`` overlaps the shard compute of ``i``.
+        Shard mode: every batch fans to all shards with an in-flight
+        window of 2, so the host merge of batch ``i-1`` overlaps the
+        shard compute of ``i``.  Replica mode: batch ``i`` goes whole to
+        worker ``i % W`` with a window of 2 per worker, so W batches
+        compute concurrently.  Each batch is planned in the send loop,
+        while the batches before it compute.
         """
         self._ensure_started()
-        batches = list(batches)
-        out: list[pd.DataFrame | None] = [None] * len(batches)
-
-        if self.mode == "replica":
-            W = self.num_workers
-            pending: dict[int, list[int]] = {w: [] for w in range(W)}
-            # worker errors are recorded and re-raised only after EVERY
-            # outstanding reply is drained (mirroring _gather): raising
-            # mid-drain would leave queued replies that desynchronize the
-            # next call into serving stale batches
-            errors: list[BaseException] = []
-
-            def drain(w: int) -> None:
-                j = pending[w].pop(0)
-                payload = self._recv_tagged(self._conns[w], j)
-                if isinstance(payload, BaseException):
-                    errors.append(payload)
-                else:
-                    out[j] = payload
-
-            for i, batch in enumerate(batches):
-                w = i % W
-                # at most 2 outstanding per worker: drain the oldest first
-                if len(pending[w]) >= 2:
-                    drain(w)
-                self._conns[w].send((i, batch, k))
-                pending[w].append(i)
-            for w in range(W):
-                while pending[w]:
-                    drain(w)
-            if errors:
-                raise errors[0]
-            return out  # type: ignore[return-value]
-
-        inflight: list[int] = []
+        window = 2 if self.mode == "shard" else 2 * self.num_workers
+        out: list[pd.DataFrame | None] = []
+        inflight: deque = deque()
+        # worker errors are recorded and re-raised only after EVERY
+        # outstanding reply is drained (mirroring _gather): raising
+        # mid-drain would leave queued replies that desynchronize the
+        # next call into serving stale batches
+        errors: list[BaseException] = []
 
         def collect() -> None:
-            i = inflight.pop(0)
-            out[i] = self._merge(self._gather(self._conns, i), k)
+            i, conns = inflight.popleft()
+            try:
+                out[i] = self._merge(self._gather(conns, i), k)
+            except Exception as exc:
+                errors.append(exc)
 
-        nxt = 0
-        while nxt < len(batches) or inflight:
-            if nxt < len(batches) and len(inflight) < 2:
-                for conn in self._conns:
-                    conn.send((nxt, batches[nxt], k))
-                inflight.append(nxt)
-                nxt += 1
-            else:
+        try:
+            for i, batch in enumerate(batches):
+                request = self._plan(batch, k)
+                if len(inflight) >= window:
+                    collect()
+                out.append(None)
+                inflight.append((i, self._send(i, request)))
+        finally:
+            while inflight:
                 collect()
+        if errors:
+            raise errors[0]
         return out  # type: ignore[return-value]

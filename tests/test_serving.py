@@ -4,6 +4,9 @@ ranks (SearchWikiDPUMultiThread.java:120-245).  Both placements must be
 row-identical to the serial serving path on every fixture.
 """
 
+import copy
+import os
+
 import pandas as pd
 import pytest
 
@@ -66,29 +69,143 @@ def test_map_pipelines_batches_in_order(srv_index):
                     {c: e[c].dtype for c in e.columns}))
 
 
+def test_worker_error_surfaces(srv_index):
+    """A query the client cannot plan fails before anything is sent; a
+    worker that raises has its error surface only after every worker's
+    reply is drained, so the next request's rows are correct."""
+    serial = search_local(srv_index, QUERIES, k=5)
+    stale = copy.copy(srv_index)
+    stale.delete_gen += 1
+    for mode in ("shard", "replica"):
+        with ShardedServer(srv_index, num_workers=2, mode=mode) as srv:
+            with pytest.raises(Exception):
+                srv.search([(0, object())], k=5)  # untokenizable query
+            srv.manifest = stale     # every worker rejects the plan
+            with pytest.raises(RuntimeError, match="stale serving plan"):
+                srv.search(QUERIES, k=5)
+            with pytest.raises(RuntimeError, match="stale serving plan"):
+                srv.map([QUERIES[:2], QUERIES, QUERIES[3:]], k=5)
+            srv.manifest = srv_index
+            pd.testing.assert_frame_equal(srv.search(QUERIES, k=5), serial)
+            for got in srv.map([QUERIES, QUERIES], k=5):
+                pd.testing.assert_frame_equal(got, serial)
+
+
+def test_plan_from_another_delete_generation_is_refused(spark, tmp_path):
+    """A plan carries the index state it was made at; a process serving
+    the next delete generation refuses it, naming both states."""
+    from pim_lucene_spark.manifest import IndexManifest
+    from pim_lucene_spark.operators.deletes import write_deletes
+    from pim_lucene_spark.serving import (_index_state, _run_request,
+                                          plan_request, serve_local)
+
+    cfg = IndexConfig(num_partitions=2, num_segments=1, build_chunks=1)
+    d = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame(FIXTURE_DOCS), d, cfg,
+                content_col="content", id_col="doc_id")
+    gen0 = IndexManifest.load(d)
+    gen1 = write_deletes(spark, IndexManifest.load(d), [1])
+    assert (gen0.delete_gen, gen1.delete_gen) == (0, 1)
+    plan = plan_request(gen0, QUERIES, 5, "float32", 0)
+    with pytest.raises(RuntimeError, match="stale serving plan") as err:
+        _run_request(gen1, plan, None)
+    assert str(plan["state"]) in str(err.value)
+    assert str(_index_state(gen1)) in str(err.value)
+    assert plan["state"][1] == 0 and _index_state(gen1)[1] == 1
+    # each generation serves its own plans
+    with ShardedServer(gen1, num_workers=2, mode="shard") as srv:
+        got = srv.search(QUERIES, k=5)
+    exp = serve_local(gen1, QUERIES, 5, "float32", 0, None)
+    pd.testing.assert_frame_equal(got, exp)
+    assert 1 not in set(got.doc_id)
+
+
+def test_one_plan_per_request(srv_index, tmp_path, monkeypatch):
+    """The client plans each request once; a worker only runs the
+    kernel: it calls neither ``plan_queries`` nor ``_kernel_payload``
+    and builds no DataFrame."""
+    from pim_lucene_spark.operators import search as S
+
+    log = tmp_path / "calls"
+    client = os.getpid()
+
+    def record(name):
+        with open(log, "a") as fh:
+            fh.write(f"{name} {os.getpid()}\n")
+
+    def counted(name, fn):
+        def wrapper(*args, **kwargs):
+            record(name)
+            return fn(*args, **kwargs)
+        return wrapper
+
+    frame_init = pd.DataFrame.__init__
+
+    def worker_frame_init(self, *args, **kwargs):
+        if os.getpid() != client:
+            record("DataFrame")
+        frame_init(self, *args, **kwargs)
+
+    # installed before the workers fork, so a call in a worker is
+    # recorded too
+    monkeypatch.setattr(S, "plan_queries", counted("plan_queries",
+                                                   S.plan_queries))
+    monkeypatch.setattr(S, "_kernel_payload", counted("_kernel_payload",
+                                                      S._kernel_payload))
+    monkeypatch.setattr(pd.DataFrame, "__init__", worker_frame_init)
+
+    def calls():
+        lines = log.read_text().split("\n") if log.exists() else []
+        log.unlink(missing_ok=True)
+        return sorted(ln for ln in lines if ln)
+
+    batches = [QUERIES[:2], QUERIES[2:4], [(9, "zzznothere")], QUERIES]
+    for mode in ("shard", "replica"):
+        with ShardedServer(srv_index, num_workers=2, mode=mode) as srv:
+            calls()
+            srv.search(QUERIES, k=5)
+            assert calls() == [f"_kernel_payload {client}",
+                               f"plan_queries {client}"]
+            srv.map(batches, k=5)
+            got = calls()
+            assert got.count(f"plan_queries {client}") == len(batches)
+            assert all(ln.endswith(f" {client}") for ln in got), got
+
+
 def test_all_miss_request_keeps_result_dtypes(srv_index):
-    """A request no shard has hits for returns the same typed columns
-    as one with hits (int64 ids and freq, int32 norm, float64 score),
-    and so does an empty batch on one worker."""
+    """A request's result dtypes follow its query kinds, never its hits:
+    int64 freq and int32 norm with term/phrase queries only (an empty
+    batch too), float64 (NaN on compound rows) with any compound query.
+    In both modes, ``search`` and ``map`` return the rows and dtypes
+    ``serve_local`` does."""
+    from pim_lucene_spark.plans.boolean import BooleanQuery
     from pim_lucene_spark.serving import serve_local
 
-    with ShardedServer(srv_index, num_workers=2, mode="shard") as srv:
-        hit = srv.search([(0, "red")], k=5)
-        miss = srv.search([(0, "zzznothere")], k=5)
-    assert len(hit) and not len(miss)
-    pd.testing.assert_series_equal(miss.dtypes, hit.dtypes)
-    none = serve_local(srv_index, [], k=5, precision="float32",
-                       postings_cache_mb=0, pids=None)
-    pd.testing.assert_series_equal(none.dtypes, hit.dtypes)
-
-
-def test_worker_error_surfaces(srv_index):
-    with ShardedServer(srv_index, num_workers=2, mode="shard") as srv:
-        with pytest.raises(Exception):
-            srv.search([(0, object())], k=5)  # untokenizable query
-        # server keeps serving after an error
-        res = srv.search(QUERIES[:1], k=5)
-        assert len(res) > 0
+    requests = {
+        "plain": [(0, "red")],
+        "plain, no hits": [(0, "zzznothere")],
+        "plain, empty batch, no hits": [],
+        "compound": [(1, BooleanQuery(must=["red"]))],
+        "compound, no hits": [(1, BooleanQuery(must=["zzznothere"]))],
+        "mixed": [(0, "red"), (1, BooleanQuery(must=["orange"]))],
+        "mixed, no hits": [(0, "zzznothere"),
+                           (1, BooleanQuery(must=["zzznothere"]))],
+    }
+    expected = {name: serve_local(srv_index, r, 5, "float32", 0, None)
+                for name, r in requests.items()}
+    for name, exp in expected.items():
+        wide = not name.startswith("plain")
+        assert (len(exp) > 0) == ("no hits" not in name), name
+        assert str(exp.freq.dtype) == ("float64" if wide else "int64")
+        assert str(exp.norm.dtype) == ("float64" if wide else "int32")
+    for mode in ("shard", "replica"):
+        with ShardedServer(srv_index, num_workers=2, mode=mode) as srv:
+            mapped = srv.map(list(requests.values()), k=5)
+            for (name, r), got_map in zip(requests.items(), mapped):
+                pd.testing.assert_frame_equal(srv.search(r, k=5),
+                                              expected[name], obj=name)
+                pd.testing.assert_frame_equal(got_map, expected[name],
+                                              obj=name)
 
 
 def test_bad_mode_raises(srv_index):
